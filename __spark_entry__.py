@@ -109,14 +109,13 @@ _PRIORITY: tuple[str, ...] = (
 # land at positions 19-25 and all get re-verified.  Once re-greened
 # they auto-deactivate via ``_GREEN_ROUND``; nothing to hand-edit.
 _REVERIFY_QUEUE: dict[str, int] = {
-    # name -> first round whose green row counts as post-change
+    # name -> first round whose green row counts as post-change; one
+    # literal per name, at the round of its LATEST change (q82, q149
+    # and q209, cap-reworked in round 4, are queued at round 12 below)
     "q18_ngram_jaccard_dupes": 4,
     "q63_duplicate_clusters": 4,
-    "q82_dedup_kept_corpus": 4,
     "q121_lsh_quality_audit": 4,
     "q134_duplicate_clusters_star": 4,
-    "q149_containment_pairs": 4,
-    "q209_cluster_best_rep": 4,
     # round 6: q64 rewritten to the segment (lead + gap-explode) LOCF
     # formulation — outputs hash-identical at sf0.01/sf0.001 (builder
     # driver_sim green both), but the registered plan changed, so the
@@ -176,7 +175,6 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # keys, the collect_list+sort aggregate ran twice (q144 measured
     # 9.7->5.1 s same-context at sf0.1; output-identical, driver_sim
     # green at sf0.01/sf0.001).
-    "q144_ppjoin_pairs": 12,
     # round 12 (optimization): the symmetrize/flag/credit unions that
     # inlined their (often expensive) source subtree once per
     # orientation are now map-side two/three-way explodes of ONE
@@ -204,9 +202,8 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # fingerprint count; published pair sets CHANGE at every SF: rung 1
     # is exact for Hamming<=5, so q79/q274 gained the pairs the fixed
     # 4x15 layout missed — these entries supersede their round-8 ones).
-    # q21's fingerprints are untouched by the ladder.
-    "q79_simhash_hamming_pairs": 9,
-    "q274_simhash_quality_audit": 9,
+    # q21's fingerprints are untouched by the ladder. (q79/q274 are
+    # queued below at their latest change round.)
     # round 9: q279's Spark-side host regex '^www\.' re-escaped for
     # Spark's SQL literal parser (ADVICE r8 — the shipped pattern
     # reached the regex engine as '^www.'; inert on this corpus, so
@@ -218,7 +215,7 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # the registered q79/q274 plans changed shape; q286's shard-width
     # count now aggregates the pre-rank frame instead of replaying the
     # range-partition sort (values identical).
-    "q79_simhash_hamming_pairs": 10,
+    "q79_simhash_hamming_pairs": 14,  # round 14: see the queue's end
     "q274_simhash_quality_audit": 10,
     "q286_training_order_manifest": 10,
     # round 11: q297's pricing body factored into the _skew_pricing_frame
@@ -238,31 +235,45 @@ _REVERIFY_QUEUE: dict[str, int] = {
     "q273_idf_weighted_jaccard": 13,
     "q276_weighted_dedup_agreement": 13,
     "q254_kmv_overlap_estimates": 13,
-    "q144_ppjoin_pairs": 13,
+    "q144_ppjoin_pairs": 14,  # round 14: see the queue's end
     # round 13 (optimization): the gate writers' bucket append is a
     # REBALANCE instead of a fixed k-way repartition, and the replay-
     # idempotency anti-join is persisted across its emptiness probe +
     # commit — every gate-driven replay re-verifies; q312/q317 overlap
     # their two independent compactions and q316 its three snapshot
     # probes from driver threads (outputs deterministic). driver_sim
-    # green at sf0.01 for all 18 touched replay names.
-    "q205_streaming_dedup_gate": 13,
-    "q244_streaming_multibatch_gate": 13,
-    "q287_simhash_index_gate": 13,
-    "q292_simhash_multibatch_gate": 13,
-    "q295_index_erasure_audit": 13,
-    "q296_simhash_rung_migration": 13,
-    "q299_erasure_vacuum_compliance": 13,
-    "q301_minhash_index_erasure": 13,
-    "q302_midstream_erasure_gate": 13,
-    "q307_banding_migration_gate": 13,
-    "q308_partitioned_index_erasure": 13,
-    "q311_centered_gate_replay": 13,
-    "q312_gate_compaction_replay": 13,
-    "q313_recommended_gate_replay": 13,
-    "q315_center_threshold_drift": 13,
+    # green at sf0.01 for all 18 touched replay names. (Those still
+    # gate-driven are re-queued at round 14 — see the queue's end.)
+    "q205_streaming_dedup_gate": 14,
+    "q244_streaming_multibatch_gate": 14,
+    "q287_simhash_index_gate": 14,
+    "q292_simhash_multibatch_gate": 14,
+    "q295_index_erasure_audit": 14,
+    "q296_simhash_rung_migration": 14,
+    "q299_erasure_vacuum_compliance": 14,
+    "q301_minhash_index_erasure": 14,
+    "q302_midstream_erasure_gate": 14,
+    "q307_banding_migration_gate": 14,
+    "q308_partitioned_index_erasure": 14,
+    "q311_centered_gate_replay": 14,
+    "q312_gate_compaction_replay": 14,
+    "q313_recommended_gate_replay": 14,
+    "q315_center_threshold_drift": 14,
     "q316_ivf_cell_split_recovery": 13,
-    "q317_bucketed_gate_compaction": 13,
+    "q317_bucketed_gate_compaction": 14,
+    # round 14 (simplicity): both gate writers run one shared skeleton
+    # (one manifest read per batch, caches released on every exit
+    # path), every start_*_stream shares one availableNow launcher, and
+    # the replay builders share their split-source, batch-count,
+    # accepted-corpus and metric-table helpers; ppjoin_pairs (q144)
+    # releases its caches through the same context manager, and the
+    # rung-ladder checkpoint q79 runs lost its never-set materialize
+    # switch. The 18 round-14 names above are updated in place; the
+    # three below are new. Same Spark actions per gate batch, oracles
+    # untouched; driver_sim green at sf0.01 for all 21.
+    "q204_streaming_hourly_upsert": 14,
+    "q210_streaming_drift_replay": 14,
+    "q267_streaming_closed_window_ledger": 14,
 }
 
 

@@ -34,7 +34,7 @@ from movie_data_pipeline_spark.functions.text import (
     tokens,
     word_shingles,
 )
-from movie_data_pipeline_spark.operators.util import spread
+from movie_data_pipeline_spark.operators.util import cached, spread
 
 # Affine MinHash family h_i(x) = (a_i * x + b_i) mod P over the 32-bit
 # base hash. P is prime and < 2^31 so a_i * x + b_i stays well inside
@@ -466,11 +466,11 @@ def simhash_centered(
     Scale shape: the same single wide vote aggregate as
     :func:`simhash`, plus one 1-row (61-column) aggregate over the
     vote frame broadcast back — the vote frame is materialized once
-    (``spark.movie_data_pipeline.dedup.materialize``) and consumed by
-    both. Never a driver-side count.
+    (a lazy local checkpoint) and consumed by both. Never a
+    driver-side count.
     """
     votes = _simhash_votes(df, id_col, text_col, bits)
-    votes = _materialize_for_reuse(votes)
+    votes = votes.localCheckpoint(eager=False)
     totals = votes.agg(
         F.count("*").alias("__n"),
         *[F.sum(f"b{j}").alias(f"s{j}") for j in range(bits)],
@@ -722,26 +722,6 @@ def simhash_rung_thresholds() -> tuple[int, int]:
     )
 
 
-def _materialize_for_reuse(df: DataFrame) -> DataFrame:
-    """Materialize a frame consumed by multiple plan branches, per the
-    session's ``spark.movie_data_pipeline.dedup.materialize`` config:
-    ``localCheckpoint`` (default — executor-local MEMORY_AND_DISK
-    partitions, freed on plan GC, but lost with a decommissioned
-    executor), ``persist`` (replayable lineage — the cluster-safe
-    choice under dynamic allocation), or ``none`` (recompute per
-    branch)."""
-    mode = df.sparkSession.conf.get(
-        "spark.movie_data_pipeline.dedup.materialize", "localCheckpoint"
-    )
-    if mode == "persist":
-        from pyspark import StorageLevel
-
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    if mode == "none":
-        return df
-    return df.localCheckpoint(eager=False)
-
-
 def simhash_band_rows(
     sh: DataFrame,
     id_col: str = "doc_id",
@@ -783,14 +763,9 @@ def simhash_band_rows(
         # ReuseExchange never fires — ADVICE r9), which evaluated the
         # fingerprint aggregation twice. Materializing it ONCE lets
         # both branches (and the downstream pair self-join) read the
-        # cached partitions. Default is a lazy local checkpoint —
-        # fastest on a stable cluster, but non-recomputable: local
-        # checkpoints die with their executor, so a cluster running
-        # dynamic allocation / spot instances should flip
-        # ``spark.movie_data_pipeline.dedup.materialize`` to
-        # ``persist`` (replayable MEMORY_AND_DISK lineage) or ``none``
-        # (recompute twice, zero block-manager state) — ADVICE r10.
-        sh = _materialize_for_reuse(sh)
+        # cached partitions (a lazy local checkpoint: executor-local,
+        # so it dies with its executor).
+        sh = sh.localCheckpoint(eager=False)
         n1 = sh.agg(F.count("*").alias("__n_fp"))
         rung_col = (
             F.when(F.col("__n_fp") <= t1, 1)
@@ -1040,37 +1015,6 @@ def ppjoin_pairs(
         """Exact ceil(t/(1+t) * total): t/(1+t) = num/(num+den)."""
         return _ceil_ratio_mul(t_num, t_num + t_den, total)
 
-    # Three consumers (document frequencies, prefix ranking, the
-    # verification arrays) read the shingle frame; persist it or each
-    # re-runs the scan+regex+explode subtree (same rationale as
-    # jaccard_pairs' bucket persist — measured ~2x on the whole query).
-    sh = doc_shingles(df, id_col, text_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # Materialize before the multi-leaf consumers (round 13, guide §5):
-    # sh feeds the df-rank join on both sides AND the verification
-    # arrays — cold-cache leaves race and re-shingle otherwise.
-    sh.count()
-    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("sh_df"))
-    per_doc = Window.partitionBy(id_col)
-    ranked = (
-        sh.join(dfreq, "shingle")
-        .select(
-            id_col,
-            "shingle",
-            F.row_number()
-            .over(per_doc.orderBy("sh_df", "shingle"))
-            .alias("pos"),
-            F.count("*").over(per_doc).alias("set_size"),
-        )
-    )
-    prefix_len = (
-        F.col("set_size")
-        - _ceil_t_times(F.col("set_size"))
-        + F.lit(1)
-    )
-    prefix = ranked.filter(F.col("pos") <= prefix_len)
-
     # Bucket entries carry (doc, pos, set_size) so the pair generator
     # can apply PPJoin's two LOSSLESS in-bucket prunes before anything
     # shuffles:
@@ -1108,84 +1052,114 @@ def ppjoin_pairs(
         ),
         lambda p: p.isNotNull(),
     )
-    cand = (
-        prefix.groupBy("shingle")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col(id_col).alias("doc"),
-                        F.col("pos").alias("pos"),
-                        F.col("set_size").alias("sz"),
-                    )
-                )
-            ).alias("ids")
-        )
-        .filter(F.size("ids") > 1)
-        .select(F.explode(pair_array).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-    )
-    # NOT distinct'd here: a pair surviving the filters appears once per
-    # shared prefix shingle (small multiplicity), and deduping now would
-    # shuffle the full candidate stream. The verify join processes the
-    # duplicates (identical rows → identical jaccard) and the final
-    # distinct runs on the thresholded survivors — orders of magnitude
-    # fewer rows than the candidate stream.
 
-    arrs = (
-        sh.groupBy(id_col)
-        .agg(
+    # Three consumers (document frequencies, prefix ranking, the
+    # verification arrays) read the shingle frame; cache it or each
+    # re-runs the scan+regex+explode subtree (same rationale as
+    # jaccard_pairs' bucket persist — measured ~2x on the whole query).
+    # Counted on entry: sh feeds the df-rank join on both sides AND the
+    # verification arrays — cold-cache leaves race and re-shingle.
+    # Both caches are released on the way out, also on an exception.
+    with cached(
+        doc_shingles(df, id_col, text_col, n),
+        level=StorageLevel.MEMORY_AND_DISK,
+    ) as sh:
+        dfreq = sh.groupBy("shingle").agg(F.count("*").alias("sh_df"))
+        per_doc = Window.partitionBy(id_col)
+        ranked = (
+            sh.join(dfreq, "shingle")
+            .select(
+                id_col,
+                "shingle",
+                F.row_number()
+                .over(per_doc.orderBy("sh_df", "shingle"))
+                .alias("pos"),
+                F.count("*").over(per_doc).alias("set_size"),
+            )
+        )
+        prefix_len = (
+            F.col("set_size")
+            - _ceil_t_times(F.col("set_size"))
+            + F.lit(1)
+        )
+        prefix = ranked.filter(F.col("pos") <= prefix_len)
+
+        cand = (
+            prefix.groupBy("shingle")
+            .agg(
+                F.sort_array(
+                    F.collect_list(
+                        F.struct(
+                            F.col(id_col).alias("doc"),
+                            F.col("pos").alias("pos"),
+                            F.col("set_size").alias("sz"),
+                        )
+                    )
+                ).alias("ids")
+            )
+            .filter(F.size("ids") > 1)
+            .select(F.explode(pair_array).alias("p"))
+            .select(
+                F.col("p.doc_a").alias("doc_a"),
+                F.col("p.doc_b").alias("doc_b"),
+            )
+        )
+        # NOT distinct'd here: a pair surviving the filters appears once
+        # per shared prefix shingle (small multiplicity), and deduping
+        # now would shuffle the full candidate stream. The verify join
+        # processes the duplicates (identical rows → identical jaccard)
+        # and the final distinct runs on the thresholded survivors —
+        # orders of magnitude fewer rows than the candidate stream.
+
+        # both verify dims (arr_a and arr_b) consume the verification
+        # arrays on DIFFERENT join keys, so the exchanges cannot be
+        # reused and the collect_list+sort aggregate would run twice
+        # from the cached shingle frame; cached it is built once, and
+        # counted on entry because the single verify action scans it
+        # at two leaves (doc_a and doc_b dims).
+        arrs = sh.groupBy(id_col).agg(
             F.sort_array(F.collect_list("shingle")).alias("arr"),
             F.count("*").alias("sz"),
         )
-        # both verify dims (arr_a and arr_b) consume this frame on
-        # DIFFERENT join keys, so the exchanges cannot be reused and
-        # the collect_list+sort aggregate ran twice from the cached
-        # shingle frame; cached it is built once (guide §2.4)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # Materialize: the single verify action scans arrs at two leaves
-    # (doc_a and doc_b dims) — populate the cache once (round 13, §5).
-    arrs.count()
-    verified = (
-        cand.join(
-            arrs.select(
-                F.col(id_col).alias("doc_a"),
-                F.col("arr").alias("arr_a"),
-                F.col("sz").alias("sz_a"),
-            ),
-            "doc_a",
-        )
-        .join(
-            arrs.select(
-                F.col(id_col).alias("doc_b"),
-                F.col("arr").alias("arr_b"),
-                F.col("sz").alias("sz_b"),
-            ),
-            "doc_b",
-        )
-        .withColumn("n_common", F.size(F.array_intersect("arr_a", "arr_b")))
-        .withColumn(
-            "jaccard",
-            F.col("n_common")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-    )
-    # Bound the caches' lifetime (§5 hygiene, VERDICT r12 #10): the
-    # thresholded survivor set is orders of magnitude smaller than the
-    # candidate stream, so materialize it eagerly (executor-local
-    # checkpoint — nothing moves through the driver) and release the
-    # shingle + verification-array persists; a long-lived session no
-    # longer accumulates MEMORY_AND_DISK blocks per call.
-    out = (
-        verified.select("doc_a", "doc_b", "jaccard")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    arrs.unpersist()
-    sh.unpersist()
-    return out
+        with cached(arrs, level=StorageLevel.MEMORY_AND_DISK) as arrs:
+            verified = (
+                cand.join(
+                    arrs.select(
+                        F.col(id_col).alias("doc_a"),
+                        F.col("arr").alias("arr_a"),
+                        F.col("sz").alias("sz_a"),
+                    ),
+                    "doc_a",
+                )
+                .join(
+                    arrs.select(
+                        F.col(id_col).alias("doc_b"),
+                        F.col("arr").alias("arr_b"),
+                        F.col("sz").alias("sz_b"),
+                    ),
+                    "doc_b",
+                )
+                .withColumn(
+                    "n_common", F.size(F.array_intersect("arr_a", "arr_b"))
+                )
+                .withColumn(
+                    "jaccard",
+                    F.col("n_common")
+                    / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")),
+                )
+                .filter(F.col("jaccard") >= F.lit(threshold))
+            )
+            # The thresholded survivor set is orders of magnitude
+            # smaller than the candidate stream: materialize it eagerly
+            # (executor-local checkpoint — nothing moves through the
+            # driver) so the shingle and verification-array caches can
+            # be released; a long-lived session no longer accumulates
+            # MEMORY_AND_DISK blocks per call.
+            return (
+                verified.select("doc_a", "doc_b", "jaccard")
+                .distinct()
+                .localCheckpoint(eager=True)
+            )
 
 
 def containment_pairs(

@@ -2,7 +2,41 @@
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
+
+
+@contextmanager
+def cached(
+    df: DataFrame,
+    count: bool = True,
+    level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER,
+) -> Iterator[DataFrame]:
+    """Persist ``df`` for the ``with`` block and always unpersist it on
+    the way out, exception or not — a cache's lifetime is the block.
+
+    ``count`` fills the cache with one action on entry: a consumer that
+    scans the frame at several plan leaves inside one job would
+    otherwise race on the cold cache and recompute the subtree at each
+    leaf. Pass ``count=False`` when the block's own first action (a
+    count the caller needs anyway, an emptiness probe) fills it.
+
+    A frame the caller has already cached is yielded as is, uncounted:
+    its owner's block releases it.
+    """
+    if df.is_cached:
+        yield df
+        return
+    df = df.persist(level)
+    try:
+        if count:
+            df.count()
+        yield df
+    finally:
+        df.unpersist()
 
 
 def spread(df: DataFrame, min_factor: int = 2) -> DataFrame:

@@ -89,6 +89,87 @@ def _assert_single_file(path: str, what: str) -> None:
         )
 
 
+def _split_streams(
+    spark: SparkSession,
+    base: str,
+    df: DataFrame,
+    key: str,
+    ways: int,
+    what: str,
+    *,
+    one_source: bool,
+) -> list[DataFrame]:
+    """Split ``df`` by ``key % ways`` into one single-file parquet
+    source per part and stream the parts back with ``df``'s schema.
+    Spark writes part i to ``{base}/{half|third}{i}``; the driver only
+    renames its part file to ``{i}_{half|third}.parquet``.
+
+    ``one_source=True``: every part lands in ``{base}/src`` with
+    strictly increasing mtimes and is read as ONE stream with
+    ``maxFilesPerTrigger=1`` — the file-stream source lists
+    oldest-first, so part i is micro-batch i. ``one_source=False``:
+    part i is its own source ``{base}/src{i}`` and stream, for replays
+    that start a separate gate per part (with lifecycle steps between).
+    """
+    import os as _os
+
+    name = {2: "half", 3: "third"}[ways]
+    srcs = []
+    for i in range(ways):
+        src = f"{base}/src" if one_source else f"{base}/src{i}"
+        _os.makedirs(src, exist_ok=True)
+        out = f"{base}/{name}{i}"
+        df.filter(F.col(key) % ways == i).coalesce(1).write.parquet(out)
+        dest = f"{src}/{i}_{name}.parquet"
+        _os.rename(_one_part(out, what), dest)
+        if one_source:
+            _os.utime(dest, (1_000_000 + i * 100, 1_000_000 + i * 100))
+        srcs.append(src)
+    reader = spark.readStream.schema(df.schema)
+    if one_source:
+        return [reader.option("maxFilesPerTrigger", 1).parquet(srcs[0])]
+    return [reader.parquet(src) for src in srcs]
+
+
+def _assert_fed(q, n: int, what: str) -> None:
+    """Fail unless the finished stream ran at least ``n`` data-carrying
+    micro-batches. Read from the query's OWN progress, not a commit
+    count: a gate skips its commits for an all-duplicate batch, so a
+    commit count would false-alarm on a batch that ran."""
+    fed = {
+        p["batchId"]
+        for p in q.recentProgress
+        if p.get("numInputRows", 0) > 0
+    }
+    if len(fed) < n:
+        raise AssertionError(
+            f"{what}: expected >={n} data-carrying micro-batches, got "
+            f"batchIds {sorted(fed)} — the stream did not run multi-batch"
+        )
+
+
+def _accepted_corpus(spark: SparkSession, acc: str) -> DataFrame:
+    """A gate's accepted corpus as (doc_id, source) ordered by doc_id,
+    materialized so the replay's temp directories can be removed."""
+    from movie_data_pipeline_spark.sources.versioned import VersionedTable
+
+    return (
+        VersionedTable(acc)
+        .read(spark)
+        .select("doc_id", "source")
+        .orderBy("doc_id")
+        .localCheckpoint(eager=True)
+    )
+
+
+def _metric_table(spark: SparkSession, values: dict[str, int]) -> DataFrame:
+    """(metric, value) rows ordered by metric, materialized."""
+    return spark.createDataFrame(
+        sorted((k, int(v)) for k, v in values.items()),
+        "metric STRING, value LONG",
+    ).localCheckpoint(eager=True)
+
+
 @query(
     "q204_streaming_hourly_upsert",
     oracle=f"""
@@ -194,7 +275,6 @@ def q205_streaming_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     behavior is covered by the ordering-aware unit tests
     (tests/test_dedup_gate.py).
     """
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
     from movie_data_pipeline_spark.streaming.events import stream_table
     from movie_data_pipeline_spark.streaming.sinks import (
         start_dedup_gate_stream,
@@ -209,13 +289,7 @@ def q205_streaming_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = stream_table(spark, sf_dir, "documents")
         q = start_dedup_gate_stream(docs, acc, idx, ckpt)
         _await(q, "q205")
-        result = (
-            VersionedTable(acc)
-            .read(spark)
-            .select("doc_id", "source")
-            .orderBy("doc_id")
-        )
-        return result.localCheckpoint(eager=True)
+        return _accepted_corpus(spark, acc)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -585,65 +659,24 @@ def q244_streaming_multibatch_gate(
     already multi-file); the distributed write stays in Spark and the
     driver only renames the part files.
     """
-    import glob as _glob
-    import os as _os
 
     from movie_data_pipeline_spark.sources.registry import load_table
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
     from movie_data_pipeline_spark.streaming.sinks import (
         start_dedup_gate_stream,
     )
 
     docs = load_table(spark, sf_dir, "documents")
     base = tempfile.mkdtemp(prefix="mdp-q244-")
-    src = f"{base}/src"
     acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    _os.makedirs(src)
     try:
-        for i, half in enumerate(
-            (
-                docs.filter(F.col("doc_id") % 2 == 0),
-                docs.filter(F.col("doc_id") % 2 == 1),
-            )
-        ):
-            out = f"{base}/half{i}"
-            half.coalesce(1).write.parquet(out)
-            part = _one_part(out, "q244")
-            dest = f"{src}/{i}_half.parquet"
-            _os.rename(part, dest)
-            # strictly increasing mtimes: the file-stream source lists
-            # oldest-first, so evens form batch 0, odds batch 1
-            _os.utime(dest, (1_000_000 + i * 100, 1_000_000 + i * 100))
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        # evens form batch 0, odds batch 1
+        (stream,) = _split_streams(
+            spark, base, docs, "doc_id", 2, "q244", one_source=True
         )
         q = start_dedup_gate_stream(stream, acc, idx, ckpt)
         _await(q, "q244")
-        # Multi-batch assertion from the QUERY'S OWN progress, not the
-        # index commit count (ADVICE r4): dedup_gate_batch_writer skips
-        # the index commit for a zero-survivor micro-batch, so a
-        # legitimately all-duplicate batch would false-alarm an
-        # index-commit assertion even though two batches ran.
-        fed = {
-            p["batchId"]
-            for p in q.recentProgress
-            if p.get("numInputRows", 0) > 0
-        }
-        if len(fed) < 2:
-            raise AssertionError(
-                f"q244: expected >=2 data-carrying micro-batches, got "
-                f"batchIds {sorted(fed)} — the stream did not run "
-                f"multi-batch"
-            )
-        result = (
-            VersionedTable(acc)
-            .read(spark)
-            .select("doc_id", "source")
-            .orderBy("doc_id")
-        )
-        return result.localCheckpoint(eager=True)
+        _assert_fed(q, 2, "q244")
+        return _accepted_corpus(spark, acc)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -702,8 +735,6 @@ def q267_streaming_closed_window_ledger(
     ledger (q244's machinery) gives readers snapshot isolation over
     exactly-once-published windows.
     """
-    import glob as _glob
-    import os as _os
 
     from movie_data_pipeline_spark.schemas import TESTDATA_SCHEMAS
     from movie_data_pipeline_spark.sources.registry import (
@@ -726,29 +757,14 @@ def q267_streaming_closed_window_ledger(
     raw = raw.withColumn("ts", F.expr(us))
 
     base = tempfile.mkdtemp(prefix="mdp-q267-")
-    src = f"{base}/src"
     table, ckpt = f"{base}/table", f"{base}/ckpt"
-    _os.makedirs(src)
     try:
-        for i, half in enumerate(
-            (
-                raw.filter(F.col("user_id") % 2 == 0),
-                raw.filter(F.col("user_id") % 2 == 1),
-            )
-        ):
-            out = f"{base}/half{i}"
-            half.coalesce(1).write.parquet(out)
-            part = _one_part(out, "q267")
-            dest = f"{src}/{i}_half.parquet"
-            _os.rename(part, dest)
-            _os.utime(dest, (1_000_000 + i * 100, 1_000_000 + i * 100))
-        stream = (
-            spark.readStream.schema(TESTDATA_SCHEMAS["events"])
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .withColumn("ts", F.timestamp_micros(F.col("ts")))
+        (stream,) = _split_streams(
+            spark, base, raw, "user_id", 2, "q267", one_source=True
         )
-        stats = hourly_type_totals_stream(stream)
+        stats = hourly_type_totals_stream(
+            stream.withColumn("ts", F.timestamp_micros(F.col("ts")))
+        )
         q = start_versioned_append_stream(stats, table, ckpt)
         _await(q, "q267")
         # The oracle reproduces the sink only if NO late input row was
@@ -768,16 +784,7 @@ def q267_streaming_closed_window_ledger(
                 "merge-before-evict premise no longer holds and the "
                 "batch oracle cannot mirror this sink"
             )
-        fed = {
-            p["batchId"]
-            for p in q.recentProgress
-            if p.get("numInputRows", 0) > 0
-        }
-        if len(fed) < 2:
-            raise AssertionError(
-                f"q267: expected >=2 data-carrying micro-batches, got "
-                f"batchIds {sorted(fed)}"
-            )
+        _assert_fed(q, 2, "q267")
         sink = VersionedTable(table).read(spark)
         n_sink = sink.count()
         n_all = (
@@ -858,7 +865,6 @@ def q287_simhash_index_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     prove convergence across a crash planted between the two commits.
     """
     from movie_data_pipeline_spark.sources.registry import table_path
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
     from movie_data_pipeline_spark.streaming.events import stream_table
     from movie_data_pipeline_spark.streaming.sinks import (
         start_simhash_gate_stream,
@@ -871,13 +877,7 @@ def q287_simhash_index_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = stream_table(spark, sf_dir, "documents")
         q = start_simhash_gate_stream(docs, acc, idx, ckpt, rung=1)
         _await(q, "q287")
-        result = (
-            VersionedTable(acc)
-            .read(spark)
-            .select("doc_id", "source")
-            .orderBy("doc_id")
-        )
-        return result.localCheckpoint(eager=True)
+        return _accepted_corpus(spark, acc)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -955,58 +955,23 @@ def q292_simhash_multibatch_gate(
     round-9 ladder — computes exactly the greedy first-seen-wins
     corpus the batch SQL defines.
     """
-    import glob as _glob
-    import os as _os
 
     from movie_data_pipeline_spark.sources.registry import load_table
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
     from movie_data_pipeline_spark.streaming.sinks import (
         start_simhash_gate_stream,
     )
 
     docs = load_table(spark, sf_dir, "documents")
     base = tempfile.mkdtemp(prefix="mdp-q292-")
-    src = f"{base}/src"
     acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    _os.makedirs(src)
     try:
-        for i, half in enumerate(
-            (
-                docs.filter(F.col("doc_id") % 2 == 0),
-                docs.filter(F.col("doc_id") % 2 == 1),
-            )
-        ):
-            out = f"{base}/half{i}"
-            half.coalesce(1).write.parquet(out)
-            part = _one_part(out, "q292")
-            dest = f"{src}/{i}_half.parquet"
-            _os.rename(part, dest)
-            _os.utime(dest, (1_000_000 + i * 100, 1_000_000 + i * 100))
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        (stream,) = _split_streams(
+            spark, base, docs, "doc_id", 2, "q292", one_source=True
         )
         q = start_simhash_gate_stream(stream, acc, idx, ckpt, rung=1)
         _await(q, "q292")
-        fed = {
-            p["batchId"]
-            for p in q.recentProgress
-            if p.get("numInputRows", 0) > 0
-        }
-        if len(fed) < 2:
-            raise AssertionError(
-                f"q292: expected >=2 data-carrying micro-batches, got "
-                f"batchIds {sorted(fed)} — the stream did not run "
-                f"multi-batch"
-            )
-        result = (
-            VersionedTable(acc)
-            .read(spark)
-            .select("doc_id", "source")
-            .orderBy("doc_id")
-        )
-        return result.localCheckpoint(eager=True)
+        _assert_fed(q, 2, "q292")
+        return _accepted_corpus(spark, acc)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -1266,14 +1231,11 @@ def q296_simhash_rung_migration(
     index is byte-equivalent to an index BUILT at rung 2 over the same
     corpus — the migration loses nothing and invents nothing.
     """
-    import glob as _glob
-    import os as _os
 
     from movie_data_pipeline_spark.operators.index_lifecycle import (
         migrate_simhash_index,
     )
     from movie_data_pipeline_spark.sources.registry import load_table
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
     from movie_data_pipeline_spark.streaming.sinks import (
         start_simhash_gate_stream,
     )
@@ -1282,23 +1244,9 @@ def q296_simhash_rung_migration(
     base = tempfile.mkdtemp(prefix="mdp-q296-")
     acc, idx = f"{base}/acc", f"{base}/idx"
     try:
-        streams = []
-        for i, half in enumerate(
-            (
-                docs.filter(F.col("doc_id") % 2 == 0),
-                docs.filter(F.col("doc_id") % 2 == 1),
-            )
-        ):
-            src = f"{base}/src{i}"
-            _os.makedirs(src)
-            out = f"{base}/half{i}"
-            half.coalesce(1).write.parquet(out)
-            part = _one_part(out, "q296")
-            _os.rename(part, f"{src}/{i}_half.parquet")
-            streams.append(
-                spark.readStream.schema(docs.schema).parquet(src)
-            )
-
+        streams = _split_streams(
+            spark, base, docs, "doc_id", 2, "q296", one_source=False
+        )
         q0 = start_simhash_gate_stream(
             streams[0], acc, idx, f"{base}/ckpt0", rung=1
         )
@@ -1309,13 +1257,7 @@ def q296_simhash_rung_migration(
         )
         _await(q1, "q296 batch 1")
 
-        result = (
-            VersionedTable(acc)
-            .read(spark)
-            .select("doc_id", "source")
-            .orderBy("doc_id")
-        )
-        return result.localCheckpoint(eager=True)
+        return _accepted_corpus(spark, acc)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -1694,14 +1636,11 @@ def q302_midstream_erasure_gate(
     batch-0 greedy corpus, the erased subset, batch-1 novelty decided
     against the KEPT docs' bands only, and the final union.
     """
-    import glob as _glob
-    import os as _os
 
     from movie_data_pipeline_spark.operators.index_lifecycle import (
         erase_documents,
     )
     from movie_data_pipeline_spark.sources.registry import load_table
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
     from movie_data_pipeline_spark.streaming.sinks import (
         start_simhash_gate_stream,
     )
@@ -1710,23 +1649,9 @@ def q302_midstream_erasure_gate(
     base = tempfile.mkdtemp(prefix="mdp-q302-")
     acc, idx = f"{base}/acc", f"{base}/idx"
     try:
-        streams = []
-        for i, half in enumerate(
-            (
-                docs.filter(F.col("doc_id") % 2 == 0),
-                docs.filter(F.col("doc_id") % 2 == 1),
-            )
-        ):
-            src = f"{base}/src{i}"
-            _os.makedirs(src)
-            out = f"{base}/half{i}"
-            half.coalesce(1).write.parquet(out)
-            part = _one_part(out, "q302")
-            _os.rename(part, f"{src}/{i}_half.parquet")
-            streams.append(
-                spark.readStream.schema(docs.schema).parquet(src)
-            )
-
+        streams = _split_streams(
+            spark, base, docs, "doc_id", 2, "q302", one_source=False
+        )
         q0 = start_simhash_gate_stream(
             streams[0], acc, idx, f"{base}/ckpt0", rung=1
         )
@@ -1737,13 +1662,7 @@ def q302_midstream_erasure_gate(
         )
         _await(q1, "q302 batch 1")
 
-        result = (
-            VersionedTable(acc)
-            .read(spark)
-            .select("doc_id", "source")
-            .orderBy("doc_id")
-        )
-        return result.localCheckpoint(eager=True)
+        return _accepted_corpus(spark, acc)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -1873,7 +1792,6 @@ def q307_banding_migration_gate(
     banding migration loses nothing, invents nothing, and the gate's
     pinned-assignment validation holds across it.
     """
-    import os as _os
 
     from movie_data_pipeline_spark.operators.dedup import (
         measure_balanced_bit_blocks,
@@ -1891,23 +1809,9 @@ def q307_banding_migration_gate(
     base = tempfile.mkdtemp(prefix="mdp-q307-")
     acc, idx = f"{base}/acc", f"{base}/idx"
     try:
-        streams = []
-        for i, half in enumerate(
-            (
-                docs.filter(F.col("doc_id") % 2 == 0),
-                docs.filter(F.col("doc_id") % 2 == 1),
-            )
-        ):
-            src = f"{base}/src{i}"
-            _os.makedirs(src)
-            out = f"{base}/half{i}"
-            half.coalesce(1).write.parquet(out)
-            part = _one_part(out, "q307")
-            _os.rename(part, f"{src}/{i}_half.parquet")
-            streams.append(
-                spark.readStream.schema(docs.schema).parquet(src)
-            )
-
+        streams = _split_streams(
+            spark, base, docs, "doc_id", 2, "q307", one_source=False
+        )
         q0 = start_simhash_gate_stream(
             streams[0], acc, idx, f"{base}/ckpt0", rung=1
         )
@@ -1925,13 +1829,7 @@ def q307_banding_migration_gate(
         )
         _await(q1, "q307 batch 1")
 
-        result = (
-            VersionedTable(acc)
-            .read(spark)
-            .select("doc_id", "source")
-            .orderBy("doc_id")
-        )
-        return result.localCheckpoint(eager=True)
+        return _accepted_corpus(spark, acc)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -2022,7 +1920,6 @@ def q308_partitioned_index_erasure(
     """
     import json as _json
     import os as _os
-    from functools import reduce
 
     from movie_data_pipeline_spark.operators.index_lifecycle import (
         erase_documents,
@@ -2081,33 +1978,19 @@ def q308_partitioned_index_erasure(
         acc2 = acc_t.read(spark, version=2).select("doc_id")
         idx0 = idx_t.read(spark, version=0)
         idx1 = idx_t.read(spark, version=1)
-
-        def metric(name: str, frame: DataFrame) -> DataFrame:
-            return frame.agg(
-                F.count("*").cast("long").alias("value")
-            ).select(F.lit(name).alias("metric"), "value")
-
-        def const(name: str, value: int) -> DataFrame:
-            return spark.createDataFrame(
-                [(name, int(value))], "metric STRING, value LONG"
-            )
-
-        rows = [
-            metric("n_accepted_final", acc2),
-            metric("n_accepted_initial", acc0),
-            const("n_buckets_touched", n_touched),
-            metric("n_erased", acc0.join(acc1, "doc_id", "left_anti")),
-            metric("n_index_rows_after_scrub", idx1),
-            metric("n_index_rows_before_scrub", idx0),
-            const("n_parts_inherited", n_inherited),
-            metric(
-                "n_phantom_rows_after_scrub",
-                idx1.join(acc1, "doc_id", "left_anti"),
+        return _metric_table(spark, {
+            "n_accepted_final": acc2.count(),
+            "n_accepted_initial": acc0.count(),
+            "n_buckets_touched": n_touched,
+            "n_erased": acc0.join(acc1, "doc_id", "left_anti").count(),
+            "n_index_rows_after_scrub": idx1.count(),
+            "n_index_rows_before_scrub": idx0.count(),
+            "n_parts_inherited": n_inherited,
+            "n_phantom_rows_after_scrub": (
+                idx1.join(acc1, "doc_id", "left_anti").count()
             ),
-            metric("n_reaccepted", acc2.join(acc1, "doc_id", "left_anti")),
-        ]
-        result = reduce(DataFrame.unionByName, rows).orderBy("metric")
-        return result.localCheckpoint(eager=True)
+            "n_reaccepted": acc2.join(acc1, "doc_id", "left_anti").count(),
+        })
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -2206,7 +2089,6 @@ def q311_centered_gate_replay(
     proves the pinned-threshold space is consistent across batches and
     the gate's greedy semantics are unchanged by the centered family.
     """
-    import os as _os
 
     from movie_data_pipeline_spark.sources.registry import load_table
     from movie_data_pipeline_spark.sources.versioned import VersionedTable
@@ -2218,23 +2100,9 @@ def q311_centered_gate_replay(
     base = tempfile.mkdtemp(prefix="mdp-q311-")
     acc, idx = f"{base}/acc", f"{base}/idx"
     try:
-        streams = []
-        for i, half in enumerate(
-            (
-                docs.filter(F.col("doc_id") % 2 == 0),
-                docs.filter(F.col("doc_id") % 2 == 1),
-            )
-        ):
-            src = f"{base}/src{i}"
-            _os.makedirs(src)
-            out = f"{base}/half{i}"
-            half.coalesce(1).write.parquet(out)
-            part = _one_part(out, "q311")
-            _os.rename(part, f"{src}/{i}_half.parquet")
-            streams.append(
-                spark.readStream.schema(docs.schema).parquet(src)
-            )
-
+        streams = _split_streams(
+            spark, base, docs, "doc_id", 2, "q311", one_source=False
+        )
         q0 = start_simhash_gate_stream(
             streams[0], acc, idx, f"{base}/ckpt0", rung=1, centered=True
         )
@@ -2250,13 +2118,7 @@ def q311_centered_gate_replay(
         assert meta2["simhash_center_s"] == meta["simhash_center_s"]
         assert meta2["simhash_center_n"] == meta["simhash_center_n"]
 
-        result = (
-            VersionedTable(acc)
-            .read(spark)
-            .select("doc_id", "source")
-            .orderBy("doc_id")
-        )
-        return result.localCheckpoint(eager=True)
+        return _accepted_corpus(spark, acc)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -2383,8 +2245,6 @@ def q312_gate_compaction_replay(
     isolation means a reader or the next batch sees pre- or
     post-compaction, never a mix.
     """
-    import os as _os
-    from functools import reduce
 
     from movie_data_pipeline_spark.sources.registry import load_table
     from movie_data_pipeline_spark.sources.versioned import VersionedTable
@@ -2395,36 +2255,14 @@ def q312_gate_compaction_replay(
 
     docs = load_table(spark, sf_dir, "documents")
     base = tempfile.mkdtemp(prefix="mdp-q312-")
-    src = f"{base}/src"
     acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    _os.makedirs(src)
     try:
-        for i in range(3):
-            out = f"{base}/third{i}"
-            docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(
-                out
-            )
-            part = _one_part(out, "q312")
-            dest = f"{src}/{i}_third.parquet"
-            _os.rename(part, dest)
-            _os.utime(dest, (1_000_000 + i * 100, 1_000_000 + i * 100))
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        (stream,) = _split_streams(
+            spark, base, docs, "doc_id", 3, "q312", one_source=True
         )
         q = start_simhash_gate_stream(stream, acc, idx, ckpt, rung=1)
         _await(q, "q312")
-        fed = {
-            p["batchId"]
-            for p in q.recentProgress
-            if p.get("numInputRows", 0) > 0
-        }
-        if len(fed) < 3:
-            raise AssertionError(
-                f"q312: expected >=3 data-carrying micro-batches, got "
-                f"batchIds {sorted(fed)}"
-            )
+        _assert_fed(q, 3, "q312")
         acc_t, idx_t = VersionedTable(acc), VersionedTable(idx)
         n_commits_before = len(acc_t.manifest()["data_dirs"])
         accepted_before = acc_t.read(spark).localCheckpoint(eager=True)
@@ -2456,26 +2294,16 @@ def q312_gate_compaction_replay(
             accepted_before.select("doc_id"), "doc_id", "left_anti"
         ).count()
 
-        def const(metric: str, value: int) -> DataFrame:
-            return spark.createDataFrame(
-                [(metric, int(value))], "metric STRING, value LONG"
-            )
-
-        rows = [
-            const("n_accepted_after_resubmit", n_after),
-            const("n_accepted_final", n_final),
-            const("n_commits_corpus_before_compact", n_commits_before),
-            const("n_data_dirs_corpus_after_compact", dirs_acc),
-            const("n_data_dirs_index_after_compact", dirs_idx),
-            const(
-                "n_index_rows_final",
-                idx_t.read(spark).count(),
-            ),
-            const("n_reaccepted_after_compact", reaccepted),
-            const("n_resubmitted", resub.count()),
-        ]
-        result = reduce(DataFrame.unionByName, rows).orderBy("metric")
-        return result.localCheckpoint(eager=True)
+        return _metric_table(spark, {
+            "n_accepted_after_resubmit": n_after,
+            "n_accepted_final": n_final,
+            "n_commits_corpus_before_compact": n_commits_before,
+            "n_data_dirs_corpus_after_compact": dirs_acc,
+            "n_data_dirs_index_after_compact": dirs_idx,
+            "n_index_rows_final": idx_t.read(spark).count(),
+            "n_reaccepted_after_compact": reaccepted,
+            "n_resubmitted": resub.count(),
+        })
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -2619,7 +2447,6 @@ def q313_recommended_gate_replay(
     (etl1.py full-refresh loads only); this is the extension surface's
     default build path.
     """
-    import os as _os
 
     from movie_data_pipeline_spark.operators.index_lifecycle import (
         count_phantom_index_rows,
@@ -2636,23 +2463,9 @@ def q313_recommended_gate_replay(
     base = tempfile.mkdtemp(prefix="mdp-q313-")
     acc, idx = f"{base}/acc", f"{base}/idx"
     try:
-        streams = []
-        for i, half in enumerate(
-            (
-                docs.filter(F.col("doc_id") % 2 == 0),
-                docs.filter(F.col("doc_id") % 2 == 1),
-            )
-        ):
-            src = f"{base}/src{i}"
-            _os.makedirs(src)
-            out = f"{base}/half{i}"
-            half.coalesce(1).write.parquet(out)
-            part = _one_part(out, "q313")
-            _os.rename(part, f"{src}/{i}_half.parquet")
-            streams.append(
-                spark.readStream.schema(docs.schema).parquet(src)
-            )
-
+        streams = _split_streams(
+            spark, base, docs, "doc_id", 2, "q313", one_source=False
+        )
         q0 = start_recommended_simhash_gate_stream(
             streams[0], acc, idx, f"{base}/ckpt0"
         )
@@ -2678,13 +2491,7 @@ def q313_recommended_gate_replay(
         ), "erasure scrub did not take the pruned path"
         assert count_phantom_index_rows(spark, idx, acc) == 0
 
-        result = (
-            VersionedTable(acc)
-            .read(spark)
-            .select("doc_id", "source")
-            .orderBy("doc_id")
-        )
-        return result.localCheckpoint(eager=True)
+        return _accepted_corpus(spark, acc)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -2811,7 +2618,6 @@ def q317_bucketed_gate_compaction(
     bounded by the 4096-partition fallback.
     """
     import os as _os
-    from functools import reduce
 
     from movie_data_pipeline_spark.sources.registry import load_table
     from movie_data_pipeline_spark.sources.versioned import VersionedTable
@@ -2822,23 +2628,10 @@ def q317_bucketed_gate_compaction(
 
     docs = load_table(spark, sf_dir, "documents")
     base = tempfile.mkdtemp(prefix="mdp-q317-")
-    src = f"{base}/src"
     acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    _os.makedirs(src)
     try:
-        for i in range(3):
-            out = f"{base}/third{i}"
-            docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(
-                out
-            )
-            part = _one_part(out, "q317")
-            dest = f"{src}/{i}_third.parquet"
-            _os.rename(part, dest)
-            _os.utime(dest, (1_000_000 + i * 100, 1_000_000 + i * 100))
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        (stream,) = _split_streams(
+            spark, base, docs, "doc_id", 3, "q317", one_source=True
         )
         q = start_simhash_gate_stream(
             stream, acc, idx, ckpt, rung=1, index_bucket_k=8
@@ -2909,23 +2702,15 @@ def q317_bucketed_gate_compaction(
             accepted_before.select("doc_id"), "doc_id", "left_anti"
         ).count()
 
-        def const(metric: str, value: int) -> DataFrame:
-            return spark.createDataFrame(
-                [(metric, int(value))], "metric STRING, value LONG"
-            )
-
-        rows = [
-            const("max_files_per_bucket_after_compact", max_after),
-            const("n_accepted_final", accepted_before.count()),
-            const(
-                "n_data_dirs_corpus_after_compact",
-                len(acc_t.manifest()["data_dirs"]),
+        return _metric_table(spark, {
+            "max_files_per_bucket_after_compact": max_after,
+            "n_accepted_final": accepted_before.count(),
+            "n_data_dirs_corpus_after_compact": len(
+                acc_t.manifest()["data_dirs"]
             ),
-            const("n_index_rows_final", idx_t.read(spark).count()),
-            const("n_reaccepted_after_compact", reaccepted),
-            const("n_resubmitted", resub.count()),
-        ]
-        result = reduce(DataFrame.unionByName, rows).orderBy("metric")
-        return result.localCheckpoint(eager=True)
+            "n_index_rows_final": idx_t.read(spark).count(),
+            "n_reaccepted_after_compact": reaccepted,
+            "n_resubmitted": resub.count(),
+        })
     finally:
         shutil.rmtree(base, ignore_errors=True)

@@ -35,6 +35,25 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
 
 from movie_data_pipeline_spark.operators.merge import upsert
+from movie_data_pipeline_spark.operators.util import cached
+
+
+def _start_available_now(
+    df: DataFrame,
+    writer: Callable[[DataFrame, int], None],
+    checkpoint: str,
+    output_mode: str = "append",
+) -> StreamingQuery:
+    """Run ``writer`` on every micro-batch of the streaming ``df`` until
+    the input available at start is consumed (``availableNow``), with
+    progress checkpointed at ``checkpoint``."""
+    return (
+        df.writeStream.foreachBatch(writer)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def upsert_batch_writer(
@@ -70,12 +89,8 @@ def start_upsert_stream(
 ) -> StreamingQuery:
     """Continuously maintain a keyed parquet table from a streaming
     update-mode DataFrame (e.g. a watermarked aggregation)."""
-    return (
-        updates.writeStream.foreachBatch(upsert_batch_writer(path, keys))
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _start_available_now(
+        updates, upsert_batch_writer(path, keys), checkpoint, "update"
     )
 
 
@@ -110,17 +125,126 @@ def start_versioned_append_stream(
     df: DataFrame,
     table_path: str,
     checkpoint: str,
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Stream → versioned table: each micro-batch is one append commit."""
-    writer = (
-        df.writeStream.foreachBatch(versioned_append_writer(table_path))
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
+    return _start_available_now(
+        df, versioned_append_writer(table_path), checkpoint
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def _gate_writer(
+    accepted_path: str,
+    index_path: str,
+    index_bucket_k: int | None,
+    sign: Callable[[DataFrame, dict | None], tuple[DataFrame, dict | None]],
+    batch_pairs: Callable[[DataFrame], DataFrame],
+    band_rows: Callable[[DataFrame], DataFrame],
+    check: Callable[[dict, DataFrame], None],
+    corpus_hits: Callable[[DataFrame, DataFrame], DataFrame],
+) -> Callable[[DataFrame, int], None]:
+    """The near-duplicate ingest gate both fingerprint families share;
+    a family supplies only its own functions:
+
+    - ``sign(batch_df, meta)`` → (fingerprint frame, index meta to
+      commit, or None to inherit the index's table properties);
+      ``meta`` is the index manifest's table properties, None while
+      the index has no committed version;
+    - ``batch_pairs(fp)`` → within-batch colliding pairs (doc_a <
+      doc_b); the higher id of each pair is dropped (keep-first);
+    - ``band_rows(fp)`` → the index rows of the batch;
+    - ``check(meta, index_df)`` raises when the writer's pinned
+      configuration does not match the committed index;
+    - ``corpus_hits(bands, index_df)`` → doc_ids matching the index.
+
+    Per batch: empty-batch guard; one manifest read; signing into a
+    cache; within-batch keep-first; the config check and the corpus-hit
+    anti-join against the validated snapshot; the survivor count (zero
+    survivors commit nothing); the replay-idempotency anti-join against
+    the accepted ``doc_id``s; the documents commit; then the index
+    commit of the survivors' band rows, REBALANCEd by ``pbucket`` on a
+    bucketed index.
+
+    Commit ordering is documents-first: a crash between the two
+    commits can leave accepted docs unindexed (a later duplicate may
+    slip through — benign under at-least-once), never the reverse
+    (index-first would permanently reject content that was never
+    stored). A replay after such a crash finds the index unchanged, so
+    survivors are also anti-joined against the accepted table's
+    ``doc_id`` set: landed documents never append twice, and the
+    replay's index commit back-fills their missing band rows. Every
+    cache is released on the way out, also when a commit raises.
+    """
+    from movie_data_pipeline_spark.sources.versioned import VersionedTable
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        spark = batch_df.sparkSession
+        index = VersionedTable(index_path)
+        head = index.current_version()
+        meta = None
+        if head is not None:
+            meta = index.manifest(head).get("meta") or {}
+        fp, idx_meta = sign(batch_df, meta)
+        # Counted on entry: the within-batch pair self-join and the
+        # corpus check scan the fingerprints at several plan leaves of
+        # one job, which on a cold cache would each recompute them.
+        with cached(fp) as fp:
+            bands = band_rows(fp)
+            batch_dupes = (
+                batch_pairs(fp)
+                .select(F.col("doc_b").alias("doc_id"))
+                .distinct()
+            )
+            survivors = batch_df.join(batch_dupes, "doc_id", "left_anti")
+            if head is not None:
+                index_df = index.read(spark, version=head)
+                check(meta, index_df)
+                survivors = survivors.join(
+                    corpus_hits(bands, index_df), "doc_id", "left_anti"
+                )
+            # count() rather than isEmpty(): the emptiness guard is
+            # needed either way, and a full count fills the whole
+            # cache, so the anti-join, the commit and the index
+            # semi-join below read blocks.
+            with cached(survivors, count=False) as survivors:
+                if survivors.count() == 0:
+                    return
+                accepted = VersionedTable(accepted_path)
+                new_docs = survivors
+                if accepted.current_version() is not None:
+                    landed_ids = accepted.read(spark).select("doc_id")
+                    new_docs = survivors.join(
+                        landed_ids, "doc_id", "left_anti"
+                    )
+                # cached across the emptiness probe and the commit,
+                # which would each re-read the accepted doc_ids
+                with cached(new_docs, count=False) as new_docs:
+                    if not new_docs.isEmpty():
+                        accepted.commit(new_docs, mode="append")
+                idx_rows = bands.join(
+                    survivors.select("doc_id"), "doc_id", "left_semi"
+                )
+                if index_bucket_k is not None:
+                    # Bucketed layout: rows Hive-partitioned by id mod
+                    # k, so an erasure scrub rewrites only touched
+                    # buckets. The bucket-keyed REBALANCE keeps each
+                    # append at one file per bucket while AQE sizes the
+                    # exchange — a tiny batch coalesces to few tasks
+                    # instead of k near-empty ones, and at scale an
+                    # oversized bucket splits into advisory-sized files.
+                    k = int(index_bucket_k)
+                    idx_rows = idx_rows.withColumn(
+                        "pbucket", F.expr(f"CAST(pmod(doc_id, {k}) AS INT)")
+                    ).hint("rebalance", "pbucket")
+                    idx_meta = {
+                        **(idx_meta or {}),
+                        "partition_by": "pbucket",
+                        "bucket_k": k,
+                    }
+                index.commit(idx_rows, mode="append", meta=idx_meta)
+
+    return _apply
 
 
 def dedup_gate_batch_writer(
@@ -150,141 +274,52 @@ def dedup_gate_batch_writer(
     4. survivors are committed append-mode to ``accepted_path``, then
        their band signatures to ``index_path``.
 
-    Commit ordering is documents-first: a crash between the two commits
-    can leave accepted docs unindexed (a later duplicate may slip
-    through — benign, dedup is best-effort by construction at
-    at-least-once semantics), never the reverse (index-first would
-    permanently reject content that was never stored). Both commits are
-    snapshot-isolated appends on :class:`VersionedTable`. Replay
-    idempotency does NOT rely on the index alone: a crash between the
-    accepted-docs commit and the index commit followed by an
-    at-least-once replay would find the index unchanged, so survivors
-    are additionally anti-joined against the accepted table's existing
-    ``doc_id`` set before committing — already-landed documents are
-    never appended twice, and the replay's index commit back-fills the
-    missing band signatures. (The accepted-side check reads only the
-    ``doc_id`` column — column-pruned at the parquet scan; at corpus
-    scale the same check is a bloom-filter or key-manifest lookup.)
+    The commit order, replay idempotency and cache lifecycle are the
+    shared gate skeleton's (:func:`_gate_writer`): documents-first, and
+    survivors anti-joined against the accepted table's ``doc_id`` set
+    so a replay after a crash between the two commits never appends a
+    document twice and back-fills the index. (The accepted-side check
+    reads only the ``doc_id`` column — column-pruned at the parquet
+    scan; at corpus scale the same check is a bloom-filter or
+    key-manifest lookup.) ``index_bucket_k`` is checked against every
+    committed index's ``bucket_k``.
     """
     from movie_data_pipeline_spark.operators.dedup import (
         band_signatures,
         lsh_candidate_pairs_wide,
         minhash_signatures_wide,
     )
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        sigs = minhash_signatures_wide(batch_df)
-        sigs.persist()
-        try:
-            # Materialize the signature cache BEFORE the multi-leaf
-            # consumers (round 13): the within-batch pair self-join and
-            # the corpus check scan sigs at several plan leaves inside
-            # one job — on a cold cache those leaves race and each
-            # recomputes the signing subtree (guide §5). One cheap
-            # count populates the cache once.
-            sigs.count()
-            bands = band_signatures(sigs)
-            batch_dupes = (
-                lsh_candidate_pairs_wide(sigs)
-                .select(F.col("doc_b").alias("doc_id"))
-                .distinct()
+    def check(meta: dict, index_df: DataFrame) -> None:
+        stored_k = meta.get("bucket_k")
+        if stored_k != index_bucket_k:
+            raise ValueError(
+                f"dedup gate: index at {index_path} uses bucket "
+                f"layout k={stored_k} but this writer is pinned "
+                f"to k={index_bucket_k}; appending under a "
+                "different layout would tear the partitioned "
+                "table"
             )
-            survivors = batch_df.join(batch_dupes, "doc_id", "left_anti")
 
-            index = VersionedTable(index_path)
-            if index.current_version() is not None:
-                stored_k = (index.manifest().get("meta") or {}).get(
-                    "bucket_k"
-                )
-                if stored_k != index_bucket_k:
-                    raise ValueError(
-                        f"dedup gate: index at {index_path} uses bucket "
-                        f"layout k={stored_k} but this writer is pinned "
-                        f"to k={index_bucket_k}; appending under a "
-                        "different layout would tear the partitioned "
-                        "table"
-                    )
-                corpus_bands = index.read(spark).select("band", "band_sig")
-                corpus_hits = (
-                    bands.join(corpus_bands, ["band", "band_sig"])
-                    .select("doc_id")
-                    .distinct()
-                )
-                survivors = survivors.join(corpus_hits, "doc_id", "left_anti")
+    def corpus_hits(bands: DataFrame, index_df: DataFrame) -> DataFrame:
+        return (
+            bands.join(
+                index_df.select("band", "band_sig"), ["band", "band_sig"]
+            )
+            .select("doc_id")
+            .distinct()
+        )
 
-            survivors = survivors.persist()
-            try:
-                # count() instead of isEmpty(): the emptiness guard is
-                # needed either way (an all-duplicate batch must not
-                # commit), and a full count materializes the survivors
-                # cache completely, so the accepted anti-join, the
-                # docs commit, and the index semi-join below read
-                # blocks instead of recomputing the partitions the
-                # early-exit probe never touched (round 13, guide §5).
-                if survivors.count() == 0:
-                    return
-                # Replay idempotency: docs that already landed in the
-                # accepted table (crash before the index commit, then
-                # at-least-once replay) must not append twice — but
-                # their band signatures still need the index back-fill.
-                accepted = VersionedTable(accepted_path)
-                new_docs = survivors
-                if accepted.current_version() is not None:
-                    # Persisted across the emptiness probe + commit
-                    # (round 13): the anti-join re-reads the accepted
-                    # table's doc_id column, and without a cache the
-                    # isEmpty probe and the commit write each ran it.
-                    landed_ids = accepted.read(spark).select("doc_id")
-                    new_docs = survivors.join(
-                        landed_ids, "doc_id", "left_anti"
-                    ).persist()
-                try:
-                    if not new_docs.isEmpty():
-                        accepted.commit(new_docs, mode="append")
-                finally:
-                    if new_docs is not survivors:
-                        new_docs.unpersist()
-                idx_rows = bands.join(
-                    survivors.select("doc_id"), "doc_id", "left_semi"
-                )
-                idx_meta = None
-                if index_bucket_k is not None:
-                    # Bucketed index layout (round 11): see the SimHash
-                    # gate — erasure scrubs prune to touched buckets.
-                    # Bucket-keyed REBALANCE before the write (round
-                    # 13; was a fixed repartition(k) in round 12):
-                    # without clustering every task writes a file into
-                    # every bucket it touches (tasks x k tiny files PER
-                    # BATCH); a fixed k-way exchange fixed that but
-                    # cost k near-empty reduce tasks per micro-batch at
-                    # small scale. REBALANCE keeps the one-file-per-
-                    # bucket clustering (hash routing is by pbucket
-                    # alone) while AQE coalesces the tiny batch to few
-                    # tasks and, at 100 TB, splits an oversized bucket
-                    # into advisory-sized files (guide §6) — the
-                    # scale-adaptive width a constant can't give.
-                    idx_rows = idx_rows.withColumn(
-                        "pbucket",
-                        F.expr(
-                            f"CAST(pmod(doc_id, {int(index_bucket_k)})"
-                            " AS INT)"
-                        ),
-                    ).hint("rebalance", "pbucket")
-                    idx_meta = {
-                        "partition_by": "pbucket",
-                        "bucket_k": int(index_bucket_k),
-                    }
-                index.commit(idx_rows, mode="append", meta=idx_meta)
-            finally:
-                survivors.unpersist()
-        finally:
-            sigs.unpersist()
-
-    return _apply
+    return _gate_writer(
+        accepted_path,
+        index_path,
+        index_bucket_k,
+        sign=lambda batch_df, meta: (minhash_signatures_wide(batch_df), None),
+        batch_pairs=lsh_candidate_pairs_wide,
+        band_rows=band_signatures,
+        check=check,
+        corpus_hits=corpus_hits,
+    )
 
 
 def start_dedup_gate_stream(
@@ -293,21 +328,13 @@ def start_dedup_gate_stream(
     index_path: str,
     checkpoint: str,
     index_bucket_k: int | None = None,
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Document stream → near-dup-gated versioned corpus + LSH index."""
-    writer = (
-        docs.writeStream.foreachBatch(
-            dedup_gate_batch_writer(
-                accepted_path, index_path, index_bucket_k=index_bucket_k
-            )
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
+    return _start_available_now(
+        docs,
+        dedup_gate_batch_writer(accepted_path, index_path, index_bucket_k),
+        checkpoint,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def mix_drift_batch_writer(
@@ -366,19 +393,11 @@ def start_mix_drift_stream(
     baseline: DataFrame,
     out_path: str,
     checkpoint: str,
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Event stream → per-micro-batch chi-square drift log."""
-    writer = (
-        events.writeStream.foreachBatch(
-            mix_drift_batch_writer(baseline, out_path)
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
+    return _start_available_now(
+        events, mix_drift_batch_writer(baseline, out_path), checkpoint
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def simhash_gate_batch_writer(
@@ -426,7 +445,8 @@ def simhash_gate_batch_writer(
     fingerprints (:func:`operators.index_lifecycle.
     migrate_simhash_index`) — a map-only rewrite, no text re-hash.
 
-    Crash/replay discipline is the MinHash gate's verbatim: commits
+    Crash/replay discipline is the shared gate skeleton's
+    (:func:`_gate_writer`), the same as the MinHash gate's: commits
     are docs-first (a crash between commits may let a later duplicate
     through — benign under at-least-once — never permanently rejects
     unstored content); replays anti-join survivors against the
@@ -467,239 +487,147 @@ def simhash_gate_batch_writer(
         simhash_centered_pinned,
         simhash_hamming_pairs,
     )
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
 
     blocks_meta = None if bit_blocks is None else [int(b) for b in bit_blocks]
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        thresholds = None
-        if centered:
-            idx0 = VersionedTable(index_path)
-            stored_meta = (
-                idx0.manifest().get("meta") or {}
-                if idx0.current_version() is not None
-                else {}
+    def sign(batch_df: DataFrame, meta: dict | None):
+        idx_meta = {
+            "simhash_rung": int(rung),
+            "simhash_bit_blocks": blocks_meta,
+        }
+        if not centered:
+            return simhash(batch_df), idx_meta
+        if meta is not None and "simhash_center_s" in meta:
+            thresholds = {
+                "s": meta["simhash_center_s"],
+                "n": meta["simhash_center_n"],
+            }
+        elif meta is not None:
+            # A committed index with no pinned thresholds was NOT
+            # built centered (legacy/pre-meta, or zero-threshold).
+            # Re-measuring from this batch would fingerprint each
+            # batch in its own space — duplicates of indexed docs
+            # silently pass, the exact fork the thresholds exist to
+            # prevent. Fail loudly: rebuild required.
+            raise ValueError(
+                f"simhash gate: index at {index_path} has committed "
+                "versions but no pinned centered thresholds "
+                "(simhash_center_s) — it was not built centered and "
+                "the two fingerprint spaces never match; rebuild "
+                "the index centered or run this writer with "
+                "centered=False"
             )
-            if "simhash_center_s" in stored_meta:
-                thresholds = {
-                    "s": stored_meta["simhash_center_s"],
-                    "n": stored_meta["simhash_center_n"],
-                }
-            elif idx0.current_version() is not None:
-                # A committed index with no pinned thresholds was NOT
-                # built centered (legacy/pre-meta, or zero-threshold).
-                # Re-measuring from this batch would fingerprint each
-                # batch in its own space — duplicates of indexed docs
-                # silently pass, the exact fork the thresholds exist to
-                # prevent (ADVICE r11). Fail loudly: rebuild required.
-                raise ValueError(
-                    f"simhash gate: index at {index_path} has committed "
-                    "versions but no pinned centered thresholds "
-                    "(simhash_center_s) — it was not built centered and "
-                    "the two fingerprint spaces never match; rebuild "
-                    "the index centered or run this writer with "
-                    "centered=False"
-                )
-            else:
-                # index build: measure once, pinned by the first commit
-                thresholds = measure_center_thresholds(batch_df)
-            fp = simhash_centered_pinned(batch_df, thresholds).persist()
         else:
-            fp = simhash(batch_df).persist()
-        try:
-            # Materialize the fingerprint cache BEFORE the multi-leaf
-            # consumers (round 13): the Hamming-pair self-join and the
-            # corpus band join scan fp at several plan leaves inside
-            # one job — on a cold cache those leaves race and each
-            # recomputes the whole fingerprint subtree (measured 2-3x
-            # the batch cost at sf0.1; guide §5). One cheap count
-            # populates the cache once.
-            fp.count()
-            bands = simhash_band_rows(
-                fp, rung=rung, bit_blocks=bit_blocks
-            ).withColumn("rung", F.lit(int(rung)))
-            batch_dupes = (
-                simhash_hamming_pairs(
-                    fp, max_hamming=max_hamming, rung=rung,
-                    bit_blocks=bit_blocks,
+            # index build: measure once, pinned by the first commit
+            thresholds = measure_center_thresholds(batch_df)
+        idx_meta["simhash_center_s"] = [int(x) for x in thresholds["s"]]
+        idx_meta["simhash_center_n"] = int(thresholds["n"])
+        return simhash_centered_pinned(batch_df, thresholds), idx_meta
+
+    def check(meta: dict, index_df: DataFrame) -> None:
+        # Rung is pinned per-index and validated on every batch: band
+        # rows written under a different rung would silently never join
+        # (global band_idx disambiguates rungs), letting duplicates of
+        # indexed docs through — a misconfigured writer must fail
+        # loudly instead. The stored rung comes from the manifest's
+        # table properties (one JSON read, not an index scan per
+        # batch), with a fallback for indexes committed before
+        # manifests carried ``meta``. An EMPTY committed index has no
+        # rung to validate — it is treated as unvalidated, same as no
+        # version at all.
+        stored = meta.get("simhash_rung")
+        if stored is None:
+            # Legacy fallback (pre-meta indexes only): aggregate
+            # min/max over the rung column — deterministic, and a
+            # corrupted mixed-rung index fails loudly instead of
+            # nondeterministically passing on an arbitrary row. Paid
+            # once per legacy index: the next commit backfills the
+            # manifest property.
+            row = index_df.agg(
+                F.min("rung").alias("lo"), F.max("rung").alias("hi")
+            ).first()
+            if row["lo"] is not None and row["lo"] != row["hi"]:
+                raise ValueError(
+                    f"simhash gate: index at {index_path} holds "
+                    f"mixed rungs {row['lo']}..{row['hi']} — "
+                    "corrupted index; rebuild or migrate it"
                 )
-                .select(F.col("doc_b").alias("doc_id"))
-                .distinct()
+            stored = row["lo"]
+        if stored is not None and stored != rung:
+            raise ValueError(
+                f"simhash gate: index at {index_path} was built "
+                f"at rung {stored} but this writer is pinned to "
+                f"rung {rung}; migrate the index (re-band its "
+                "stored fingerprints — operators/"
+                "index_lifecycle.migrate_simhash_index) or pin "
+                "the matching rung"
             )
-            survivors = batch_df.join(batch_dupes, "doc_id", "left_anti")
+        # The banding permutation, bucket layout and fingerprint space
+        # are pinned the same way, and only validated when the manifest
+        # carries meta (a pre-meta index predates all three).
+        if "simhash_rung" not in meta:
+            return
+        stored_blocks = meta.get("simhash_bit_blocks")
+        if stored_blocks != blocks_meta:
+            raise ValueError(
+                f"simhash gate: index at {index_path} was "
+                f"banded under bit assignment "
+                f"{stored_blocks} but this writer is pinned "
+                f"to {blocks_meta}; migrate the index "
+                "(operators/index_lifecycle."
+                "migrate_simhash_index with bit_blocks) or "
+                "pin the matching assignment"
+            )
+        stored_k = meta.get("bucket_k")
+        if stored_k != index_bucket_k:
+            raise ValueError(
+                f"simhash gate: index at {index_path} uses "
+                f"bucket layout k={stored_k} but this "
+                f"writer is pinned to k={index_bucket_k}; "
+                "appending under a different layout would "
+                "tear the partitioned table"
+            )
+        stored_centered = "simhash_center_s" in meta
+        if stored_centered != centered:
+            raise ValueError(
+                f"simhash gate: index at {index_path} holds "
+                f"{'centered' if stored_centered else 'zero-threshold'} "
+                f"fingerprints but this writer is "
+                f"{'centered' if centered else 'zero-threshold'}; "
+                "the two fingerprint spaces never match — "
+                "rebuild the index or match the writer"
+            )
 
-            index = VersionedTable(index_path)
-            if index.current_version() is not None:
-                idx_df = index.read(spark)
-                # Rung is pinned per-index and validated on every
-                # batch: band rows written under a different rung would
-                # silently never join (global band_idx disambiguates
-                # rungs), letting duplicates of indexed docs through —
-                # a misconfigured writer must fail loudly instead. The
-                # stored rung comes from the manifest's table
-                # properties (one JSON read — ADVICE r9: the old
-                # min/max agg scanned the whole index per batch), with
-                # a single-row fallback for indexes committed before
-                # manifests carried ``meta``; every commit path writes
-                # a constant rung column, and migration rewrites all
-                # rows in one snapshot, so one row is authoritative. An
-                # EMPTY committed index has no rung to validate — it is
-                # treated as unvalidated, same as no version at all.
-                meta = index.manifest().get("meta") or {}
-                stored = meta.get("simhash_rung")
-                if stored is None:
-                    # Legacy fallback (pre-meta indexes only): aggregate
-                    # min/max over the rung column — deterministic, and
-                    # a corrupted mixed-rung index fails loudly instead
-                    # of nondeterministically passing on an arbitrary
-                    # row (ADVICE r10). Paid once per legacy index: the
-                    # next commit backfills the manifest property.
-                    row = idx_df.agg(
-                        F.min("rung").alias("lo"), F.max("rung").alias("hi")
-                    ).first()
-                    if row["lo"] is not None and row["lo"] != row["hi"]:
-                        raise ValueError(
-                            f"simhash gate: index at {index_path} holds "
-                            f"mixed rungs {row['lo']}..{row['hi']} — "
-                            "corrupted index; rebuild or migrate it"
-                        )
-                    stored = row["lo"]
-                if stored is not None and stored != rung:
-                    raise ValueError(
-                        f"simhash gate: index at {index_path} was built "
-                        f"at rung {stored} but this writer is pinned to "
-                        f"rung {rung}; migrate the index (re-band its "
-                        "stored fingerprints — operators/"
-                        "index_lifecycle.migrate_simhash_index) or pin "
-                        "the matching rung"
-                    )
-                # The banding permutation is pinned the same way: rows
-                # banded under a different bit assignment produce band
-                # values this writer's batches would never match —
-                # duplicates of indexed docs would silently pass. Only
-                # validated when the manifest carries meta (a pre-meta
-                # index predates permuted banding entirely).
-                if "simhash_rung" in meta:
-                    stored_blocks = meta.get("simhash_bit_blocks")
-                    if stored_blocks != blocks_meta:
-                        raise ValueError(
-                            f"simhash gate: index at {index_path} was "
-                            f"banded under bit assignment "
-                            f"{stored_blocks} but this writer is pinned "
-                            f"to {blocks_meta}; migrate the index "
-                            "(operators/index_lifecycle."
-                            "migrate_simhash_index with bit_blocks) or "
-                            "pin the matching assignment"
-                        )
-                    stored_k = meta.get("bucket_k")
-                    if stored_k != index_bucket_k:
-                        raise ValueError(
-                            f"simhash gate: index at {index_path} uses "
-                            f"bucket layout k={stored_k} but this "
-                            f"writer is pinned to k={index_bucket_k}; "
-                            "appending under a different layout would "
-                            "tear the partitioned table"
-                        )
-                    stored_centered = "simhash_center_s" in meta
-                    if stored_centered != centered:
-                        raise ValueError(
-                            f"simhash gate: index at {index_path} holds "
-                            f"{'centered' if stored_centered else 'zero-threshold'} "
-                            f"fingerprints but this writer is "
-                            f"{'centered' if centered else 'zero-threshold'}; "
-                            "the two fingerprint spaces never match — "
-                            "rebuild the index or match the writer"
-                        )
-                corpus_bands = idx_df.select(
-                    "band_idx",
-                    "band_val",
-                    F.col("simhash").alias("idx_simhash"),
+    def corpus_hits(bands: DataFrame, index_df: DataFrame) -> DataFrame:
+        corpus_bands = index_df.select(
+            "band_idx", "band_val", F.col("simhash").alias("idx_simhash")
+        )
+        return (
+            bands.join(corpus_bands, ["band_idx", "band_val"])
+            .filter(
+                F.expr(
+                    "CAST(bit_count(simhash ^ idx_simhash)"
+                    f" AS BIGINT) <= {int(max_hamming)}"
                 )
-                corpus_hits = (
-                    bands.join(corpus_bands, ["band_idx", "band_val"])
-                    .filter(
-                        F.expr(
-                            "CAST(bit_count(simhash ^ idx_simhash)"
-                            f" AS BIGINT) <= {int(max_hamming)}"
-                        )
-                    )
-                    .select("doc_id")
-                    .distinct()
-                )
-                survivors = survivors.join(
-                    corpus_hits, "doc_id", "left_anti"
-                )
+            )
+            .select("doc_id")
+            .distinct()
+        )
 
-            survivors = survivors.persist()
-            try:
-                # count() instead of isEmpty(): the emptiness guard is
-                # needed either way (an all-duplicate batch must not
-                # commit), and a full count materializes the survivors
-                # cache completely, so the accepted anti-join, the
-                # docs commit, and the index semi-join below read
-                # blocks instead of recomputing the partitions the
-                # early-exit probe never touched (round 13, guide §5).
-                if survivors.count() == 0:
-                    return
-                accepted = VersionedTable(accepted_path)
-                new_docs = survivors
-                if accepted.current_version() is not None:
-                    # Persisted across the emptiness probe + commit
-                    # (round 13): the anti-join re-reads the accepted
-                    # table's doc_id column, and without a cache the
-                    # isEmpty probe and the commit write each ran it.
-                    landed_ids = accepted.read(spark).select("doc_id")
-                    new_docs = survivors.join(
-                        landed_ids, "doc_id", "left_anti"
-                    ).persist()
-                try:
-                    if not new_docs.isEmpty():
-                        accepted.commit(new_docs, mode="append")
-                finally:
-                    if new_docs is not survivors:
-                        new_docs.unpersist()
-                idx_rows = bands.join(
-                    survivors.select("doc_id"), "doc_id", "left_semi"
-                )
-                idx_meta = {
-                    "simhash_rung": int(rung),
-                    "simhash_bit_blocks": blocks_meta,
-                }
-                if centered:
-                    idx_meta["simhash_center_s"] = [
-                        int(x) for x in thresholds["s"]
-                    ]
-                    idx_meta["simhash_center_n"] = int(thresholds["n"])
-                if index_bucket_k is not None:
-                    # Bucketed index layout (round 11, VERDICT r10 #2):
-                    # rows Hive-partitioned by id mod k, so an erasure
-                    # scrub rewrites only touched buckets
-                    # (scrub_index_to_corpus's pruned path). Bucket-
-                    # keyed REBALANCE (round 13; was repartition(k) in
-                    # round 12): keeps each batch's append at one file
-                    # per bucket while AQE sizes the exchange — tiny
-                    # batches coalesce to few tasks instead of k
-                    # near-empty ones, oversized buckets split into
-                    # advisory-sized files at scale (guide §6).
-                    idx_rows = idx_rows.withColumn(
-                        "pbucket",
-                        F.expr(
-                            f"CAST(pmod(doc_id, {int(index_bucket_k)})"
-                            " AS INT)"
-                        ),
-                    ).hint("rebalance", "pbucket")
-                    idx_meta["partition_by"] = "pbucket"
-                    idx_meta["bucket_k"] = int(index_bucket_k)
-                index.commit(idx_rows, mode="append", meta=idx_meta)
-            finally:
-                survivors.unpersist()
-        finally:
-            fp.unpersist()
-
-    return _apply
+    return _gate_writer(
+        accepted_path,
+        index_path,
+        index_bucket_k,
+        sign=sign,
+        batch_pairs=lambda fp: simhash_hamming_pairs(
+            fp, max_hamming=max_hamming, rung=rung, bit_blocks=bit_blocks
+        ),
+        band_rows=lambda fp: simhash_band_rows(
+            fp, rung=rung, bit_blocks=bit_blocks
+        ).withColumn("rung", F.lit(int(rung))),
+        check=check,
+        corpus_hits=corpus_hits,
+    )
 
 
 RECOMMENDED_INDEX_BUCKET_K = 64
@@ -800,20 +728,14 @@ def start_recommended_simhash_gate_stream(
     accepted_path: str,
     index_path: str,
     checkpoint: str,
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Document stream → SimHash-gated corpus + index under the
     recommended scale-safe layout, zero tuning arguments."""
-    writer = (
-        docs.writeStream.foreachBatch(
-            recommended_simhash_gate_batch_writer(accepted_path, index_path)
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
+    return _start_available_now(
+        docs,
+        recommended_simhash_gate_batch_writer(accepted_path, index_path),
+        checkpoint,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def recommended_dedup_gate_batch_writer(
@@ -852,20 +774,13 @@ def start_simhash_gate_stream(
     bit_blocks: list[int] | None = None,
     index_bucket_k: int | None = None,
     centered: bool = False,
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Document stream → SimHash-gated versioned corpus + band index."""
-    writer = (
-        docs.writeStream.foreachBatch(
-            simhash_gate_batch_writer(
-                accepted_path, index_path, rung=rung,
-                bit_blocks=bit_blocks, index_bucket_k=index_bucket_k,
-                centered=centered,
-            )
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
+    return _start_available_now(
+        docs,
+        simhash_gate_batch_writer(
+            accepted_path, index_path, rung=rung, bit_blocks=bit_blocks,
+            index_bucket_k=index_bucket_k, centered=centered,
+        ),
+        checkpoint,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

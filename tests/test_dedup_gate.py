@@ -11,6 +11,7 @@ import pytest
 from movie_data_pipeline_spark.sources.versioned import VersionedTable
 from movie_data_pipeline_spark.streaming import (
     dedup_gate_batch_writer,
+    simhash_gate_batch_writer,
     start_dedup_gate_stream,
 )
 
@@ -99,6 +100,50 @@ def test_gate_replay_after_crash_between_commits(spark, tmp_path):
     assert {
         r.doc_id for r in VersionedTable(idx).read(spark).collect()
     } == {0, 1}
+
+
+@pytest.mark.parametrize(
+    "make_writer",
+    [dedup_gate_batch_writer, simhash_gate_batch_writer],
+    ids=["minhash", "simhash"],
+)
+def test_gate_index_commit_fault_then_replay(
+    spark, tmp_path, monkeypatch, make_writer
+):
+    """The index commit RAISES inside the writer, after the accepted
+    commit landed: the error propagates, every cache the batch took is
+    released, and an unpatched at-least-once replay of the same batch
+    converges to the tables of a run that never faulted."""
+    batch = _docs(spark, [(0, BASE), (1, OTHER), (2, OTHER), (3, THIRD)])
+    jsc = spark.sparkContext._jsc
+
+    def run(root, fault):
+        acc, idx = str(root / "acc"), str(root / "idx")
+        writer = make_writer(acc, idx)
+        if fault:
+            real_commit = VersionedTable.commit
+
+            def commit(self, df, *args, **kwargs):
+                if self.path == idx:
+                    raise OSError("injected index commit failure")
+                return real_commit(self, df, *args, **kwargs)
+
+            before = jsc.getPersistentRDDs().size()
+            with monkeypatch.context() as m:
+                m.setattr(VersionedTable, "commit", commit)
+                with pytest.raises(OSError, match="injected"):
+                    writer(batch, 0)
+            assert jsc.getPersistentRDDs().size() == before
+            assert len(VersionedTable(acc).versions()) == 1  # docs landed
+            assert not VersionedTable(idx).versions()  # the index did not
+        writer(batch, 0)
+        tables = [VersionedTable(acc), VersionedTable(idx)]
+        return [
+            (len(t.versions()), sorted(map(tuple, t.read(spark).collect())))
+            for t in tables
+        ]
+
+    assert run(tmp_path / "fault", True) == run(tmp_path / "clean", False)
 
 
 def test_gate_stream_end_to_end(spark, tmp_path):

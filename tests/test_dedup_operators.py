@@ -117,6 +117,22 @@ def test_ppjoin_matches_bruteforce_on_crafted(corpus):
     assert got == want  # lossless: identical pair set AND values
 
 
+def test_ppjoin_releases_caches_on_error(spark, corpus, monkeypatch):
+    """An exception between the shingle/array caches' persist and the
+    final localCheckpoint must not leak the caches."""
+    from movie_data_pipeline_spark.operators.dedup import ppjoin_pairs
+
+    def fail(self, *args, **kwargs):
+        raise RuntimeError("injected localCheckpoint failure")
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    monkeypatch.setattr(type(corpus), "localCheckpoint", fail)
+    with pytest.raises(RuntimeError, match="injected"):
+        ppjoin_pairs(corpus, threshold=0.5)
+    assert jsc.getPersistentRDDs().size() == before
+
+
 @pytest.mark.parametrize("threshold", [0.3, 0.5, 0.8])
 def test_ppjoin_lossless_vs_uncapped_bucket_join(spark, threshold):
     """Independent-implementation equivalence on the real synthetic

@@ -160,10 +160,24 @@ def test_reverify_queue_live_state():
     row predates their change round are active (q82 was IN the r4
     window, so its r4 row already verifies the capped semantics and
     it auto-deactivates), and their placement never displaces a
-    never-verified name from the window."""
+    never-verified name from the window. The queue literal names each
+    query once (a repeated key would silently overwrite the earlier
+    round), and every key is a registered query."""
+    import ast
+    import inspect
+
     import __spark_entry__ as e
 
-    assert len(e._REVERIFY_QUEUE) == 55
+    (literal,) = [
+        node.value
+        for node in ast.walk(ast.parse(inspect.getsource(e)))
+        if isinstance(node, ast.AnnAssign)
+        and getattr(node.target, "id", None) == "_REVERIFY_QUEUE"
+    ]
+    keys = [k.value for k in literal.keys]
+    repeated = sorted({k for k in keys if keys.count(k) > 1})
+    assert not repeated, f"_REVERIFY_QUEUE repeats {repeated}"
+    assert set(keys) == set(e._REVERIFY_QUEUE)
     for n in e._REVERIFY_QUEUE:
         assert n in REGISTRY
     active = set(e._FORCE_REVERIFY)
