@@ -132,20 +132,20 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # round 8: rewired onto the shared fixed_sample/fixed_sample_ctes
     # helper (VERDICT r7 #6 — outputs hash-identical, builder-verified
     # at all 3 SFs, but the registered plan + oracle text changed).
-    "q256_margin_candidate_mining": 8,
-    "q248_lsh_scurve_sweep": 8,
+    "q256_margin_candidate_mining": 15,  # round 15: see the queue's end
+    "q248_lsh_scurve_sweep": 15,  # round 15: see the queue's end
     # round 7: rows-per-band ladder cap raised 8 -> 12 after the 100x
     # probe (r=8 saturated the sig space above ~8k vectors/side).
     # Outputs at every driver SF are unchanged (the new rungs engage
     # only at probe scale), but plan + oracle text changed.
-    "q256b_margin_mining_lsh": 7,
+    "q256b_margin_mining_lsh": 15,  # round 15: see the queue's end
     # round 8: q264/q272's exact ground-truth legs sample-bounded with
     # the shared fixed_sample helper (VERDICT r7 #1 — the query set is
     # now a fixed-size md5-bucket sample; modulus 1 at every test SF so
     # outputs are unchanged there, but the registered plans + oracles
     # changed).
-    "q264_ivf_recall_sweep": 8,
-    "q272_pq_codebook_audit": 8,
+    "q264_ivf_recall_sweep": 15,  # round 15: see the queue's end
+    "q272_pq_codebook_audit": 15,  # round 15: see the queue's end
     # round 8: SimHash family migrated to the 60-bit fingerprint
     # (VERDICT r7 #2; q21's r8+ green row still covers it — the
     # fingerprint is untouched since).
@@ -186,17 +186,17 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # untouched); measured -9% to -25% at sf0.1.
     "q82_dedup_kept_corpus": 12,
     "q103_pagerank_trade_graph": 12,
-    "q116_copurchase_triangles": 12,
+    "q116_copurchase_triangles": 15,  # round 15: see the queue's end
     "q139_corpus_pipeline_report": 12,
-    "q155_kcore_peeling": 12,
+    "q155_kcore_peeling": 15,  # round 15: see the queue's end
     "q173_leakage_free_split": 12,
     "q175_entity_resolution": 12,
-    "q179_lpa_communities": 12,
+    "q179_lpa_communities": 15,  # round 15: see the queue's end
     "q182_dedup_savings": 12,
-    "q198_degree_powerlaw": 12,
+    "q198_degree_powerlaw": 15,  # round 15: see the queue's end
     "q209_cluster_best_rep": 12,
     "q228_chaining_audit": 12,
-    "q288_cluster_churn_audit": 12,
+    "q288_cluster_churn_audit": 15,  # round 15: see the queue's end
     # round 9: SimHash banding migrated to the size-adaptive block-
     # combination ladder (VERDICT r8 #1 — rung from the in-plan
     # fingerprint count; published pair sets CHANGE at every SF: rung 1
@@ -234,7 +234,7 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # at sf0.01 for all four.
     "q273_idf_weighted_jaccard": 13,
     "q276_weighted_dedup_agreement": 13,
-    "q254_kmv_overlap_estimates": 13,
+    "q254_kmv_overlap_estimates": 15,  # round 15: see the queue's end
     "q144_ppjoin_pairs": 14,  # round 14: see the queue's end
     # round 13 (optimization): the gate writers' bucket append is a
     # REBALANCE instead of a fixed k-way repartition, and the replay-
@@ -256,11 +256,11 @@ _REVERIFY_QUEUE: dict[str, int] = {
     "q307_banding_migration_gate": 14,
     "q308_partitioned_index_erasure": 14,
     "q311_centered_gate_replay": 14,
-    "q312_gate_compaction_replay": 14,
+    "q312_gate_compaction_replay": 15,  # round 15: see the queue's end
     "q313_recommended_gate_replay": 14,
-    "q315_center_threshold_drift": 14,
-    "q316_ivf_cell_split_recovery": 13,
-    "q317_bucketed_gate_compaction": 14,
+    "q315_center_threshold_drift": 15,  # round 15: see the queue's end
+    "q316_ivf_cell_split_recovery": 15,  # round 15: see the queue's end
+    "q317_bucketed_gate_compaction": 15,  # round 15: see the queue's end
     # round 14 (simplicity): both gate writers run one shared skeleton
     # (one manifest read per batch, caches released on every exit
     # path), every start_*_stream shares one availableNow launcher, and
@@ -274,6 +274,23 @@ _REVERIFY_QUEUE: dict[str, int] = {
     "q204_streaming_hourly_upsert": 14,
     "q210_streaming_drift_replay": 14,
     "q267_streaming_closed_window_ledger": 14,
+    # round 15 (simplicity): the all-pairs array idiom, the driver-
+    # thread overlap and the hand-placed persist/unpersist pairs each
+    # go through one helper in operators/util.py (array_pairs, overlap,
+    # cached); q315's boundary writer now runs after its two readers.
+    # Lazy plans are unchanged; the 15 round-15 names above are
+    # updated in place, the 11 below are new. Oracles untouched.
+    "q94_part_cooccurrence": 15,
+    "q245_df_cap_sensitivity": 15,
+    "q246_substring_runs": 15,
+    "q270_cross_source_dup_matrix": 15,
+    "q271_cdc_chunking_audit": 15,
+    "q278_dedup_family_agreement": 15,
+    "q280_simhash_hamming_histogram": 15,
+    "q282_corpus_yield_waterfall": 15,
+    "q284_ivfpq_topk": 15,
+    "q309_ivf_centroid_migration": 15,
+    "q318_maintenance_planner": 15,
 }
 
 

@@ -34,7 +34,7 @@ from movie_data_pipeline_spark.functions.text import (
     tokens,
     word_shingles,
 )
-from movie_data_pipeline_spark.operators.util import cached, spread
+from movie_data_pipeline_spark.operators.util import array_pairs, cached, spread
 
 # Affine MinHash family h_i(x) = (a_i * x + b_i) mod P over the 32-bit
 # base hash. P is prime and < 2^31 so a_i * x + b_i stays well inside
@@ -159,15 +159,8 @@ def jaccard_pairs(
     # deliberately (guide §5: cache only when recomputing costs more
     # than the memory pressure).
 
-    ids = F.col("ids")
-    pair_array = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids) - i - 1),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
+    pair_array = array_pairs(
+        F.col("ids"), lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b"))
     )
     common = (
         buckets.filter(F.size("ids") > 1)
@@ -291,15 +284,8 @@ def _bucket_pairs(bands: DataFrame, id_col: str) -> DataFrame:
         .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
         .filter(F.size("ids") > 1)
     )
-    ids = F.col("ids")
-    pairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids) - i - 1),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
+    pairs = array_pairs(
+        F.col("ids"), lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b"))
     )
     return (
         buckets.select(F.explode(pairs).alias("p"))
@@ -1027,8 +1013,6 @@ def ppjoin_pairs(
     # codegen during map-side pair generation, so pruned pairs never
     # reach the distinct's exchange (the dominant cost on fat-headed
     # shingle distributions where the prefix filter alone is weak).
-    ids = F.col("ids")
-
     def _maybe_pair(x: Column, y: Column) -> Column:
         alpha = _ceil_alpha(x["sz"] + y["sz"])
         ubound = F.lit(1) + F.least(x["sz"] - x["pos"], y["sz"] - y["pos"])
@@ -1041,16 +1025,7 @@ def ppjoin_pairs(
         ).otherwise(F.lit(None))
 
     pair_array = F.filter(
-        F.flatten(
-            F.transform(
-                ids,
-                lambda x, i: F.transform(
-                    F.slice(ids, i + 2, F.size(ids) - i - 1),
-                    lambda y: _maybe_pair(x, y),
-                ),
-            )
-        ),
-        lambda p: p.isNotNull(),
+        array_pairs(F.col("ids"), _maybe_pair), lambda p: p.isNotNull()
     )
 
     # Three consumers (document frequencies, prefix ranking, the
@@ -1199,15 +1174,8 @@ def containment_pairs(
         .groupBy(id_col)
         .agg(F.count("*").alias("n_shingles"))
     )
-    ids = F.col("ids")
-    pair_array = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids) - i - 1),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
+    pair_array = array_pairs(
+        F.col("ids"), lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b"))
     )
     common = (
         buckets.filter(F.size("ids") > 1)

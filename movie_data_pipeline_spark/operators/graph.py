@@ -40,16 +40,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _materialize(df: DataFrame) -> DataFrame:
-    """Cut lineage between propagation rounds."""
-    try:
-        return df.localCheckpoint(eager=True)
-    except Exception:  # pragma: no cover - Connect or checkpoint-less envs
-        df.persist()
-        df.count()
-        return df
-
-
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
@@ -85,22 +75,28 @@ def connected_components(
         )
         .select("e.a", "e.b")
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    sym = _materialize(sym)
 
     if nodes is None:
         universe = sym.select(F.col("a").alias("node")).distinct()
     else:
         universe = nodes.toDF("node").distinct()
-    labels = _materialize(universe.withColumn("component", F.col("node")))
+    labels = (
+        universe.withColumn("component", F.col("node"))
+        .localCheckpoint(eager=True)
+    )
 
     for _ in range(max_rounds):
         # Every node forwards its current label to each neighbour.
         msgs = sym.join(labels, sym.a == labels.node).select(
             F.col("b").alias("node"), "component"
         )
-        new_labels = _materialize(
-            labels.union(msgs).groupBy("node").agg(F.min("component").alias("component"))
+        new_labels = (
+            labels.union(msgs)
+            .groupBy("node")
+            .agg(F.min("component").alias("component"))
+            .localCheckpoint(eager=True)
         )
         changed = (
             new_labels.alias("n")
@@ -146,7 +142,7 @@ def connected_components_star(
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
         F.col("a") != F.col("b")
     )
-    cur = _materialize(
+    cur = (
         # map-side two-orientation explode: one evaluation of the edge
         # subtree, same rows as the old self-union (guide §2.4)
         e.select(
@@ -159,6 +155,7 @@ def connected_components_star(
         )
         .select("e.a", "e.b")
         .distinct()
+        .localCheckpoint(eager=True)
     )
     if nodes is None:
         universe = cur.select(F.col("a").alias("node")).distinct()
@@ -185,19 +182,21 @@ def connected_components_star(
             .filter(F.col("a") != F.col("b"))
             .distinct()
         )
-        sym_ls = _materialize(
+        sym_ls = (
             ls.union(ls.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
+            .localCheckpoint(eager=True)
         )
         # -- small-star: (v, m(u)) for v in Γ(u), v <= u; keep (u, m(u))
         # every emitted pair has a > b (m is the closed-neighbourhood min)
         mins = mins_of(sym_ls)
-        ss = _materialize(
+        ss = (
             sym_ls.filter(F.col("b") < F.col("a"))
             .join(mins, "a")
             .select(F.col("b").alias("a"), F.col("m").alias("b"))
             .union(mins.select(F.col("a"), F.col("m").alias("b")))
             .filter(F.col("a") != F.col("b"))
             .distinct()
+            .localCheckpoint(eager=True)
         )
         # converged when successive small-star outputs (both child->root
         # directed, deduped) coincide
@@ -208,8 +207,9 @@ def connected_components_star(
                 + prev_ss.join(ss, ["a", "b"], "left_anti").limit(1).count()
             )
         prev_ss = ss
-        cur = _materialize(
+        cur = (
             ss.union(ss.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
+            .localCheckpoint(eager=True)
         )
         if changed == 0:
             break

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_pipeline_spark.functions.numeric import round4
+from movie_data_pipeline_spark.operators.util import overlap
 from movie_data_pipeline_spark.sources.versioned import VersionedTable
 
 
@@ -558,12 +560,6 @@ def audit_center_thresholds(
     """
     from movie_data_pipeline_spark.operators.dedup import _simhash_votes
 
-    def round4(col):
-        # plans.core.round4's arithmetic (floor(x*1e4+0.5)/1e4 — the
-        # cross-engine-deterministic rounding), inlined to keep the
-        # operators layer free of plans imports.
-        return F.floor(col * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
-
     idx = VersionedTable(index_path)
     meta = idx.manifest().get("meta") or {}
     if "simhash_center_s" not in meta:
@@ -982,9 +978,7 @@ def plan_maintenance(
 
     # Each signal is an independent READ-ONLY audit of a committed
     # table (an anti-join count, a distinct count, a vote aggregate, a
-    # manifest re-derivation). Round 13 (guide §2.6): evaluate them
-    # from a small driver thread pool so each audit's straggler tail
-    # back-fills the others; rows are assembled in the deterministic
+    # manifest re-derivation), so they overlap; rows are assembled in
     # task order (and sorted at the end regardless).
     def _scrub(path: str):
         def thunk():
@@ -1057,9 +1051,6 @@ def plan_maintenance(
     if not tasks:
         raise ValueError("plan_maintenance: nothing to evaluate")
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(4, len(tasks))) as pool:
-        futures = [(t, a, pool.submit(fn)) for t, a, fn in tasks]
-        out = [row(t, a, *f.result()) for t, a, f in futures]
+    results = overlap(*(fn for _, _, fn in tasks))
+    out = [row(t, a, *r) for (t, a, _), r in zip(tasks, results)]
     return reduce(DataFrame.unionByName, out).orderBy("target", "action")

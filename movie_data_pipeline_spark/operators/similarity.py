@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from movie_data_pipeline_spark.functions.numeric import round4
 from movie_data_pipeline_spark.functions.text import base_hash32
 from movie_data_pipeline_spark.operators.util import spread
 
@@ -266,9 +267,7 @@ def assign_to_centroids(
     candidates = []
     for i, cvec in enumerate(centroids):
         lit = F.array(*[F.lit(float(v)) for v in cvec])
-        sim = F.floor(
-            cosine(F.col(vec_col), lit) * F.lit(10000.0) + F.lit(0.5)
-        ) / F.lit(10000.0)
+        sim = round4(cosine(F.col(vec_col), lit))
         candidates.append(F.struct(sim.alias("s"), F.lit(-i).alias("ni")))
     best_cell = (-F.array_max(F.array(*candidates)).getField("ni")).cast(
         "int"

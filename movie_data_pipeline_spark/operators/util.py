@@ -2,11 +2,15 @@
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
+from typing import TypeVar
 
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame, functions as F
+from pyspark import StorageLevel, inheritable_thread_target
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+
+T = TypeVar("T")
 
 
 @contextmanager
@@ -39,6 +43,54 @@ def cached(
         df.unpersist()
 
 
+def array_pairs(
+    arr: Column, make: Callable[[Column, Column], Column]
+) -> Column:
+    """The flattened array of ``make(x, y)`` over every element pair
+    ``x = arr[i]``, ``y = arr[j]`` with ``i < j``: for a sorted array,
+    each unordered pair once, in (smaller, larger) orientation.
+
+    The pairs are built map-side by two nested higher-order functions
+    over the row's own array, which replaces a self-join of the
+    exploded array (one shuffle instead of two full-table exchanges).
+    """
+    return F.flatten(
+        F.transform(
+            arr,
+            lambda x, i: F.transform(
+                F.slice(arr, i + 2, F.size(arr) - i - 1),
+                lambda y: make(x, y),
+            ),
+        )
+    )
+
+
+def overlap(*thunks: Callable[[], T]) -> list[T]:
+    """Run independent eager thunks on driver threads and return their
+    results in argument order.
+
+    Overlapping the job submissions of independent work (two component
+    runs, compactions of different tables, read-only audits) lets the
+    scheduler back-fill one job's straggler tail with the other's
+    tasks. Results stay deterministic: the threads only overlap job
+    submission. The caller must not overlap a writer of a table with
+    its readers; this helper does not track what a thunk touches.
+
+    Each thunk runs with its own copy of the caller's local properties
+    (job group, job description, scheduler pool) and job tags, which a
+    plain pool thread would drop; the copies are separate because a
+    thread sets its own properties while it runs a query. Every thunk
+    runs to completion; then the first exception in argument order is
+    re-raised.
+    """
+    spark = SparkSession.active()
+    with ThreadPoolExecutor(max_workers=min(len(thunks), 4)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(t)) for t in thunks
+        ]
+        return [f.result() for f in futures]
+
+
 def spread(df: DataFrame, min_factor: int = 2) -> DataFrame:
     """Ensure CPU-heavy narrow work downstream can use the cluster.
 
@@ -49,13 +101,8 @@ def spread(df: DataFrame, min_factor: int = 2) -> DataFrame:
     partitions, so at real scale (inputs already split into thousands of
     tasks) this is a no-op and adds no shuffle.
     """
-    try:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        current = df.rdd.getNumPartitions()
-    except Exception:
-        # Environments without RDD access (e.g. Spark Connect): leave
-        # the partitioning to the source — correctness is unaffected.
-        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    current = df.rdd.getNumPartitions()
     if current * min_factor <= target:
         return df.repartition(target)
     return df

@@ -58,6 +58,16 @@ def transform_movies(movies_raw: DataFrame) -> DataFrame:
     )
 
 
+def _coerce_ratings(ratings_raw: DataFrame) -> DataFrame:
+    """Typed rating columns with rows missing a key or rating dropped."""
+    return ratings_raw.select(
+        F.col("userId").try_cast("int").alias("user_id"),
+        F.col("movieId").try_cast("int").alias("movie_id"),
+        F.col("rating").try_cast("double").alias("rating"),
+        F.col("timestamp").try_cast("long").alias("timestamp"),
+    ).na.drop(subset=["movie_id", "user_id", "rating"])
+
+
 def transform_ratings(ratings_raw: DataFrame) -> DataFrame:
     """Coerce + drop null keys + faithful surrogate ids (etl1.py:353-370).
 
@@ -72,14 +82,8 @@ def transform_ratings(ratings_raw: DataFrame) -> DataFrame:
     embarrassingly parallel) and only routes here when
     ``faithful_rating_ids=True`` is requested explicitly.
     """
-    coerced = ratings_raw.select(
-        F.col("userId").try_cast("int").alias("user_id"),
-        F.col("movieId").try_cast("int").alias("movie_id"),
-        F.col("rating").try_cast("double").alias("rating"),
-        F.col("timestamp").try_cast("long").alias("timestamp"),
-    ).na.drop(subset=["movie_id", "user_id", "rating"])
     w = Window.orderBy("user_id", "movie_id")
-    return coerced.select(
+    return _coerce_ratings(ratings_raw).select(
         F.row_number().over(w).cast("long").alias("rating_id"),
         "movie_id",
         "user_id",
@@ -91,13 +95,7 @@ def transform_ratings(ratings_raw: DataFrame) -> DataFrame:
 def ratings_with_fast_ids(ratings_raw: DataFrame) -> DataFrame:
     """Scale path: surrogate ids without a global sort. No documented
     reference query depends on rating_id values (SURVEY.md §2.9)."""
-    coerced = ratings_raw.select(
-        F.col("userId").try_cast("int").alias("user_id"),
-        F.col("movieId").try_cast("int").alias("movie_id"),
-        F.col("rating").try_cast("double").alias("rating"),
-        F.col("timestamp").try_cast("long").alias("timestamp"),
-    ).na.drop(subset=["movie_id", "user_id", "rating"])
-    return coerced.select(
+    return _coerce_ratings(ratings_raw).select(
         F.monotonically_increasing_id().alias("rating_id"),
         "movie_id",
         "user_id",

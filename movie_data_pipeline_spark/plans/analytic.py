@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from movie_data_pipeline_spark.operators.util import array_pairs
 from movie_data_pipeline_spark.plans.core import (
     exact_sum,
     exact_sum_sql,
@@ -598,15 +599,9 @@ def q94_part_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
         lineitem.groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
     )
-    a = F.col("parts")
-    pairs = F.flatten(
-        F.transform(
-            a,
-            lambda x, i: F.transform(
-                F.slice(a, i + 2, F.size(a) - i - 1),
-                lambda y: F.struct(x.alias("part_a"), y.alias("part_b")),
-            ),
-        )
+    pairs = array_pairs(
+        F.col("parts"),
+        lambda x, y: F.struct(x.alias("part_a"), y.alias("part_b")),
     )
     return (
         baskets.select(F.explode(pairs).alias("pr"))

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from movie_data_pipeline_spark.functions.text import tokens, word_shingles
+from movie_data_pipeline_spark.operators.util import cached
 from movie_data_pipeline_spark.plans.core import query, r4, round4
 from movie_data_pipeline_spark.sources.registry import load_table
 
@@ -1720,45 +1721,45 @@ def q271_cdc_chunking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.md5("chunk").alias("dg"),
         F.length("chunk").cast("long").alias("cl"),
-    ).persist()
-    per = dig.groupBy("source").agg(
-        F.count("*").cast("long").alias("n_chunks"),
-        F.sum("cl").cast("long").alias("n_chars"),
-        F.count_distinct("dg").cast("long").alias("n_distinct_chunks"),
     )
-    xs = (
-        dig.groupBy("dg")
-        .agg(F.count_distinct("source").alias("ns"))
-        .filter(F.col("ns") >= 2)
-        .select("dg")
-    )
-    shared = (
-        dig.join(xs.hint("SHUFFLE_MERGE"), "dg")
-        .groupBy("source")
-        .agg(F.count("*").cast("long").alias("n_chunks_shared_xsource"))
-    )
-    out = (
-        per.join(shared, "source", "left")
-        .select(
-            "source",
-            "n_chunks",
-            "n_chars",
-            round4(F.col("n_chars") * 1.0 / F.col("n_chunks")).alias(
-                "avg_chunk_len"
-            ),
-            "n_distinct_chunks",
-            round4(
-                F.lit(1.0)
-                - F.col("n_distinct_chunks") * 1.0 / F.col("n_chunks")
-            ).alias("dup_chunk_rate"),
-            F.coalesce("n_chunks_shared_xsource", F.lit(0))
-            .cast("long")
-            .alias("n_chunks_shared_xsource"),
+    with cached(dig, count=False) as dig:
+        per = dig.groupBy("source").agg(
+            F.count("*").cast("long").alias("n_chunks"),
+            F.sum("cl").cast("long").alias("n_chars"),
+            F.count_distinct("dg").cast("long").alias("n_distinct_chunks"),
         )
-        .orderBy("source")
-        .localCheckpoint(eager=True)
-    )
-    dig.unpersist()
+        xs = (
+            dig.groupBy("dg")
+            .agg(F.count_distinct("source").alias("ns"))
+            .filter(F.col("ns") >= 2)
+            .select("dg")
+        )
+        shared = (
+            dig.join(xs.hint("SHUFFLE_MERGE"), "dg")
+            .groupBy("source")
+            .agg(F.count("*").cast("long").alias("n_chunks_shared_xsource"))
+        )
+        out = (
+            per.join(shared, "source", "left")
+            .select(
+                "source",
+                "n_chunks",
+                "n_chars",
+                round4(F.col("n_chars") * 1.0 / F.col("n_chunks")).alias(
+                    "avg_chunk_len"
+                ),
+                "n_distinct_chunks",
+                round4(
+                    F.lit(1.0)
+                    - F.col("n_distinct_chunks") * 1.0 / F.col("n_chunks")
+                ).alias("dup_chunk_rate"),
+                F.coalesce("n_chunks_shared_xsource", F.lit(0))
+                .cast("long")
+                .alias("n_chunks_shared_xsource"),
+            )
+            .orderBy("source")
+            .localCheckpoint(eager=True)
+        )
     return out
 
 
@@ -2109,72 +2110,72 @@ def q282_corpus_yield_waterfall(
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    s1 = d0.join(keep1, "doc_id", "left_semi").persist()
-    nd = (
-        jaccard_pairs(
-            s1.select("doc_id", "text"),
-            max_shingle_df=_WF_DF_CAP,
-            threshold=float(_WF_TAU),
+    s1 = d0.join(keep1, "doc_id", "left_semi")
+    with cached(s1, count=False) as s1:
+        nd = (
+            jaccard_pairs(
+                s1.select("doc_id", "text"),
+                max_shingle_df=_WF_DF_CAP,
+                threshold=float(_WF_TAU),
+            )
+            .select(F.col("doc_b").alias("doc_id"))
+            .distinct()
         )
-        .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
-    )
-    s2 = s1.join(nd, "doc_id", "left_anti")
-    s3 = s2.filter(
-        (F.col("lang") == "en") & (F.col("n_chars") >= _WF_MIN_CHARS)
-    )
-    m = (
-        d0.join(
-            s1.select("doc_id").withColumn("m1", F.lit(1)),
-            "doc_id",
-            "left",
+        s2 = s1.join(nd, "doc_id", "left_anti")
+        s3 = s2.filter(
+            (F.col("lang") == "en") & (F.col("n_chars") >= _WF_MIN_CHARS)
         )
-        .join(
-            s2.select("doc_id").withColumn("m2", F.lit(1)),
-            "doc_id",
-            "left",
+        m = (
+            d0.join(
+                s1.select("doc_id").withColumn("m1", F.lit(1)),
+                "doc_id",
+                "left",
+            )
+            .join(
+                s2.select("doc_id").withColumn("m2", F.lit(1)),
+                "doc_id",
+                "left",
+            )
+            .join(
+                s3.select("doc_id").withColumn("m3", F.lit(1)),
+                "doc_id",
+                "left",
+            )
+            .select(
+                "source",
+                "ntok",
+                F.coalesce("m1", F.lit(0)).alias("m1"),
+                F.coalesce("m2", F.lit(0)).alias("m2"),
+                F.coalesce("m3", F.lit(0)).alias("m3"),
+            )
         )
-        .join(
-            s3.select("doc_id").withColumn("m3", F.lit(1)),
-            "doc_id",
-            "left",
+        out = (
+            m.groupBy("source")
+            .agg(
+                F.count("*").cast("long").alias("n_docs_raw"),
+                F.sum("ntok").cast("long").alias("tok_raw"),
+                F.sum("m1").cast("long").alias("n_docs_exact"),
+                F.sum(F.col("ntok") * F.col("m1"))
+                .cast("long")
+                .alias("tok_exact"),
+                F.sum("m2").cast("long").alias("n_docs_neardup"),
+                F.sum(F.col("ntok") * F.col("m2"))
+                .cast("long")
+                .alias("tok_neardup"),
+                F.sum("m3").cast("long").alias("n_docs_quality"),
+                F.sum(F.col("ntok") * F.col("m3"))
+                .cast("long")
+                .alias("tok_quality"),
+            )
+            .withColumn(
+                "yield_rate",
+                round4(
+                    F.col("tok_quality") * F.lit(1.0) / F.col("tok_raw")
+                ),
+            )
+            .orderBy("source")
+            .localCheckpoint(eager=True)
         )
-        .select(
-            "source",
-            "ntok",
-            F.coalesce("m1", F.lit(0)).alias("m1"),
-            F.coalesce("m2", F.lit(0)).alias("m2"),
-            F.coalesce("m3", F.lit(0)).alias("m3"),
-        )
-    )
-    out = (
-        m.groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_docs_raw"),
-            F.sum("ntok").cast("long").alias("tok_raw"),
-            F.sum("m1").cast("long").alias("n_docs_exact"),
-            F.sum(F.col("ntok") * F.col("m1"))
-            .cast("long")
-            .alias("tok_exact"),
-            F.sum("m2").cast("long").alias("n_docs_neardup"),
-            F.sum(F.col("ntok") * F.col("m2"))
-            .cast("long")
-            .alias("tok_neardup"),
-            F.sum("m3").cast("long").alias("n_docs_quality"),
-            F.sum(F.col("ntok") * F.col("m3"))
-            .cast("long")
-            .alias("tok_quality"),
-        )
-        .withColumn(
-            "yield_rate",
-            round4(
-                F.col("tok_quality") * F.lit(1.0) / F.col("tok_raw")
-            ),
-        )
-        .orderBy("source")
-        .localCheckpoint(eager=True)
-    )
-    s1.unpersist()
     return out
 
 

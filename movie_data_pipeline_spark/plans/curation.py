@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from movie_data_pipeline_spark.functions.text import tokens
 from movie_data_pipeline_spark.operators.dedup import JACCARD_MAX_SHINGLE_DF
 from movie_data_pipeline_spark.operators.packing import pack_documents
+from movie_data_pipeline_spark.operators.util import overlap
 from movie_data_pipeline_spark.plans.core import query, r4, round4
 from movie_data_pipeline_spark.plans.text import (
     ENGLISH_STOPWORDS,
@@ -2643,8 +2644,7 @@ def q318_maintenance_planner(
 
         # The three derived-artifact builds write three DIFFERENT
         # tables from the same committed snapshot — independent eager
-        # jobs, overlapped from driver threads (guide §2.6, the q288
-        # pattern; deterministic, separate directories).
+        # jobs in separate directories.
         def _build_sh() -> None:
             VersionedTable(sh_p).commit(
                 simhash_band_rows(fp, rung=1).withColumn(
@@ -2675,15 +2675,7 @@ def q318_maintenance_planner(
                 },
             )
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            for f in [
-                pool.submit(_build_sh),
-                pool.submit(_build_mh),
-                pool.submit(_build_man),
-            ]:
-                f.result()
+        overlap(_build_sh, _build_mh, _build_man)
         # the un-maintained erasure the planner exists to catch
         VersionedTable(corpus_p).delete_where(spark, "doc_id % 6 = 2")
 

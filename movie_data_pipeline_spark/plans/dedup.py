@@ -40,8 +40,11 @@ from movie_data_pipeline_spark.operators.graph import (
     duplicate_clusters,
 )
 from movie_data_pipeline_spark.operators.util import (
+    array_pairs,
+    cached,
     fixed_sample,
     fixed_sample_ctes,
+    overlap,
 )
 from movie_data_pipeline_spark.plans.core import query, r4, round4
 from movie_data_pipeline_spark.sources.registry import load_table
@@ -1997,77 +2000,70 @@ def q245_df_cap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bc = buckets.join(
         F.broadcast(caps), F.size("ids") <= F.col("df_cap")
-    ).persist()
-    sizes = (
-        bc.select("df_cap", F.explode("ids").alias("doc_id"))
-        .groupBy("df_cap", "doc_id")
-        .agg(F.count("*").alias("n"))
     )
-    ids = F.col("ids")
-    pair_array = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids) - i - 1),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
+    with cached(bc, count=False) as bc:
+        sizes = (
+            bc.select("df_cap", F.explode("ids").alias("doc_id"))
+            .groupBy("df_cap", "doc_id")
+            .agg(F.count("*").alias("n"))
         )
-    )
-    common = (
-        bc.filter(F.size("ids") > 1)
-        .select("df_cap", F.explode(pair_array).alias("p"))
-        .groupBy(
-            "df_cap",
-            F.col("p.doc_a").alias("doc_a"),
-            F.col("p.doc_b").alias("doc_b"),
+        pair_array = array_pairs(
+            F.col("ids"), lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b"))
         )
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa = sizes.select(
-        "df_cap", F.col("doc_id").alias("doc_a"), F.col("n").alias("na")
-    )
-    sb = sizes.select(
-        "df_cap", F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")
-    )
-    pairs = (
-        common.join(sa, ["df_cap", "doc_a"])
-        .join(sb, ["df_cap", "doc_b"])
-        .filter(
-            F.col("n_common")
-            / (F.col("na") + F.col("nb") - F.col("n_common"))
-            >= 0.2
+        common = (
+            bc.filter(F.size("ids") > 1)
+            .select("df_cap", F.explode(pair_array).alias("p"))
+            .groupBy(
+                "df_cap",
+                F.col("p.doc_a").alias("doc_a"),
+                F.col("p.doc_b").alias("doc_b"),
+            )
+            .agg(F.count("*").alias("n_common"))
         )
-    )
-    agg = pairs.groupBy("df_cap").agg(
-        F.count("*").cast("long").alias("n_pairs"),
-        F.count_distinct("doc_b").cast("long").alias("n_docs_droppable"),
-        # exact integer checksums over the qualifying pairs: these DO
-        # shift when a binding cap drops shared shingles, so the hash
-        # verifies the capped bucket semantics even when the pair SET
-        # is cap-invariant (as on this corpus)
-        F.sum("n_common").cast("long").alias("sum_common"),
-        F.sum(F.col("na") + F.col("nb")).cast("long").alias("sum_sizes"),
-    )
-    out = (
-        caps.join(agg, "df_cap", "left")
-        .select(
-            "df_cap",
-            F.coalesce("n_pairs", F.lit(0)).cast("long").alias("n_pairs"),
-            F.coalesce("n_docs_droppable", F.lit(0))
-            .cast("long")
-            .alias("n_docs_droppable"),
-            F.coalesce("sum_common", F.lit(0))
-            .cast("long")
-            .alias("sum_common"),
-            F.coalesce("sum_sizes", F.lit(0)).cast("long").alias("sum_sizes"),
+        sa = sizes.select(
+            "df_cap", F.col("doc_id").alias("doc_a"), F.col("n").alias("na")
         )
-        .orderBy("df_cap")
-    )
-    # |caps| rows — materialize eagerly so the multi-consumer bucket
-    # cache can be released instead of leaking block-manager state for
-    # the rest of the session (ADVICE r4).
-    out = out.localCheckpoint(eager=True)
-    bc.unpersist()
+        sb = sizes.select(
+            "df_cap", F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")
+        )
+        pairs = (
+            common.join(sa, ["df_cap", "doc_a"])
+            .join(sb, ["df_cap", "doc_b"])
+            .filter(
+                F.col("n_common")
+                / (F.col("na") + F.col("nb") - F.col("n_common"))
+                >= 0.2
+            )
+        )
+        agg = pairs.groupBy("df_cap").agg(
+            F.count("*").cast("long").alias("n_pairs"),
+            F.count_distinct("doc_b").cast("long").alias("n_docs_droppable"),
+            # exact integer checksums over the qualifying pairs: these DO
+            # shift when a binding cap drops shared shingles, so the hash
+            # verifies the capped bucket semantics even when the pair SET
+            # is cap-invariant (as on this corpus)
+            F.sum("n_common").cast("long").alias("sum_common"),
+            F.sum(F.col("na") + F.col("nb")).cast("long").alias("sum_sizes"),
+        )
+        out = (
+            caps.join(agg, "df_cap", "left")
+            .select(
+                "df_cap",
+                F.coalesce("n_pairs", F.lit(0)).cast("long").alias("n_pairs"),
+                F.coalesce("n_docs_droppable", F.lit(0))
+                .cast("long")
+                .alias("n_docs_droppable"),
+                F.coalesce("sum_common", F.lit(0))
+                .cast("long")
+                .alias("sum_common"),
+                F.coalesce("sum_sizes", F.lit(0)).cast("long").alias("sum_sizes"),
+            )
+            .orderBy("df_cap")
+        )
+        # |caps| rows — materialize eagerly so the multi-consumer bucket
+        # cache can be released instead of leaking block-manager state for
+        # the rest of the session (ADVICE r4).
+        out = out.localCheckpoint(eager=True)
     return out
 
 
@@ -2171,20 +2167,14 @@ def q246_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.size("entries") > 1) & (F.size("entries") <= _RUN_CAP)
         )
     )
-    e = F.col("entries")
-    pair_array = F.flatten(
-        F.transform(
-            e,
-            lambda x, i: F.transform(
-                F.slice(e, i + 2, F.size(e) - i - 1),
-                lambda y: F.struct(
-                    x["doc_id"].alias("doc_a"),
-                    y["doc_id"].alias("doc_b"),
-                    (x["pos"] - y["pos"]).alias("diff"),
-                    x["pos"].alias("pa"),
-                ),
-            ),
-        )
+    pair_array = array_pairs(
+        F.col("entries"),
+        lambda x, y: F.struct(
+            x["doc_id"].alias("doc_a"),
+            y["doc_id"].alias("doc_b"),
+            (x["pos"] - y["pos"]).alias("diff"),
+            x["pos"].alias("pa"),
+        ),
     )
     match = (
         buckets.select(F.explode(pair_array).alias("m"))
@@ -2373,17 +2363,9 @@ def q248_lsh_scurve_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         long = wide.select("doc_id", *band_cols).select(
             "doc_id", F.expr(stack)
         )
-        ids = F.col("ids")
-        pair_array = F.flatten(
-            F.transform(
-                ids,
-                lambda x, i: F.transform(
-                    F.slice(ids, i + 2, F.size(ids) - i - 1),
-                    lambda y: F.struct(
-                        x.alias("doc_a"), y.alias("doc_b")
-                    ),
-                ),
-            )
+        pair_array = array_pairs(
+            F.col("ids"),
+            lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
         )
         cand = (
             long.groupBy("band", "sig")
@@ -2850,25 +2832,24 @@ def q270_cross_source_dup_matrix(
             "doc_b",
         )
     )
-    edges = edges.persist()
-    pairs = edges.groupBy("source_lo", "source_hi").agg(
-        F.count("*").cast("long").alias("n_dup_pairs")
-    )
-    members = (
-        edges.select(
-            "source_lo",
-            "source_hi",
-            F.explode(F.array("doc_a", "doc_b")).alias("d"),
+    with cached(edges, count=False) as edges:
+        pairs = edges.groupBy("source_lo", "source_hi").agg(
+            F.count("*").cast("long").alias("n_dup_pairs")
         )
-        .groupBy("source_lo", "source_hi")
-        .agg(F.count_distinct("d").cast("long").alias("n_docs_involved"))
-    )
-    out = (
-        pairs.join(members, ["source_lo", "source_hi"])
-        .orderBy("source_lo", "source_hi")
-        .localCheckpoint(eager=True)
-    )
-    edges.unpersist()
+        members = (
+            edges.select(
+                "source_lo",
+                "source_hi",
+                F.explode(F.array("doc_a", "doc_b")).alias("d"),
+            )
+            .groupBy("source_lo", "source_hi")
+            .agg(F.count_distinct("d").cast("long").alias("n_docs_involved"))
+        )
+        out = (
+            pairs.join(members, ["source_lo", "source_hi"])
+            .orderBy("source_lo", "source_hi")
+            .localCheckpoint(eager=True)
+        )
     return out
 
 
@@ -3420,24 +3401,24 @@ def q280_simhash_hamming_histogram(
     q191/q192 audit discipline).
     """
     docs = load_table(spark, sf_dir, "documents")
-    fp = simhash(docs).persist()
-    anchors = fixed_sample(fp, "doc_id", _HH_TARGET).select(
-        F.col("doc_id").alias("a_id"), F.col("simhash").alias("sh_a")
-    )
-    pairs = fp.crossJoin(F.broadcast(anchors)).filter(
-        F.col("doc_id") != F.col("a_id")
-    )
-    hist = (
-        pairs.select(
-            F.expr("CAST(bit_count(simhash ^ sh_a) AS BIGINT)").alias(
-                "hamming"
-            )
+    fp = simhash(docs)
+    with cached(fp, count=False) as fp:
+        anchors = fixed_sample(fp, "doc_id", _HH_TARGET).select(
+            F.col("doc_id").alias("a_id"), F.col("simhash").alias("sh_a")
         )
-        .groupBy("hamming")
-        .agg(F.count("*").alias("n_pairs"))
-        .localCheckpoint(eager=True)  # <=61 rows, consumed 3x
-    )
-    fp.unpersist()
+        pairs = fp.crossJoin(F.broadcast(anchors)).filter(
+            F.col("doc_id") != F.col("a_id")
+        )
+        hist = (
+            pairs.select(
+                F.expr("CAST(bit_count(simhash ^ sh_a) AS BIGINT)").alias(
+                    "hamming"
+                )
+            )
+            .groupBy("hamming")
+            .agg(F.count("*").alias("n_pairs"))
+            .localCheckpoint(eager=True)  # <=61 rows, consumed 3x
+        )
     tot = hist.agg(F.sum("n_pairs").alias("t"))
     h2 = hist.select(
         F.col("hamming").alias("h2"), F.col("n_pairs").alias("np2")
@@ -3609,7 +3590,6 @@ def q278_dedup_family_agreement(
         )
         .select("doc_a", "doc_b")
         .distinct()
-        .persist()
     )
     txt = (
         jaccard_pairs(
@@ -3618,48 +3598,49 @@ def q278_dedup_family_agreement(
             threshold=float(_AUDIT_J),
         )
         .select("doc_a", "doc_b")
-        .persist()
     )
-    pb = txt.join(sem, ["doc_a", "doc_b"], "left_semi")
-    td = txt.select("doc_b").distinct()
-    sd = sem.select("doc_b").distinct()
-    dd = td.join(sd, "doc_b", "left_semi")
-    one = (
-        txt.agg(F.count("*").alias("nt"))
-        .crossJoin(F.broadcast(sem.agg(F.count("*").alias("ns"))))
-        .crossJoin(F.broadcast(pb.agg(F.count("*").alias("nb"))))
-        .crossJoin(F.broadcast(td.agg(F.count("*").alias("ntd"))))
-        .crossJoin(F.broadcast(sd.agg(F.count("*").alias("nsd"))))
-        .crossJoin(F.broadcast(dd.agg(F.count("*").alias("nbd"))))
-    )
-    pj = F.when(
-        F.col("nt") + F.col("ns") - F.col("nb") > 0,
-        round4(
-            F.col("nb")
-            * F.lit(1.0)
-            / (F.col("nt") + F.col("ns") - F.col("nb"))
-        ),
-    )
-    dj = F.when(
-        F.col("ntd") + F.col("nsd") - F.col("nbd") > 0,
-        round4(
-            F.col("nbd")
-            * F.lit(1.0)
-            / (F.col("ntd") + F.col("nsd") - F.col("nbd"))
-        ),
-    )
-    out = one.select(
-        F.col("nt").cast("long").alias("n_text_pairs"),
-        F.col("ns").cast("long").alias("n_sem_pairs"),
-        F.col("nb").cast("long").alias("n_pair_both"),
-        pj.alias("pair_jaccard"),
-        F.col("ntd").cast("long").alias("n_text_drops"),
-        F.col("nsd").cast("long").alias("n_sem_drops"),
-        F.col("nbd").cast("long").alias("n_drop_both"),
-        dj.alias("drop_jaccard"),
-    ).localCheckpoint(eager=True)
-    sem.unpersist()
-    txt.unpersist()
+    with (
+        cached(sem, count=False) as sem,
+        cached(txt, count=False) as txt,
+    ):
+        pb = txt.join(sem, ["doc_a", "doc_b"], "left_semi")
+        td = txt.select("doc_b").distinct()
+        sd = sem.select("doc_b").distinct()
+        dd = td.join(sd, "doc_b", "left_semi")
+        one = (
+            txt.agg(F.count("*").alias("nt"))
+            .crossJoin(F.broadcast(sem.agg(F.count("*").alias("ns"))))
+            .crossJoin(F.broadcast(pb.agg(F.count("*").alias("nb"))))
+            .crossJoin(F.broadcast(td.agg(F.count("*").alias("ntd"))))
+            .crossJoin(F.broadcast(sd.agg(F.count("*").alias("nsd"))))
+            .crossJoin(F.broadcast(dd.agg(F.count("*").alias("nbd"))))
+        )
+        pj = F.when(
+            F.col("nt") + F.col("ns") - F.col("nb") > 0,
+            round4(
+                F.col("nb")
+                * F.lit(1.0)
+                / (F.col("nt") + F.col("ns") - F.col("nb"))
+            ),
+        )
+        dj = F.when(
+            F.col("ntd") + F.col("nsd") - F.col("nbd") > 0,
+            round4(
+                F.col("nbd")
+                * F.lit(1.0)
+                / (F.col("ntd") + F.col("nsd") - F.col("nbd"))
+            ),
+        )
+        out = one.select(
+            F.col("nt").cast("long").alias("n_text_pairs"),
+            F.col("ns").cast("long").alias("n_sem_pairs"),
+            F.col("nb").cast("long").alias("n_pair_both"),
+            pj.alias("pair_jaccard"),
+            F.col("ntd").cast("long").alias("n_text_drops"),
+            F.col("nsd").cast("long").alias("n_sem_drops"),
+            F.col("nbd").cast("long").alias("n_drop_both"),
+            dj.alias("drop_jaccard"),
+        ).localCheckpoint(eager=True)
     return out
 
 
@@ -3939,18 +3920,12 @@ def q288_cluster_churn_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("node").alias("doc_id"), F.col("component").alias(out)
         )
 
-    # The two snapshot component runs are INDEPENDENT eager loops
-    # (label propagation materializes + convergence-counts per round),
-    # so run them from two driver threads and let the scheduler
-    # back-fill each run's straggler tail with the other's tasks
-    # (guide §2.6). Results are deterministic either way — the threads
-    # only overlap job submission.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fa = pool.submit(comp, _CHURN_PRED_A, "ca")
-        fb = pool.submit(comp, _CHURN_PRED_B, "cb")
-        shared = fa.result().join(fb.result(), "doc_id")
+    # The two snapshot component runs are independent eager loops
+    # (label propagation materializes + convergence-counts per round).
+    ca, cb = overlap(
+        lambda: comp(_CHURN_PRED_A, "ca"), lambda: comp(_CHURN_PRED_B, "cb")
+    )
+    shared = ca.join(cb, "doc_id")
     per_a = shared.groupBy("ca").agg(
         F.count("*").alias("n_shared"),
         F.countDistinct("cb").alias("n_b_clusters"),
@@ -4964,12 +4939,10 @@ def q315_center_threshold_drift(
         assert meta2["bucket_k"] == 8 and meta2["simhash_rung"] == 1
         assert sorted(meta2["simhash_bit_blocks"]) == list(range(60))
 
-        # The three post-recenter checks are independent READ-ONLY
-        # sweeps over the committed v1 state (the boundary writer
-        # rejects every shifted-id duplicate, so it commits nothing) —
-        # submit them from driver threads so each one's straggler tail
-        # back-fills the others (guide §2.6, the q288/q316 pattern;
-        # deterministic — threads only overlap job submission).
+        # The audit and the equality check are independent read-only
+        # sweeps over the committed v1 state, so they overlap; the
+        # boundary check runs a gate writer against the same tables,
+        # so it starts only after both readers have returned.
         def _after_audit() -> DataFrame:
             a = audit_center_thresholds(
                 spark, index_path, corpus_path
@@ -4999,17 +4972,14 @@ def q315_center_threshold_drift(
                 bit_blocks=meta2["simhash_bit_blocks"],
             ).withColumn("rung", F.lit(1)).withColumn(
                 "pbucket", F.expr("CAST(pmod(doc_id, 8) AS INT)")
-            ).persist()
+            )
             # both exceptAll directions scan fresh — the fingerprint
             # subtree is the expensive kind that pays for an explicit
             # materialization (guide §5, the gate-writer finding)
-            fresh.count()
-            try:
+            with cached(fresh) as fresh:
                 stored = idx_t.read(spark)
                 assert stored.exceptAll(fresh).isEmpty()
                 assert fresh.exceptAll(stored).isEmpty()
-            finally:
-                fresh.unpersist()
 
         def _boundary() -> None:
             # boundary contract: a zero-tuning writer adopts the new
@@ -5024,15 +4994,8 @@ def q315_center_threshold_drift(
             assert VersionedTable(corpus_path).current_version() == 0
             assert idx_t.current_version() == 1
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_after = pool.submit(_after_audit)
-            f_eq = pool.submit(_equality)
-            f_bd = pool.submit(_boundary)
-            after = f_after.result()
-            f_eq.result()
-            f_bd.result()
+        after, _ = overlap(_after_audit, _equality)
+        _boundary()
 
         result = (
             before.withColumn("phase", F.lit("before"))

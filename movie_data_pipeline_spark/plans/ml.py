@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from movie_data_pipeline_spark.operators.util import array_pairs
 from movie_data_pipeline_spark.plans.core import query, r4, round4
 from movie_data_pipeline_spark.sources.registry import load_table
 
@@ -395,15 +396,8 @@ def q116_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = lineitem.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("parts")
     )
-    arr = F.col("parts")
-    pair_gen = F.flatten(
-        F.transform(
-            arr,
-            lambda x, i: F.transform(
-                F.slice(arr, i + 2, F.size(arr) - i - 1),
-                lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-            ),
-        )
+    pair_gen = array_pairs(
+        F.col("parts"), lambda x, y: F.struct(x.alias("pa"), y.alias("pb"))
     )
     edges = (
         baskets.select(F.explode(pair_gen).alias("pr"))
@@ -530,15 +524,8 @@ def q155_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("parts")
     )
-    arr = F.col("parts")
-    pair_arr = F.flatten(
-        F.transform(
-            arr,
-            lambda x, i: F.transform(
-                F.slice(arr, i + 2, F.size(arr) - i - 1),
-                lambda y: F.struct(x.alias("p"), y.alias("q")),
-            ),
-        )
+    pair_arr = array_pairs(
+        F.col("parts"), lambda x, y: F.struct(x.alias("p"), y.alias("q"))
     )
     e = (
         baskets.select(F.explode(pair_arr).alias("pr"))
@@ -961,15 +948,8 @@ def q179_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = lineitem.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("parts")
     )
-    arr = F.col("parts")
-    pair_gen = F.flatten(
-        F.transform(
-            arr,
-            lambda x, i: F.transform(
-                F.slice(arr, i + 2, F.size(arr) - i - 1),
-                lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-            ),
-        )
+    pair_gen = array_pairs(
+        F.col("parts"), lambda x, y: F.struct(x.alias("pa"), y.alias("pb"))
     )
     edges = (
         baskets.select(F.explode(pair_gen).alias("pr"))
@@ -1077,15 +1057,8 @@ def q198_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = lineitem.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("parts")
     )
-    arr = F.col("parts")
-    pair_gen = F.flatten(
-        F.transform(
-            arr,
-            lambda x, i: F.transform(
-                F.slice(arr, i + 2, F.size(arr) - i - 1),
-                lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-            ),
-        )
+    pair_gen = array_pairs(
+        F.col("parts"), lambda x, y: F.struct(x.alias("pa"), y.alias("pb"))
     )
     edges = (
         baskets.select(F.explode(pair_gen).alias("pr"))

@@ -19,8 +19,10 @@ from movie_data_pipeline_spark.operators.similarity import (
     cosine_topk_lsh,
 )
 from movie_data_pipeline_spark.operators.util import (
+    cached,
     fixed_sample,
     fixed_sample_ctes,
+    overlap,
 )
 from movie_data_pipeline_spark.plans.core import query, r4, round4
 from movie_data_pipeline_spark.sources.registry import load_table
@@ -1394,49 +1396,48 @@ def _margin_exact(x: DataFrame, y: DataFrame) -> DataFrame:
                 / (F.col("xn") * F.col("yn"))
             ).alias("cs"),
         )
-        .persist()
     )
-    dec = F.col("cs").cast("decimal(20,4)")
-    rnx = F.row_number().over(
-        Window.partitionBy("x_id").orderBy(F.desc("cs"), "y_id")
-    )
-    ax = (
-        p.withColumn("rn", rnx)
-        .filter(F.col("rn") <= MARGIN_K)
-        .groupBy("x_id")
-        .agg(
-            (F.sum(dec).cast("double") / F.lit(MARGIN_K)).alias("a_x")
+    with cached(p, count=False) as p:
+        dec = F.col("cs").cast("decimal(20,4)")
+        rnx = F.row_number().over(
+            Window.partitionBy("x_id").orderBy(F.desc("cs"), "y_id")
         )
-    )
-    rny = F.row_number().over(
-        Window.partitionBy("y_id").orderBy(F.desc("cs"), "x_id")
-    )
-    ay = (
-        p.withColumn("rn", rny)
-        .filter(F.col("rn") <= MARGIN_K)
-        .groupBy("y_id")
-        .agg(
-            (F.sum(dec).cast("double") / F.lit(MARGIN_K)).alias("a_y")
+        ax = (
+            p.withColumn("rn", rnx)
+            .filter(F.col("rn") <= MARGIN_K)
+            .groupBy("x_id")
+            .agg(
+                (F.sum(dec).cast("double") / F.lit(MARGIN_K)).alias("a_x")
+            )
         )
-    )
-    m = (
-        p.join(ax, "x_id")
-        .join(ay, "y_id")
-        .select(
-            "x_id",
-            "y_id",
-            F.col("cs").alias("cos_sim"),
-            round4(
-                F.col("cs") / ((F.col("a_x") + F.col("a_y")) / F.lit(2.0))
-            ).alias("margin"),
+        rny = F.row_number().over(
+            Window.partitionBy("y_id").orderBy(F.desc("cs"), "x_id")
         )
-    )
-    out = (
-        m.filter(F.col("margin") >= F.lit(MARGIN_TAU))
-        .orderBy("x_id", "y_id")
-        .localCheckpoint(eager=True)
-    )
-    p.unpersist()
+        ay = (
+            p.withColumn("rn", rny)
+            .filter(F.col("rn") <= MARGIN_K)
+            .groupBy("y_id")
+            .agg(
+                (F.sum(dec).cast("double") / F.lit(MARGIN_K)).alias("a_y")
+            )
+        )
+        m = (
+            p.join(ax, "x_id")
+            .join(ay, "y_id")
+            .select(
+                "x_id",
+                "y_id",
+                F.col("cs").alias("cos_sim"),
+                round4(
+                    F.col("cs") / ((F.col("a_x") + F.col("a_y")) / F.lit(2.0))
+                ).alias("margin"),
+            )
+        )
+        out = (
+            m.filter(F.col("margin") >= F.lit(MARGIN_TAU))
+            .orderBy("x_id", "y_id")
+            .localCheckpoint(eager=True)
+        )
     return out
 
 
@@ -1775,45 +1776,44 @@ def _margin_lsh(x: DataFrame, y: DataFrame) -> DataFrame:
                 / (F.col("xnorm") * F.col("ynorm"))
             ).alias("cs"),
         )
-        .persist()
     )
-    dec = F.col("cs").cast("decimal(20,4)")
-    rnx = F.row_number().over(
-        Window.partitionBy("x_id").orderBy(F.desc("cs"), "y_id")
-    )
-    rny = F.row_number().over(
-        Window.partitionBy("y_id").orderBy(F.desc("cs"), "x_id")
-    )
-    ranked = p.withColumn("rnx", rnx).withColumn("rny", rny).persist()
-    ax = (
-        ranked.filter(F.col("rnx") <= MARGIN_K)
-        .groupBy("x_id")
-        .agg((F.sum(dec).cast("double") / F.count("*")).alias("a_x"))
-    )
-    ay = (
-        ranked.filter(F.col("rny") <= MARGIN_K)
-        .groupBy("y_id")
-        .agg((F.sum(dec).cast("double") / F.count("*")).alias("a_y"))
-    )
-    keep = ranked.filter(
-        (F.col("rnx") <= MARGIN_K) | (F.col("rny") <= MARGIN_K)
-    ).select("x_id", "y_id", "cs")
-    out = (
-        keep.join(ax, "x_id")
-        .join(ay, "y_id")
-        .select(
-            "x_id",
-            "y_id",
-            F.col("cs").alias("cos_sim"),
-            round4(
-                F.col("cs") / ((F.col("a_x") + F.col("a_y")) / F.lit(2.0))
-            ).alias("margin"),
+    with cached(p, count=False) as p:
+        dec = F.col("cs").cast("decimal(20,4)")
+        rnx = F.row_number().over(
+            Window.partitionBy("x_id").orderBy(F.desc("cs"), "y_id")
         )
-        .filter(F.col("margin") >= F.lit(MARGIN_TAU))
-        .localCheckpoint(eager=True)
-    )
-    p.unpersist()
-    ranked.unpersist()
+        rny = F.row_number().over(
+            Window.partitionBy("y_id").orderBy(F.desc("cs"), "x_id")
+        )
+        ranked = p.withColumn("rnx", rnx).withColumn("rny", rny)
+        with cached(ranked, count=False) as ranked:
+            ax = (
+                ranked.filter(F.col("rnx") <= MARGIN_K)
+                .groupBy("x_id")
+                .agg((F.sum(dec).cast("double") / F.count("*")).alias("a_x"))
+            )
+            ay = (
+                ranked.filter(F.col("rny") <= MARGIN_K)
+                .groupBy("y_id")
+                .agg((F.sum(dec).cast("double") / F.count("*")).alias("a_y"))
+            )
+            keep = ranked.filter(
+                (F.col("rnx") <= MARGIN_K) | (F.col("rny") <= MARGIN_K)
+            ).select("x_id", "y_id", "cs")
+            out = (
+                keep.join(ax, "x_id")
+                .join(ay, "y_id")
+                .select(
+                    "x_id",
+                    "y_id",
+                    F.col("cs").alias("cos_sim"),
+                    round4(
+                        F.col("cs") / ((F.col("a_x") + F.col("a_y")) / F.lit(2.0))
+                    ).alias("margin"),
+                )
+                .filter(F.col("margin") >= F.lit(MARGIN_TAU))
+                .localCheckpoint(eager=True)
+            )
     return out
 
 
@@ -1934,11 +1934,7 @@ def q264_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = fixed_sample(
         emb.filter(F.expr(_QUERY_PRED)), "vec_id", _ANN_AUDIT_QTARGET
     )
-    exact = (
-        cosine_topk(emb, queries, k=10)
-        .select("query_id", "neighbor_id")
-        .persist()
-    )
+    exact = cosine_topk(emb, queries, k=10).select("query_id", "neighbor_id")
     assigned = (
         ivf_assign(emb, n_cells=_IVF_CELLS)
         .select(
@@ -1949,113 +1945,113 @@ def q264_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id", "cell", "cv", l2_norm(F.col("cv")).alias("cn")
         )
-        .persist()
     )
-    per_dim = (
-        assigned.select("cell", F.posexplode("cv").alias("dim_idx", "val"))
-        .groupBy("cell", "dim_idx")
-        .agg(
-            (
-                F.sum(F.col("val").cast("decimal(30,6)")).cast("double")
-                / F.count("*")
-            ).alias("c")
-        )
-    )
-    cents = (
-        per_dim.groupBy("cell")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("dim_idx", "c"))).alias(
-                "ps"
+    with (
+        cached(exact, count=False) as exact,
+        cached(assigned, count=False) as assigned,
+    ):
+        per_dim = (
+            assigned.select("cell", F.posexplode("cv").alias("dim_idx", "val"))
+            .groupBy("cell", "dim_idx")
+            .agg(
+                (
+                    F.sum(F.col("val").cast("decimal(30,6)")).cast("double")
+                    / F.count("*")
+                ).alias("c")
             )
         )
-        .select(
-            "cell",
-            F.transform(F.col("ps"), lambda p: p.getField("c")).alias(
-                "centroid"
-            ),
+        cents = (
+            per_dim.groupBy("cell")
+            .agg(
+                F.array_sort(F.collect_list(F.struct("dim_idx", "c"))).alias(
+                    "ps"
+                )
+            )
+            .select(
+                "cell",
+                F.transform(F.col("ps"), lambda p: p.getField("c")).alias(
+                    "centroid"
+                ),
+            )
         )
-    )
-    qd = queries.select(
-        F.col("vec_id").alias("query_id"),
-        _to_double(F.col("embedding")).alias("qv"),
-    ).select("query_id", "qv", l2_norm(F.col("qv")).alias("qn"))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("cs_c"), F.asc("cell")
-    )
-    qc = (
-        qd.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "qv",
-            "qn",
-            "cell",
-            round4(
-                dot(F.col("qv"), F.col("centroid"))
-                / (F.col("qn") * l2_norm(F.col("centroid")))
-            ).alias("cs_c"),
+        qd = queries.select(
+            F.col("vec_id").alias("query_id"),
+            _to_double(F.col("embedding")).alias("qv"),
+        ).select("query_id", "qv", l2_norm(F.col("qv")).alias("qn"))
+        wq = Window.partitionBy("query_id").orderBy(
+            F.desc("cs_c"), F.asc("cell")
         )
-        .withColumn("cell_rank", F.row_number().over(wq))
-        .filter(F.col("cell_rank") <= max(_IVF_PROBES))
-    )
-    probes = spark.createDataFrame(
-        [(int(p),) for p in _IVF_PROBES], "nprobe LONG"
-    )
-    cand = (
-        qc.join(F.broadcast(probes), F.col("cell_rank") <= F.col("nprobe"))
-        .join(assigned, "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "nprobe",
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                dot(F.col("qv"), F.col("cv"))
-                / (F.col("qn") * F.col("cn"))
-            ).alias("cs"),
+        qc = (
+            qd.crossJoin(F.broadcast(cents))
+            .select(
+                "query_id",
+                "qv",
+                "qn",
+                "cell",
+                round4(
+                    dot(F.col("qv"), F.col("centroid"))
+                    / (F.col("qn") * l2_norm(F.col("centroid")))
+                ).alias("cs_c"),
+            )
+            .withColumn("cell_rank", F.row_number().over(wq))
+            .filter(F.col("cell_rank") <= max(_IVF_PROBES))
         )
-    )
-    wr = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.desc("cs"), F.asc("neighbor_id")
-    )
-    approx = (
-        cand.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 10)
-        .select("nprobe", "query_id", "neighbor_id")
-        .persist()
-    )
-    na = approx.groupBy("nprobe").agg(F.count("*").alias("n_approx_pairs"))
-    h = (
-        approx.join(exact, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("nprobe")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    n_q = queries.agg(F.count("*").alias("n_queries"))
-    n_e = exact.agg(F.count("*").alias("n_exact_pairs"))
-    out = (
-        probes.join(na, "nprobe", "left")
-        .join(h, "nprobe", "left")
-        .crossJoin(F.broadcast(n_q))
-        .crossJoin(F.broadcast(n_e))
-        .select(
-            "nprobe",
-            "n_queries",
-            "n_exact_pairs",
-            F.coalesce("n_approx_pairs", F.lit(0))
-            .cast("long")
-            .alias("n_approx_pairs"),
-            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            round4(
-                F.coalesce("n_hits", F.lit(0))
-                * F.lit(1.0)
-                / F.col("n_exact_pairs")
-            ).alias("recall"),
+        probes = spark.createDataFrame(
+            [(int(p),) for p in _IVF_PROBES], "nprobe LONG"
         )
-        .orderBy("nprobe")
-        .localCheckpoint(eager=True)
-    )
-    exact.unpersist()
-    assigned.unpersist()
-    approx.unpersist()
+        cand = (
+            qc.join(F.broadcast(probes), F.col("cell_rank") <= F.col("nprobe"))
+            .join(assigned, "cell")
+            .filter(F.col("vec_id") != F.col("query_id"))
+            .select(
+                "nprobe",
+                "query_id",
+                F.col("vec_id").alias("neighbor_id"),
+                (
+                    dot(F.col("qv"), F.col("cv"))
+                    / (F.col("qn") * F.col("cn"))
+                ).alias("cs"),
+            )
+        )
+        wr = Window.partitionBy("nprobe", "query_id").orderBy(
+            F.desc("cs"), F.asc("neighbor_id")
+        )
+        approx = (
+            cand.withColumn("rn", F.row_number().over(wr))
+            .filter(F.col("rn") <= 10)
+            .select("nprobe", "query_id", "neighbor_id")
+        )
+        with cached(approx, count=False) as approx:
+            na = approx.groupBy("nprobe").agg(F.count("*").alias("n_approx_pairs"))
+            h = (
+                approx.join(exact, ["query_id", "neighbor_id"], "left_semi")
+                .groupBy("nprobe")
+                .agg(F.count("*").alias("n_hits"))
+            )
+            n_q = queries.agg(F.count("*").alias("n_queries"))
+            n_e = exact.agg(F.count("*").alias("n_exact_pairs"))
+            out = (
+                probes.join(na, "nprobe", "left")
+                .join(h, "nprobe", "left")
+                .crossJoin(F.broadcast(n_q))
+                .crossJoin(F.broadcast(n_e))
+                .select(
+                    "nprobe",
+                    "n_queries",
+                    "n_exact_pairs",
+                    F.coalesce("n_approx_pairs", F.lit(0))
+                    .cast("long")
+                    .alias("n_approx_pairs"),
+                    F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
+                    round4(
+                        F.coalesce("n_hits", F.lit(0))
+                        * F.lit(1.0)
+                        / F.col("n_exact_pairs")
+                    ).alias("recall"),
+                )
+                .orderBy("nprobe")
+                .localCheckpoint(eager=True)
+            )
     return out
 
 
@@ -2277,114 +2273,113 @@ def q272_pq_codebook_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("m").cast("long").alias("m"),
         F.col("s.sub").alias("sub"),
         F.col("s.code").alias("code"),
-    ).persist()
-    per_dim = (
-        sc.select("m", "code", F.posexplode("sub").alias("dim_idx", "val"))
-        .groupBy("m", "code", "dim_idx")
-        .agg(
-            (
-                F.sum(F.col("val").cast("decimal(30,6)")).cast("double")
-                / F.count("*")
-            ).alias("cd")
-        )
     )
-    cents = (
-        per_dim.groupBy("m", "code")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("dim_idx", "cd"))).alias(
-                "ps"
+    with cached(sc, count=False) as sc:
+        per_dim = (
+            sc.select("m", "code", F.posexplode("sub").alias("dim_idx", "val"))
+            .groupBy("m", "code", "dim_idx")
+            .agg(
+                (
+                    F.sum(F.col("val").cast("decimal(30,6)")).cast("double")
+                    / F.count("*")
+                ).alias("cd")
             )
         )
-        .select(
+        cents = (
+            per_dim.groupBy("m", "code")
+            .agg(
+                F.array_sort(F.collect_list(F.struct("dim_idx", "cd"))).alias(
+                    "ps"
+                )
+            )
+            .select(
+                "m",
+                "code",
+                F.transform(F.col("ps"), lambda p: p.getField("cd")).alias(
+                    "cent"
+                ),
+            )
+        )
+        dist = sc.join(F.broadcast(cents), ["m", "code"]).select(
+            "m", "code", round4(d2(F.col("sub"), F.col("cent"))).alias("d2r")
+        )
+        per_sub = dist.groupBy("m").agg(
+            F.count("*").cast("long").alias("n_vectors"),
+            F.count_distinct("code").cast("long").alias("n_codes_used"),
+            round4(
+                F.sum(F.col("d2r").cast("decimal(20,4)")).cast("double")
+                / F.count("*")
+            ).alias("mse"),
+        )
+        qs = fixed_sample(
+            v.filter(F.expr(_QUERY_PRED)), "vec_id", _ANN_AUDIT_QTARGET
+        ).select(F.col("vec_id").alias("query_id"), "arr")
+        qsubs = qs.select(
+            "query_id",
+            F.posexplode(
+                F.array(*[
+                    F.slice(F.col("arr"), m * _PQ_SUBD + 1, _PQ_SUBD)
+                    for m in range(_PQ_M)
+                ])
+            ).alias("m", "qsub"),
+        ).select("query_id", F.col("m").cast("long").alias("m"), "qsub")
+        t = qsubs.join(F.broadcast(cents), "m").select(
+            "query_id",
             "m",
             "code",
-            F.transform(F.col("ps"), lambda p: p.getField("cd")).alias(
-                "cent"
-            ),
+            round4(d2(F.col("qsub"), F.col("cent"))).alias("d2q"),
         )
-    )
-    dist = sc.join(F.broadcast(cents), ["m", "code"]).select(
-        "m", "code", round4(d2(F.col("sub"), F.col("cent"))).alias("d2r")
-    )
-    per_sub = dist.groupBy("m").agg(
-        F.count("*").cast("long").alias("n_vectors"),
-        F.count_distinct("code").cast("long").alias("n_codes_used"),
-        round4(
-            F.sum(F.col("d2r").cast("decimal(20,4)")).cast("double")
-            / F.count("*")
-        ).alias("mse"),
-    )
-    qs = fixed_sample(
-        v.filter(F.expr(_QUERY_PRED)), "vec_id", _ANN_AUDIT_QTARGET
-    ).select(F.col("vec_id").alias("query_id"), "arr")
-    qsubs = qs.select(
-        "query_id",
-        F.posexplode(
-            F.array(*[
-                F.slice(F.col("arr"), m * _PQ_SUBD + 1, _PQ_SUBD)
-                for m in range(_PQ_M)
-            ])
-        ).alias("m", "qsub"),
-    ).select("query_id", F.col("m").cast("long").alias("m"), "qsub")
-    t = qsubs.join(F.broadcast(cents), "m").select(
-        "query_id",
-        "m",
-        "code",
-        round4(d2(F.col("qsub"), F.col("cent"))).alias("d2q"),
-    )
-    adist = (
-        sc.select("vec_id", "m", "code")
-        .join(t.hint("SHUFFLE_HASH"), ["m", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(
-            F.sum(F.col("d2q").cast("decimal(20,4)"))
-            .cast("double")
-            .alias("ad")
+        adist = (
+            sc.select("vec_id", "m", "code")
+            .join(t.hint("SHUFFLE_HASH"), ["m", "code"])
+            .filter(F.col("vec_id") != F.col("query_id"))
+            .groupBy("query_id", "vec_id")
+            .agg(
+                F.sum(F.col("d2q").cast("decimal(20,4)"))
+                .cast("double")
+                .alias("ad")
+            )
         )
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.asc("ad"), F.asc("vec_id"))
-    approx = (
-        adist.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 10)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    wx = Window.partitionBy("query_id").orderBy(F.asc("xd"), F.asc("vec_id"))
-    ex = (
-        v.crossJoin(F.broadcast(qs.select("query_id", F.col("arr").alias("qarr"))))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            d2(F.col("qarr"), F.col("arr")).alias("xd"),
+        wr = Window.partitionBy("query_id").orderBy(F.asc("ad"), F.asc("vec_id"))
+        approx = (
+            adist.withColumn("rn", F.row_number().over(wr))
+            .filter(F.col("rn") <= 10)
+            .select("query_id", F.col("vec_id").alias("neighbor_id"))
         )
-        .withColumn("rn", F.row_number().over(wx))
-        .filter(F.col("rn") <= 10)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .persist()
-    )
-    ne = ex.agg(F.count("*").alias("n_exact"))
-    h = approx.join(ex, ["query_id", "neighbor_id"], "left_semi").agg(
-        F.count("*").alias("n_hits")
-    )
-    out = (
-        per_sub.crossJoin(F.broadcast(ne))
-        .crossJoin(F.broadcast(h))
-        .select(
-            "m",
-            "n_vectors",
-            "n_codes_used",
-            "mse",
-            F.col("n_exact").cast("long").alias("n_exact_pairs"),
-            round4(F.col("n_hits") * F.lit(1.0) / F.col("n_exact")).alias(
-                "recall_at_10"
-            ),
+        wx = Window.partitionBy("query_id").orderBy(F.asc("xd"), F.asc("vec_id"))
+        ex = (
+            v.crossJoin(F.broadcast(qs.select("query_id", F.col("arr").alias("qarr"))))
+            .filter(F.col("vec_id") != F.col("query_id"))
+            .select(
+                "query_id",
+                "vec_id",
+                d2(F.col("qarr"), F.col("arr")).alias("xd"),
+            )
+            .withColumn("rn", F.row_number().over(wx))
+            .filter(F.col("rn") <= 10)
+            .select("query_id", F.col("vec_id").alias("neighbor_id"))
         )
-        .orderBy("m")
-        .localCheckpoint(eager=True)
-    )
-    sc.unpersist()
-    ex.unpersist()
+        with cached(ex, count=False) as ex:
+            ne = ex.agg(F.count("*").alias("n_exact"))
+            h = approx.join(ex, ["query_id", "neighbor_id"], "left_semi").agg(
+                F.count("*").alias("n_hits")
+            )
+            out = (
+                per_sub.crossJoin(F.broadcast(ne))
+                .crossJoin(F.broadcast(h))
+                .select(
+                    "m",
+                    "n_vectors",
+                    "n_codes_used",
+                    "mse",
+                    F.col("n_exact").cast("long").alias("n_exact_pairs"),
+                    round4(F.col("n_hits") * F.lit(1.0) / F.col("n_exact")).alias(
+                        "recall_at_10"
+                    ),
+                )
+                .orderBy("m")
+                .localCheckpoint(eager=True)
+            )
     return out
 
 
@@ -2552,176 +2547,175 @@ def q284_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cell").cast("long").alias("cell"),
             _to_double(F.col("embedding")).alias("arr"),
         )
-        .persist()
     )
-    per_dim = (
-        assigned.select("cell", F.posexplode("arr").alias("dim_idx", "val"))
-        .groupBy("cell", "dim_idx")
-        .agg(
-            (
-                F.sum(F.col("val").cast("decimal(30,6)")).cast("double")
-                / F.count("*")
-            ).alias("c")
-        )
-    )
-    icents = (
-        per_dim.groupBy("cell")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("dim_idx", "c"))).alias(
-                "ps"
+    with cached(assigned, count=False) as assigned:
+        per_dim = (
+            assigned.select("cell", F.posexplode("arr").alias("dim_idx", "val"))
+            .groupBy("cell", "dim_idx")
+            .agg(
+                (
+                    F.sum(F.col("val").cast("decimal(30,6)")).cast("double")
+                    / F.count("*")
+                ).alias("c")
             )
         )
-        .select(
-            "cell",
-            F.transform(F.col("ps"), lambda p: p.getField("c")).alias(
-                "centroid"
-            ),
-        )
-    )
-    # PQ codebook seeds: the same 8 lowest-md5 vectors (q272's rule),
-    # collected driver-side and compiled into literal argmin exprs
-    seed_rows = (
-        v.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(_PQ_K)
-        .select("arr")
-        .collect()
-    )
-    sub_slices = [
-        F.slice(F.col("arr"), m * _PQ_SUBD + 1, _PQ_SUBD)
-        for m in range(_PQ_M)
-    ]
-    code_cols = []
-    for m in range(_PQ_M):
-        cands = []
-        for k, row in enumerate(seed_rows):
-            ssub = F.array(
-                *[
-                    F.lit(float(x))
-                    for x in row.arr[m * _PQ_SUBD : (m + 1) * _PQ_SUBD]
-                ]
-            )
-            cands.append(
-                F.struct(
-                    d2(sub_slices[m], ssub).alias("d"),
-                    F.lit(k).alias("k"),
+        icents = (
+            per_dim.groupBy("cell")
+            .agg(
+                F.array_sort(F.collect_list(F.struct("dim_idx", "c"))).alias(
+                    "ps"
                 )
             )
-        code_cols.append(
-            F.array_min(F.array(*cands)).getField("k").cast("long")
+            .select(
+                "cell",
+                F.transform(F.col("ps"), lambda p: p.getField("c")).alias(
+                    "centroid"
+                ),
+            )
         )
-    sc = assigned.select(
-        "vec_id",
-        "cell",
-        F.posexplode(
-            F.array(
-                *[
+        # PQ codebook seeds: the same 8 lowest-md5 vectors (q272's rule),
+        # collected driver-side and compiled into literal argmin exprs
+        seed_rows = (
+            v.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
+            .limit(_PQ_K)
+            .select("arr")
+            .collect()
+        )
+        sub_slices = [
+            F.slice(F.col("arr"), m * _PQ_SUBD + 1, _PQ_SUBD)
+            for m in range(_PQ_M)
+        ]
+        code_cols = []
+        for m in range(_PQ_M):
+            cands = []
+            for k, row in enumerate(seed_rows):
+                ssub = F.array(
+                    *[
+                        F.lit(float(x))
+                        for x in row.arr[m * _PQ_SUBD : (m + 1) * _PQ_SUBD]
+                    ]
+                )
+                cands.append(
                     F.struct(
-                        sub_slices[m].alias("sub"),
-                        code_cols[m].alias("code"),
+                        d2(sub_slices[m], ssub).alias("d"),
+                        F.lit(k).alias("k"),
                     )
-                    for m in range(_PQ_M)
-                ]
+                )
+            code_cols.append(
+                F.array_min(F.array(*cands)).getField("k").cast("long")
             )
-        ).alias("m", "s"),
-    ).select(
-        "vec_id",
-        "cell",
-        F.col("m").cast("long").alias("m"),
-        F.col("s.sub").alias("sub"),
-        F.col("s.code").alias("code"),
-    ).persist()
-    ppd = (
-        sc.select("m", "code", F.posexplode("sub").alias("dim_idx", "val"))
-        .groupBy("m", "code", "dim_idx")
-        .agg(
-            (
-                F.sum(F.col("val").cast("decimal(30,6)")).cast("double")
-                / F.count("*")
-            ).alias("cd")
-        )
-    )
-    pcents = (
-        ppd.groupBy("m", "code")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("dim_idx", "cd"))).alias(
-                "ps"
-            )
-        )
-        .select(
-            "m",
-            "code",
-            F.transform(F.col("ps"), lambda p: p.getField("cd")).alias(
-                "cent"
-            ),
-        )
-    )
-    qs = fixed_sample(
-        v.filter(F.expr(_QUERY_PRED)), "vec_id", _ANN_AUDIT_QTARGET
-    ).select(F.col("vec_id").alias("query_id"), F.col("arr").alias("qarr"))
-    qd = qs.select(
-        "query_id", "qarr", l2_norm(F.col("qarr")).alias("qn")
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("cell"))
-    probe = (
-        qd.crossJoin(F.broadcast(icents))
-        .select(
-            "query_id",
+        sc = assigned.select(
+            "vec_id",
             "cell",
-            round4(
-                dot(F.col("qarr"), F.col("centroid"))
-                / (F.col("qn") * l2_norm(F.col("centroid")))
-            ).alias("cs"),
+            F.posexplode(
+                F.array(
+                    *[
+                        F.struct(
+                            sub_slices[m].alias("sub"),
+                            code_cols[m].alias("code"),
+                        )
+                        for m in range(_PQ_M)
+                    ]
+                )
+            ).alias("m", "s"),
+        ).select(
+            "vec_id",
+            "cell",
+            F.col("m").cast("long").alias("m"),
+            F.col("s.sub").alias("sub"),
+            F.col("s.code").alias("code"),
         )
-        .withColumn("cr", F.row_number().over(wq))
-        .filter(F.col("cr") <= _IVFPQ_NPROBE)
-        .select("query_id", "cell")
-    )
-    qsubs = qs.select(
-        "query_id",
-        F.posexplode(
-            F.array(*[
-                F.slice(F.col("qarr"), m * _PQ_SUBD + 1, _PQ_SUBD)
-                for m in range(_PQ_M)
-            ])
-        ).alias("m", "qsub"),
-    ).select("query_id", F.col("m").cast("long").alias("m"), "qsub")
-    lut = qsubs.join(F.broadcast(pcents), "m").select(
-        "query_id",
-        "m",
-        "code",
-        round4(d2(F.col("qsub"), F.col("cent"))).alias("d2q"),
-    )
-    cand = (
-        sc.select("vec_id", "cell", "m", "code")
-        .join(F.broadcast(probe), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-    )
-    adist = (
-        cand.join(F.broadcast(lut), ["query_id", "m", "code"])
-        .groupBy("query_id", "vec_id")
-        .agg(
-            F.sum(F.col("d2q").cast("decimal(20,4)"))
-            .cast("double")
-            .alias("ad")
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.asc("ad"), F.asc("vec_id")
-    )
-    out = (
-        adist.withColumn("rnk", F.row_number().over(wr))
-        .filter(F.col("rnk") <= _IVFPQ_K)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("rnk").cast("long").alias("rank"),
-            F.col("ad").alias("adc_d2"),
-        )
-        .orderBy("query_id", "rank")
-        .localCheckpoint(eager=True)
-    )
-    assigned.unpersist()
-    sc.unpersist()
+        with cached(sc, count=False) as sc:
+            ppd = (
+                sc.select("m", "code", F.posexplode("sub").alias("dim_idx", "val"))
+                .groupBy("m", "code", "dim_idx")
+                .agg(
+                    (
+                        F.sum(F.col("val").cast("decimal(30,6)")).cast("double")
+                        / F.count("*")
+                    ).alias("cd")
+                )
+            )
+            pcents = (
+                ppd.groupBy("m", "code")
+                .agg(
+                    F.array_sort(F.collect_list(F.struct("dim_idx", "cd"))).alias(
+                        "ps"
+                    )
+                )
+                .select(
+                    "m",
+                    "code",
+                    F.transform(F.col("ps"), lambda p: p.getField("cd")).alias(
+                        "cent"
+                    ),
+                )
+            )
+            qs = fixed_sample(
+                v.filter(F.expr(_QUERY_PRED)), "vec_id", _ANN_AUDIT_QTARGET
+            ).select(F.col("vec_id").alias("query_id"), F.col("arr").alias("qarr"))
+            qd = qs.select(
+                "query_id", "qarr", l2_norm(F.col("qarr")).alias("qn")
+            )
+            wq = Window.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("cell"))
+            probe = (
+                qd.crossJoin(F.broadcast(icents))
+                .select(
+                    "query_id",
+                    "cell",
+                    round4(
+                        dot(F.col("qarr"), F.col("centroid"))
+                        / (F.col("qn") * l2_norm(F.col("centroid")))
+                    ).alias("cs"),
+                )
+                .withColumn("cr", F.row_number().over(wq))
+                .filter(F.col("cr") <= _IVFPQ_NPROBE)
+                .select("query_id", "cell")
+            )
+            qsubs = qs.select(
+                "query_id",
+                F.posexplode(
+                    F.array(*[
+                        F.slice(F.col("qarr"), m * _PQ_SUBD + 1, _PQ_SUBD)
+                        for m in range(_PQ_M)
+                    ])
+                ).alias("m", "qsub"),
+            ).select("query_id", F.col("m").cast("long").alias("m"), "qsub")
+            lut = qsubs.join(F.broadcast(pcents), "m").select(
+                "query_id",
+                "m",
+                "code",
+                round4(d2(F.col("qsub"), F.col("cent"))).alias("d2q"),
+            )
+            cand = (
+                sc.select("vec_id", "cell", "m", "code")
+                .join(F.broadcast(probe), "cell")
+                .filter(F.col("vec_id") != F.col("query_id"))
+            )
+            adist = (
+                cand.join(F.broadcast(lut), ["query_id", "m", "code"])
+                .groupBy("query_id", "vec_id")
+                .agg(
+                    F.sum(F.col("d2q").cast("decimal(20,4)"))
+                    .cast("double")
+                    .alias("ad")
+                )
+            )
+            wr = Window.partitionBy("query_id").orderBy(
+                F.asc("ad"), F.asc("vec_id")
+            )
+            out = (
+                adist.withColumn("rnk", F.row_number().over(wr))
+                .filter(F.col("rnk") <= _IVFPQ_K)
+                .select(
+                    "query_id",
+                    F.col("vec_id").alias("neighbor_id"),
+                    F.col("rnk").cast("long").alias("rank"),
+                    F.col("ad").alias("adc_d2"),
+                )
+                .orderBy("query_id", "rank")
+                .localCheckpoint(eager=True)
+            )
     return out
 
 
@@ -3054,93 +3048,92 @@ def q309_ivf_centroid_migration(
         exact = (
             cosine_topk(surv_vecs, queries, k=10)
             .select("query_id", "neighbor_id")
-            .persist()
         )
-        qd = queries.select(
-            F.col("vec_id").alias("query_id"),
-            _to_double(F.col("embedding")).alias("qv"),
-        ).select("query_id", "qv", l2_norm(F.col("qv")).alias("qn"))
-        cents = spark.createDataFrame(
-            [(c, [float(x) for x in meta["ivf_centroids"][str(c)]])
-             for c in cells],
-            "cell INT, centroid ARRAY<DOUBLE>",
-        )
-        wq = Window.partitionBy("query_id").orderBy(
-            F.desc("cs_c"), F.asc("cell")
-        )
-        qc = (
-            qd.crossJoin(F.broadcast(cents))
-            .select(
-                "query_id",
-                "qv",
+        with cached(exact, count=False) as exact:
+            qd = queries.select(
+                F.col("vec_id").alias("query_id"),
+                _to_double(F.col("embedding")).alias("qv"),
+            ).select("query_id", "qv", l2_norm(F.col("qv")).alias("qn"))
+            cents = spark.createDataFrame(
+                [(c, [float(x) for x in meta["ivf_centroids"][str(c)]])
+                 for c in cells],
+                "cell INT, centroid ARRAY<DOUBLE>",
+            )
+            wq = Window.partitionBy("query_id").orderBy(
+                F.desc("cs_c"), F.asc("cell")
+            )
+            qc = (
+                qd.crossJoin(F.broadcast(cents))
+                .select(
+                    "query_id",
+                    "qv",
+                    "cell",
+                    round4(
+                        dot(F.col("qv"), F.col("centroid"))
+                        / (F.col("qn") * l2_norm(F.col("centroid")))
+                    ).alias("cs_c"),
+                )
+                .withColumn("cell_rank", F.row_number().over(wq))
+                .filter(F.col("cell_rank") <= 2)
+                .select("query_id", "qv", "cell")
+            )
+            inv = idx2.join(
+                surv_vecs.select(
+                    "vec_id", _to_double(F.col("embedding")).alias("cv")
+                ),
+                "vec_id",
+            ).select(
                 "cell",
-                round4(
-                    dot(F.col("qv"), F.col("centroid"))
-                    / (F.col("qn") * l2_norm(F.col("centroid")))
-                ).alias("cs_c"),
+                F.col("vec_id").alias("neighbor_id"),
+                "cv",
+                l2_norm(F.col("cv")).alias("cn"),
             )
-            .withColumn("cell_rank", F.row_number().over(wq))
-            .filter(F.col("cell_rank") <= 2)
-            .select("query_id", "qv", "cell")
-        )
-        inv = idx2.join(
-            surv_vecs.select(
-                "vec_id", _to_double(F.col("embedding")).alias("cv")
-            ),
-            "vec_id",
-        ).select(
-            "cell",
-            F.col("vec_id").alias("neighbor_id"),
-            "cv",
-            l2_norm(F.col("cv")).alias("cn"),
-        )
-        qn2 = qc.select(
-            "query_id", "cell", "qv", l2_norm(F.col("qv")).alias("qn")
-        )
-        wr = Window.partitionBy("query_id").orderBy(
-            F.desc("cs"), F.asc("neighbor_id")
-        )
-        approx = (
-            inv.join(F.broadcast(qn2), "cell")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                (
-                    dot(F.col("qv"), F.col("cv"))
-                    / (F.col("qn") * F.col("cn"))
-                ).alias("cs"),
+            qn2 = qc.select(
+                "query_id", "cell", "qv", l2_norm(F.col("qv")).alias("qn")
             )
-            .withColumn("rn", F.row_number().over(wr))
-            .filter(F.col("rn") <= 10)
-            .select("query_id", "neighbor_id")
-        )
-        n_exact = exact.count()
-        n_hits = approx.join(exact, ["query_id", "neighbor_id"]).count()
-
-        def const(metric: str, k: int, value: float) -> DataFrame:
-            return spark.createDataFrame(
-                [(metric, int(k), float(value))],
-                "metric STRING, k LONG, value DOUBLE",
+            wr = Window.partitionBy("query_id").orderBy(
+                F.desc("cs"), F.asc("neighbor_id")
             )
+            approx = (
+                inv.join(F.broadcast(qn2), "cell")
+                .filter(F.col("neighbor_id") != F.col("query_id"))
+                .select(
+                    "query_id",
+                    "neighbor_id",
+                    (
+                        dot(F.col("qv"), F.col("cv"))
+                        / (F.col("qn") * F.col("cn"))
+                    ).alias("cs"),
+                )
+                .withColumn("rn", F.row_number().over(wr))
+                .filter(F.col("rn") <= 10)
+                .select("query_id", "neighbor_id")
+            )
+            n_exact = exact.count()
+            n_hits = approx.join(exact, ["query_id", "neighbor_id"]).count()
 
-        recall = (
-            __import__("math").floor(n_hits / n_exact * 10000.0 + 0.5)
-            / 10000.0
-        )
-        from functools import reduce
+            def const(metric: str, k: int, value: float) -> DataFrame:
+                return spark.createDataFrame(
+                    [(metric, int(k), float(value))],
+                    "metric STRING, k LONG, value DOUBLE",
+                )
 
-        rows = [
-            census(idx0, "census_initial"),
-            census(idx1, "census_after_scrub"),
-            census(idx2, "census_after_migration"),
-            const("n_reassigned_total", -1, moved.count()),
-            const("n_exact_pairs", -1, n_exact),
-            const("recall_nprobe2", 2, recall),
-        ]
-        result = reduce(DataFrame.unionByName, rows).orderBy("metric", "k")
-        result = result.localCheckpoint(eager=True)
-        exact.unpersist()
+            recall = (
+                __import__("math").floor(n_hits / n_exact * 10000.0 + 0.5)
+                / 10000.0
+            )
+            from functools import reduce
+
+            rows = [
+                census(idx0, "census_initial"),
+                census(idx1, "census_after_scrub"),
+                census(idx2, "census_after_migration"),
+                const("n_reassigned_total", -1, moved.count()),
+                const("n_exact_pairs", -1, n_exact),
+                const("recall_nprobe2", 2, recall),
+            ]
+            result = reduce(DataFrame.unionByName, rows).orderBy("metric", "k")
+            result = result.localCheckpoint(eager=True)
         return result
     finally:
         _shutil.rmtree(base, ignore_errors=True)
@@ -3433,15 +3426,11 @@ def q316_ivf_cell_split_recovery(
         full = corpus_t.read(spark, version=0).select("vec_id", "embedding")
         surv = corpus_t.read(spark).select("vec_id", "embedding")
         queries = fixed_sample(surv, "vec_id", _ANN_AUDIT_QTARGET)
-        exact_pre = (
-            cosine_topk(full, queries, k=10)
-            .select("query_id", "neighbor_id")
-            .persist()
+        exact_pre = cosine_topk(full, queries, k=10).select(
+            "query_id", "neighbor_id"
         )
-        exact_post = (
-            cosine_topk(surv, queries, k=10)
-            .select("query_id", "neighbor_id")
-            .persist()
+        exact_post = cosine_topk(surv, queries, k=10).select(
+            "query_id", "neighbor_id"
         )
 
         def probe(version: int, vectors: DataFrame, exact: DataFrame,
@@ -3502,48 +3491,25 @@ def q316_ivf_cell_split_recovery(
                         / (F.col("qn") * F.col("cn"))
                     ).alias("cs"),
                 )
-                .persist()
             )
-            n_cand = cand.count()
-            wr = Window.partitionBy("query_id").orderBy(
-                F.desc("cs"), F.asc("neighbor_id")
-            )
-            approx = (
-                cand.withColumn("rn", F.row_number().over(wr))
-                .filter(F.col("rn") <= 10)
-                .select("query_id", "neighbor_id")
-            )
-            n_exact = exact.count()
-            n_hits = approx.join(
-                exact, ["query_id", "neighbor_id"]
-            ).count()
-            cand.unpersist()
+            with cached(cand, count=False) as cand:
+                n_cand = cand.count()
+                wr = Window.partitionBy("query_id").orderBy(
+                    F.desc("cs"), F.asc("neighbor_id")
+                )
+                approx = (
+                    cand.withColumn("rn", F.row_number().over(wr))
+                    .filter(F.col("rn") <= 10)
+                    .select("query_id", "neighbor_id")
+                )
+                n_exact = exact.count()
+                n_hits = approx.join(
+                    exact, ["query_id", "neighbor_id"]
+                ).count()
             return (
                 _math.floor(n_hits / n_exact * 10000.0 + 0.5) / 10000.0,
                 n_cand,
             )
-
-        # The three stored-snapshot probes are independent eager
-        # read-only sweeps (each: counts over its own persisted cand
-        # frame against an already-committed snapshot), so submit them
-        # from driver threads and let the scheduler back-fill each
-        # probe's straggler tail with the others' tasks (guide §2.6 —
-        # the q288 pattern). Deterministic: threads only overlap job
-        # submission; results are consumed in fixed order.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_pre = pool.submit(probe, 0, full, exact_pre, 2)
-            f_shrunk = pool.submit(probe, 2, surv, exact_post, 1)
-            f_restored = pool.submit(probe, 3, surv, exact_post, 2)
-            recall_pre, _ = f_pre.result()
-            recall_shrunk, cand_s = f_shrunk.result()
-            recall_restored, cand_r = f_restored.result()
-        # the codebook-width claim: at EQUAL scan budget (1/4 vs 2/8 of
-        # the cells) the restored index must beat the shrunken one
-        assert recall_restored >= recall_shrunk, (
-            recall_restored, recall_shrunk,
-        )
 
         def census(version: int, name: str) -> DataFrame:
             return (
@@ -3563,23 +3529,41 @@ def q316_ivf_cell_split_recovery(
                 "metric STRING, k LONG, value DOUBLE",
             )
 
-        rows = [
-            census(0, "census_initial"),
-            census(1, "census_after_scrub"),
-            census(2, "census_shrunk"),
-            census(3, "census_restored"),
-            const("n_cells_shrunk", -1, n_shrunk),
-            const("n_cells_restored", -1, int(meta3["n_cells"])),
-            const("n_split_seeds", -1, _IVF_CELLS - n_shrunk),
-            const("n_exact_pairs", -1, exact_post.count()),
-            const("n_candidates_shrunk_budget", 1, cand_s),
-            const("n_candidates_restored", 2, cand_r),
-            const("recall_nprobe2_pre", 2, recall_pre),
-            const("recall_nprobe1_shrunk", 1, recall_shrunk),
-            const("recall_nprobe2_restored", 2, recall_restored),
-        ]
-        exact_pre.unpersist()
-        exact_post.unpersist()
+        with (
+            cached(exact_pre, count=False) as exact_pre,
+            cached(exact_post, count=False) as exact_post,
+        ):
+            # The three stored-snapshot probes are independent eager
+            # read-only sweeps against already-committed snapshots.
+            (
+                (recall_pre, _),
+                (recall_shrunk, cand_s),
+                (recall_restored, cand_r),
+            ) = overlap(
+                lambda: probe(0, full, exact_pre, 2),
+                lambda: probe(2, surv, exact_post, 1),
+                lambda: probe(3, surv, exact_post, 2),
+            )
+            # the codebook-width claim: at EQUAL scan budget (1/4 vs 2/8
+            # of the cells) the restored index must beat the shrunken one
+            assert recall_restored >= recall_shrunk, (
+                recall_restored, recall_shrunk,
+            )
+            rows = [
+                census(0, "census_initial"),
+                census(1, "census_after_scrub"),
+                census(2, "census_shrunk"),
+                census(3, "census_restored"),
+                const("n_cells_shrunk", -1, n_shrunk),
+                const("n_cells_restored", -1, int(meta3["n_cells"])),
+                const("n_split_seeds", -1, _IVF_CELLS - n_shrunk),
+                const("n_exact_pairs", -1, exact_post.count()),
+                const("n_candidates_shrunk_budget", 1, cand_s),
+                const("n_candidates_restored", 2, cand_r),
+                const("recall_nprobe2_pre", 2, recall_pre),
+                const("recall_nprobe1_shrunk", 1, recall_shrunk),
+                const("recall_nprobe2_restored", 2, recall_restored),
+            ]
         result = reduce(DataFrame.unionByName, rows).orderBy("metric", "k")
         return result.localCheckpoint(eager=True)
     finally:

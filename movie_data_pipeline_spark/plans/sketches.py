@@ -34,7 +34,7 @@ from pyspark.sql.window import Window
 
 from movie_data_pipeline_spark.functions.text import tokens
 from movie_data_pipeline_spark.operators.dedup import doc_shingles
-from movie_data_pipeline_spark.operators.util import spread
+from movie_data_pipeline_spark.operators.util import array_pairs, spread
 from movie_data_pipeline_spark.plans.core import query, r4, round4
 from movie_data_pipeline_spark.sources.registry import load_table
 
@@ -544,15 +544,8 @@ def q254_kmv_overlap_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Deliberately NOT persisted: ex is its only consumer, and the
     # measured q254 bucket-frame persist regressed 1.27x at sf0.1 (the
     # barrier costs more than it saves — the r12 persist finding).
-    srcs_arr = F.col("srcs")
-    src_pairs = F.flatten(
-        F.transform(
-            srcs_arr,
-            lambda x, i: F.transform(
-                F.slice(srcs_arr, i + 2, F.size(srcs_arr) - i - 1),
-                lambda y: F.struct(x.alias("sa"), y.alias("sb")),
-            ),
-        )
+    src_pairs = array_pairs(
+        F.col("srcs"), lambda x, y: F.struct(x.alias("sa"), y.alias("sb"))
     )
     ex = (
         sh.groupBy("shingle")

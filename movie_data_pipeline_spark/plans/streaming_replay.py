@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from movie_data_pipeline_spark.plans.core import query, r4, round4
 from movie_data_pipeline_spark.plans.dedup import _MINHASH_LONG_CTES
 from movie_data_pipeline_spark.operators.dedup import LSH_BAND_ROWS
+from movie_data_pipeline_spark.operators.util import overlap
 
 
 def _await(q, what: str, timeout: int = 600) -> None:
@@ -2268,15 +2269,10 @@ def q312_gate_compaction_replay(
         accepted_before = acc_t.read(spark).localCheckpoint(eager=True)
 
         # Corpus and index compactions target DIFFERENT tables — two
-        # independent eager rewrites, overlapped from driver threads so
-        # each one's straggler tail back-fills the other (guide §2.6,
-        # the q288 pattern; deterministic — separate directories).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fa = pool.submit(acc_t.compact, spark, 1)
-            fb = pool.submit(idx_t.compact, spark, 1)
-            fa.result(), fb.result()
+        # independent eager rewrites in separate directories.
+        overlap(
+            lambda: acc_t.compact(spark, 1), lambda: idx_t.compact(spark, 1)
+        )
         dirs_acc = len(acc_t.manifest()["data_dirs"])
         dirs_idx = len(idx_t.manifest()["data_dirs"])
         # rung property must survive the compaction rewrite
@@ -2667,14 +2663,10 @@ def q317_bucketed_gate_compaction(
         had_fragmentation = any(len(fs) > 1 for fs in pre.values())
         v_before = idx_t.current_version()
 
-        # Independent tables — overlap the two compaction rewrites
-        # (guide §2.6, same as q312).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fa = pool.submit(acc_t.compact, spark, 1)
-            fb = pool.submit(idx_t.compact, spark, 1)
-            fa.result(), fb.result()
+        # Independent tables — overlap the two compaction rewrites.
+        overlap(
+            lambda: acc_t.compact(spark, 1), lambda: idx_t.compact(spark, 1)
+        )
 
         post = files_per_bucket()
         max_after = max(len(fs) for fs in post.values())
