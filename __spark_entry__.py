@@ -26,10 +26,9 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 # CORRECTNESS_r02: the verified set was exactly the first 50 entries of
 # the sorted-by-canonical-name dict, not the ``a_``-aliased sort order).
 # To rotate driver coverage across the full catalog, the dict is built
-# with never-driver-verified queries inserted FIRST — an explicit
-# priority window (heaviest extension operators + the oldest unverified
-# block), then the remaining unverified sorted, then the verified
-# sorted.  Canonical names stay in
+# with never-driver-verified queries inserted FIRST (oldest block
+# first), then the re-verification queue, then the verified.
+# Canonical names stay in
 # ``movie_data_pipeline_spark.plans.REGISTRY`` and in all tests/bench.
 #
 # The verified set is DERIVED from the CORRECTNESS_r{N}.json files the
@@ -75,25 +74,6 @@ _GREEN_ROUND: dict[str, int] = _load_green_rounds()
 _DRIVER_VERIFIED: frozenset[str] = frozenset(_GREEN_ROUND)
 
 
-# Hand-picked head of this round's 50-query verification window: the
-# most algorithmically intricate never-verified oracles (VERDICT r3 #5
-# "promote these first" — numeric ordering alone would stop at ~q152
-# and never reach them), ahead of the oldest unverified block.  Names
-# not in REGISTRY or already driver-verified are ignored.
-_PRIORITY: tuple[str, ...] = (
-    "q155_kcore_peeling",  # iterative k-core — VERDICT r3 #5
-    "q171_pca_power_iteration",
-    "q176_item_item_cf",
-    "q179_lpa_communities",
-    "q185_trigram_search",
-    "q191_kaplan_meier",
-    "q228_chaining_audit",  # Jaccard df-cap rework (VERDICT r3 #3)
-    "q229_dedup_threshold_curve",
-    "q239_stop_shingle_lexicon",
-    "q244_streaming_multibatch_gate",  # new this round — VERDICT r3 #7
-    "q245_df_cap_sensitivity",  # new this round — VERDICT r3 #3
-)
-
 # Queries whose registered plan AND oracle changed semantics in some
 # round AFTER their last green driver row (round 4: the
 # q239-calibrated ``max_shingle_df`` cap wired into the Jaccard
@@ -102,8 +82,8 @@ _PRIORITY: tuple[str, ...] = (
 # driver records a green row from a round >= the change round (the r4
 # rows themselves were recorded post-change, so any r4+ green counts).
 # Placement math (VERDICT r4 #1/#3): forced names are inserted AFTER
-# ``rest_unverified`` — never displacing never-driver-verified queries
-# from the 50-row window — so with 68 never-verified names in r5 they
+# the never-verified names — never displacing them from the 50-row
+# window — so with 68 never-verified names in r5 they
 # sit at positions 69-75 (outside the window, r5 stays 50 fresh
 # first-time names), and in r6, with only 18 never-verified left, they
 # land at positions 19-25 and all get re-verified.  Once re-greened
@@ -169,7 +149,7 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # untouched). Candidate persists for the jaccard family were
     # measured (q18/q63/q273/q276) and REJECTED as regressions — those
     # plans are byte-identical to round 11, so they are not queued.
-    "q149_containment_pairs": 12,
+    "q149_containment_pairs": 16,  # round 16: see the queue's end
     # round 12 (optimization): ppjoin_pairs caches its verification
     # array frame — consumed by both verify dims on different join
     # keys, the collect_list+sort aggregate ran twice (q144 measured
@@ -281,7 +261,7 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # Lazy plans are unchanged; the 15 round-15 names above are
     # updated in place, the 11 below are new. Oracles untouched.
     "q94_part_cooccurrence": 15,
-    "q245_df_cap_sensitivity": 15,
+    "q245_df_cap_sensitivity": 16,  # round 16: see the queue's end
     "q246_substring_runs": 15,
     "q270_cross_source_dup_matrix": 15,
     "q271_cdc_chunking_audit": 15,
@@ -291,6 +271,14 @@ _REVERIFY_QUEUE: dict[str, int] = {
     "q284_ivfpq_topk": 15,
     "q309_ivf_centroid_migration": 15,
     "q318_maintenance_planner": 15,
+    # round 16 (simplicity): operator parameters no caller sets became
+    # constants, and the builders that restated them as arguments no
+    # longer pass them (q149's containment_pairs call, the
+    # doc_shingles calls of q239/q245/q249). Lazy plans are unchanged;
+    # the 2 round-16 names above are updated in place, the 2 below are
+    # new. Oracles untouched.
+    "q239_stop_shingle_lexicon": 16,
+    "q249_crawl_novelty_curve": 16,
 }
 
 
@@ -327,19 +315,12 @@ def _qnum(name: str) -> tuple[int, str]:
 
 
 def _rotation_order() -> list[str]:
-    """Catalog names, never-driver-verified first (priority window,
-    then remaining unverified in ascending query number — oldest block
-    first), then the force-reverify queue (stale greens re-enter only
-    once no never-verified name would be displaced from the window),
-    then verified sorted."""
-    priority = [
-        n for n in _PRIORITY
-        if n in REGISTRY and n not in _DRIVER_VERIFIED
-    ]
-    rest_unverified = sorted(
-        (n for n in REGISTRY
-         if n not in _DRIVER_VERIFIED and n not in priority),
-        key=_qnum,
+    """Catalog names, never-driver-verified first (ascending query
+    number — oldest block first), then the force-reverify queue (stale
+    greens re-enter only once no never-verified name would be displaced
+    from the window), then verified sorted."""
+    unverified = sorted(
+        (n for n in REGISTRY if n not in _DRIVER_VERIFIED), key=_qnum
     )
     forced = [
         n for n in _FORCE_REVERIFY
@@ -350,7 +331,7 @@ def _rotation_order() -> list[str]:
          if n in _DRIVER_VERIFIED and n not in forced),
         key=lambda n: (_GREEN_ROUND.get(n, 0), _qnum(n)),
     )
-    return priority + rest_unverified + forced + verified
+    return unverified + forced + verified
 
 
 def entry(spark: SparkSession) -> DataFrame:

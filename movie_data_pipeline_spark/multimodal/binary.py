@@ -55,23 +55,21 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def make_blob_table(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "text",
-    modality: str = "text",
-) -> DataFrame:
-    """Wrap any column as an opaque-blob table (UTF-8 encode for text;
-    image/audio ingestion would land bytes here unchanged)."""
-    content = F.encode(F.col(payload_col), "UTF-8")
+def make_blob_table(df: DataFrame) -> DataFrame:
+    """Wrap a documents frame's ``text`` as an opaque-blob table keyed
+    by ``doc_id`` (UTF-8 encoded; image/audio ingestion would land
+    bytes here unchanged)."""
+    content = F.encode(F.col("text"), "UTF-8")
     return df.select(
-        F.col(id_col).alias("blob_id"),
-        F.lit(modality).alias("modality"),
+        F.col("doc_id").alias("blob_id"),
+        F.lit("text").alias("modality"),
         content.alias("content"),
-        F.lit(f"{modality}/plain").alias("media_type"),
+        F.lit("text/plain").alias("media_type"),
         F.octet_length(content).cast("long").alias("n_bytes"),
     )
 
 
-def blob_features(blobs: DataFrame, batch_hint: int = 0) -> DataFrame:
+def blob_features(blobs: DataFrame) -> DataFrame:
     """Deterministic per-blob features via Arrow-batched mapInPandas:
     size, md5 digest, byte mean, byte entropy.
 
@@ -131,12 +129,8 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def decode_image(
-    blobs: DataFrame,
-    target_size: tuple[int, int] = (224, 224),
-    decoder=None,
-) -> DataFrame:
-    """Image decode/resize to fixed-size float arrays — codec injected.
+def decode_image(blobs: DataFrame, decoder=None) -> DataFrame:
+    """Image decode/resize to 224x224 float arrays — codec injected.
 
     ``decoder(payload: bytes, target_size) -> (height, width,
     list[float])`` is the only codec-specific piece; everything
@@ -159,7 +153,7 @@ def decode_image(
         for pdf in batches:
             out = []
             for r in pdf.itertuples():
-                h, w, px = decoder(bytes(r.content), target_size)
+                h, w, px = decoder(bytes(r.content), (224, 224))
                 out.append(
                     {"blob_id": r.blob_id, "height": h, "width": w, "pixels": px}
                 )

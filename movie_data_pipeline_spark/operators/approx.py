@@ -31,11 +31,10 @@ def approx_distinct(
     df: DataFrame,
     group_cols: Sequence[str],
     value_col: str,
-    rsd: float = 0.05,
 ) -> DataFrame:
-    """Per-group approximate distinct count (HLL++), rel. std dev rsd."""
+    """Per-group approximate distinct count (HLL++), rel. std dev 0.05."""
     return df.groupBy(*group_cols).agg(
-        F.approx_count_distinct(value_col, rsd=rsd).alias("approx_distinct")
+        F.approx_count_distinct(value_col, rsd=0.05).alias("approx_distinct")
     )
 
 

@@ -63,13 +63,11 @@ def schema_violations(
     return out
 
 
-def enforce(
-    df: DataFrame, expected: StructType, strict: bool = True
-) -> DataFrame:
-    """Raise ContractViolation on any violation; otherwise return the
-    frame projected to the contract's column order (dropping extras
-    when non-strict)."""
-    violations = schema_violations(df, expected, strict=strict)
+def enforce(df: DataFrame, expected: StructType) -> DataFrame:
+    """Raise ContractViolation on any violation, extra columns
+    included; otherwise return the frame projected to the contract's
+    column order."""
+    violations = schema_violations(df, expected)
     if violations:
         raise ContractViolation(violations)
     return df.select(*[f.name for f in expected.fields])

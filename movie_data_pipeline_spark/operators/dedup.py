@@ -13,9 +13,10 @@ Spark-first:
   ``jaccard_pairs`` drops shingles above a document-frequency cap the
   same way web-dedup pipelines drop stop-shingles);
 - MinHash signatures + banded LSH: permutation-free affine hash family
-  over a 32-bit base hash; signatures in *long* format (doc_id, h_idx,
-  min_hash) so the whole pipeline stays relational and
-  oracle-verifiable; banding is a group-concat + self-join per band;
+  over a 32-bit base hash; signatures in *wide* format (doc_id,
+  h0..h15), banded by map-side column concats into one bucket
+  groupBy; the *long* format (doc_id, h_idx, min_hash) keeps the
+  signatures relational and oracle-verifiable;
 - SimHash: bit-majority over token hashes via a tiny broadcast
   bit-index table — two hash aggregates, no UDFs.
 
@@ -43,6 +44,7 @@ from movie_data_pipeline_spark.operators.util import array_pairs, cached, spread
 MINHASH_P = 2_038_074_743
 NUM_HASHES = 16
 LSH_BAND_ROWS = 4  # → 4 bands of 4 rows
+SIMHASH_BITS = 60  # fingerprint width: 6 ladder blocks of 10 bits
 
 # Registered default for ``jaccard_pairs(max_shingle_df=...)`` — the
 # document-frequency cap every catalog plan (and its DuckDB oracle)
@@ -59,14 +61,12 @@ LSH_BAND_ROWS = 4  # → 4 bands of 4 rows
 JACCARD_MAX_SHINGLE_DF = 1000
 
 
-def minhash_coeffs(k: int = NUM_HASHES) -> list[tuple[int, int, int]]:
+def minhash_coeffs() -> list[tuple[int, int, int]]:
     """Deterministic (h_idx, a, b) coefficient table."""
-    return [(i, 4801 + 977 * i, 1531 + 683 * i) for i in range(k)]
+    return [(i, 4801 + 977 * i, 1531 + 683 * i) for i in range(NUM_HASHES)]
 
 
-def exact_duplicates(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_duplicates(df: DataFrame) -> DataFrame:
     """One row per distinct text: representative id + copy count.
 
     Groups on a 128-bit digest rather than the raw text so the shuffle
@@ -75,36 +75,30 @@ def exact_duplicates(
     are negligible at any realistic corpus size.)
     """
     return (
-        df.groupBy(F.md5(F.col(text_col)).alias("text_digest"))
+        df.groupBy(F.md5(F.col("text")).alias("text_digest"))
         .agg(
-            F.min(id_col).alias("rep_doc_id"),
+            F.min("doc_id").alias("rep_doc_id"),
             F.count("*").alias("n_copies"),
         )
         .select("rep_doc_id", "n_copies")
     )
 
 
-def doc_shingles(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """(id, shingle) pairs, distinct per document."""
+def doc_shingles(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, shingle) pairs of word 3-grams, distinct per document."""
     df = spread(df)
     return df.select(
         F.col(id_col),
-        F.explode(word_shingles(F.col(text_col), n)).alias("shingle"),
+        F.explode(word_shingles(F.col("text"))).alias("shingle"),
     )
 
 
 def jaccard_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
     threshold: float = 0.2,
     max_shingle_df: int | None = None,
-    persist: bool = True,
 ) -> DataFrame:
-    """Document pairs with n-gram Jaccard similarity ≥ threshold.
+    """Document pairs with word 3-gram Jaccard similarity ≥ threshold.
 
     Shape: ONE groupBy(shingle) builds per-shingle doc-id buckets; pairs
     are generated map-side from each bucket's sorted id array (nested
@@ -122,33 +116,31 @@ def jaccard_pairs(
     the uncapped case (capped runs measure Jaccard over the capped
     shingle sets, matching the previous behavior).
 
-    ``persist`` caches the bucket frame (MEMORY_AND_DISK): both the
-    size aggregate and the pair generation consume it, and without a
-    cache Catalyst inlines the scan+regex+explode+groupBy subtree into
-    each. Re-shingling a 100 TB corpus twice costs far more than
-    spilling the bucket frame once. Pass ``persist=False`` for one-shot
-    plans that must not hold block-manager state.
+    The bucket frame is cached (MEMORY_AND_DISK): both the size
+    aggregate and the pair generation consume it, and without a cache
+    Catalyst inlines the scan+regex+explode+groupBy subtree into each.
+    Re-shingling a 100 TB corpus twice costs far more than spilling the
+    bucket frame once.
     """
-    sh = doc_shingles(df, id_col, text_col, n)
+    from pyspark import StorageLevel
+
+    sh = doc_shingles(df)
     buckets = sh.groupBy("shingle").agg(
-        F.sort_array(F.collect_list(id_col)).alias("ids")
+        F.sort_array(F.collect_list("doc_id")).alias("ids")
     )
     if max_shingle_df is not None:
         buckets = buckets.filter(F.size("ids") <= max_shingle_df)
-    if persist:
-        from pyspark import StorageLevel
-
-        buckets = buckets.persist(StorageLevel.MEMORY_AND_DISK)
-        # NOT eagerly materialized: measured round 13 — a count()
-        # barrier here regressed the consumers (q229 1.18x, q281
-        # 1.16x, q288 1.20x, q209 1.10x at sf0.1): the bucket subtree
-        # is cheap enough that concurrent cold-cache leaves just use
-        # idle cores, while the barrier serializes the whole job
-        # (the r12 persist finding again). Contrast ppjoin_pairs,
-        # whose wide collect_list arrays DO pay for materialization.
+    buckets = buckets.persist(StorageLevel.MEMORY_AND_DISK)
+    # NOT eagerly materialized: measured round 13 — a count() barrier
+    # here regressed the consumers (q229 1.18x, q281 1.16x, q288 1.20x,
+    # q209 1.10x at sf0.1): the bucket subtree is cheap enough that
+    # concurrent cold-cache leaves just use idle cores, while the
+    # barrier serializes the whole job (the r12 persist finding
+    # again). Contrast ppjoin_pairs, whose wide collect_list arrays DO
+    # pay for materialization.
     sizes = (
-        buckets.select(F.explode("ids").alias(id_col))
-        .groupBy(id_col)
+        buckets.select(F.explode("ids").alias("doc_id"))
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_shingles"))
     )
     # sizes feeds both join dims (size_a/size_b below). Measured round
@@ -168,8 +160,8 @@ def jaccard_pairs(
         .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .agg(F.count("*").alias("n_common"))
     )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_shingles").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_shingles").alias("size_b"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("size_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("size_b"))
     # The candidate-pair frame is unbounded in corpus size and must
     # never be the broadcast build side — the static optimizer's
     # estimate of the post-explode aggregate is garbage and promoted it
@@ -190,38 +182,24 @@ def jaccard_pairs(
     )
 
 
-def minhash_signatures_wide(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = NUM_HASHES,
-) -> DataFrame:
-    """MinHash signatures in wide format: (id, h0..h{k-1}) — one row per
-    document, one min() aggregate per hash of the family over the
-    shingle hashes (a single shuffle whose rows are k+1 columns wide).
-    The preferred input for banding: band signatures become map-side
-    column concats with no further aggregation.
+def minhash_signatures_wide(df: DataFrame) -> DataFrame:
+    """MinHash signatures in wide format: (doc_id, h0..h15) — one row
+    per document, one min() aggregate per hash of the family over the
+    shingle hashes (a single shuffle whose rows are 17 columns wide).
+    The input for banding: band signatures become map-side column
+    concats with no further aggregation.
     """
-    sh = doc_shingles(df, id_col, text_col, n).withColumn(
-        "bh", base_hash32(F.col("shingle"))
-    )
-    return sh.groupBy(id_col).agg(
+    sh = doc_shingles(df).withColumn("bh", base_hash32(F.col("shingle")))
+    return sh.groupBy("doc_id").agg(
         *[
             F.min((F.lit(a) * F.col("bh") + F.lit(b)) % MINHASH_P).alias(f"h{i}")
-            for i, a, b in minhash_coeffs(num_hashes)
+            for i, a, b in minhash_coeffs()
         ]
     )
 
 
-def minhash_signatures_long(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = NUM_HASHES,
-) -> DataFrame:
-    """MinHash signatures in long format: (id, h_idx, min_hash).
+def minhash_signatures_long(df: DataFrame) -> DataFrame:
+    """MinHash signatures in long format: (doc_id, h_idx, min_hash).
 
     One pass: every hash of the family is a separate min() aggregate
     over the shingle hash — the shuffle carries (doc, 16 mins) wide rows
@@ -230,58 +208,22 @@ def minhash_signatures_long(
     after the aggregate. Long format keeps every step relational — the
     driver oracle reproduces it in pure SQL.
     """
-    wide = minhash_signatures_wide(df, id_col, text_col, n, num_hashes)
+    wide = minhash_signatures_wide(df)
     stack = "stack({n}, {args}) AS (h_idx, min_hash)".format(
-        n=num_hashes,
+        n=NUM_HASHES,
         args=", ".join(
-            f"CAST({i} AS BIGINT), h{i}" for i in range(num_hashes)
+            f"CAST({i} AS BIGINT), h{i}" for i in range(NUM_HASHES)
         ),
     )
-    return wide.select(F.col(id_col), F.expr(stack))
+    return wide.select(F.col("doc_id"), F.expr(stack))
 
 
-def lsh_candidate_pairs(
-    signatures_long: DataFrame,
-    id_col: str = "doc_id",
-    band_rows: int = LSH_BAND_ROWS,
-) -> DataFrame:
-    """Candidate near-duplicate pairs from banded MinHash signatures.
-
-    Docs sharing an identical band signature (all ``band_rows`` hashes
-    equal) become a candidate pair. The band signature is a group-concat
-    string so the bucket key is a single scalar. Buckets are built with
-    ONE groupBy over the band rows and pairs are generated map-side from
-    each bucket's sorted id array (nested array transforms in codegen) —
-    no self-join, so the MinHash pipeline underneath is computed once,
-    not twice, and the only shuffles are the bucket build and the final
-    cross-band distinct. At scale the band buckets replace the O(n²)
-    pair enumeration a brute-force Jaccard would need; a pathological
-    bucket (mass-duplicated corpus) grows pairs quadratically in BUCKET
-    size only — the same blowup the equivalent self-join would hit — and
-    is the signal to tighten band_rows.
-    """
-    bands = (
-        signatures_long.withColumn("band", (F.col("h_idx") / band_rows).cast("long"))
-        .groupBy(id_col, "band")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("h_idx", "min_hash"))),
-                    lambda s: s["min_hash"].cast("string"),
-                ),
-                ",",
-            ).alias("band_sig")
-        )
-    )
-    return _bucket_pairs(bands, id_col)
-
-
-def _bucket_pairs(bands: DataFrame, id_col: str) -> DataFrame:
-    """(band, band_sig, id) rows → distinct candidate (doc_a, doc_b)
+def _bucket_pairs(bands: DataFrame) -> DataFrame:
+    """(doc_id, band, band_sig) rows → distinct candidate (doc_a, doc_b)
     pairs via bucket arrays and map-side pair generation."""
     buckets = (
         bands.groupBy("band", "band_sig")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") > 1)
     )
     pairs = array_pairs(
@@ -294,34 +236,27 @@ def _bucket_pairs(bands: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def lsh_candidate_pairs_wide(
-    signatures_wide: DataFrame,
-    id_col: str = "doc_id",
-    band_rows: int = LSH_BAND_ROWS,
-    num_hashes: int = NUM_HASHES,
-) -> DataFrame:
-    """Banded LSH candidates straight from WIDE signatures — the fast
-    path. Band signatures are map-side column concats (no aggregation:
-    the wide row already holds all k hashes), exploded as (band,
-    band_sig) structs; the only shuffles in the whole operator are the
-    bucket groupBy and the final distinct. Identical output to
-    ``lsh_candidate_pairs`` on the stacked equivalent.
+def lsh_candidate_pairs_wide(signatures_wide: DataFrame) -> DataFrame:
+    """Candidate near-duplicate pairs from banded WIDE MinHash
+    signatures: docs sharing an identical band signature (all
+    ``LSH_BAND_ROWS`` hashes of a band equal) become a candidate pair.
+    Band signatures are map-side column concats (no aggregation: the
+    wide row already holds all 16 hashes), exploded as (band, band_sig)
+    structs; buckets are built with ONE groupBy and pairs are generated
+    map-side from each bucket's sorted id array, so the only shuffles
+    in the whole operator are the bucket groupBy and the final
+    cross-band distinct. A pathological bucket (mass-duplicated corpus)
+    grows pairs quadratically in BUCKET size only — the same blowup the
+    equivalent self-join would hit.
     """
-    bands = band_signatures(signatures_wide, id_col, band_rows, num_hashes)
-    return _bucket_pairs(bands, id_col)
+    return _bucket_pairs(band_signatures(signatures_wide))
 
 
-def band_signatures(
-    signatures_wide: DataFrame,
-    id_col: str = "doc_id",
-    band_rows: int = LSH_BAND_ROWS,
-    num_hashes: int = NUM_HASHES,
-) -> DataFrame:
-    """(id, band, band_sig) frame from WIDE signatures — map-side column
-    concats + one explode, no aggregation. This is both the self-join
-    input (``lsh_candidate_pairs_wide``) and the storable *index* format
-    for incremental dedup (``incremental_lsh_matches``)."""
-    n_bands = num_hashes // band_rows
+def band_signatures(signatures_wide: DataFrame) -> DataFrame:
+    """(doc_id, band, band_sig) frame from WIDE signatures — map-side
+    column concats + one explode, no aggregation. This is both the
+    bucket input (``lsh_candidate_pairs_wide``) and the storable
+    *index* format for incremental dedup (``incremental_lsh_matches``)."""
     band_structs = F.array(
         *[
             F.struct(
@@ -329,25 +264,21 @@ def band_signatures(
                 F.concat_ws(
                     ",",
                     *[
-                        F.col(f"h{b * band_rows + r}").cast("string")
-                        for r in range(band_rows)
+                        F.col(f"h{b * LSH_BAND_ROWS + r}").cast("string")
+                        for r in range(LSH_BAND_ROWS)
                     ],
                 ).alias("band_sig"),
             )
-            for b in range(n_bands)
+            for b in range(NUM_HASHES // LSH_BAND_ROWS)
         ]
     )
     return signatures_wide.select(
-        F.col(id_col), F.explode(band_structs).alias("bs")
-    ).select(id_col, F.col("bs.band").alias("band"), F.col("bs.band_sig").alias("band_sig"))
+        F.col("doc_id"), F.explode(band_structs).alias("bs")
+    ).select("doc_id", F.col("bs.band").alias("band"), F.col("bs.band_sig").alias("band_sig"))
 
 
 def incremental_lsh_matches(
-    batch_wide: DataFrame,
-    corpus_wide: DataFrame,
-    id_col: str = "doc_id",
-    band_rows: int = LSH_BAND_ROWS,
-    num_hashes: int = NUM_HASHES,
+    batch_wide: DataFrame, corpus_wide: DataFrame
 ) -> DataFrame:
     """Incremental dedup: distinct (batch_id, corpus_id) LSH collisions
     of a NEW batch against an EXISTING corpus signature index — the
@@ -365,11 +296,11 @@ def incremental_lsh_matches(
     ``jaccard_pairs``'s document-frequency cap — drop band_sig buckets
     above a corpus-frequency threshold before the join at real scale.
     """
-    bb = band_signatures(batch_wide, id_col, band_rows, num_hashes).select(
-        F.col(id_col).alias("batch_id"), "band", "band_sig"
+    bb = band_signatures(batch_wide).select(
+        F.col("doc_id").alias("batch_id"), "band", "band_sig"
     )
-    cb = band_signatures(corpus_wide, id_col, band_rows, num_hashes).select(
-        F.col(id_col).alias("corpus_id"), "band", "band_sig"
+    cb = band_signatures(corpus_wide).select(
+        F.col("doc_id").alias("corpus_id"), "band", "band_sig"
     )
     return (
         bb.join(cb, ["band", "band_sig"])
@@ -378,16 +309,11 @@ def incremental_lsh_matches(
     )
 
 
-def simhash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 60,
-) -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """Occurrence-weighted SimHash fingerprint per document.
 
     Each token occurrence votes +1/-1 on every bit of its 60-bit hash;
-    the fingerprint sets the bits with a positive sum. All ``bits`` vote
+    the fingerprint sets the bits with a positive sum. All 60 vote
     sums are parallel aggregates in ONE pass over the tokens (wide rows
     through the shuffle, not a bits-fold row blowup); the fingerprint is
     folded map-side after the aggregate. Bit extraction
@@ -401,22 +327,17 @@ def simhash(
     34.5). 60 is the widest multiple of the band layout that keeps the
     fingerprint a positive BIGINT on both engines (2^60 < 2^63).
     """
-    votes = _simhash_votes(df, id_col, text_col, bits)
+    votes = _simhash_votes(df)
     fingerprint = None
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         term = F.when(F.col(f"b{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
         fingerprint = term if fingerprint is None else fingerprint + term
     return votes.select(
-        F.col(id_col), fingerprint.cast("long").alias("simhash")
+        F.col("doc_id"), fingerprint.cast("long").alias("simhash")
     )
 
 
-def simhash_centered(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 60,
-) -> DataFrame:
+def simhash_centered(df: DataFrame) -> DataFrame:
     """CENTERED SimHash fingerprint (round 11, VERDICT r10 #1): fixes
     the measured bit skew AT THE SOURCE. q294 shows per-bit set shares
     of 0.01-0.99 on this corpus — a template-collapse signature with a
@@ -455,53 +376,43 @@ def simhash_centered(
     (a lazy local checkpoint) and consumed by both. Never a
     driver-side count.
     """
-    votes = _simhash_votes(df, id_col, text_col, bits)
+    votes = _simhash_votes(df)
     votes = votes.localCheckpoint(eager=False)
     totals = votes.agg(
         F.count("*").alias("__n"),
-        *[F.sum(f"b{j}").alias(f"s{j}") for j in range(bits)],
+        *[F.sum(f"b{j}").alias(f"s{j}") for j in range(SIMHASH_BITS)],
     )
     base = votes.crossJoin(F.broadcast(totals))
     fingerprint = None
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         term = F.when(
             F.col(f"b{j}") * F.col("__n") > F.col(f"s{j}"), F.lit(1 << j)
         ).otherwise(F.lit(0))
         fingerprint = term if fingerprint is None else fingerprint + term
     return base.select(
-        F.col(id_col), fingerprint.cast("long").alias("simhash")
+        F.col("doc_id"), fingerprint.cast("long").alias("simhash")
     )
 
 
-def _simhash_votes(
-    df: DataFrame, id_col: str, text_col: str, bits: int
-) -> DataFrame:
-    """Per-document bit-vote sums (doc, b0..b{bits-1}) — the shared
-    first stage of :func:`simhash` (zero threshold),
-    :func:`simhash_centered` (in-plan mean threshold) and
-    :func:`simhash_centered_pinned` (index-pinned thresholds)."""
+def _simhash_votes(df: DataFrame) -> DataFrame:
+    """Per-document bit-vote sums (doc, b0..b59) — the shared first
+    stage of :func:`simhash` (zero threshold), :func:`simhash_centered`
+    (in-plan mean threshold) and :func:`simhash_centered_pinned`
+    (index-pinned thresholds)."""
     toks = spread(df).select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("token")
-    ).withColumn(
-        "bh",
-        base_hash60(F.col("token")) if bits > 32 else base_hash32(F.col("token")),
-    )
-    return toks.groupBy(id_col).agg(
+        F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("token")
+    ).withColumn("bh", base_hash60(F.col("token")))
+    return toks.groupBy("doc_id").agg(
         *[
             F.sum(
                 F.when(F.expr(f"(bh div {1 << j}) % 2") == 1, 1).otherwise(-1)
             ).alias(f"b{j}")
-            for j in range(bits)
+            for j in range(SIMHASH_BITS)
         ]
     )
 
 
-def measure_center_thresholds(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 60,
-) -> dict:
+def measure_center_thresholds(df: DataFrame) -> dict:
     """Measure the centered-SimHash thresholds over a corpus: the
     per-bit vote totals and the document count — the CORPUS STATISTICS
     an index build pins in its manifest meta
@@ -510,25 +421,19 @@ def measure_center_thresholds(
     would silently fork the fingerprint space — the same failure mode
     as re-picking the band rung per batch). One aggregate; the
     collected row is 61 integers — metadata-sized."""
-    row = _simhash_votes(df, id_col, text_col, bits).agg(
+    row = _simhash_votes(df).agg(
         F.count("*").alias("__n"),
-        *[F.sum(f"b{j}").alias(f"s{j}") for j in range(bits)],
+        *[F.sum(f"b{j}").alias(f"s{j}") for j in range(SIMHASH_BITS)],
     ).first()
     if not row["__n"]:
         raise ValueError("cannot measure thresholds on an empty corpus")
     return {
-        "s": [int(row[f"s{j}"]) for j in range(bits)],
+        "s": [int(row[f"s{j}"]) for j in range(SIMHASH_BITS)],
         "n": int(row["__n"]),
     }
 
 
-def simhash_centered_pinned(
-    df: DataFrame,
-    thresholds: dict,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 60,
-) -> DataFrame:
+def simhash_centered_pinned(df: DataFrame, thresholds: dict) -> DataFrame:
     """Centered SimHash fingerprints under PINNED thresholds (from
     :func:`measure_center_thresholds`): bit j set iff
     ``vote_j * n_pinned > s_j_pinned`` — exact integer, identical on
@@ -538,17 +443,17 @@ def simhash_centered_pinned(
     single vote aggregate as :func:`simhash`, plus 60 literal
     comparisons folded map-side."""
     s, n = thresholds["s"], int(thresholds["n"])
-    if len(s) != bits:
-        raise ValueError(f"need {bits} thresholds, got {len(s)}")
-    votes = _simhash_votes(df, id_col, text_col, bits)
+    if len(s) != SIMHASH_BITS:
+        raise ValueError(f"need {SIMHASH_BITS} thresholds, got {len(s)}")
+    votes = _simhash_votes(df)
     fingerprint = None
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         term = F.when(
             F.col(f"b{j}") * F.lit(n) > F.lit(int(s[j])), F.lit(1 << j)
         ).otherwise(F.lit(0))
         fingerprint = term if fingerprint is None else fingerprint + term
     return votes.select(
-        F.col(id_col), fingerprint.cast("long").alias("simhash")
+        F.col("doc_id"), fingerprint.cast("long").alias("simhash")
     )
 
 
@@ -579,19 +484,17 @@ _SIMHASH_BLOCK_BITS = 10
 _SIMHASH_RUNG_TARGET = 8  # band-bucket occupancy target between rungs
 
 
-def snake_block_of_rank(rank: int, n_blocks: int = _SIMHASH_BLOCKS) -> int:
+def snake_block_of_rank(rank: int) -> int:
     """Serpentine (snake) block for the 0-based balance rank: rounds of
-    ``n_blocks`` bits alternate direction (0..5, 5..0, ...), the
-    standard greedy that balances per-block sums of a sorted sequence.
-    ONE definition shared by the Python operator and (as rendered
-    integer arithmetic) the in-plan/oracle twins."""
-    rnd, pos = divmod(rank, n_blocks)
-    return pos if rnd % 2 == 0 else n_blocks - 1 - pos
+    6 bits alternate direction (0..5, 5..0, ...), the standard greedy
+    that balances per-block sums of a sorted sequence. ONE definition
+    shared by the Python operator and (as rendered integer arithmetic)
+    the in-plan/oracle twins."""
+    rnd, pos = divmod(rank, _SIMHASH_BLOCKS)
+    return pos if rnd % 2 == 0 else _SIMHASH_BLOCKS - 1 - pos
 
 
-def balanced_bit_blocks(
-    set_counts: list[int], n_docs: int, bits: int = 60
-) -> list[int]:
+def balanced_bit_blocks(set_counts: list[int], n_docs: int) -> list[int]:
     """Entropy-balanced bit→position assignment (round 11, VERDICT r10
     #1): given the measured per-bit set counts (q294's table), permute
     the fingerprint bits so each 10-bit block carries an even share of
@@ -619,16 +522,17 @@ def balanced_bit_blocks(
     all three derivations are bit-identical on the same counts.
 
     Returns ``positions``: ``positions[bit_idx]`` = the permuted bit
-    position (block * 10 + slot). Always a permutation of 0..bits-1.
+    position (block * 10 + slot). Always a permutation of 0..59.
     """
-    if len(set_counts) != bits:
+    if len(set_counts) != SIMHASH_BITS:
         raise ValueError(
-            f"need {bits} per-bit counts, got {len(set_counts)}"
+            f"need {SIMHASH_BITS} per-bit counts, got {len(set_counts)}"
         )
     order = sorted(
-        range(bits), key=lambda j: (-abs(2 * set_counts[j] - n_docs), j)
+        range(SIMHASH_BITS),
+        key=lambda j: (-abs(2 * set_counts[j] - n_docs), j),
     )
-    positions = [0] * bits
+    positions = [0] * SIMHASH_BITS
     for rank, j in enumerate(order):
         block = snake_block_of_rank(rank)
         slot = rank // _SIMHASH_BLOCKS
@@ -636,10 +540,8 @@ def balanced_bit_blocks(
     return positions
 
 
-def measure_balanced_bit_blocks(
-    fp: DataFrame, hash_col: str = "simhash", bits: int = 60
-) -> list[int]:
-    """Measure per-bit set counts over a fingerprint frame and return
+def measure_balanced_bit_blocks(fp: DataFrame) -> list[int]:
+    """Measure per-bit set counts over a ``simhash`` column and return
     the :func:`balanced_bit_blocks` assignment — the index-build /
     migration entry point. ONE aggregate pass (61 parallel integer
     sums); the collected row is constant-size metadata, the same
@@ -647,15 +549,15 @@ def measure_balanced_bit_blocks(
     row = fp.agg(
         F.count("*").alias("__n"),
         *[
-            F.sum(F.expr(f"({hash_col} div {1 << j}) % 2")).alias(f"c{j}")
-            for j in range(bits)
+            F.sum(F.expr(f"(simhash div {1 << j}) % 2")).alias(f"c{j}")
+            for j in range(SIMHASH_BITS)
         ],
     ).first()
     n = row["__n"]
     if not n:
         raise ValueError("cannot measure bit balance of an empty frame")
     return balanced_bit_blocks(
-        [int(row[f"c{j}"]) for j in range(bits)], int(n), bits
+        [int(row[f"c{j}"]) for j in range(SIMHASH_BITS)], int(n)
     )
 
 
@@ -710,19 +612,17 @@ def simhash_rung_thresholds() -> tuple[int, int]:
 
 def simhash_band_rows(
     sh: DataFrame,
-    id_col: str = "doc_id",
-    hash_col: str = "simhash",
     rung: int | None = None,
     bit_blocks: list[int] | None = None,
 ) -> DataFrame:
-    """(id, fingerprint, band_idx, band_val) — one row per ladder band
+    """(doc_id, simhash, band_idx, band_val) — one row per ladder band
     per document; the storable SimHash index layout AND the candidate
     join key of :func:`simhash_hamming_pairs`.
 
     ``bit_blocks`` (round 11, VERDICT r10 #1) applies an entropy-
     balanced bit permutation (:func:`balanced_bit_blocks`) BEFORE
     banding: band values come from the permuted fingerprint while the
-    emitted ``hash_col`` stays the ORIGINAL fingerprint (Hamming is
+    emitted ``simhash`` stays the ORIGINAL fingerprint (Hamming is
     permutation-invariant, so exact verification is unchanged). Like
     the rung, the assignment is an index-build parameter — rows banded
     under different assignments never join meaningfully, so a stored
@@ -761,22 +661,20 @@ def simhash_band_rows(
         base = sh.crossJoin(F.broadcast(n1)).withColumn("__rung", rung_col)
     else:
         base = sh.withColumn("__rung", F.lit(int(rung)))
-    band_src = hash_col
+    band_src = "simhash"
     if bit_blocks is not None:
         base = base.withColumn(
-            "__permfp", permute_fingerprint(hash_col, bit_blocks)
+            "__permfp", permute_fingerprint("simhash", bit_blocks)
         )
         band_src = "__permfp"
     return (
-        _band_explode(base, id_col, band_src)
+        _band_explode(base, band_src)
         .filter(F.col("rung") == F.col("__rung"))
-        .select(id_col, hash_col, "band_idx", "band_val")
+        .select("doc_id", "simhash", "band_idx", "band_val")
     )
 
 
-def _band_explode(
-    frame: DataFrame, id_col: str, hash_col: str
-) -> DataFrame:
+def _band_explode(frame: DataFrame, hash_col: str) -> DataFrame:
     """THE one compiled form of the combo table: explode every ladder
     band over ``frame`` -> (.., rung, band_idx, band_val). Both public
     band-row builders compose this, so the layout q290 prices is BY
@@ -825,37 +723,20 @@ def _band_explode(
     )
 
 
-def simhash_band_rows_all_rungs(
-    sh: DataFrame,
-    id_col: str = "doc_id",
-    hash_col: str = "simhash",
-    bit_blocks: list[int] | None = None,
-) -> DataFrame:
-    """Band rows for EVERY ladder rung at once — (id, fingerprint,
+def simhash_band_rows_all_rungs(sh: DataFrame) -> DataFrame:
+    """Band rows for EVERY ladder rung at once — (doc_id, simhash,
     rung m, band_idx, band_val), 41 rows per document — so a rung
     planner (q290) can price all three candidate-generation layouts
     over the real corpus in ONE pass instead of three. Shares
     :func:`_band_explode` with :func:`simhash_band_rows`, so the two
-    can never diverge. ``bit_blocks`` bands the permuted fingerprint
-    (emitted ``hash_col`` stays original), exactly as in
-    :func:`simhash_band_rows`."""
-    base = sh.select(id_col, hash_col)
-    band_src = hash_col
-    if bit_blocks is not None:
-        base = base.withColumn(
-            "__permfp", permute_fingerprint(hash_col, bit_blocks)
-        )
-        band_src = "__permfp"
-    return _band_explode(base, id_col, band_src).select(
-        id_col, hash_col, "rung", "band_idx", "band_val"
+    can never diverge."""
+    return _band_explode(sh.select("doc_id", "simhash"), "simhash").select(
+        "doc_id", "simhash", "rung", "band_idx", "band_val"
     )
 
 
 def simhash_hamming_pairs(
     sh: DataFrame,
-    id_col: str = "doc_id",
-    hash_col: str = "simhash",
-    max_hamming: int = 5,
     rung: int | None = None,
     bit_blocks: list[int] | None = None,
 ) -> DataFrame:
@@ -873,7 +754,7 @@ def simhash_hamming_pairs(
     rung m, every C(6, m) block combination becomes one band, and two
     documents are candidates iff they agree on at least one band.
     Candidates are verified with the exact popcount of the XOR and kept
-    when ``hamming <= max_hamming``.
+    when ``hamming <= 5``.
 
     Round-9 migration (VERDICT r8 #1): the fixed 4 x 15-bit layout's
     2^15-value band space made the random-collision floor grow
@@ -892,29 +773,26 @@ def simhash_hamming_pairs(
     integer XOR+popcount inside codegen — no Python, no second shuffle
     (the fingerprints travel with the band rows).
     """
-    band_rows = simhash_band_rows(
-        sh, id_col=id_col, hash_col=hash_col, rung=rung,
-        bit_blocks=bit_blocks,
-    )
+    band_rows = simhash_band_rows(sh, rung=rung, bit_blocks=bit_blocks)
     a, b = band_rows.alias("a"), band_rows.alias("b")
     cand = (
         a.join(
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-            F.col(f"a.{hash_col}").alias("sh_a"),
-            F.col(f"b.{hash_col}").alias("sh_b"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.simhash").alias("sh_a"),
+            F.col("b.simhash").alias("sh_b"),
         )
         .distinct()
     )
     return (
         cand.withColumn("hamming", F.expr("CAST(bit_count(sh_a ^ sh_b) AS BIGINT)"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 5)
         .select("doc_a", "doc_b", "hamming")
     )
 
@@ -931,13 +809,7 @@ def _ceil_ratio_mul(num: int, den: int, s: Column) -> Column:
     )
 
 
-def ppjoin_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
+def ppjoin_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Exact set-similarity self-join via prefix filtering (PPJoin
     family: Chaudhuri et al. SSJoin 2006; Bayardo et al. All-Pairs
     2007; Xiao et al. PPJoin 2008): all document pairs whose shingle-set
@@ -957,7 +829,7 @@ def ppjoin_pairs(
     when a df cap (lossy) is not acceptable.
 
     Plan shape: one groupBy(shingle) for document frequencies, one
-    per-document window (partitioned by ``id_col`` — bounded by tokens
+    per-document window (partitioned by ``doc_id`` — bounded by tokens
     per document, never by corpus size) for the prefix ranks, one
     groupBy(shingle) on the prefix entries building sorted
     (doc, pos, size) bucket arrays with map-side pair generation (same
@@ -1035,16 +907,13 @@ def ppjoin_pairs(
     # Counted on entry: sh feeds the df-rank join on both sides AND the
     # verification arrays — cold-cache leaves race and re-shingle.
     # Both caches are released on the way out, also on an exception.
-    with cached(
-        doc_shingles(df, id_col, text_col, n),
-        level=StorageLevel.MEMORY_AND_DISK,
-    ) as sh:
+    with cached(doc_shingles(df), level=StorageLevel.MEMORY_AND_DISK) as sh:
         dfreq = sh.groupBy("shingle").agg(F.count("*").alias("sh_df"))
-        per_doc = Window.partitionBy(id_col)
+        per_doc = Window.partitionBy("doc_id")
         ranked = (
             sh.join(dfreq, "shingle")
             .select(
-                id_col,
+                "doc_id",
                 "shingle",
                 F.row_number()
                 .over(per_doc.orderBy("sh_df", "shingle"))
@@ -1065,7 +934,7 @@ def ppjoin_pairs(
                 F.sort_array(
                     F.collect_list(
                         F.struct(
-                            F.col(id_col).alias("doc"),
+                            F.col("doc_id").alias("doc"),
                             F.col("pos").alias("pos"),
                             F.col("set_size").alias("sz"),
                         )
@@ -1092,7 +961,7 @@ def ppjoin_pairs(
         # from the cached shingle frame; cached it is built once, and
         # counted on entry because the single verify action scans it
         # at two leaves (doc_a and doc_b dims).
-        arrs = sh.groupBy(id_col).agg(
+        arrs = sh.groupBy("doc_id").agg(
             F.sort_array(F.collect_list("shingle")).alias("arr"),
             F.count("*").alias("sz"),
         )
@@ -1100,7 +969,7 @@ def ppjoin_pairs(
             verified = (
                 cand.join(
                     arrs.select(
-                        F.col(id_col).alias("doc_a"),
+                        F.col("doc_id").alias("doc_a"),
                         F.col("arr").alias("arr_a"),
                         F.col("sz").alias("sz_a"),
                     ),
@@ -1108,7 +977,7 @@ def ppjoin_pairs(
                 )
                 .join(
                     arrs.select(
-                        F.col(id_col).alias("doc_b"),
+                        F.col("doc_id").alias("doc_b"),
                         F.col("arr").alias("arr_b"),
                         F.col("sz").alias("sz_b"),
                     ),
@@ -1137,41 +1006,35 @@ def ppjoin_pairs(
             )
 
 
-def containment_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-    max_shingle_df: int | None = None,
-) -> DataFrame:
-    """DIRECTIONAL near-duplicate pairs by shingle-set containment
-    ``|A∩B| / |A|`` ≥ threshold — the asymmetric complement to
+def containment_pairs(df: DataFrame) -> DataFrame:
+    """DIRECTIONAL near-duplicate pairs by word 3-gram shingle-set
+    containment ``|A∩B| / |A|`` ≥ 0.8 — the asymmetric complement to
     :func:`jaccard_pairs`. Jaccard misses subset duplication by
     construction (a paragraph quoted inside a 100x larger document has
     Jaccard ≈ 0.01 but containment 1.0); containment is the signal for
     quote/excerpt/boilerplate-inclusion detection in corpus curation.
 
     Same single bucket-shuffle shape as ``jaccard_pairs`` (per-shingle
-    sorted id arrays, map-side pair generation, optional stop-shingle
-    document-frequency cap): the shared-shingle count per unordered
+    sorted id arrays, map-side pair generation, the
+    ``JACCARD_MAX_SHINGLE_DF`` stop-shingle document-frequency cap):
+    the shared-shingle count per unordered
     pair is computed once, then projected into BOTH directions and
     thresholded against each source's own set size. Emits
     (src_doc, dst_doc, containment) — src's shingles are covered by
     dst to the stated fraction.
     """
-    sh = doc_shingles(df, id_col, text_col, n)
-    buckets = sh.groupBy("shingle").agg(
-        F.sort_array(F.collect_list(id_col)).alias("ids")
-    )
-    if max_shingle_df is not None:
-        buckets = buckets.filter(F.size("ids") <= max_shingle_df)
     from pyspark import StorageLevel
 
-    buckets = buckets.persist(StorageLevel.MEMORY_AND_DISK)
+    buckets = (
+        doc_shingles(df)
+        .groupBy("shingle")
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
+        .filter(F.size("ids") <= JACCARD_MAX_SHINGLE_DF)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     sizes = (
-        buckets.select(F.explode("ids").alias(id_col))
-        .groupBy(id_col)
+        buckets.select(F.explode("ids").alias("doc_id"))
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_shingles"))
     )
     pair_array = array_pairs(
@@ -1183,8 +1046,8 @@ def containment_pairs(
         .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .agg(F.count("*").alias("n_common"))
     )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_shingles").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_shingles").alias("size_b"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("size_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("size_b"))
     # same rule as jaccard_pairs: pair frames never broadcast
     both = common.join(sa.hint("SHUFFLE_HASH"), "doc_a").join(
         sb.hint("SHUFFLE_HASH"), "doc_b"
@@ -1209,5 +1072,5 @@ def containment_pairs(
     return (
         both.select(F.explode(directions).alias("e"))
         .select("e.*")
-        .filter(F.col("containment") >= F.lit(threshold))
+        .filter(F.col("containment") >= F.lit(0.8))
     )

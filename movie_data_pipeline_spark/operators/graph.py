@@ -39,13 +39,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Round budget of connected_components_star: O(log^2 n) alternating
+# rounds converge far inside it at any realistic graph size.
+_STAR_ROUNDS = 40
+
 
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
     src: str = "src",
     dst: str = "dst",
-    max_rounds: int = 25,
 ) -> DataFrame:
     """Label every node with the smallest node id in its component.
 
@@ -57,7 +60,8 @@ def connected_components(
         Optional single-column node universe. Nodes absent from
         ``edges`` become singleton components (their own id). Defaults
         to the nodes appearing in ``edges``.
-    Returns ``DataFrame[node, component]``.
+    Returns ``DataFrame[node, component]``. Label propagation stops
+    after 25 rounds even if labels still change.
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # both orientations emitted map-side from ONE evaluation of the
@@ -87,7 +91,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
 
-    for _ in range(max_rounds):
+    for _ in range(25):
         # Every node forwards its current label to each neighbour.
         msgs = sym.join(labels, sym.a == labels.node).select(
             F.col("b").alias("node"), "component"
@@ -112,11 +116,7 @@ def connected_components(
 
 
 def connected_components_star(
-    edges: DataFrame,
-    nodes: DataFrame | None = None,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 40,
+    edges: DataFrame, nodes: DataFrame | None = None
 ) -> DataFrame:
     """Connected components by alternating large-star/small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -137,9 +137,10 @@ def connected_components_star(
     small-star pass leaves the edge set unchanged, at which point every
     edge is (member, component-min) and labels read off directly.
     Same output contract as ``connected_components``:
-    ``DataFrame[node, component]`` with singletons from ``nodes``.
+    ``DataFrame[node, component]`` with singletons from ``nodes``, read
+    from ``edges``' ``src``/``dst`` columns.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
+    e = edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).filter(
         F.col("a") != F.col("b")
     )
     cur = (
@@ -171,7 +172,7 @@ def connected_components_star(
         )
 
     prev_ss: DataFrame | None = None
-    for _ in range(max_rounds):
+    for _ in range(_STAR_ROUNDS):
         # -- large-star: (v, m(u)) for v in Γ(u), v > u; keep (u, m(u))
         mins = mins_of(cur)
         ls = (
@@ -218,8 +219,8 @@ def connected_components_star(
         # set is NOT a star forest and the read-off below would silently
         # under-merge components — fail loudly instead.
         raise RuntimeError(
-            f"star contraction did not converge within {max_rounds} rounds; "
-            "raise max_rounds (bound is O(log^2 n) alternating rounds)"
+            f"star contraction did not converge within {_STAR_ROUNDS} "
+            "rounds (bound is O(log^2 n) alternating rounds)"
         )
 
     # star forest: every remaining directed edge points member -> root
@@ -240,7 +241,7 @@ def duplicate_clusters(
     """Cluster near-duplicate pairs; return members of multi-doc clusters.
 
     ``pairs`` must carry ``doc_a``/``doc_b`` (e.g. from
-    ``operators.dedup.jaccard_pairs`` or ``lsh_candidate_pairs``);
+    ``operators.dedup.jaccard_pairs`` or ``lsh_candidate_pairs_wide``);
     ``docs`` supplies the node universe so isolated documents are
     (implicitly) singleton clusters. Output: one row per document that
     belongs to a cluster of ≥ 2 documents, with the cluster's canonical
@@ -255,10 +256,8 @@ def duplicate_clusters(
         )
     cc = connected_components if algorithm == "propagation" else connected_components_star
     comp = cc(
-        pairs.select("doc_a", "doc_b"),
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
         nodes=docs.select("doc_id"),
-        src="doc_a",
-        dst="doc_b",
     )
     sizes = comp.groupBy("component").agg(F.count("*").alias("cluster_size"))
     return (

@@ -208,10 +208,7 @@ def erase_documents(
 
 
 def count_phantom_index_rows(
-    spark: SparkSession,
-    index_path: str,
-    accepted_path: str,
-    id_col: str = "doc_id",
+    spark: SparkSession, index_path: str, accepted_path: str
 ) -> int:
     """Audit: number of CURRENT index rows referencing documents absent
     from the accepted corpus head — must be 0 after a scrub. One
@@ -221,8 +218,8 @@ def count_phantom_index_rows(
     accepted = VersionedTable(accepted_path)
     if accepted.current_version() is None:
         return head.count()
-    live_ids = accepted.read(spark).select(id_col)
-    return head.join(live_ids, id_col, "left_anti").count()
+    live_ids = accepted.read(spark).select("doc_id")
+    return head.join(live_ids, "doc_id", "left_anti").count()
 
 
 _KEEP = "keep"
@@ -232,7 +229,6 @@ def migrate_simhash_index(
     spark: SparkSession,
     index_path: str,
     new_rung: int,
-    id_col: str = "doc_id",
     bit_blocks: list[int] | None | str = _KEEP,
 ) -> int:
     """Rebuild a stored SimHash band index at ``new_rung`` from its own
@@ -302,9 +298,9 @@ def migrate_simhash_index(
             f"{new_rung} under this banding assignment; migration "
             "would be a no-op rewrite"
         )
-    fp = head.select(id_col, "simhash").distinct()
+    fp = head.select("doc_id", "simhash").distinct()
     rebanded = simhash_band_rows(
-        fp, id_col=id_col, rung=new_rung, bit_blocks=target_blocks
+        fp, rung=new_rung, bit_blocks=target_blocks
     ).withColumn("rung", F.lit(int(new_rung)))
     # MERGE the manifest properties, never replace (ADVICE r11): a
     # replacement meta silently dropped everything else the index
@@ -326,7 +322,7 @@ def migrate_simhash_index(
         # layout (and its pruned scrubs) survives the migration.
         rebanded = rebanded.withColumn(
             "pbucket",
-            F.expr(f"CAST(pmod({id_col}, {int(bucket_k)}) AS INT)"),
+            F.expr(f"CAST(pmod(doc_id, {int(bucket_k)}) AS INT)"),
         )
     return index.commit(rebanded, mode="overwrite", meta=merged)
 
@@ -335,8 +331,6 @@ def migrate_ivf_index(
     spark: SparkSession,
     index_path: str,
     corpus_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     target_cells: int | None = None,
 ) -> int:
     """Centroid REFRESH for a stored IVF index (round 11, VERDICT r10
@@ -347,7 +341,8 @@ def migrate_ivf_index(
 
     One Lloyd step over the SURVIVING corpus, one commit:
 
-    1. join the index's (id, cell) rows to the corpus head's vectors
+    1. join the index's (vec_id, cell) rows to the corpus head's
+       ``embedding`` vectors
        (erased vectors are gone from the corpus, so they can't vote);
     2. re-train: per-cell exact DECIMAL(30,6) mean centroids (the
        q264/q284 codebook discipline — order-free on both engines);
@@ -355,7 +350,7 @@ def migrate_ivf_index(
        (``operators/similarity.assign_to_centroids``: round4-quantized
        cosine argmax, ties toward the lowest cell — map-only against
        the broadcast codebook);
-    4. ONE overwrite commit of the new (id, cell) rows with the
+    4. ONE overwrite commit of the new (vec_id, cell) rows with the
        retrained codebook pinned in the manifest meta
        (``ivf_centroids`` + ``n_cells``) — readers see the old or the
        new index, never a mix, and a prober reads the codebook from
@@ -403,16 +398,16 @@ def migrate_ivf_index(
     corpus = VersionedTable(corpus_path)
     head = index.read(spark)
     vectors = corpus.read(spark).select(
-        id_col, _to_double(F.col(vec_col)).alias("__vec")
+        "vec_id", _to_double(F.col("embedding")).alias("__vec")
     )
-    n_phantom = head.join(vectors, id_col, "left_anti").count()
+    n_phantom = head.join(vectors, "vec_id", "left_anti").count()
     if n_phantom:
         raise ValueError(
             f"ivf index at {index_path} holds {n_phantom} rows for "
             "vectors absent from the corpus — scrub before migrating "
             "(operators/index_lifecycle.scrub_index_to_corpus)"
         )
-    members = head.select(id_col, "cell").join(vectors, id_col)
+    members = head.select("vec_id", "cell").join(vectors, "vec_id")
     per_dim = (
         members.select("cell", F.posexplode("__vec").alias("dim_idx", "v"))
         .groupBy("cell", "dim_idx")
@@ -474,7 +469,7 @@ def migrate_ivf_index(
             / F.lit(10000.0)
         )
         w_far = Window.partitionBy("cell").orderBy(
-            F.asc("__sim"), F.asc(id_col)
+            F.asc("__sim"), F.asc("vec_id")
         )
         far = (
             members.join(F.broadcast(cent_df), "cell")
@@ -503,18 +498,17 @@ def migrate_ivf_index(
     # corpus vector. Membership is preserved exactly — a semi-join of
     # the corpus vectors against the index's id set.
     member_vecs = corpus.read(spark).join(
-        head.select(id_col), id_col, "left_semi"
+        head.select("vec_id"), "vec_id", "left_semi"
     )
     reassigned = assign_to_centroids(
-        member_vecs, [codebook[c] for c in cells],
-        id_col=id_col, vec_col=vec_col,
+        member_vecs, [codebook[c] for c in cells]
     )
     # assign_to_centroids cells are positional (0..len-1) over the
     # ordered surviving-cell list; map back to the original cell ids so
     # time-travel census comparisons stay keyed.
     mapping = F.array(*[F.lit(int(c)) for c in cells])
     rows = reassigned.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.element_at(mapping, F.col("cell") + 1).alias("cell"),
     )
     meta = dict(index.manifest().get("meta") or {})
@@ -524,12 +518,7 @@ def migrate_ivf_index(
 
 
 def audit_center_thresholds(
-    spark: SparkSession,
-    index_path: str,
-    corpus_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 60,
+    spark: SparkSession, index_path: str, corpus_path: str
 ) -> "DataFrame":
     """Staleness monitor for a centered SimHash index's PINNED
     thresholds (round 12, VERDICT r11 #3): q311 pins
@@ -558,7 +547,10 @@ def audit_center_thresholds(
     pays to fingerprint, entirely in-plan (the per-bit rows come from
     an explode of the single aggregate row, no driver collect).
     """
-    from movie_data_pipeline_spark.operators.dedup import _simhash_votes
+    from movie_data_pipeline_spark.operators.dedup import (
+        SIMHASH_BITS,
+        _simhash_votes,
+    )
 
     idx = VersionedTable(index_path)
     meta = idx.manifest().get("meta") or {}
@@ -569,10 +561,12 @@ def audit_center_thresholds(
             "have a threshold space to audit"
         )
     s, n = meta["simhash_center_s"], int(meta["simhash_center_n"])
-    if len(s) != bits:
-        raise ValueError(f"pinned thresholds hold {len(s)} bits, not {bits}")
+    if len(s) != SIMHASH_BITS:
+        raise ValueError(
+            f"pinned thresholds hold {len(s)} bits, not {SIMHASH_BITS}"
+        )
     corpus = VersionedTable(corpus_path).read(spark)
-    votes = _simhash_votes(corpus, id_col, text_col, bits)
+    votes = _simhash_votes(corpus)
     agg = votes.agg(
         F.count("*").alias("__n_docs"),
         *[
@@ -581,7 +575,7 @@ def audit_center_thresholds(
                     F.col(f"b{j}") * F.lit(n) > F.lit(int(s[j])), 1
                 ).otherwise(0)
             ).alias(f"a{j}")
-            for j in range(bits)
+            for j in range(SIMHASH_BITS)
         ],
     )
     pairs = F.array(
@@ -589,7 +583,7 @@ def audit_center_thresholds(
             F.struct(
                 F.lit(j).alias("bit_idx"), F.col(f"a{j}").alias("n_above")
             )
-            for j in range(bits)
+            for j in range(SIMHASH_BITS)
         ]
     )
     return (
@@ -610,11 +604,7 @@ def audit_center_thresholds(
 
 
 def recenter_simhash_index(
-    spark: SparkSession,
-    index_path: str,
-    corpus_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    spark: SparkSession, index_path: str, corpus_path: str
 ) -> int:
     """Re-CENTER a stored SimHash index when
     :func:`audit_center_thresholds` says the pinned space has drifted
@@ -666,9 +656,9 @@ def recenter_simhash_index(
         )
     head = index.read(spark)
     corpus = VersionedTable(corpus_path).read(spark)
-    member_ids = head.select(id_col).distinct()
+    member_ids = head.select("doc_id").distinct()
     n_phantom = member_ids.join(
-        corpus.select(id_col), id_col, "left_anti"
+        corpus.select("doc_id"), "doc_id", "left_anti"
     ).count()
     if n_phantom:
         raise ValueError(
@@ -676,25 +666,21 @@ def recenter_simhash_index(
             "absent from the corpus — scrub before re-centering "
             "(operators/index_lifecycle.scrub_index_to_corpus)"
         )
-    members = corpus.join(member_ids, id_col, "left_semi")
-    thresholds = measure_center_thresholds(
-        members, id_col=id_col, text_col=text_col
-    )
-    fp = simhash_centered_pinned(
-        members, thresholds, id_col=id_col, text_col=text_col
-    )
+    members = corpus.join(member_ids, "doc_id", "left_semi")
+    thresholds = measure_center_thresholds(members)
+    fp = simhash_centered_pinned(members, thresholds)
     blocks = meta.get("simhash_bit_blocks")
     if blocks is not None:
         fp = fp.localCheckpoint(eager=False)
         blocks = measure_balanced_bit_blocks(fp)
     rebanded = simhash_band_rows(
-        fp, id_col=id_col, rung=int(rung), bit_blocks=blocks
+        fp, rung=int(rung), bit_blocks=blocks
     ).withColumn("rung", F.lit(int(rung)))
     bucket_k = meta.get("bucket_k")
     if bucket_k is not None:
         rebanded = rebanded.withColumn(
             "pbucket",
-            F.expr(f"CAST(pmod({id_col}, {int(bucket_k)}) AS INT)"),
+            F.expr(f"CAST(pmod(doc_id, {int(bucket_k)}) AS INT)"),
         )
     meta.update(
         {
@@ -917,9 +903,6 @@ def plan_maintenance(
     simhash_indexes: dict[str, str] | None = None,
     generic_indexes: dict[str, str] | None = None,
     manifests: dict[str, str] | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    drift_bar: float = 0.2,
 ) -> "DataFrame":
     """The operational capstone of the rounds-10-12 lifecycle suite
     (round 12): ONE recommendations frame a maintenance scheduler can
@@ -937,8 +920,8 @@ def plan_maintenance(
       :func:`migrate_simhash_index`.
     - ``recenter`` (centered SimHash indexes): mean per-bit imbalance
       of the current corpus under the PINNED thresholds
-      (:func:`audit_center_thresholds`), vs ``drift_bar`` (the
-      SCALING.md rule, default 0.2). Skipped for non-centered indexes.
+      (:func:`audit_center_thresholds`), vs the SCALING.md drift bar
+      0.2. Skipped for non-centered indexes.
     - ``republish`` (training-shard manifests): stale shards per
       :func:`audit_shard_manifest`. recommended iff > 0; fix is
       :func:`republish_manifest` / ``erase_documents(republish=True)``.
@@ -982,9 +965,7 @@ def plan_maintenance(
     # task order (and sorted at the end regardless).
     def _scrub(path: str):
         def thunk():
-            n = count_phantom_index_rows(
-                spark, path, corpus_path, id_col=id_col
-            )
+            n = count_phantom_index_rows(spark, path, corpus_path)
             return (n, 0.0, n > 0)
         return thunk
 
@@ -992,7 +973,7 @@ def plan_maintenance(
         def thunk():
             n_fp = (
                 idx.read(spark)
-                .select(id_col, "simhash")
+                .select("doc_id", "simhash")
                 .distinct()
                 .count()
             )
@@ -1007,10 +988,7 @@ def plan_maintenance(
     def _recenter(path: str):
         def thunk():
             mean_imb = (
-                audit_center_thresholds(
-                    spark, path, corpus_path,
-                    id_col=id_col, text_col=text_col,
-                )
+                audit_center_thresholds(spark, path, corpus_path)
                 .agg(F.avg("imbalance"))
                 .first()[0]
             )
@@ -1018,15 +996,13 @@ def plan_maintenance(
                 __import__("math").floor(mean_imb * 10000.0 + 0.5)
                 / 10000.0
             )
-            return (mean_imb, drift_bar, mean_imb > drift_bar)
+            return (mean_imb, 0.2, mean_imb > 0.2)
         return thunk
 
     def _republish(path: str):
         def thunk():
             stale = (
-                audit_shard_manifest(
-                    spark, path, corpus_path, id_col=id_col
-                )
+                audit_shard_manifest(spark, path, corpus_path)
                 .agg(F.sum("stale"))
                 .first()[0]
             )

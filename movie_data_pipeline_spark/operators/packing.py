@@ -56,10 +56,9 @@ def pack_documents(
     docs: DataFrame,
     capacity: int,
     n_shards: int = 8,
-    id_col: str = "doc_id",
-    tokens_col: str = "n_tokens",
 ) -> DataFrame:
-    """Assign each document a (shard, bin_in_shard) packing slot.
+    """Assign each (doc_id, n_tokens) document a (shard, bin_in_shard)
+    packing slot.
 
     Next-fit greedy per shard, documents in ascending id order: a bin
     accumulates documents until adding the next would exceed
@@ -69,9 +68,9 @@ def pack_documents(
     cluster layout.
     """
     prepared = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        shard_of(F.col(id_col), n_shards).alias("shard"),
-        F.col(tokens_col).cast("long").alias("n_tokens"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        shard_of(F.col("doc_id"), n_shards).alias("shard"),
+        F.col("n_tokens").cast("long").alias("n_tokens"),
     )
     return prepared.groupBy("shard").applyInPandas(
         lambda pdf: _pack_shard(pdf, capacity), PACK_SCHEMA

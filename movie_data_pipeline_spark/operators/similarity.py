@@ -49,14 +49,9 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(ad, bd) / (l2_norm(ad) * l2_norm(bd))
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k: (query_id, neighbor_id, cos_sim, rank).
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
+    """Exact cosine top-k over (vec_id, embedding) frames: (query_id,
+    neighbor_id, cos_sim, rank).
 
     ``queries`` is broadcast; the corpus side stays partitioned and is
     scanned once. Ties break on neighbor_id for determinism. Self-pairs
@@ -68,12 +63,12 @@ def cosine_topk(
     # Same expression tree and fold order, so quantized values are
     # bit-identical to the inline form the oracles mirror.
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _to_double(F.col(vec_col)).alias("q_vec"),
+        F.col("vec_id").alias("query_id"),
+        _to_double(F.col("embedding")).alias("q_vec"),
     ).select("query_id", "q_vec", l2_norm(F.col("q_vec")).alias("q_norm"))
     c = spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        _to_double(F.col(vec_col)).alias("c_vec"),
+        F.col("vec_id").alias("neighbor_id"),
+        _to_double(F.col("embedding")).alias("c_vec"),
     ).select(
         "neighbor_id", "c_vec", l2_norm(F.col("c_vec")).alias("c_norm")
     )
@@ -126,8 +121,6 @@ def cosine_topk_lsh(
     k: int = 10,
     n_planes: int = 8,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate cosine top-k via random-hyperplane bucketing.
 
@@ -140,9 +133,9 @@ def cosine_topk_lsh(
     planes = [_hyperplane(dim, i) for i in range(n_planes)]
     # per-vector norms projected below the join (see cosine_topk)
     c = spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        _to_double(F.col(vec_col)).alias("c_vec"),
-        lsh_bucket(F.col(vec_col), planes).alias("bucket"),
+        F.col("vec_id").alias("neighbor_id"),
+        _to_double(F.col("embedding")).alias("c_vec"),
+        lsh_bucket(F.col("embedding"), planes).alias("bucket"),
     ).select(
         "neighbor_id",
         "c_vec",
@@ -150,9 +143,9 @@ def cosine_topk_lsh(
         l2_norm(F.col("c_vec")).alias("c_norm"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _to_double(F.col(vec_col)).alias("q_vec"),
-        lsh_bucket(F.col(vec_col), planes).alias("bucket"),
+        F.col("vec_id").alias("query_id"),
+        _to_double(F.col("embedding")).alias("q_vec"),
+        lsh_bucket(F.col("embedding"), planes).alias("bucket"),
     ).select(
         "query_id",
         "q_vec",
@@ -176,12 +169,9 @@ def cosine_topk_lsh(
         F.col("rank") <= k
     )
 
-def cell_centroids(
-    assigned: DataFrame,
-    vec_col: str = "embedding",
-    cell_col: str = "cell",
-) -> DataFrame:
-    """(cell, centroid array): per-cell mean vectors, fully relational.
+def cell_centroids(assigned: DataFrame) -> DataFrame:
+    """(cell, centroid array): per-cell mean ``embedding`` vectors, fully
+    relational.
 
     posexplode → avg per (cell, dim) → re-assemble the array ordered by
     dim. This is the IVF codebook-refresh step (one Lloyd half-step).
@@ -189,8 +179,8 @@ def cell_centroids(
     always tiny next to the corpus, hence broadcastable downstream.
     """
     exploded = assigned.select(
-        F.col(cell_col).alias("cell"),
-        F.posexplode(vec_col).alias("dim_idx", "v"),
+        "cell",
+        F.posexplode("embedding").alias("dim_idx", "v"),
     )
     per_dim = exploded.groupBy("cell", "dim_idx").agg(
         F.avg(F.col("v").cast("double")).alias("c")
@@ -205,13 +195,9 @@ def cell_centroids(
     )
 
 
-def ivf_assign(
-    corpus: DataFrame,
-    n_cells: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Corpus with a ``cell`` column: Voronoi assignment to seed vectors.
+def ivf_assign(corpus: DataFrame, n_cells: int = 8) -> DataFrame:
+    """(vec_id, embedding) corpus with a ``cell`` column: Voronoi
+    assignment to seed vectors.
 
     Seeds are the ``n_cells`` corpus vectors with the lowest md5(id) —
     a deterministic pseudo-random draw (id order would be biased: data
@@ -229,15 +215,15 @@ def ivf_assign(
     the result bucketed by cell so probe joins are exchange-free.
     """
     seed_rows = (
-        corpus.orderBy(F.md5(F.col(id_col).cast("string")), id_col)
+        corpus.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
         .limit(n_cells)
-        .select(F.col(vec_col).alias("seed_vec"))
+        .select(F.col("embedding").alias("seed_vec"))
         .collect()
     )
     candidates = []
     for i, row in enumerate(seed_rows):
         seed_lit = F.array(*[F.lit(float(v)) for v in row.seed_vec])
-        sim = cosine(F.col(vec_col), seed_lit)
+        sim = cosine(F.col("embedding"), seed_lit)
         # struct compares lexicographically: sim first, then -index, so
         # array_max picks the highest sim and breaks ties toward the
         # LOWEST seed index.
@@ -247,14 +233,11 @@ def ivf_assign(
 
 
 def assign_to_centroids(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, centroids: list[list[float]]
 ) -> DataFrame:
-    """Corpus with a ``cell`` column: argmax cosine against a GIVEN
-    codebook (vs :func:`ivf_assign`, which seeds its own) — the
-    re-assignment half of an IVF centroid refresh
+    """Corpus with a ``cell`` column: argmax ``embedding`` cosine
+    against a GIVEN codebook (vs :func:`ivf_assign`, which seeds its
+    own) — the re-assignment half of an IVF centroid refresh
     (``operators/index_lifecycle.migrate_ivf_index``).
 
     Cosines are round4-quantized before the argmax (the q264/q284
@@ -267,7 +250,7 @@ def assign_to_centroids(
     candidates = []
     for i, cvec in enumerate(centroids):
         lit = F.array(*[F.lit(float(v)) for v in cvec])
-        sim = round4(cosine(F.col(vec_col), lit))
+        sim = round4(cosine(F.col("embedding"), lit))
         candidates.append(F.struct(sim.alias("s"), F.lit(-i).alias("ni")))
     best_cell = (-F.array_max(F.array(*candidates)).getField("ni")).cast(
         "int"
@@ -281,8 +264,6 @@ def cosine_topk_ivf(
     k: int = 10,
     n_cells: int = 8,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate cosine top-k via IVF (inverted-file) cell search.
 
@@ -296,10 +277,10 @@ def cosine_topk_ivf(
     corpus. Recall depends on how clustered the data is; the planted-
     cluster test pins it ≥ 0.9 where real structure exists.
     """
-    assigned = ivf_assign(corpus, n_cells, id_col, vec_col)
-    cents = cell_centroids(assigned, vec_col)
+    assigned = ivf_assign(corpus, n_cells)
+    cents = cell_centroids(assigned)
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     )
     wq = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell"))
     probed = (
@@ -317,8 +298,8 @@ def cosine_topk_ivf(
     # per-vector norms projected below the cell join (see cosine_topk)
     c = assigned.select(
         F.col("cell"),
-        F.col(id_col).alias("neighbor_id"),
-        _to_double(F.col(vec_col)).alias("c_vec"),
+        F.col("vec_id").alias("neighbor_id"),
+        _to_double(F.col("embedding")).alias("c_vec"),
     ).select(
         "cell",
         "neighbor_id",

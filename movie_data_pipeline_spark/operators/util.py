@@ -91,19 +91,19 @@ def overlap(*thunks: Callable[[], T]) -> list[T]:
         return [f.result() for f in futures]
 
 
-def spread(df: DataFrame, min_factor: int = 2) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Ensure CPU-heavy narrow work downstream can use the cluster.
 
     A small source (one parquet file) arrives as a single partition, so
     per-row-expensive operators (shingling, hashing, per-char folds)
     would run on one core. Repartition round-robin to the session's
-    default parallelism — but only when the input has materially fewer
-    partitions, so at real scale (inputs already split into thousands of
+    default parallelism — but only when the input has at most half as
+    many partitions, so at real scale (inputs already split into thousands of
     tasks) this is a no-op and adds no shuffle.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     current = df.rdd.getNumPartitions()
-    if current * min_factor <= target:
+    if current * 2 <= target:
         return df.repartition(target)
     return df
 

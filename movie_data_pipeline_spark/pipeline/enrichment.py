@@ -249,8 +249,3 @@ def _missing_schema() -> StructType:
             StructField("timestamp", StringType()),
         ]
     )
-
-
-def write_missing_log(missing: DataFrame, path: str) -> None:
-    """CSV side-output sink (etl1.py:263-281, S5)."""
-    missing.write.mode("overwrite").option("header", True).csv(path)

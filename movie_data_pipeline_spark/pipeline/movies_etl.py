@@ -37,10 +37,6 @@ class Warehouse:
     movie_genres: DataFrame
     ratings: DataFrame
 
-    def register_views(self) -> None:
-        for name in WAREHOUSE_TABLES:
-            getattr(self, name).createOrReplaceTempView(name)
-
 
 def transform_movies(movies_raw: DataFrame) -> DataFrame:
     """Year extraction + title cleanup as column expressions.
@@ -212,7 +208,6 @@ def write_warehouse_jdbc(
     wh: Warehouse,
     url: str,
     batchsize: int = 1000,
-    truncate: bool = True,
     num_partitions: int | None = None,
     properties: dict[str, str] | None = None,
 ) -> None:
@@ -221,7 +216,7 @@ def write_warehouse_jdbc(
     483-506; DDL schema.sql:8-46), distributed.
 
     Semantics mapped 1:1:
-    - ``truncate=True`` + mode('overwrite') → Spark issues TRUNCATE/
+    - JDBC ``truncate`` + mode('overwrite') → Spark issues TRUNCATE/
       DELETE and re-INSERTs into the EXISTING table, preserving the
       DDL (types, PKs, indexes) exactly like the reference's
       ``DELETE FROM t`` + insert loop (etl1.py:380-383) — not a
@@ -248,7 +243,7 @@ def write_warehouse_jdbc(
     """
     props = {
         "batchsize": str(batchsize),
-        "truncate": str(truncate).lower(),
+        "truncate": "true",
         "isolationLevel": "READ_COMMITTED",
         **(properties or {}),
     }

@@ -56,13 +56,14 @@ class QuerySpec:
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = (), doc: str = ""):
-    """Decorator registering a builder under ``name``."""
+def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
+    """Decorator registering a builder under ``name``; its docstring
+    becomes the spec's ``doc``."""
 
     def deco(fn: Builder) -> Builder:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        REGISTRY[name] = QuerySpec(name=name, build=fn, oracle=oracle, tags=tags, doc=doc or (fn.__doc__ or ""))
+        REGISTRY[name] = QuerySpec(name=name, build=fn, oracle=oracle, tags=tags, doc=fn.__doc__ or "")
         return fn
 
     return deco

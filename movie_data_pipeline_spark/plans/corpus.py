@@ -1314,7 +1314,7 @@ def q249_crawl_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     from movie_data_pipeline_spark.operators.dedup import doc_shingles
 
-    sh = doc_shingles(docs, "doc_id", "text", 3)
+    sh = doc_shingles(docs)
     first = sh.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     per_doc = (
         sh.join(first, "shingle")

@@ -24,7 +24,6 @@ from movie_data_pipeline_spark.operators.dedup import (
     exact_duplicates,
     incremental_lsh_matches,
     jaccard_pairs,
-    lsh_candidate_pairs,
     lsh_candidate_pairs_wide,
     minhash_coeffs,
     minhash_signatures_long,
@@ -1047,9 +1046,7 @@ def q149_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`movie_data_pipeline_spark.operators.dedup.containment_pairs`.
     """
     docs = load_table(spark, sf_dir, "documents")
-    pairs = containment_pairs(
-        docs, threshold=0.8, max_shingle_df=JACCARD_MAX_SHINGLE_DF
-    )
+    pairs = containment_pairs(docs)
     return pairs.select(
         "src_doc", "dst_doc", round4(F.col("containment")).alias("containment")
     ).orderBy("src_doc", "dst_doc")
@@ -1901,7 +1898,7 @@ def q239_stop_shingle_lexicon(
     step and driver-verifies the binding-cap semantics.
     """
     docs = load_table(spark, sf_dir, "documents")
-    sh = doc_shingles(docs, "doc_id", "text", 3)
+    sh = doc_shingles(docs)
     df_tbl = sh.groupBy("shingle").agg(F.count("*").alias("doc_freq"))
     n_docs = docs.count()
     return (
@@ -1991,7 +1988,7 @@ def q245_df_cap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     all downstream joins key on (df_cap, doc) and stay shuffle-local.
     """
     docs = load_table(spark, sf_dir, "documents")
-    sh = doc_shingles(docs, "doc_id", "text", 3)
+    sh = doc_shingles(docs)
     buckets = sh.groupBy("shingle").agg(
         F.sort_array(F.collect_list("doc_id")).alias("ids")
     )

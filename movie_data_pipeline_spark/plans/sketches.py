@@ -89,7 +89,7 @@ BLOOM_SRC_SQL = "(SELECT MIN(source) FROM documents)"
 
 def _src_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return doc_shingles(docs, id_col="source", text_col="text", n=3).distinct()
+    return doc_shingles(docs, id_col="source").distinct()
 
 
 # --------------------------------------------------------------------------

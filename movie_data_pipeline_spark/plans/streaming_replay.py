@@ -33,17 +33,17 @@ from movie_data_pipeline_spark.operators.dedup import LSH_BAND_ROWS
 from movie_data_pipeline_spark.operators.util import overlap
 
 
-def _await(q, what: str, timeout: int = 600) -> None:
-    """Block until the stream finishes; FAIL LOUDLY on timeout.
+def _await(q, what: str) -> None:
+    """Block until the stream finishes; FAIL LOUDLY after 600 s.
 
-    ``awaitTermination(timeout)`` returns False when the stream is
+    ``awaitTermination(600)`` returns False when the stream is
     still running — ignoring that (pre-round-4 behavior) would read a
     partially-written sink and rmtree directories under a live stream,
     silently corrupting the replay result (ADVICE r3)."""
-    if not q.awaitTermination(timeout):
+    if not q.awaitTermination(600):
         q.stop()
         raise RuntimeError(
-            f"{what}: streaming replay did not finish within {timeout}s"
+            f"{what}: streaming replay did not finish within 600s"
         )
 
 

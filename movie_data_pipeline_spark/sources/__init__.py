@@ -1,8 +1,6 @@
 from movie_data_pipeline_spark.sources.registry import (  # noqa: F401
     TESTDATA_TABLES,
     load_table,
-    load_tables,
-    register_views,
     table_path,
 )
 from movie_data_pipeline_spark.sources.versioned import (  # noqa: F401

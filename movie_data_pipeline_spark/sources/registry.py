@@ -1,8 +1,8 @@
 """Parquet table registry for the driver-generated synthetic tables.
 
 Mirrors the reference's warehouse-table registration step (schema.sql
-applied via DDL, SURVEY.md §2.1 S6): every table is available both as a
-DataFrame and as a named temp view for ``spark.sql``. Reads are plain
+applied via DDL, SURVEY.md §2.1 S6): every table is loaded by name
+with its explicit schema. Reads are plain
 ``spark.read.parquet`` — column pruning and predicate pushdown reach the
 scan via Catalyst, so operators never pre-filter manually.
 """
@@ -29,9 +29,6 @@ TESTDATA_TABLES: tuple[str, ...] = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
@@ -93,15 +90,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Explicit schema: no inference scan, and timestamps are pinned to NTZ
     # so semantics match the naive-timestamp oracle in any session timezone.
     return spark.read.schema(TESTDATA_SCHEMAS[name]).parquet(table_path(sf_dir, name))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view (idempotent)."""
-    tables = load_tables(spark, sf_dir)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables

@@ -7,11 +7,10 @@ The reference's load phase is row-at-a-time INSERTs / 1000-row batches
 into an RDBMS (etl1.py:372-519, SURVEY §2.1 S4); here a sink is a
 distributed write whose *layout* is the optimization surface:
 
-- ``write_overwrite``: plain atomic refresh;
 - ``write_partitioned``: directory partitioning on a low-cardinality
   column → partition pruning at read (the Spark analogue of the
   reference's B-tree indexes on filter keys, SURVEY §4);
-- ``write_bucketed``: hash-bucketed + sorted table registered in the
+- ``write_bucketed``: hash-bucketed table registered in the
   metastore → joins/groupBys on the bucket key need no exchange at all
   (co-located join), the right layout for a fact table joined on the
   same key by every query.
@@ -23,47 +22,32 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_overwrite(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").parquet(path)
-
-
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort_col: str | None = None,
+    df: DataFrame, table: str, bucket_col: str, n_buckets: int = 32
 ) -> None:
     """Bucketed managed table (saveAsTable — bucketing metadata lives in
     the catalog). n_buckets should divide evenly into cluster
-    parallelism at the target scale; sort-within-buckets enables
-    merge-join without a sort step."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_col is not None:
-        writer = writer.sortBy(sort_col)
-    writer.format("parquet").saveAsTable(table)
+    parallelism at the target scale."""
+    df.write.mode("overwrite").bucketBy(n_buckets, bucket_col).format(
+        "parquet"
+    ).saveAsTable(table)
 
 
 def read_table(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)
 
 
-def write_jsonl(
-    df: DataFrame, path: str, compression: str | None = "gzip"
-) -> None:
-    """Line-delimited JSON sink — the interchange format of
-    LLM-training-data pipelines (one document per line, gzip-friendly,
-    streamable). Spark's json sink IS JSONL (one object per line, one
-    file per partition); compression is codec metadata, splittability at
-    read time comes from having many files, not from the codec."""
-    writer = df.write.mode("overwrite")
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.json(path)
+def write_jsonl(df: DataFrame, path: str) -> None:
+    """Gzipped line-delimited JSON sink — the interchange format of
+    LLM-training-data pipelines (one document per line, streamable).
+    Spark's json sink IS JSONL (one object per line, one file per
+    partition); compression is codec metadata, splittability at read
+    time comes from having many files, not from the codec."""
+    df.write.mode("overwrite").option("compression", "gzip").json(path)
 
 
 def read_jsonl(spark: SparkSession, path: str, schema) -> DataFrame:
@@ -103,12 +87,12 @@ def write_sorted_for_skipping(
     out.sortWithinPartitions(*sort_cols).write.mode("overwrite").parquet(path)
 
 
-def write_orc(df: DataFrame, path: str, compression: str = "zstd") -> None:
+def write_orc(df: DataFrame, path: str) -> None:
     """ORC sink (built-in columnar alternative to parquet; same
     predicate-pushdown + column-pruning + min/max skipping contract,
-    preferred by Hive-heritage warehouses). zstd default: parquet-class
+    preferred by Hive-heritage warehouses). zstd: parquet-class
     compression at faster decode than zlib."""
-    df.write.mode("overwrite").option("compression", compression).orc(path)
+    df.write.mode("overwrite").option("compression", "zstd").orc(path)
 
 
 def read_orc(spark: SparkSession, path: str, schema=None) -> DataFrame:

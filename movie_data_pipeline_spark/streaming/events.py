@@ -40,6 +40,10 @@ from pyspark.sql.types import (
 from movie_data_pipeline_spark.schemas import TESTDATA_SCHEMAS
 from movie_data_pipeline_spark.sources.registry import _events_ts_is_nanos, table_path
 
+# Lateness horizon of every watermarked event stream: state older than
+# max(event time) - WATERMARK is finalized and dropped.
+WATERMARK = "2 hours"
+
 SESSION_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -84,15 +88,15 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.timestamp_micros(F.expr(micros)))
 
 
-def hourly_event_stats_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def hourly_event_stats_stream(events: DataFrame) -> DataFrame:
     """Streaming twin of the batch q13 plan: tumbling 1-hour windows.
 
     The watermark bounds state: windows older than max(event time) -
-    watermark are finalized and dropped. Scale: state is one row per
+    ``WATERMARK`` are finalized and dropped. Scale: state is one row per
     (window), partitioned by the window key across executors.
     """
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(
             F.count("*").alias("n_events"),
@@ -102,9 +106,7 @@ def hourly_event_stats_stream(events: DataFrame, watermark: str = "2 hours") -> 
     )
 
 
-def hourly_type_totals_stream(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
+def hourly_type_totals_stream(events: DataFrame) -> DataFrame:
     """Update-mode keyed aggregate feeding the upsert sink: per
     (hour, event_type) event counts and value totals.
 
@@ -118,7 +120,7 @@ def hourly_type_totals_stream(
     timestamp rendering.
     """
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -133,15 +135,10 @@ def hourly_type_totals_stream(
     )
 
 
-def sliding_event_stats_stream(
-    events: DataFrame,
-    watermark: str = "2 hours",
-    window_len: str = "1 hour",
-    slide: str = "30 minutes",
-) -> DataFrame:
-    """Sliding-window event stats (overlapping windows).
+def sliding_event_stats_stream(events: DataFrame) -> DataFrame:
+    """Sliding-window event stats: 1-hour windows every 30 minutes.
 
-    Each event lands in ``window_len / slide`` windows; Spark expands it
+    Each event lands in length / slide = 2 windows; Spark expands it
     to those window keys before the same watermarked aggregate as the
     tumbling path. Scale: state rows = windows in flight x window keys,
     bounded by the watermark; the expansion factor (here 2x) is the knob
@@ -150,8 +147,8 @@ def sliding_event_stats_stream(
     what the twin test asserts.
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_len, slide).alias("w"))
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(
             F.count("*").alias("n_events"),
             F.avg("value").alias("avg_value"),
@@ -169,27 +166,26 @@ def click_purchase_join_stream(
     clicks: DataFrame,
     purchases: DataFrame,
     max_lag_minutes: int = 30,
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Stream-stream inner join: purchases within N minutes after a click
     by the same user — the attribution-join shape.
 
     Both sides carry watermarks and the join condition bounds event time
     on both ends, so Spark can expire buffered state: a click is held at
-    most ``watermark + max_lag`` past its event time, a purchase at most
-    ``watermark``. Without the time-range predicate the state would grow
+    most ``WATERMARK + max_lag`` past its event time, a purchase at most
+    ``WATERMARK``. Without the time-range predicate the state would grow
     unboundedly — the planner rejects it in append mode for exactly that
     reason. Scale: state is partitioned by user_id (the equi-key); the
     batch twin is q36's range join (bucket + refine), and the twin test
     holds this output equal to a plain batch join with the same
     predicate.
     """
-    c = clicks.withWatermark("ts", watermark).select(
+    c = clicks.withWatermark("ts", WATERMARK).select(
         F.col("user_id").alias("c_user"),
         F.col("ts").alias("click_ts"),
         F.col("event_id").alias("click_id"),
     )
-    p = purchases.withWatermark("ts", watermark).select(
+    p = purchases.withWatermark("ts", WATERMARK).select(
         F.col("user_id").alias("p_user"),
         F.col("ts").alias("purchase_ts"),
         F.col("event_id").alias("purchase_id"),
@@ -226,17 +222,13 @@ def enriched_event_stream(events: DataFrame, type_dim: DataFrame) -> DataFrame:
     )
 
 
-def stream_dedup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def stream_dedup(events: DataFrame) -> DataFrame:
     """Streaming exact dedup: first occurrence per event_id wins;
     dedup state expires with the watermark (bounded memory)."""
-    return events.withWatermark("ts", watermark).dropDuplicates(["event_id", "ts"])
+    return events.withWatermark("ts", WATERMARK).dropDuplicates(["event_id", "ts"])
 
 
-def sessionize(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    watermark: str = "2 hours",
-) -> DataFrame:
+def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Gap-based sessionization per user — custom stateful operator.
 
     Events for a user belong to one session while consecutive gaps stay
@@ -313,7 +305,7 @@ def sessionize(
         ]
     )
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             update,
@@ -325,10 +317,9 @@ def sessionize(
     )
 
 
-def session_window_stats_stream(
-    events: DataFrame, gap: str = "15 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming twin of the batch q95 plan: NATIVE session windows.
+def session_window_stats_stream(events: DataFrame) -> DataFrame:
+    """Streaming twin of the batch q95 plan: NATIVE session windows
+    with a 15-minute gap.
 
     Unlike the applyInPandasWithState sessionizer (``sessionize``), the
     engine owns the session state: windows merge inside the streaming
@@ -338,8 +329,8 @@ def session_window_stats_stream(
     session per user.
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap))
+        events.withWatermark("ts", WATERMARK)
+        .groupBy("user_id", F.session_window("ts", "15 minutes"))
         .agg(
             F.count("*").cast("long").alias("n_events"),
             F.sum("value").alias("total_value"),
@@ -355,7 +346,7 @@ def session_window_stats_stream(
 
 
 def hourly_distinct_users_stream(
-    events: DataFrame, watermark: str = "2 hours"
+    events: DataFrame, watermark: str = WATERMARK
 ) -> DataFrame:
     """Exact distinct users per tumbling hour, streaming — the
     streaming face of q108's same-hour distinct count.

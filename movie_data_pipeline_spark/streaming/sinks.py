@@ -323,17 +323,12 @@ def dedup_gate_batch_writer(
 
 
 def start_dedup_gate_stream(
-    docs: DataFrame,
-    accepted_path: str,
-    index_path: str,
-    checkpoint: str,
-    index_bucket_k: int | None = None,
+    docs: DataFrame, accepted_path: str, index_path: str, checkpoint: str
 ) -> StreamingQuery:
-    """Document stream → near-dup-gated versioned corpus + LSH index."""
+    """Document stream → near-dup-gated versioned corpus + unbucketed
+    LSH index."""
     return _start_available_now(
-        docs,
-        dedup_gate_batch_writer(accepted_path, index_path, index_bucket_k),
-        checkpoint,
+        docs, dedup_gate_batch_writer(accepted_path, index_path), checkpoint
     )
 
 
@@ -404,7 +399,6 @@ def simhash_gate_batch_writer(
     accepted_path: str,
     index_path: str,
     rung: int = 1,
-    max_hamming: int = 5,
     bit_blocks: list[int] | None = None,
     index_bucket_k: int | None = None,
     centered: bool = False,
@@ -422,10 +416,10 @@ def simhash_gate_batch_writer(
     1. ``simhash`` over the batch (one 60-bit fingerprint per doc);
     2. within-batch keep-first: ``simhash_hamming_pairs`` at the
        pinned ``rung`` — drop the higher doc_id of each Hamming <=
-       ``max_hamming`` pair (greedy min-representative, same
+       5 pair (greedy min-representative, same
        transitive-safety argument as the MinHash gate);
     3. corpus check: the batch's band rows ⋈ stored index rows on
-       (band_idx, band_val), then exact XOR-popcount <= ``max_hamming``
+       (band_idx, band_val), then exact XOR-popcount <= 5
        against the indexed fingerprint — banding only generates
        candidates, the verify bar is exact;
     4. survivors commit docs-first, then their (doc_id, simhash,
@@ -607,7 +601,7 @@ def simhash_gate_batch_writer(
             .filter(
                 F.expr(
                     "CAST(bit_count(simhash ^ idx_simhash)"
-                    f" AS BIGINT) <= {int(max_hamming)}"
+                    " AS BIGINT) <= 5"
                 )
             )
             .select("doc_id")
@@ -620,7 +614,7 @@ def simhash_gate_batch_writer(
         index_bucket_k,
         sign=sign,
         batch_pairs=lambda fp: simhash_hamming_pairs(
-            fp, max_hamming=max_hamming, rung=rung, bit_blocks=bit_blocks
+            fp, rung=rung, bit_blocks=bit_blocks
         ),
         band_rows=lambda fp: simhash_band_rows(
             fp, rung=rung, bit_blocks=bit_blocks
@@ -634,11 +628,7 @@ RECOMMENDED_INDEX_BUCKET_K = 64
 
 
 def recommended_simhash_gate_batch_writer(
-    accepted_path: str,
-    index_path: str,
-    rung: int = 1,
-    max_hamming: int = 5,
-    index_bucket_k: int = RECOMMENDED_INDEX_BUCKET_K,
+    accepted_path: str, index_path: str
 ) -> Callable[[DataFrame, int], None]:
     """The DEFAULT build path for a NEW SimHash gate index (round 12,
     VERDICT r11 #1): every scale mitigation round 11 proved is applied
@@ -654,8 +644,11 @@ def recommended_simhash_gate_batch_writer(
     - **entropy-balanced banding** (``simhash_bit_blocks`` measured
       over the first batch's centered fingerprints — insurance against
       template-burst skew the centering can't see, q304);
-    - **bucketed partition layout** (``bucket_k`` — erasure scrubs and
-      deletes prune to touched buckets, q308: 115x less write volume).
+    - **bucketed partition layout** (``bucket_k`` =
+      ``RECOMMENDED_INDEX_BUCKET_K`` — erasure scrubs and deletes prune
+      to touched buckets, q308: 115x less write volume).
+
+    A fresh index is banded at rung 1 and verified at Hamming <= 5.
 
     On an EXISTING index the ENTIRE configuration is adopted from the
     manifest's table properties — rung, banding assignment, bucket
@@ -663,8 +656,7 @@ def recommended_simhash_gate_batch_writer(
     arguments and can never fail its own index's validation. (The
     explicit :func:`simhash_gate_batch_writer` kwargs remain the
     legacy/tuning path; a pre-meta legacy index has no stored
-    configuration to adopt and must use it.) ``rung``/``max_hamming``/
-    ``index_bucket_k`` only shape a FRESH build.
+    configuration to adopt and must use it.)
 
     Measurement cost: one extra 61-sum aggregate + one fingerprint
     pass on the first batch only; every later batch pays exactly what
@@ -695,7 +687,6 @@ def recommended_simhash_gate_batch_writer(
                 accepted_path,
                 index_path,
                 rung=int(meta["simhash_rung"]),
-                max_hamming=max_hamming,
                 bit_blocks=meta.get("simhash_bit_blocks"),
                 index_bucket_k=meta.get("bucket_k"),
                 centered="simhash_center_s" in meta,
@@ -712,10 +703,8 @@ def recommended_simhash_gate_batch_writer(
             inner = simhash_gate_batch_writer(
                 accepted_path,
                 index_path,
-                rung=rung,
-                max_hamming=max_hamming,
                 bit_blocks=blocks,
-                index_bucket_k=int(index_bucket_k),
+                index_bucket_k=RECOMMENDED_INDEX_BUCKET_K,
                 centered=True,
             )
         inner(batch_df, batch_id)
@@ -739,12 +728,11 @@ def start_recommended_simhash_gate_stream(
 
 
 def recommended_dedup_gate_batch_writer(
-    accepted_path: str,
-    index_path: str,
-    index_bucket_k: int = RECOMMENDED_INDEX_BUCKET_K,
+    accepted_path: str, index_path: str
 ) -> Callable[[DataFrame, int], None]:
     """Recommended MinHash gate (round 12, VERDICT r11 #1): a fresh
-    index gets the bucketed partition layout (pruned erasure scrubs);
+    index gets the ``RECOMMENDED_INDEX_BUCKET_K`` bucketed partition
+    layout (pruned erasure scrubs);
     an existing index's layout is adopted from its manifest so a
     restarted writer needs no arguments. The MinHash family has no
     centered/banding axis — bucket layout is its one scale knob."""
@@ -757,7 +745,7 @@ def recommended_dedup_gate_batch_writer(
         if idx.current_version() is not None:
             k = (idx.manifest().get("meta") or {}).get("bucket_k")
         else:
-            k = int(index_bucket_k)
+            k = RECOMMENDED_INDEX_BUCKET_K
         dedup_gate_batch_writer(
             accepted_path, index_path, index_bucket_k=k
         )(batch_df, batch_id)

@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 from movie_data_pipeline_spark.operators.dedup import (
     exact_duplicates,
     jaccard_pairs,
-    lsh_candidate_pairs,
-    minhash_signatures_long,
+    lsh_candidate_pairs_wide,
+    minhash_signatures_wide,
     simhash,
 )
 
@@ -57,8 +57,8 @@ def test_jaccard_df_cap_drops_stop_shingles(corpus):
 
 
 def test_minhash_lsh_candidates(corpus):
-    sigs = minhash_signatures_long(corpus)
-    cand = {(r.doc_a, r.doc_b) for r in lsh_candidate_pairs(sigs).collect()}
+    sigs = minhash_signatures_wide(corpus)
+    cand = {(r.doc_a, r.doc_b) for r in lsh_candidate_pairs_wide(sigs).collect()}
     assert (0, 1) in cand  # identical docs always collide in every band
     assert (0, 2) in cand  # planted near-dup should collide in ≥1 band
     assert (0, 3) not in cand and (2, 3) not in cand
@@ -81,8 +81,6 @@ def test_incremental_matches_equal_cross_split_self_join(corpus):
     self-join would, restricted to (new, existing) pairs."""
     from movie_data_pipeline_spark.operators.dedup import (
         incremental_lsh_matches,
-        lsh_candidate_pairs_wide,
-        minhash_signatures_wide,
     )
 
     batch = corpus.filter(F.col("doc_id") % 2 == 0)

@@ -162,3 +162,105 @@ def test_idioms_live_only_in_their_helpers():
         "unpersist": {"operators/util.py:cached"},
         "pairs": {"operators/util.py:array_pairs"},
     }
+
+
+REPO = PACKAGE.parent
+CALLER_ROOTS = (
+    PACKAGE,
+    REPO / "tests",
+    REPO / "tools",
+    REPO / "perfbench",
+    REPO / "bench.py",
+    REPO / "__spark_entry__.py",
+)
+# (function, parameter) pairs allowed to keep a default no caller
+# overrides. Only deployment settings (addresses, paths, credentials)
+# belong here, each with a comment naming the setting.
+NEVER_SET_ALLOWED: set[tuple[str, str]] = set()
+
+
+def _py_files(root: pathlib.Path) -> list[pathlib.Path]:
+    return [root] if root.is_file() else sorted(root.rglob("*.py"))
+
+
+def _defaulted_params(fn: ast.FunctionDef, is_method: bool):
+    """(positional parameter names, {name: default node})."""
+    a = fn.args
+    pos = [p.arg for p in a.posonlyargs + a.args][1 if is_method else 0:]
+    defaults = dict(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+    defaults.update(
+        (p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+    )
+    return pos, defaults
+
+
+def _params_set_by(call: ast.Call, pos: list[str], defaults: dict,
+                   in_tests: bool) -> set[str]:
+    """Defaulted parameters this call sets: passed a value other than
+    the default literal, by position or keyword. A test that passes a
+    parameter explicitly pins it, so that counts as set too; a *args
+    or **kwargs call may set any parameter it can reach."""
+    def differs(value: ast.AST, name: str) -> bool:
+        return in_tests or ast.dump(value) != ast.dump(defaults[name])
+
+    out = set()
+    for i, arg in enumerate(call.args):
+        if isinstance(arg, ast.Starred):
+            out.update(p for p in pos[i:] if p in defaults)
+            break
+        if i < len(pos) and pos[i] in defaults and differs(arg, pos[i]):
+            out.add(pos[i])
+    for kw in call.keywords:
+        if kw.arg is None:
+            out.update(defaults)
+        elif kw.arg in defaults and differs(kw.value, kw.arg):
+            out.add(kw.arg)
+    return out
+
+
+def test_every_defaulted_parameter_has_a_caller_that_sets_it():
+    # A default that no caller overrides is a constant spelled as an
+    # option: every uniquely named package function or method with a
+    # call site must have each defaulted parameter set by some call.
+    defs: dict[str, list] = {}
+    for path in _py_files(PACKAGE):
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.FunctionDef):
+                defs.setdefault(node.name, []).append((path, node, False))
+            elif isinstance(node, ast.ClassDef):
+                for m in node.body:
+                    if isinstance(m, ast.FunctionDef):
+                        static = any(
+                            isinstance(d, ast.Name) and d.id == "staticmethod"
+                            for d in m.decorator_list
+                        )
+                        defs.setdefault(m.name, []).append(
+                            (path, m, not static)
+                        )
+    calls: dict[str, list] = {}
+    for root in CALLER_ROOTS:
+        for path in _py_files(root):
+            in_tests = path.is_relative_to(REPO / "tests")
+            for node in ast.walk(ast.parse(path.read_text())):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = getattr(f, "id", None) or getattr(f, "attr", None)
+                calls.setdefault(name, []).append((node, in_tests))
+
+    never_set = []
+    for name, found in defs.items():
+        if len(found) != 1 or name not in calls:
+            continue
+        path, fn, is_method = found[0]
+        pos, defaults = _defaulted_params(fn, is_method)
+        set_ = set()
+        for call, in_tests in calls[name]:
+            set_ |= _params_set_by(call, pos, defaults, in_tests)
+        rel = path.relative_to(REPO).as_posix()
+        never_set += [
+            f"{rel}:{fn.lineno} {name}({p})"
+            for p in defaults
+            if p not in set_ and (name, p) not in NEVER_SET_ALLOWED
+        ]
+    assert never_set == []

@@ -56,7 +56,7 @@ def main() -> int:
     # Bucket census: how hard does the cap bind on this corpus, and how
     # many pairs does dropping those buckets avoid (df*(df-1)/2 each)?
     census = (
-        doc_shingles(docs, "doc_id", "text", 3)
+        doc_shingles(docs)
         .groupBy("shingle")
         .agg(F.count("*").alias("df"))
         .agg(
