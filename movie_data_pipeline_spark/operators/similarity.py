@@ -18,6 +18,8 @@ Two execution strategies over an ``array<float>`` embedding column:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
@@ -195,6 +197,48 @@ def cell_centroids(assigned: DataFrame) -> DataFrame:
     )
 
 
+def _assign_cells(
+    corpus: DataFrame, codebook: list[list[float]], quantize: bool
+) -> DataFrame:
+    """``corpus`` plus a non-nullable ``cell``: the index of the
+    ``codebook`` vector with the highest ``embedding`` cosine
+    (round4-quantized when ``quantize``), ties toward the lowest index.
+
+    Map-only: the codebook is compiled into a per-row argmax
+    expression. Each vector's double cast and norm are projected once
+    below it (the ``cosine_topk`` idiom) and each codebook norm is a
+    literal, all in :func:`cosine`'s fold order, so scores are
+    bit-identical to the inline per-seed form.
+    """
+    # a prefix longer than every column name cannot collide with one
+    pad = "_" * (1 + max(map(len, corpus.columns)))
+    vec, norm = pad + "vec", pad + "norm"
+    candidates = []
+    for i, cvec in enumerate(codebook):
+        cvec = [float(v) for v in cvec]
+        # l2_norm's sequential fold, run here once: Catalyst does not
+        # constant-fold higher-order functions, so l2_norm(lit) would
+        # re-run for every row
+        sq = 0.0
+        for v in cvec:
+            sq += v * v
+        lit = F.array(*map(F.lit, cvec))
+        sim = dot(F.col(vec), lit) / (F.col(norm) * F.lit(math.sqrt(sq)))
+        sim = round4(sim) if quantize else sim
+        # struct compares lexicographically: sim first, then -index, so
+        # array_max picks the highest sim and breaks ties toward the
+        # LOWEST index.
+        candidates.append(F.struct(sim.alias("s"), F.lit(-i).alias("ni")))
+    best_cell = (-F.array_max(F.array(*candidates)).getField("ni")).cast("int")
+    return (
+        spread(corpus)
+        .withColumn(vec, _to_double(F.col("embedding")))
+        .withColumn(norm, l2_norm(F.col(vec)))
+        .withColumn("cell", F.coalesce(best_cell, F.lit(0)))
+        .drop(vec, norm)
+    )
+
+
 def ivf_assign(corpus: DataFrame, n_cells: int = 8) -> DataFrame:
     """(vec_id, embedding) corpus with a ``cell`` column: Voronoi
     assignment to seed vectors.
@@ -205,6 +249,12 @@ def ivf_assign(corpus: DataFrame, n_cells: int = 8) -> DataFrame:
     No RNG state, no iterative trainer (a k-means codebook can be
     swapped in; the assignment shape is identical). Each vector goes to
     the seed with the highest cosine (ties → lowest seed index).
+
+    ``cell`` is coalesced to 0, a fallback never taken (``array_max``
+    over a non-empty array of non-null structs is never null), so that
+    it is non-nullable: a nullable ``cell`` makes Catalyst infer an
+    ``isnotnull(cell)`` filter from any join on it and push that filter,
+    argmax and all, below :func:`spread` into the single-partition scan.
 
     Scale: the codebook is collected to the driver — n_cells x dim
     floats, constant-size metadata exactly like any IVF codebook, NOT a
@@ -220,16 +270,9 @@ def ivf_assign(corpus: DataFrame, n_cells: int = 8) -> DataFrame:
         .select(F.col("embedding").alias("seed_vec"))
         .collect()
     )
-    candidates = []
-    for i, row in enumerate(seed_rows):
-        seed_lit = F.array(*[F.lit(float(v)) for v in row.seed_vec])
-        sim = cosine(F.col("embedding"), seed_lit)
-        # struct compares lexicographically: sim first, then -index, so
-        # array_max picks the highest sim and breaks ties toward the
-        # LOWEST seed index.
-        candidates.append(F.struct(sim.alias("s"), F.lit(-i).alias("ni")))
-    best_cell = (-F.array_max(F.array(*candidates)).getField("ni")).cast("int")
-    return spread(corpus).withColumn("cell", best_cell)
+    return _assign_cells(
+        corpus, [r.seed_vec for r in seed_rows], quantize=False
+    )
 
 
 def assign_to_centroids(
@@ -244,18 +287,9 @@ def assign_to_centroids(
     discipline for DERIVED centroids: the means are exact
     DECIMAL(30,6)-to-double, but the cosine fold against them deserves
     a quantization margin before cross-engine comparison); ties break
-    toward the lowest cell index. Map-only: the codebook is compiled
-    into a per-row argmax expression, nothing shuffles.
+    toward the lowest cell index.
     """
-    candidates = []
-    for i, cvec in enumerate(centroids):
-        lit = F.array(*[F.lit(float(v)) for v in cvec])
-        sim = round4(cosine(F.col("embedding"), lit))
-        candidates.append(F.struct(sim.alias("s"), F.lit(-i).alias("ni")))
-    best_cell = (-F.array_max(F.array(*candidates)).getField("ni")).cast(
-        "int"
-    )
-    return spread(corpus).withColumn("cell", best_cell)
+    return _assign_cells(corpus, centroids, quantize=True)
 
 
 def cosine_topk_ivf(

@@ -100,6 +100,12 @@ def spread(df: DataFrame) -> DataFrame:
     default parallelism — but only when the input has at most half as
     many partitions, so at real scale (inputs already split into thousands of
     tasks) this is a no-op and adds no shuffle.
+
+    Hazard: Catalyst pushes deterministic filters below the
+    repartition, including the ``isnotnull`` filters it infers from a
+    join key. A derived join key that is nullable (a per-row argmax,
+    say) is then evaluated in the single-partition scan, before this
+    spread can parallelise it; derive such keys non-nullable.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     current = df.rdd.getNumPartitions()

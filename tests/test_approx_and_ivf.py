@@ -11,8 +11,11 @@ from movie_data_pipeline_spark.operators.approx import (
     approx_quantiles,
     frequent_items,
 )
+from movie_data_pipeline_spark.functions.numeric import round4
 from movie_data_pipeline_spark.operators.similarity import (
+    assign_to_centroids,
     cell_centroids,
+    cosine,
     cosine_topk,
     cosine_topk_ivf,
     ivf_assign,
@@ -149,3 +152,85 @@ def test_ivf_nprobe_all_cells_is_exact(spark):
         ).collect()
     }
     assert full == exact
+
+
+def _final_plan(df) -> str:
+    """Tree string of the AQE final plan of an executed ``df``."""
+    text = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in text, text[:200]
+    return text.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+
+
+def _subtrees(plan: str, marker: str) -> list[str]:
+    """The text of every subtree whose root line contains ``marker``."""
+    lines = plan.splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = []
+    for i, line in enumerate(lines):
+        if marker in line:
+            sub = [line]
+            for below in lines[i + 1:]:
+                if depth(below) <= depth(line):
+                    break
+                sub.append(below)
+            out.append("\n".join(sub))
+    return out
+
+
+def test_ivf_argmax_runs_above_the_spread_exchange(spark, tmp_path):
+    # one parquet file arrives as one partition, so spread() repartitions
+    # it round-robin; the per-vector argmax must run above that exchange
+    # (parallel), once per branch, never in the single-partition scan
+    path = str(tmp_path / "emb")
+    _planted_clusters(spark).coalesce(1).write.parquet(path)
+    emb = spark.read.parquet(path)
+    assert emb.rdd.getNumPartitions() == 1
+    out = cosine_topk_ivf(emb, emb.orderBy("vec_id").limit(8), k=5)
+    out.collect()
+    plan = _final_plan(out)
+    below = _subtrees(plan, "RoundRobinPartitioning")
+    assert below, plan
+    assert not any("array_max" in sub for sub in below), plan
+    assert plan.count("array_max") == 2, plan
+    assigned = ivf_assign(emb)
+    assert assigned.schema["cell"].nullable is False
+    assert assigned.columns == emb.columns + ["cell"]
+
+
+def _reference_cells(df, codebook, quantize):
+    """vec_id -> cell from the inline per-seed argmax: one
+    ``cosine(embedding, seed)`` fold per codebook vector."""
+    candidates = []
+    for i, cvec in enumerate(codebook):
+        lit = F.array(*[F.lit(float(v)) for v in cvec])
+        sim = cosine(F.col("embedding"), lit)
+        sim = round4(sim) if quantize else sim
+        candidates.append(F.struct(sim.alias("s"), F.lit(-i).alias("ni")))
+    best = (-F.array_max(F.array(*candidates)).getField("ni")).cast("int")
+    return {r.vec_id: r.cell for r in df.select("vec_id", best.alias("cell")).collect()}
+
+
+def test_ivf_cells_match_the_inline_cosine_argmax(spark):
+    for emb in (
+        _planted_clusters(spark),
+        load_table(spark, TESTDATA_SF_DIR, "embeddings"),
+    ):
+        seeds = [
+            r.embedding
+            for r in emb.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
+            .limit(8)
+            .collect()
+        ]
+        got = {r.vec_id: r.cell for r in ivf_assign(emb, n_cells=8).collect()}
+        assert got == _reference_cells(emb, seeds, quantize=False)
+        cents = [
+            r.centroid
+            for r in cell_centroids(ivf_assign(emb, n_cells=8))
+            .orderBy("cell")
+            .collect()
+        ]
+        got = {r.vec_id: r.cell for r in assign_to_centroids(emb, cents).collect()}
+        assert got == _reference_cells(emb, cents, quantize=True)
