@@ -92,7 +92,7 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # name -> first round whose green row counts as post-change; one
     # literal per name, at the round of its LATEST change (q82, q149
     # and q209, cap-reworked in round 4, are queued at round 12 below)
-    "q18_ngram_jaccard_dupes": 4,
+    "q18_ngram_jaccard_dupes": 18,  # round 18: see the queue's end
     "q63_duplicate_clusters": 4,
     "q121_lsh_quality_audit": 4,
     "q134_duplicate_clusters_star": 4,
@@ -113,7 +113,7 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # helper (VERDICT r7 #6 — outputs hash-identical, builder-verified
     # at all 3 SFs, but the registered plan + oracle text changed).
     "q256_margin_candidate_mining": 15,  # round 15: see the queue's end
-    "q248_lsh_scurve_sweep": 15,  # round 15: see the queue's end
+    "q248_lsh_scurve_sweep": 18,  # round 18: see the queue's end
     # round 7: rows-per-band ladder cap raised 8 -> 12 after the 100x
     # probe (r=8 saturated the sig space above ~8k vectors/side).
     # Outputs at every driver SF are unchanged (the new rungs engage
@@ -149,7 +149,7 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # untouched). Candidate persists for the jaccard family were
     # measured (q18/q63/q273/q276) and REJECTED as regressions — those
     # plans are byte-identical to round 11, so they are not queued.
-    "q149_containment_pairs": 16,  # round 16: see the queue's end
+    "q149_containment_pairs": 18,  # round 18: see the queue's end
     # round 12 (optimization): ppjoin_pairs caches its verification
     # array frame — consumed by both verify dims on different join
     # keys, the collect_list+sort aggregate ran twice (q144 measured
@@ -214,7 +214,7 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # at sf0.01 for all four.
     "q273_idf_weighted_jaccard": 13,
     "q276_weighted_dedup_agreement": 13,
-    "q254_kmv_overlap_estimates": 15,  # round 15: see the queue's end
+    "q254_kmv_overlap_estimates": 18,  # round 18: see the queue's end
     "q144_ppjoin_pairs": 14,  # round 14: see the queue's end
     # round 13 (optimization): the gate writers' bucket append is a
     # REBALANCE instead of a fixed k-way repartition, and the replay-
@@ -262,7 +262,7 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # updated in place, the 11 below are new. Oracles untouched.
     "q94_part_cooccurrence": 15,
     "q245_df_cap_sensitivity": 16,  # round 16: see the queue's end
-    "q246_substring_runs": 15,
+    "q246_substring_runs": 18,  # round 18: see the queue's end
     "q270_cross_source_dup_matrix": 15,
     "q271_cdc_chunking_audit": 15,
     "q278_dedup_family_agreement": 15,
@@ -277,8 +277,8 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # doc_shingles calls of q239/q245/q249). Lazy plans are unchanged;
     # the 2 round-16 names above are updated in place, the 2 below are
     # new. Oracles untouched.
-    "q239_stop_shingle_lexicon": 16,
-    "q249_crawl_novelty_curve": 16,
+    "q239_stop_shingle_lexicon": 18,  # round 18: see the queue's end
+    "q249_crawl_novelty_curve": 18,  # round 18: see the queue's end
     # round 17 (optimization): the IVF cell argmax projects each
     # vector's double cast and norm once and emits a non-nullable cell,
     # so Catalyst no longer pushes it below spread() into the single-
@@ -286,6 +286,14 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # Cells bit-identical, oracles untouched; the 4 round-17 names
     # above are updated in place, the 1 below is new.
     "q303_ann_index_erasure": 17,
+    # round 18 (optimization): tokens are projected once per row and
+    # every n-gram/shingle lambda reads that column (doc_shingles, so
+    # every MinHash/Jaccard consumer, and the builders that closed over
+    # tokens(text) in a lambda). Values identical, oracles untouched.
+    # 33 registered plans changed; with 48 names already active, only
+    # the 6 of them already queued (updated in place above), q18 and
+    # the one below fit the 50-name window. CHANGES.md lists the rest.
+    "q19_minhash_signatures": 18,
 }
 
 

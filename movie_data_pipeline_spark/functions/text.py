@@ -16,23 +16,45 @@ TOKEN_SPLIT_RE = r"\s+"
 
 
 def tokens(text: Column) -> Column:
-    """Lowercased whitespace tokens (keeps duplicate occurrences)."""
+    """Lowercased whitespace tokens (keeps duplicate occurrences).
+
+    Project it once per row (``select(tokens(text).alias("t"))``) and
+    build from that column; never close over it inside a lambda.
+    Catalyst has no loop-invariant motion across a lambda boundary, so
+    a lambda that reads ``tokens(text)`` re-runs the regex split at
+    every array element: quadratic in document length for n-grams.
+    """
     return F.split(F.lower(F.trim(text)), TOKEN_SPLIT_RE)
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles; a doc shorter than n words yields
-    one whole-doc shingle. Pure array expressions — no explode yet, so
-    callers control when the row multiplication happens.
+def ngrams(toks: Column, n: int) -> Column:
+    """Word n-grams of a projected tokens column, in order, repeats
+    kept. Needs at least n tokens: callers pick their own fallback for
+    shorter documents."""
+    return F.transform(
+        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+        lambda i: F.array_join(F.slice(toks, i, n), " "),
+    )
+
+
+def shingles(toks: Column, n: int = 3) -> Column:
+    """Distinct word n-gram shingles of a projected tokens column; a
+    doc shorter than n words yields one whole-doc shingle. Pure array
+    expressions — no explode yet, so callers control when the row
+    multiplication happens.
     """
-    t = tokens(text)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(t) - (n - 1)),
-        lambda i: F.array_join(F.slice(t, i, n), " "),
-    )
     return F.array_distinct(
-        F.when(F.size(t) >= n, grams).otherwise(F.array(F.array_join(t, " ")))
+        F.when(F.size(toks) >= n, ngrams(toks, n)).otherwise(
+            F.array(F.array_join(toks, " "))
+        )
     )
+
+
+def word_shingles(text: Column) -> Column:
+    """``shingles`` of raw text, as one expression: the reference the
+    projected form must equal. It inlines the tokenizer into the
+    n-gram lambda, so production paths project ``tokens`` first."""
+    return shingles(tokens(text))
 
 
 def base_hash32(col: Column) -> Column:

@@ -32,8 +32,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 from movie_data_pipeline_spark.functions.text import (
     base_hash32,
     base_hash60,
+    shingles,
     tokens,
-    word_shingles,
 )
 from movie_data_pipeline_spark.operators.util import array_pairs, cached, spread
 
@@ -85,11 +85,15 @@ def exact_duplicates(df: DataFrame) -> DataFrame:
 
 
 def doc_shingles(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, shingle) pairs of word 3-grams, distinct per document."""
-    df = spread(df)
-    return df.select(
-        F.col(id_col),
-        F.explode(word_shingles(F.col("text"))).alias("shingle"),
+    """(id, shingle) pairs of word 3-grams, distinct per document.
+
+    Tokens are projected once per row, after ``spread()`` so the
+    round-robin exchange carries only (id, text), and below the explode
+    so the n-gram lambda reads a column instead of re-splitting the
+    text at every position."""
+    toks = spread(df).select(F.col(id_col), tokens(F.col("text")).alias("tokens"))
+    return toks.select(
+        F.col(id_col), F.explode(shingles(F.col("tokens"))).alias("shingle")
     )
 
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from movie_data_pipeline_spark.functions.text import tokens, word_shingles
+from movie_data_pipeline_spark.functions.text import shingles, tokens
 from movie_data_pipeline_spark.operators.util import cached
 from movie_data_pipeline_spark.plans.core import query, r4, round4
 from movie_data_pipeline_spark.sources.registry import load_table
@@ -79,23 +79,32 @@ def q87_token_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the per-doc chunk count (bounded by doc length / stride).
     """
     docs = load_table(spark, sf_dir, "documents")
-    t = tokens(F.col("text"))
-    n = F.size(t)
+    return (
+        _stride_chunks(docs, "doc_id")
+        .select(
+            "doc_id",
+            ((F.col("s") - 1) / CHUNK_STRIDE).cast("int").alias("chunk_id"),
+            F.size("chunk").cast("long").alias("n_chunk_tokens"),
+            F.array_join("chunk", " ").alias("chunk_text"),
+        )
+        .orderBy("doc_id", "chunk_id")
+    )
+
+
+def _stride_chunks(docs: DataFrame, key: str) -> DataFrame:
+    """(key, s, chunk): q87's CHUNK_TOKENS-token windows of each
+    document, starting at token s and advancing by CHUNK_STRIDE.
+    Tokens are projected once below the start-offset filter, whose
+    lambda reads only their count."""
+    toks = docs.select(key, tokens(F.col("text")).alias("t"))
+    n = F.size("t")
     stride = F.lit(CHUNK_STRIDE)
     starts = F.filter(
         F.sequence(F.lit(1), n, stride),
         lambda s: (s == F.lit(1)) | (s - stride + F.lit(CHUNK_TOKENS - 1) < n),
     )
-    chunk = F.slice(F.col("t"), F.col("s"), CHUNK_TOKENS)
-    return (
-        docs.select("doc_id", t.alias("t"), F.explode(starts).alias("s"))
-        .select(
-            "doc_id",
-            ((F.col("s") - 1) / CHUNK_STRIDE).cast("int").alias("chunk_id"),
-            F.size(chunk).cast("long").alias("n_chunk_tokens"),
-            F.array_join(chunk, " ").alias("chunk_text"),
-        )
-        .orderBy("doc_id", "chunk_id")
+    return toks.select(key, "t", F.explode(starts).alias("s")).select(
+        key, "s", F.slice(F.col("t"), F.col("s"), CHUNK_TOKENS).alias("chunk")
     )
 
 
@@ -148,19 +157,23 @@ def q88_benchmark_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame
     from the same shingle expression, so the corpus is tokenized once.
     """
     docs = load_table(spark, sf_dir, "documents")
-    sh = docs.select(
-        "doc_id", word_shingles(F.col("text"), DECONTAM_NGRAM).alias("grams")
+    sh = docs.select("doc_id", tokens(F.col("text")).alias("t")).select(
+        "doc_id", shingles(F.col("t"), DECONTAM_NGRAM).alias("grams")
     )
     is_bench = F.col("doc_id") % BENCH_MOD == 0
+    # explode_outer equals explode on never-empty shingle arrays; an
+    # inner explode of a column makes Catalyst infer size(grams) > 0 and
+    # push it below the tokens projection, recomputing every shingle
+    # with the split inlined into the n-gram lambda
     bench = (
         sh.filter(is_bench)
-        .select(F.explode("grams").alias("sh"))
+        .select(F.explode_outer("grams").alias("sh"))
         .distinct()
     )
     train = sh.filter(~is_bench).select(
         "doc_id",
         F.size("grams").cast("long").alias("n_grams"),
-        F.explode("grams").alias("sh"),
+        F.explode_outer("grams").alias("sh"),
     )
     return (
         train.join(F.broadcast(bench), "sh")
@@ -566,7 +579,8 @@ def q142_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     sg = (
-        docs.select("source", F.explode(word_shingles(F.col("text"))).alias("g"))
+        docs.select("source", tokens(F.col("text")).alias("t"))
+        .select("source", F.explode(shingles(F.col("t"))).alias("g"))
         .distinct()
         .persist()  # feeds totals and both join sides
     )
@@ -636,9 +650,11 @@ def q143_stop_shingle_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact distribution) is why the DF cap exists at all.
     """
     docs = load_table(spark, sf_dir, "documents")
-    sg = docs.select(
-        "doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle")
-    ).distinct()
+    sg = (
+        docs.select("doc_id", tokens(F.col("text")).alias("t"))
+        .select("doc_id", F.explode(shingles(F.col("t"))).alias("shingle"))
+        .distinct()
+    )
     dfreq = sg.groupBy("shingle").agg(F.count("*").alias("doc_freq"))
     n = docs.agg(F.count("*").alias("n_docs"))
     return (
@@ -1412,17 +1428,8 @@ def q250_chunk_dedup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     set, one source-grouped aggregate for the report, both narrow.
     """
     docs = load_table(spark, sf_dir, "documents")
-    t = tokens(F.col("text"))
-    n = F.size(t)
-    stride = F.lit(CHUNK_STRIDE)
-    starts = F.filter(
-        F.sequence(F.lit(1), n, stride),
-        lambda s: (s == F.lit(1)) | (s - stride + F.lit(CHUNK_TOKENS - 1) < n),
-    )
-    chunk = F.slice(F.col("t"), F.col("s"), CHUNK_TOKENS)
-    chunks = (
-        docs.select("source", t.alias("t"), F.explode(starts).alias("s"))
-        .select("source", F.md5(F.array_join(chunk, " ")).alias("dg"))
+    chunks = _stride_chunks(docs, "source").select(
+        "source", F.md5(F.array_join("chunk", " ")).alias("dg")
     )
     per = chunks.groupBy("source").agg(
         F.count("*").cast("long").alias("n_chunks"),
@@ -1537,22 +1544,21 @@ def q257_decontam_ngram_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     is_bench = F.col("doc_id") % BENCH_MOD == 0
-    toks = spread(docs).select("doc_id", F.col("text"))
+    toks = spread(docs).select("doc_id", tokens(F.col("text")).alias("t"))
     tr_cnt = docs.filter(~is_bench).agg(
         F.count("*").alias("n_train")
     )
     parts = []
     for n in DECONTAM_SWEEP_NS:
-        sh = toks.select(
-            "doc_id", word_shingles(F.col("text"), n).alias("grams")
-        )
+        sh = toks.select("doc_id", shingles(F.col("t"), n).alias("grams"))
+        # explode_outer: see q88
         bench = (
             sh.filter(is_bench)
-            .select(F.explode("grams").alias("sh"))
+            .select(F.explode_outer("grams").alias("sh"))
             .distinct()
         )
         train = sh.filter(~is_bench).select(
-            "doc_id", F.explode("grams").alias("sh")
+            "doc_id", F.explode_outer("grams").alias("sh")
         )
         flagged = (
             train.join(F.broadcast(bench), "sh")

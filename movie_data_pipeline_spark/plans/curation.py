@@ -10,10 +10,10 @@ batch construction, and the repetition features quality filters key on.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from movie_data_pipeline_spark.functions.text import tokens
+from movie_data_pipeline_spark.functions.text import ngrams, tokens
 from movie_data_pipeline_spark.operators.dedup import JACCARD_MAX_SHINGLE_DF
 from movie_data_pipeline_spark.operators.packing import pack_documents
 from movie_data_pipeline_spark.operators.util import overlap
@@ -50,21 +50,17 @@ _REP_SQL = """
 """
 
 
-def _grams_col():
-    """Non-distinct word 3-grams (keeps repeats — unlike
-    functions.text.word_shingles, which deduplicates for set-Jaccard)."""
-    t = tokens(F.col("text"))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(t) - 2),
-        lambda i: F.array_join(F.slice(t, i, 3), " "),
-    )
-    return F.when(F.size(t) >= 3, grams).otherwise(
+def _grams_col(t: Column) -> Column:
+    """Non-distinct word 3-grams of projected tokens ``t`` (keeps
+    repeats — unlike functions.text.shingles, which deduplicates for
+    set-Jaccard)."""
+    return F.when(F.size(t) >= 3, ngrams(t, 3)).otherwise(
         F.array(F.array_join(t, " "))
     )
 
 
-def _top_token_count():
-    """Highest single-token occurrence count.
+def _top_token_count(t: Column) -> Column:
+    """Highest single-token occurrence count in token array ``t``.
 
     Computed as the longest run in the *sorted* token array via a
     single fold — O(n log n) per document instead of the obvious
@@ -73,7 +69,7 @@ def _top_token_count():
     max multiplicity). Still pure array expressions inside codegen;
     arrays never explode to rows.
     """
-    st = F.array_sort(tokens(F.col("text")))
+    st = F.array_sort(t)
     zero = F.lit(0).cast("long")
     acc0 = F.struct(
         F.lit(" ").alias("prev"), zero.alias("run"), zero.alias("best")
@@ -156,7 +152,7 @@ def decision_frame(docs: DataFrame) -> DataFrame:
         "doc_id",
         F.size(t).cast("long").alias("n_tokens"),
         stopword_count(t, ENGLISH_STOPWORDS).alias("n_stop"),
-        _top_token_count().alias("top_cnt"),
+        _top_token_count(t).alias("top_cnt"),
         *lang_score_cols(t),
     ).withColumn("predicted_lang", lang_pick_col())
 
@@ -273,16 +269,17 @@ def q73_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions inside codegen; a pure map stage at any scale.
     """
     docs = load_table(spark, sf_dir, "documents")
-    t = tokens(F.col("text"))
-    grams = _grams_col()
+    toks = docs.select("doc_id", tokens(F.col("text")).alias("t"))
+    t = F.col("t")
+    grams = _grams_col(t)
     n_grams = F.size(grams).cast("long")
     n_dup = (F.size(grams) - F.size(F.array_distinct(grams))).cast("long")
-    return docs.select(
+    return toks.select(
         "doc_id",
         n_grams.alias("n_grams"),
         n_dup.alias("n_dup_grams"),
         round4(n_dup * 1.0 / n_grams).alias("dup_gram_ratio"),
-        round4(_top_token_count() * 1.0 / F.size(t)).alias("top_token_share"),
+        round4(_top_token_count(t) * 1.0 / F.size(t)).alias("top_token_share"),
     ).orderBy("doc_id")
 
 

@@ -33,7 +33,12 @@ from movie_data_pipeline_spark.operators.dedup import (
     simhash_centered,
     simhash_hamming_pairs,
 )
-from movie_data_pipeline_spark.functions.text import base_hash32, tokens, word_shingles
+from movie_data_pipeline_spark.functions.text import (
+    base_hash32,
+    ngrams,
+    shingles,
+    tokens,
+)
 from movie_data_pipeline_spark.operators.graph import (
     connected_components,
     duplicate_clusters,
@@ -381,22 +386,24 @@ def q74_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexicographically IS "smallest hash, then rightmost position".
     """
     docs = load_table(spark, sf_dir, "documents")
-    t = tokens(F.col("text"))
-    grams = F.when(
-        F.size(t) >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - 2),
-            lambda i: F.array_join(F.slice(t, i, 3), " "),
-        ),
-    ).otherwise(F.array(F.array_join(t, " ")))
-    hs = F.transform(grams, base_hash32)
-    pairs = F.transform(
-        hs,
-        lambda x, i: F.struct(
-            x.alias("h"), (i + 1).cast("long").alias("p")
-        ),
+    t = F.col("t")
+    grams = F.when(F.size(t) >= 3, ngrams(t, 3)).otherwise(
+        F.array(F.array_join(t, " "))
     )
-    n = F.size(hs)
+    hs = F.transform(grams, base_hash32)
+    # the (hash, position) array is projected once per document: every
+    # window lambda below reads it as a column
+    hashed = docs.select("doc_id", tokens(F.col("text")).alias("t")).select(
+        "doc_id",
+        F.transform(
+            hs,
+            lambda x, i: F.struct(
+                x.alias("h"), (i + 1).cast("long").alias("p")
+            ),
+        ).alias("pairs"),
+    )
+    pairs = F.col("pairs")
+    n = F.size(pairs)
     init = F.struct(
         F.lit(2**63 - 1).cast("long").alias("h"),
         F.lit(0).cast("long").alias("p"),
@@ -413,7 +420,7 @@ def q74_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     return (
-        docs.select("doc_id", F.explode(sel).alias("fp"))
+        hashed.select("doc_id", F.explode(sel).alias("fp"))
         .select(
             "doc_id",
             F.col("fp.h").alias("fp_hash"),
@@ -618,12 +625,7 @@ def q84_duplicated_span_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("t") >= 5)
         .select(
             "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("t") - F.lit(4)),
-                    lambda i: F.array_join(F.slice(F.col("t"), i, 5), " "),
-                )
-            ).alias("g"),
+            F.explode(ngrams(F.col("t"), 5)).alias("g"),
         )
     )
     gd = grams.groupBy("g").agg(F.count_distinct("doc_id").alias("nd"))
@@ -952,19 +954,8 @@ def q146_span_scrubbed_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "tok")
     grams = (
         toks.filter(F.size("t") >= 5)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("t") - F.lit(4)),
-                    lambda i: F.struct(
-                        i.alias("i"),
-                        F.array_join(F.slice(F.col("t"), i, 5), " ").alias("g"),
-                    ),
-                )
-            ).alias("s"),
-        )
-        .select("doc_id", F.col("s.i").alias("i"), F.col("s.g").alias("g"))
+        .select("doc_id", F.posexplode(ngrams(F.col("t"), 5)).alias("i0", "g"))
+        .select("doc_id", (F.col("i0") + 1).alias("i"), "g")
     )
     gd = (
         grams.groupBy("g")
@@ -1490,8 +1481,8 @@ def q202_dedup_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(10)
         .persist()
     )
-    sh = docs.select(
-        "doc_id", F.explode(word_shingles(F.col("text"))).alias("sh")
+    sh = docs.select("doc_id", tokens(F.col("text")).alias("t")).select(
+        "doc_id", F.explode(shingles(F.col("t"))).alias("sh")
     )
     # evidence shingles obey the same df cap as the pair machinery —
     # a capped-out stop-shingle must not reappear as "evidence"
@@ -2142,17 +2133,15 @@ def q246_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle hash exact.
     """
     docs = load_table(spark, sf_dir, "documents")
-    t = tokens(F.col("text"))
-    grams = F.when(
-        F.size(t) >= _RUN_N,
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - (_RUN_N - 1)),
-            lambda i: F.array_join(F.slice(t, i, _RUN_N), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    pos = docs.select(
-        "doc_id", F.posexplode(grams).alias("pos0", "shingle")
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "shingle")
+    t = F.col("t")
+    grams = F.when(F.size(t) >= _RUN_N, ngrams(t, _RUN_N)).otherwise(
+        F.array().cast("array<string>")
+    )
+    pos = (
+        docs.select("doc_id", tokens(F.col("text")).alias("t"))
+        .select("doc_id", F.posexplode(grams).alias("pos0", "shingle"))
+        .select("doc_id", (F.col("pos0") + 1).alias("pos"), "shingle")
+    )
     buckets = (
         pos.groupBy("shingle")
         .agg(

@@ -221,11 +221,17 @@ def q75_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = F.array_max(
         F.transform(F.col("embedding"), lambda x: F.abs(x.cast("double")))
     )
-    scaled = emb.select("vec_id", "embedding", mx.alias("mx"))
-    scale = F.when(F.col("mx") > 0, 127.0 / F.col("mx")).otherwise(F.lit(1.0))
+    # the scale is projected once per vector, not folded per element
+    scaled = emb.select("vec_id", "embedding", mx.alias("mx")).select(
+        "vec_id",
+        "embedding",
+        F.when(F.col("mx") > 0, 127.0 / F.col("mx"))
+        .otherwise(F.lit(1.0))
+        .alias("scale"),
+    )
     qs = F.transform(
         F.col("embedding"),
-        lambda x: F.floor(x.cast("double") * scale + 0.5).cast("bigint"),
+        lambda x: F.floor(x.cast("double") * F.col("scale") + 0.5).cast("bigint"),
     )
     return (
         scaled.select("vec_id", F.posexplode(qs).alias("dim_idx", "q"))

@@ -246,7 +246,8 @@ def q80_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANSI error) with the same i=1 / i=n guards as the oracle.
     """
     docs = load_table(spark, sf_dir, "documents")
-    s = F.array_sort(tokens(F.col("text")))
+    toks = docs.select("doc_id", F.array_sort(tokens(F.col("text"))).alias("s"))
+    s = F.col("s")
     n = F.size(s)
     idx = F.sequence(F.lit(1), n)
 
@@ -261,7 +262,7 @@ def q80_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_tokens = n.cast("long")
     n_distinct = F.size(F.array_distinct(s)).cast("long")
     n_hapax = F.size(F.filter(idx, _is_hapax)).cast("long")
-    return docs.select(
+    return toks.select(
         "doc_id",
         n_tokens.alias("n_tokens"),
         n_distinct.alias("n_distinct_tokens"),

@@ -5,16 +5,27 @@ semantics: planted exact dups, near-dups, and unrelated docs).
 
 from __future__ import annotations
 
+import os
+import sys
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
+from movie_data_pipeline_spark.functions.text import word_shingles
 from movie_data_pipeline_spark.operators.dedup import (
+    doc_shingles,
     exact_duplicates,
     jaccard_pairs,
     lsh_candidate_pairs_wide,
     minhash_signatures_wide,
     simhash,
 )
+from tests.conftest import TESTDATA_SF_DIR
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+
+from audit_plans import plan_expressions  # noqa: E402
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -219,3 +230,62 @@ def test_ppjoin_lossless_property(spark, docs, threshold):
         for r in ppjoin_pairs(corpus, threshold=threshold).collect()
     }
     assert got == want
+
+
+# Edge rows for the shingle equivalence: empty, whitespace-only, 1- and
+# 2-word docs (whole-doc shingle), repeated 3-grams, and null text.
+EDGE_TEXTS = [
+    (900, ""),
+    (901, "   \t  "),
+    (902, "solo"),
+    (903, "two words"),
+    (904, "a b c a b c a b c"),
+    (905, None),
+]
+
+
+@pytest.fixture(scope="module")
+def shingle_corpus(spark):
+    docs = spark.read.parquet(f"{TESTDATA_SF_DIR}/documents.parquet")
+    edge = spark.createDataFrame(EDGE_TEXTS, "doc_id LONG, text STRING")
+    return docs.select("doc_id", "text").unionByName(edge)
+
+
+def _inline_doc_shingles(df):
+    """The reference: the tokenizer inlined into the n-gram lambda."""
+    return df.select(
+        "doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle")
+    )
+
+
+def _bag(df):
+    return Counter(map(tuple, df.collect()))
+
+
+def test_hoisted_shingles_equal_inline_reference(shingle_corpus, monkeypatch):
+    from movie_data_pipeline_spark.operators import dedup
+
+    got_shingles = _bag(dedup.doc_shingles(shingle_corpus))
+    got_sigs = _bag(minhash_signatures_wide(shingle_corpus))
+    monkeypatch.setattr(dedup, "doc_shingles", _inline_doc_shingles)
+    assert got_shingles == _bag(_inline_doc_shingles(shingle_corpus))
+    assert got_sigs == _bag(minhash_signatures_wide(shingle_corpus))
+    edge = {r[0] for r in got_shingles if r[0] >= 900}
+    assert edge == {r[0] for r in EDGE_TEXTS}
+
+
+def test_doc_shingles_splits_once_outside_lambdas(spark):
+    docs = spark.read.parquet(f"{TESTDATA_SF_DIR}/documents.parquet")
+
+    def splits(tree, in_lambda=False):
+        cls, kids = tree
+        inner = in_lambda or cls == "LambdaFunction"
+        return [in_lambda] * (cls == "StringSplit") + [
+            s for k in kids for s in splits(k, inner)
+        ]
+
+    found = [
+        s for tree in plan_expressions(doc_shingles(docs))
+        for s in splits(tree)
+    ]
+    assert found == [False]

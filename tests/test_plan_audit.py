@@ -1,8 +1,10 @@
 """CI plan audit (VERDICT r1 item 8): every catalog query's physical
-plan is checked for the three scale smells — row-at-a-time Python UDFs
-(BatchEvalPython), cartesian products, and unpartitioned windows outside
-the documented bounded-frame allowlist — so the r1 global-window fixes
-(q40/q93/q120/q123, faithful-id default) can't regress silently.
+plan is checked for the four scale smells — row-at-a-time Python UDFs
+(BatchEvalPython), cartesian products, unpartitioned windows outside
+the documented bounded-frame allowlist, and per-row work re-evaluated
+inside higher-order lambdas — so the r1 global-window fixes
+(q40/q93/q120/q123, faithful-id default) and the hoisted tokenizer
+can't regress silently.
 
 Analysis-only: plans are built and explained at sf0.001, never executed
 (iterative builders do run their plan-time jobs)."""
@@ -81,3 +83,34 @@ def test_structural_window_detector(spark):
         "s", F.sum("id").over(Window.partitionBy("d").orderBy("id"))
     )
     assert unpartitioned_window_count(fine) == 0
+
+
+def test_structural_lambda_invariant_detector(spark):
+    """The lambda rule flags the tokenizer closed over by the shingle
+    lambda and stays silent once tokens are a projected column; reading
+    an array column's size inside a lambda is free."""
+    from audit_plans import lambda_invariant_subexpressions
+    from pyspark.sql import functions as F
+
+    from movie_data_pipeline_spark.functions.text import (
+        shingles,
+        tokens,
+        word_shingles,
+    )
+
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id LONG, text STRING")
+    inline = docs.select("doc_id", word_shingles(F.col("text")).alias("s"))
+    assert set(lambda_invariant_subexpressions(inline)) == {
+        "StringSplit(Lower(StringTrim(AttributeReference)), Literal, Literal)"
+    }
+    hoisted = docs.select("doc_id", tokens(F.col("text")).alias("t")).select(
+        "doc_id", shingles(F.col("t")).alias("s")
+    )
+    assert lambda_invariant_subexpressions(hoisted) == []
+    arrays = spark.createDataFrame([([1, 2],)], "a ARRAY<INT>")
+    sized = arrays.select(F.transform("a", lambda x: x + F.size("a")))
+    assert lambda_invariant_subexpressions(sized) == []
+    scaled = arrays.select(F.transform("a", lambda x: x * F.abs(F.size("a") - 1)))
+    assert lambda_invariant_subexpressions(scaled) == [
+        "Abs(Subtract(Size(AttributeReference), Literal))"
+    ]

@@ -135,8 +135,29 @@ def _is_pair_slice(node: ast.AST) -> bool:
     )
 
 
+def _is_ngram_join(node: ast.AST) -> bool:
+    """``F.array_join(F.slice(<arr>, i, n), ...)`` with a variable start:
+    the word n-gram window idiom."""
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "array_join"
+        and bool(node.args)
+        and isinstance(node.args[0], ast.Call)
+        and isinstance(node.args[0].func, ast.Attribute)
+        and node.args[0].func.attr == "slice"
+        and len(node.args[0].args) >= 2
+        and isinstance(node.args[0].args[1], ast.Name)
+    )
+
+
 def test_idioms_live_only_in_their_helpers():
-    hits = {"concurrent.futures": set(), "unpersist": set(), "pairs": set()}
+    hits = {
+        "concurrent.futures": set(),
+        "unpersist": set(),
+        "pairs": set(),
+        "ngrams": set(),
+    }
     for path in sorted(PACKAGE.rglob("*.py")):
         rel = path.relative_to(PACKAGE).as_posix()
         for owner, node in _functions(ast.parse(path.read_text())):
@@ -157,10 +178,13 @@ def test_idioms_live_only_in_their_helpers():
                 hits["unpersist"].add(where)
             if _is_pair_slice(node):
                 hits["pairs"].add(where)
+            if _is_ngram_join(node):
+                hits["ngrams"].add(where)
     assert hits == {
         "concurrent.futures": {"operators/util.py"},
         "unpersist": {"operators/util.py:cached"},
         "pairs": {"operators/util.py:array_pairs"},
+        "ngrams": {"functions/text.py:ngrams"},
     }
 
 

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Dump `explain(formatted)` for every catalog query and flag plan
-smells: Python row-UDFs (BatchEvalPython), cartesian products, and
+smells: Python row-UDFs (BatchEvalPython), cartesian products,
 single-partition windows outside the documented bounded-frame
-allowlist.
+allowlist, and per-row work repeated inside higher-order lambdas.
 
 Usage: python tools/audit_plans.py [sf_dir] > plans.txt
 
@@ -49,6 +49,96 @@ def unpartitioned_window_count(df) -> int:
         and not n.get("partitionSpec")
     )
 
+
+_EXPRESSIONS = "org.apache.spark.sql.catalyst.expressions."
+
+
+def _expression_trees(value):
+    """Every expression tree held in a plan-JSON field value. Catalyst
+    writes an expression as its nodes in pre-order, each with a
+    ``num-children`` count; fields of those nodes that repeat their
+    children (``CaseWhen.branches``) are not descended into."""
+    if isinstance(value, dict):
+        for v in value.values():
+            yield from _expression_trees(v)
+    elif isinstance(value, list):
+        head = value[0] if value else None
+        if isinstance(head, dict) and head.get("class", "").startswith(_EXPRESSIONS):
+            yield _parse_expression(value, 0)[0]
+        else:
+            for v in value:
+                yield from _expression_trees(v)
+
+
+def _parse_expression(nodes, i):
+    node = nodes[i]
+    kids, i = [], i + 1
+    for _ in range(node["num-children"]):
+        kid, i = _parse_expression(nodes, i)
+        kids.append(kid)
+    return (node["class"].rsplit(".", 1)[-1], kids), i
+
+
+def plan_expressions(df) -> list:
+    """Every expression of the optimized logical plan, as nested
+    ``(class name, [children])`` trees."""
+    import json
+
+    nodes = json.loads(df._jdf.queryExecution().optimizedPlan().toJSON())
+    return [tree for node in nodes for tree in _expression_trees(node)]
+
+
+def _references(tree) -> set:
+    cls, kids = tree
+    if cls == "NamedLambdaVariable":
+        return {"lambda"}
+    if cls == "AttributeReference":
+        return {"column"}
+    return set().union(*map(_references, kids)) if kids else set()
+
+
+def _render(tree) -> str:
+    cls, kids = tree
+    return f"{cls}({', '.join(map(_render, kids))})" if kids else cls
+
+
+def _is_free(tree) -> bool:
+    """A leaf, or the length of an array column (as cheap as reading
+    the column)."""
+    cls, kids = tree
+    return not kids or (cls == "Size" and all(map(_is_free, kids)))
+
+
+def _lambda_invariants(body):
+    """Maximal subtrees of a lambda body that read a column but no
+    lambda variable: they evaluate to the same value at every element,
+    so they belong in a projection below the higher-order function.
+    Literal-only subtrees are constant-folded; leaves and constant-time
+    reads are free."""
+    refs = _references(body)
+    if "lambda" in refs:
+        for kid in body[1]:
+            yield from _lambda_invariants(kid)
+    elif "column" in refs and not _is_free(body):
+        yield _render(body)
+
+
+def lambda_invariant_subexpressions(df) -> list[str]:
+    """Authoritative detector for per-row work repeated per array
+    element: Catalyst has no loop-invariant motion across a
+    ``LambdaFunction`` boundary, so a column-only subexpression inside
+    a lambda body (``split(lower(trim(text)))`` in a shingle transform)
+    runs once per element. Walks the optimized logical plan as JSON."""
+    found = []
+    stack = plan_expressions(df)
+    while stack:
+        tree = stack.pop()
+        if tree[0] == "LambdaFunction":
+            found.extend(_lambda_invariants(tree[1][0]))
+        stack.extend(tree[1])
+    return found
+
+
 # Queries where a single-partition window is the intended design: the
 # windowed frame is provably bounded, independent of fact-table size.
 WINDOW_OK = {
@@ -70,7 +160,8 @@ WINDOW_OK = {
 def audit_plan(name: str, plan: str, df=None) -> list[str]:
     """Smell list for one query: string markers from the formatted
     physical plan, plus the structural unpartitioned-window check when
-    the DataFrame is available (regex fallback otherwise)."""
+    the DataFrame is available (regex fallback otherwise) and the
+    lambda-invariant check, which needs the DataFrame."""
     problems = [
         f"{name}: {why}" for marker, why in SMELLS.items() if marker in plan
     ]
@@ -82,6 +173,11 @@ def audit_plan(name: str, plan: str, df=None) -> list[str]:
         )
         if global_windows:
             problems.append(f"{name}: unpartitioned window over full data")
+    if df is not None:
+        problems.extend(
+            f"{name}: per-row {expr} re-evaluated inside a lambda"
+            for expr in sorted(set(lambda_invariant_subexpressions(df)))
+        )
     return problems
 
 
