@@ -29,6 +29,7 @@ import re
 import sys
 import time
 
+from movie_data_pipeline_spark.operators.util import query_scope
 from movie_data_pipeline_spark.plans import REGISTRY
 from movie_data_pipeline_spark.session import get_spark
 
@@ -301,19 +302,13 @@ def _previous_round() -> tuple[str | None, dict[str, float] | None]:
 def run_query(spark, name: str, sf_dir: str) -> float:
     # Build INSIDE the timed section: iterative queries (e.g. q63's
     # label propagation) run jobs eagerly during plan construction, so
-    # timing only the final write would under-report them.
-    t0 = time.perf_counter()
-    df = REGISTRY[name].build(spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
-    elapsed = time.perf_counter() - t0
-    # Isolation: some builders persist intermediates (e.g. the shingle
-    # frame in jaccard_pairs) that outlive the query. Left in place they
-    # bleed memory pressure into every later measurement (observed 3-10x
-    # inflation on queries run after the dedup family). Clearing between
-    # queries measures each plan on a quiet executor, as the driver's
-    # per-query runs would.
-    spark.catalog.clearCache()
-    return elapsed
+    # timing only the final write would under-report them. The scope's
+    # release runs after the clock stops.
+    with query_scope():
+        t0 = time.perf_counter()
+        df = REGISTRY[name].build(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
 
 
 REFERENCE_DATA = "/root/reference/data"

@@ -75,11 +75,10 @@ def attach_running_sums(
 
     # MEMORY_AND_DISK cache: required so the totals job and the main job
     # read the SAME range partitioning (boundaries come from sampling).
-    # Cached blocks are LRU-evictable storage, not a pin — repeated
-    # calls in one session (q93 ranks three metrics) stay bounded by the
-    # executor storage fraction; sweeps that want a clean slate between
-    # queries call spark.catalog.clearCache() (bench.py and
-    # tools/driver_sim.py both do).
+    # The returned plan reads this cache, so it lives until the caller's
+    # query_scope() ends. Cached blocks are LRU-evictable storage, not a
+    # pin — repeated calls in one query (q93 ranks three metrics) stay
+    # bounded by the executor storage fraction.
     ranged = (
         df.repartitionByRange(n_parts, *keys)
         .withColumn(_PID, F.spark_partition_id())

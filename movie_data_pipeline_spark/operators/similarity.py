@@ -42,6 +42,16 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
+def sq_dist(a: Column, b: Column) -> Column:
+    """Sequential-fold squared Euclidean distance in double precision
+    (the same fixed summation order as :func:`dot`)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 

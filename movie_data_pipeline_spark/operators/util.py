@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 from collections.abc import Callable, Iterator
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
@@ -41,6 +43,47 @@ def cached(
         yield df
     finally:
         df.unpersist()
+
+
+@contextmanager
+def query_scope() -> Iterator[None]:
+    """Own every cache and checkpoint a query makes: build and consume
+    the query inside the block, and on the way out, exception or not,
+    release whatever it left persisted.
+
+    Exit runs ``clearCache()`` and then unpersists each RDD persisted
+    since entry. The second step catches what ``clearCache()`` cannot
+    reach: ``localCheckpoint`` results (eager or lazy) and RDDs a
+    builder persisted outside the SQL cache. Builders therefore need not
+    know which of their caches the caller's cleanup can reach.
+
+    ``clearCache()`` drops every cached DataFrame of the session, so a
+    scope wraps one whole query; RDDs persisted outside the SQL cache
+    before entry are left alone.
+    """
+    spark = SparkSession.active()
+    jsc = spark.sparkContext._jsc
+    entry = set(jsc.getPersistentRDDs().keySet().toArray())
+    try:
+        yield
+    finally:
+        spark.catalog.clearCache()
+        rdds = jsc.getPersistentRDDs()
+        for rdd_id in set(rdds.keySet().toArray()) - entry:
+            rdds.get(rdd_id).unpersist(False)
+
+
+@contextmanager
+def scratch_dir(prefix: str) -> Iterator[str]:
+    """A fresh local directory ``mdp-{prefix}-*`` for the ``with``
+    block, always removed on the way out. A builder that writes into it
+    must materialize what it returns (``localCheckpoint(eager=True)``)
+    before the block closes."""
+    path = tempfile.mkdtemp(prefix=f"mdp-{prefix}-")
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def array_pairs(

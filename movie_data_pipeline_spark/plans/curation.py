@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from movie_data_pipeline_spark.functions.text import ngrams, tokens
 from movie_data_pipeline_spark.operators.dedup import JACCARD_MAX_SHINGLE_DF
 from movie_data_pipeline_spark.operators.packing import pack_documents
-from movie_data_pipeline_spark.operators.util import overlap
+from movie_data_pipeline_spark.operators.util import overlap, scratch_dir
 from movie_data_pipeline_spark.plans.core import query, r4, round4
 from movie_data_pipeline_spark.plans.text import (
     ENGLISH_STOPWORDS,
@@ -2302,9 +2302,6 @@ def q310_manifest_staleness_audit(
     column-pruned joins + one groupBy(shard) — the audit costs what
     the manifest build cost.
     """
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from movie_data_pipeline_spark.operators.index_lifecycle import (
         audit_shard_manifest,
         erase_documents,
@@ -2312,9 +2309,8 @@ def q310_manifest_staleness_audit(
     from movie_data_pipeline_spark.sources.versioned import VersionedTable
 
     docs = load_table(spark, sf_dir, "documents")
-    base = _tempfile.mkdtemp(prefix="mdp-q310-")
-    corpus_path, manifest_path = f"{base}/corpus", f"{base}/manifest"
-    try:
+    with scratch_dir("q310") as base:
+        corpus_path, manifest_path = f"{base}/corpus", f"{base}/manifest"
         VersionedTable(corpus_path).commit(docs)
         # build the q286 manifest from the COMMITTED corpus snapshot
         # (round 12: through the ONE factored derivation republish and
@@ -2350,8 +2346,6 @@ def q310_manifest_staleness_audit(
             "n_missing_docs": int(row["m"]),
         }, (recorded, row)
         return audit
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -2427,9 +2421,6 @@ def q314_manifest_republish(
     pass + one groupBy(shard)) — the same price the original publish
     paid; the audit legs are two column-pruned joins each. Linear.
     """
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from movie_data_pipeline_spark.operators.index_lifecycle import (
         audit_shard_manifest,
         build_order_manifest,
@@ -2438,9 +2429,8 @@ def q314_manifest_republish(
     from movie_data_pipeline_spark.sources.versioned import VersionedTable
 
     docs = load_table(spark, sf_dir, "documents")
-    base = _tempfile.mkdtemp(prefix="mdp-q314-")
-    corpus_path, manifest_path = f"{base}/corpus", f"{base}/manifest"
-    try:
+    with scratch_dir("q314") as base:
+        corpus_path, manifest_path = f"{base}/corpus", f"{base}/manifest"
         VersionedTable(corpus_path).commit(docs)
         c0 = VersionedTable(corpus_path).read(spark, version=0)
         VersionedTable(manifest_path).commit(
@@ -2492,8 +2482,6 @@ def q314_manifest_republish(
             F.col("content_digest").cast("long").alias("content_digest"),
         ).orderBy("shard")
         return result.localCheckpoint(eager=True)
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -2610,9 +2598,6 @@ def q318_maintenance_planner(
     anti-join per index, one distinct count, one vote aggregate, one
     manifest re-derivation) — all linear, all column-pruned.
     """
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from movie_data_pipeline_spark.operators.dedup import (
         band_signatures,
         measure_center_thresholds,
@@ -2627,10 +2612,9 @@ def q318_maintenance_planner(
     from movie_data_pipeline_spark.sources.versioned import VersionedTable
 
     docs = load_table(spark, sf_dir, "documents")
-    base = _tempfile.mkdtemp(prefix="mdp-q318-")
-    corpus_p = f"{base}/corpus"
-    sh_p, mh_p, man_p = f"{base}/sh", f"{base}/mh", f"{base}/man"
-    try:
+    with scratch_dir("q318") as base:
+        corpus_p = f"{base}/corpus"
+        sh_p, mh_p, man_p = f"{base}/sh", f"{base}/mh", f"{base}/man"
         VersionedTable(corpus_p).commit(docs)
         c0 = VersionedTable(corpus_p).read(spark, version=0)
 
@@ -2692,5 +2676,3 @@ def q318_maintenance_planner(
         assert rec[("minhash_bands", "scrub")] == 1
         assert rec[("epoch0", "republish")] == 1
         return plan
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)

@@ -49,6 +49,7 @@ from movie_data_pipeline_spark.operators.util import (
     fixed_sample,
     fixed_sample_ctes,
     overlap,
+    scratch_dir,
 )
 from movie_data_pipeline_spark.plans.core import query, r4, round4
 from movie_data_pipeline_spark.sources.registry import load_table
@@ -4864,9 +4865,6 @@ def q315_center_threshold_drift(
     data (the audit's per-bit rows explode from the single aggregate
     row in-plan).
     """
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from movie_data_pipeline_spark.operators.dedup import (
         measure_balanced_bit_blocks,
         measure_center_thresholds,
@@ -4883,9 +4881,8 @@ def q315_center_threshold_drift(
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = _tempfile.mkdtemp(prefix="mdp-q315-")
-    corpus_path, index_path = f"{base}/corpus", f"{base}/idx"
-    try:
+    with scratch_dir("q315") as base:
+        corpus_path, index_path = f"{base}/corpus", f"{base}/idx"
         VersionedTable(corpus_path).commit(docs)
         batch0 = docs.filter(F.col("doc_id") % 4 == 0)
         th0 = measure_center_thresholds(batch0)
@@ -4990,5 +4987,3 @@ def q315_center_threshold_drift(
             .orderBy("phase", "bit_idx")
         )
         return result.localCheckpoint(eager=True)
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)

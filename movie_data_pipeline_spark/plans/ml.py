@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from movie_data_pipeline_spark.operators.similarity import sq_dist
 from movie_data_pipeline_spark.operators.util import array_pairs
 from movie_data_pipeline_spark.plans.core import query, r4, round4
 from movie_data_pipeline_spark.sources.registry import load_table
@@ -277,12 +278,7 @@ def q104_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def assign(cents: DataFrame) -> DataFrame:
         d = vecs.crossJoin(F.broadcast(cents)).withColumn(
-            "dist2",
-            F.aggregate(
-                F.zip_with("arr", "cvec", lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
+            "dist2", sq_dist(F.col("arr"), F.col("cvec"))
         )
         w = Window.partitionBy("vec_id").orderBy("dist2", "cid")
         return (
@@ -848,14 +844,7 @@ def q177_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     d = vecs.crossJoin(F.broadcast(cents)).withColumn(
-        "dist",
-        F.sqrt(
-            F.aggregate(
-                F.zip_with("arr", "cvec", lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ),
+        "dist", F.sqrt(sq_dist(F.col("arr"), F.col("cvec")))
     )
     ab = d.groupBy("vec_id", "label").agg(
         F.max(F.when(F.col("cid") == F.col("label"), F.col("dist"))).alias("a"),

@@ -17,12 +17,14 @@ from movie_data_pipeline_spark.operators.similarity import (
     cosine,
     cosine_topk,
     cosine_topk_lsh,
+    sq_dist,
 )
 from movie_data_pipeline_spark.operators.util import (
     cached,
     fixed_sample,
     fixed_sample_ctes,
     overlap,
+    scratch_dir,
 )
 from movie_data_pipeline_spark.plans.core import query, r4, round4
 from movie_data_pipeline_spark.sources.registry import load_table
@@ -2222,13 +2224,6 @@ def q272_pq_codebook_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     v = emb.select("vec_id", _to_double(F.col("embedding")).alias("arr"))
 
-    def d2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     # codebook seeds collected driver-side (constant-size metadata,
     # the ivf_assign codebook-collect pattern), compiled into literal
     # per-subspace argmin expressions -> assignment is map-only
@@ -2254,7 +2249,7 @@ def q272_pq_codebook_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             cands.append(
                 F.struct(
-                    d2(sub_slices[m], ssub).alias("d"),
+                    sq_dist(sub_slices[m], ssub).alias("d"),
                     F.lit(k).alias("k"),
                 )
             )
@@ -2307,7 +2302,9 @@ def q272_pq_codebook_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         dist = sc.join(F.broadcast(cents), ["m", "code"]).select(
-            "m", "code", round4(d2(F.col("sub"), F.col("cent"))).alias("d2r")
+            "m",
+            "code",
+            round4(sq_dist(F.col("sub"), F.col("cent"))).alias("d2r"),
         )
         per_sub = dist.groupBy("m").agg(
             F.count("*").cast("long").alias("n_vectors"),
@@ -2333,7 +2330,7 @@ def q272_pq_codebook_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "m",
             "code",
-            round4(d2(F.col("qsub"), F.col("cent"))).alias("d2q"),
+            round4(sq_dist(F.col("qsub"), F.col("cent"))).alias("d2q"),
         )
         adist = (
             sc.select("vec_id", "m", "code")
@@ -2359,7 +2356,7 @@ def q272_pq_codebook_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "query_id",
                 "vec_id",
-                d2(F.col("qarr"), F.col("arr")).alias("xd"),
+                sq_dist(F.col("qarr"), F.col("arr")).alias("xd"),
             )
             .withColumn("rn", F.row_number().over(wx))
             .filter(F.col("rn") <= 10)
@@ -2539,13 +2536,6 @@ def q284_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     v = emb.select("vec_id", _to_double(F.col("embedding")).alias("arr"))
 
-    def d2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     assigned = (
         ivf_assign(emb, n_cells=_IVF_CELLS)
         .select(
@@ -2603,7 +2593,7 @@ def q284_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 cands.append(
                     F.struct(
-                        d2(sub_slices[m], ssub).alias("d"),
+                        sq_dist(sub_slices[m], ssub).alias("d"),
                         F.lit(k).alias("k"),
                     )
                 )
@@ -2691,7 +2681,7 @@ def q284_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "query_id",
                 "m",
                 "code",
-                round4(d2(F.col("qsub"), F.col("cent"))).alias("d2q"),
+                round4(sq_dist(F.col("qsub"), F.col("cent"))).alias("d2q"),
             )
             cand = (
                 sc.select("vec_id", "cell", "m", "code")
@@ -2799,13 +2789,9 @@ def q303_ann_index_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_data_pipeline_spark.operators.similarity import ivf_assign
     from movie_data_pipeline_spark.sources.versioned import VersionedTable
 
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
-    base = _tempfile.mkdtemp(prefix="mdp-q303-")
-    corpus_path, index_path = f"{base}/vectors", f"{base}/ivf"
-    try:
+    with scratch_dir("q303") as base:
+        corpus_path, index_path = f"{base}/vectors", f"{base}/ivf"
         assigned = ivf_assign(emb, n_cells=_IVF_CELLS)
         VersionedTable(corpus_path).commit(emb)
         VersionedTable(index_path).commit(
@@ -2855,8 +2841,6 @@ def q303_ann_index_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("cell")
         )
         return result.localCheckpoint(eager=True)
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -3001,13 +2985,9 @@ def q309_ivf_centroid_migration(
     from movie_data_pipeline_spark.sources.versioned import VersionedTable
     from pyspark.sql.window import Window
 
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
-    base = _tempfile.mkdtemp(prefix="mdp-q309-")
-    corpus_path, index_path = f"{base}/vectors", f"{base}/ivf"
-    try:
+    with scratch_dir("q309") as base:
+        corpus_path, index_path = f"{base}/vectors", f"{base}/ivf"
         assigned = ivf_assign(emb, n_cells=_IVF_CELLS)
         VersionedTable(corpus_path).commit(emb)
         idx_t = VersionedTable(index_path)
@@ -3141,8 +3121,6 @@ def q309_ivf_centroid_migration(
             result = reduce(DataFrame.unionByName, rows).orderBy("metric", "k")
             result = result.localCheckpoint(eager=True)
         return result
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -3370,8 +3348,6 @@ def q316_ivf_cell_split_recovery(
     legs are O(queries x corpus) on the fixed 64-query sample.
     """
     import math as _math
-    import shutil as _shutil
-    import tempfile as _tempfile
     from functools import reduce
 
     from movie_data_pipeline_spark.operators.index_lifecycle import (
@@ -3390,9 +3366,8 @@ def q316_ivf_cell_split_recovery(
     from pyspark.sql.window import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
-    base = _tempfile.mkdtemp(prefix="mdp-q316-")
-    corpus_path, index_path = f"{base}/vectors", f"{base}/ivf"
-    try:
+    with scratch_dir("q316") as base:
+        corpus_path, index_path = f"{base}/vectors", f"{base}/ivf"
         assigned = ivf_assign(emb, n_cells=_IVF_CELLS)
         seed_rows = (
             emb.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
@@ -3572,5 +3547,3 @@ def q316_ivf_cell_split_recovery(
             ]
         result = reduce(DataFrame.unionByName, rows).orderBy("metric", "k")
         return result.localCheckpoint(eager=True)
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)

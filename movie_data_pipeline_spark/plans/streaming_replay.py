@@ -21,16 +21,13 @@ independent under any driver session).
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from movie_data_pipeline_spark.plans.core import query, r4, round4
 from movie_data_pipeline_spark.plans.dedup import _MINHASH_LONG_CTES
 from movie_data_pipeline_spark.operators.dedup import LSH_BAND_ROWS
-from movie_data_pipeline_spark.operators.util import overlap
+from movie_data_pipeline_spark.operators.util import overlap, scratch_dir
 
 
 def _await(q, what: str) -> None:
@@ -213,9 +210,8 @@ def q204_streaming_hourly_upsert(
         start_upsert_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="mdp-q204-")
-    table, ckpt = f"{base}/table", f"{base}/ckpt"
-    try:
+    with scratch_dir("q204") as base:
+        table, ckpt = f"{base}/table", f"{base}/ckpt"
         stats = hourly_type_totals_stream(stream_events(spark, sf_dir))
         q = start_upsert_stream(
             stats, table, ckpt, keys=["ts_hour_epoch", "event_type"]
@@ -232,8 +228,6 @@ def q204_streaming_hourly_upsert(
             .orderBy("ts_hour_epoch", "event_type")
         )
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -284,15 +278,12 @@ def q205_streaming_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_data_pipeline_spark.sources.registry import table_path
 
     _assert_single_file(table_path(sf_dir, "documents"), "q205")
-    base = tempfile.mkdtemp(prefix="mdp-q205-")
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    try:
+    with scratch_dir("q205") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         docs = stream_table(spark, sf_dir, "documents")
         q = start_dedup_gate_stream(docs, acc, idx, ckpt)
         _await(q, "q205")
         return _accepted_corpus(spark, acc)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -343,9 +334,8 @@ def q220_streaming_join_replay(
         stream_table,
     )
 
-    base = tempfile.mkdtemp(prefix="mdp-q220-")
-    out, ckpt = f"{base}/out", f"{base}/ckpt"
-    try:
+    with scratch_dir("q220") as base:
+        out, ckpt = f"{base}/out", f"{base}/ckpt"
         ev = stream_table(spark, sf_dir, "events")
         # NTZ→instant conversion matches stream_events (footer-sniffed)
         from movie_data_pipeline_spark.sources.registry import (
@@ -385,8 +375,6 @@ def q220_streaming_join_replay(
             .orderBy("click_id", "purchase_id")
         )
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -449,9 +437,8 @@ def q221_streaming_session_replay(
     )
     from movie_data_pipeline_spark.streaming.events import stream_table
 
-    base = tempfile.mkdtemp(prefix="mdp-q221-")
-    out, ckpt = f"{base}/out", f"{base}/ckpt"
-    try:
+    with scratch_dir("q221") as base:
+        out, ckpt = f"{base}/out", f"{base}/ckpt"
         ev = stream_table(spark, sf_dir, "events")
         micros = (
             "ts div 1000"
@@ -505,8 +492,6 @@ def q221_streaming_session_replay(
             .orderBy("user_id", "session_start_us")
         )
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -576,9 +561,8 @@ def q210_streaming_drift_replay(
         (F.count("*") / F.lit(float(n_half))).alias("share")
     )
 
-    base = tempfile.mkdtemp(prefix="mdp-q210-")
-    out, ckpt = f"{base}/log", f"{base}/ckpt"
-    try:
+    with scratch_dir("q210") as base:
+        out, ckpt = f"{base}/log", f"{base}/ckpt"
         q = start_mix_drift_stream(
             stream_table(spark, sf_dir, "events"), baseline, out, ckpt
         )
@@ -590,8 +574,6 @@ def q210_streaming_drift_replay(
             "n_novel_types",
         )
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -667,9 +649,8 @@ def q244_streaming_multibatch_gate(
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="mdp-q244-")
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    try:
+    with scratch_dir("q244") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         # evens form batch 0, odds batch 1
         (stream,) = _split_streams(
             spark, base, docs, "doc_id", 2, "q244", one_source=True
@@ -678,8 +659,6 @@ def q244_streaming_multibatch_gate(
         _await(q, "q244")
         _assert_fed(q, 2, "q244")
         return _accepted_corpus(spark, acc)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -757,9 +736,8 @@ def q267_streaming_closed_window_ledger(
     us = "ts div 1000" if _events_ts_is_nanos(src_path) else "ts"
     raw = raw.withColumn("ts", F.expr(us))
 
-    base = tempfile.mkdtemp(prefix="mdp-q267-")
-    table, ckpt = f"{base}/table", f"{base}/ckpt"
-    try:
+    with scratch_dir("q267") as base:
+        table, ckpt = f"{base}/table", f"{base}/ckpt"
         (stream,) = _split_streams(
             spark, base, raw, "user_id", 2, "q267", one_source=True
         )
@@ -808,8 +786,6 @@ def q267_streaming_closed_window_ledger(
             round4(F.col("sum_value").cast("double")).alias("sum_value"),
         ).orderBy("ts_hour_epoch", "event_type")
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -872,15 +848,12 @@ def q287_simhash_index_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _assert_single_file(table_path(sf_dir, "documents"), "q287")
-    base = tempfile.mkdtemp(prefix="mdp-q287-")
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    try:
+    with scratch_dir("q287") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         docs = stream_table(spark, sf_dir, "documents")
         q = start_simhash_gate_stream(docs, acc, idx, ckpt, rung=1)
         _await(q, "q287")
         return _accepted_corpus(spark, acc)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -963,9 +936,8 @@ def q292_simhash_multibatch_gate(
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="mdp-q292-")
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    try:
+    with scratch_dir("q292") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         (stream,) = _split_streams(
             spark, base, docs, "doc_id", 2, "q292", one_source=True
         )
@@ -973,8 +945,6 @@ def q292_simhash_multibatch_gate(
         _await(q, "q292")
         _assert_fed(q, 2, "q292")
         return _accepted_corpus(spark, acc)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -1076,9 +1046,8 @@ def q295_index_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _assert_single_file(table_path(sf_dir, "documents"), "q295")
-    base = tempfile.mkdtemp(prefix="mdp-q295-")
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    try:
+    with scratch_dir("q295") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         docs = stream_table(spark, sf_dir, "documents")
         q = start_simhash_gate_stream(docs, acc, idx, ckpt, rung=1)
         _await(q, "q295")
@@ -1133,8 +1102,6 @@ def q295_index_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         result = reduce(DataFrame.unionByName, rows).orderBy("metric")
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -1242,9 +1209,8 @@ def q296_simhash_rung_migration(
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="mdp-q296-")
-    acc, idx = f"{base}/acc", f"{base}/idx"
-    try:
+    with scratch_dir("q296") as base:
+        acc, idx = f"{base}/acc", f"{base}/idx"
         streams = _split_streams(
             spark, base, docs, "doc_id", 2, "q296", one_source=False
         )
@@ -1259,8 +1225,6 @@ def q296_simhash_rung_migration(
         _await(q1, "q296 batch 1")
 
         return _accepted_corpus(spark, acc)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -1347,9 +1311,8 @@ def q299_erasure_vacuum_compliance(
     )
 
     _assert_single_file(table_path(sf_dir, "documents"), "q299")
-    base = tempfile.mkdtemp(prefix="mdp-q299-")
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    try:
+    with scratch_dir("q299") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         docs = stream_table(spark, sf_dir, "documents")
         q = start_simhash_gate_stream(docs, acc, idx, ckpt, rung=1)
         _await(q, "q299")
@@ -1419,8 +1382,6 @@ def q299_erasure_vacuum_compliance(
         ]
         result = reduce(DataFrame.unionByName, rows).orderBy("metric")
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -1503,9 +1464,8 @@ def q301_minhash_index_erasure(
     )
 
     _assert_single_file(table_path(sf_dir, "documents"), "q301")
-    base = tempfile.mkdtemp(prefix="mdp-q301-")
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    try:
+    with scratch_dir("q301") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         docs = stream_table(spark, sf_dir, "documents")
         q = start_dedup_gate_stream(docs, acc, idx, ckpt)
         _await(q, "q301")
@@ -1554,8 +1514,6 @@ def q301_minhash_index_erasure(
         ]
         result = reduce(DataFrame.unionByName, rows).orderBy("metric")
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -1647,9 +1605,8 @@ def q302_midstream_erasure_gate(
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="mdp-q302-")
-    acc, idx = f"{base}/acc", f"{base}/idx"
-    try:
+    with scratch_dir("q302") as base:
+        acc, idx = f"{base}/acc", f"{base}/idx"
         streams = _split_streams(
             spark, base, docs, "doc_id", 2, "q302", one_source=False
         )
@@ -1664,8 +1621,6 @@ def q302_midstream_erasure_gate(
         _await(q1, "q302 batch 1")
 
         return _accepted_corpus(spark, acc)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -1807,9 +1762,8 @@ def q307_banding_migration_gate(
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="mdp-q307-")
-    acc, idx = f"{base}/acc", f"{base}/idx"
-    try:
+    with scratch_dir("q307") as base:
+        acc, idx = f"{base}/acc", f"{base}/idx"
         streams = _split_streams(
             spark, base, docs, "doc_id", 2, "q307", one_source=False
         )
@@ -1831,8 +1785,6 @@ def q307_banding_migration_gate(
         _await(q1, "q307 batch 1")
 
         return _accepted_corpus(spark, acc)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -1934,9 +1886,8 @@ def q308_partitioned_index_erasure(
     )
 
     _assert_single_file(table_path(sf_dir, "documents"), "q308")
-    base = tempfile.mkdtemp(prefix="mdp-q308-")
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    try:
+    with scratch_dir("q308") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         docs = stream_table(spark, sf_dir, "documents")
         q = start_simhash_gate_stream(
             docs, acc, idx, ckpt, rung=1, index_bucket_k=8
@@ -1992,8 +1943,6 @@ def q308_partitioned_index_erasure(
             ),
             "n_reaccepted": acc2.join(acc1, "doc_id", "left_anti").count(),
         })
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -2098,9 +2047,8 @@ def q311_centered_gate_replay(
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="mdp-q311-")
-    acc, idx = f"{base}/acc", f"{base}/idx"
-    try:
+    with scratch_dir("q311") as base:
+        acc, idx = f"{base}/acc", f"{base}/idx"
         streams = _split_streams(
             spark, base, docs, "doc_id", 2, "q311", one_source=False
         )
@@ -2120,8 +2068,6 @@ def q311_centered_gate_replay(
         assert meta2["simhash_center_n"] == meta["simhash_center_n"]
 
         return _accepted_corpus(spark, acc)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -2255,9 +2201,8 @@ def q312_gate_compaction_replay(
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="mdp-q312-")
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    try:
+    with scratch_dir("q312") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         (stream,) = _split_streams(
             spark, base, docs, "doc_id", 3, "q312", one_source=True
         )
@@ -2300,8 +2245,6 @@ def q312_gate_compaction_replay(
             "n_reaccepted_after_compact": reaccepted,
             "n_resubmitted": resub.count(),
         })
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -2456,9 +2399,8 @@ def q313_recommended_gate_replay(
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="mdp-q313-")
-    acc, idx = f"{base}/acc", f"{base}/idx"
-    try:
+    with scratch_dir("q313") as base:
+        acc, idx = f"{base}/acc", f"{base}/idx"
         streams = _split_streams(
             spark, base, docs, "doc_id", 2, "q313", one_source=False
         )
@@ -2488,8 +2430,6 @@ def q313_recommended_gate_replay(
         assert count_phantom_index_rows(spark, idx, acc) == 0
 
         return _accepted_corpus(spark, acc)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -2623,9 +2563,8 @@ def q317_bucketed_gate_compaction(
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="mdp-q317-")
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    try:
+    with scratch_dir("q317") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         (stream,) = _split_streams(
             spark, base, docs, "doc_id", 3, "q317", one_source=True
         )
@@ -2704,5 +2643,3 @@ def q317_bucketed_gate_compaction(
             "n_reaccepted_after_compact": reaccepted,
             "n_resubmitted": resub.count(),
         })
-    finally:
-        shutil.rmtree(base, ignore_errors=True)

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from movie_data_pipeline_spark.operators.util import query_scope
 from movie_data_pipeline_spark.plans import REGISTRY
 from tests.conftest import ORACLE_SF_DIR, TESTDATA_SF_DIR
 from tests.oracle_harness import compare, duckdb_connection
@@ -43,25 +44,26 @@ def con():
 @pytest.mark.parametrize("name", _parity_params(ORACLE_QUERIES))
 def test_query_matches_oracle(spark, con, name):
     spec = REGISTRY[name]
-    spark_df = spec.build(spark, TESTDATA_SF_DIR)
     oracle_df = con.execute(spec.oracle).df()
-    compare(spark_df, oracle_df, name)
+    with query_scope():
+        compare(spec.build(spark, TESTDATA_SF_DIR), oracle_df, name)
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
 def test_rows_only_query_runs(spark, name):
-    spec = REGISTRY[name]
-    df = spec.build(spark, TESTDATA_SF_DIR)
-    assert df.count() >= 0
-    assert df.schema.fieldNames()
+    with query_scope():
+        df = REGISTRY[name].build(spark, TESTDATA_SF_DIR)
+        assert df.count() >= 0
+        assert df.schema.fieldNames()
 
 
 @pytest.mark.slow
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_query_matches_oracle_sf001(spark, name):
     spec = REGISTRY[name]
-    con = duckdb_connection(ORACLE_SF_DIR)
-    compare(spec.build(spark, ORACLE_SF_DIR), con.execute(spec.oracle).df(), name)
+    oracle_df = duckdb_connection(ORACLE_SF_DIR).execute(spec.oracle).df()
+    with query_scope():
+        compare(spec.build(spark, ORACLE_SF_DIR), oracle_df, name)
 
 
 def test_entry_contract(spark):

@@ -1,11 +1,13 @@
 """The shared operator helpers in ``operators/util.py`` — pair
-generation, driver-thread overlap — and a structural guard that keeps
-each Spark idiom they own from being pasted back in elsewhere."""
+generation, driver-thread overlap, query-lifetime release, scratch
+directories — and a structural guard that keeps each Spark idiom they
+own from being pasted back in elsewhere."""
 
 from __future__ import annotations
 
 import ast
 import itertools
+import os
 import pathlib
 import random
 import threading
@@ -14,7 +16,14 @@ from concurrent.futures import ThreadPoolExecutor
 import pytest
 from pyspark.sql import functions as F
 
-from movie_data_pipeline_spark.operators.util import array_pairs, overlap
+from movie_data_pipeline_spark.operators.util import (
+    array_pairs,
+    overlap,
+    query_scope,
+    scratch_dir,
+)
+from movie_data_pipeline_spark.plans import REGISTRY
+from tests.conftest import TESTDATA_SF_DIR
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / (
     "movie_data_pipeline_spark"
@@ -105,6 +114,69 @@ def test_overlap_threads_inherit_job_group(spark):
             sc.setLocalProperty(key, None)
 
 
+def _persistent(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def test_query_scope_releases_caches_and_checkpoints(spark):
+    kept = spark.sparkContext.parallelize(range(5)).persist()
+    kept.count()
+    entry = _persistent(spark)
+    assert kept.id() in entry
+    with query_scope():
+        spark.range(50).persist().count()
+        spark.range(50).localCheckpoint(eager=True)
+        spark.range(50).localCheckpoint(eager=False)
+        assert len(_persistent(spark) - entry) == 3
+    # earlier tests' cached DataFrames may go too (clearCache() is
+    # session-wide); what the block made must, and the plain RDD stays
+    assert _persistent(spark) - entry == set()
+    assert kept.id() in _persistent(spark)
+
+    with pytest.raises(KeyError, match="boom"):
+        with query_scope():
+            spark.range(50).persist().count()
+            spark.range(50).localCheckpoint(eager=True)
+            raise KeyError("boom")
+    assert _persistent(spark) - entry == set()
+    assert kept.id() in _persistent(spark)
+    kept.unpersist()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q63",
+        "q79",
+        "q134",
+        "q144",
+        "q288",
+        pytest.param("q204", marks=pytest.mark.slow),
+    ],
+)
+def test_builders_leave_nothing_persisted(spark, name):
+    # q204 is an eager streaming replay returning a checkpoint scan;
+    # the others leave caches and checkpoints that clearCache() alone
+    # does not release
+    (full,) = [n for n in REGISTRY if n.startswith(name + "_")]
+    entry = _persistent(spark)
+    with query_scope():
+        REGISTRY[full].build(spark, TESTDATA_SF_DIR).write.format(
+            "noop"
+        ).mode("overwrite").save()
+    assert _persistent(spark) - entry == set()
+
+
+def test_scratch_dir_removed_when_block_raises():
+    with pytest.raises(KeyError):
+        with scratch_dir("test") as path:
+            assert os.path.basename(path).startswith("mdp-test-")
+            (pathlib.Path(path) / "sub").mkdir()
+            (pathlib.Path(path) / "sub" / "f").write_text("x")
+            raise KeyError(path)
+    assert not os.path.exists(path)
+
+
 def _functions(tree: ast.AST):
     """(function name, node) for every node, tagged with the innermost
     enclosing function (None at module level)."""
@@ -151,10 +223,20 @@ def _is_ngram_join(node: ast.AST) -> bool:
     )
 
 
+def _calls(node: ast.AST, name: str) -> bool:
+    """``<anything>.name(...)``."""
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == name
+    )
+
+
 def test_idioms_live_only_in_their_helpers():
     hits = {
         "concurrent.futures": set(),
         "unpersist": set(),
+        "mkdtemp": set(),
         "pairs": set(),
         "ngrams": set(),
     }
@@ -170,19 +252,20 @@ def test_idioms_live_only_in_their_helpers():
                 and any(a.name.startswith("concurrent") for a in node.names)
             ):
                 hits["concurrent.futures"].add(rel)
-            if (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "unpersist"
-            ):
-                hits["unpersist"].add(where)
+            for idiom in ("unpersist", "mkdtemp"):
+                if _calls(node, idiom):
+                    hits[idiom].add(where)
             if _is_pair_slice(node):
                 hits["pairs"].add(where)
             if _is_ngram_join(node):
                 hits["ngrams"].add(where)
     assert hits == {
         "concurrent.futures": {"operators/util.py"},
-        "unpersist": {"operators/util.py:cached"},
+        "unpersist": {
+            "operators/util.py:cached",
+            "operators/util.py:query_scope",
+        },
+        "mkdtemp": {"operators/util.py:scratch_dir"},
         "pairs": {"operators/util.py:array_pairs"},
         "ngrams": {"functions/text.py:ngrams"},
     }
@@ -288,3 +371,24 @@ def test_every_defaulted_parameter_has_a_caller_that_sets_it():
             if p not in set_ and (name, p) not in NEVER_SET_ALLOWED
         ]
     assert never_set == []
+
+
+def test_clear_cache_lives_only_in_query_scope():
+    # Harnesses release each query through query_scope(); a bare
+    # clearCache() misses localCheckpoint results. perfbench/ is left
+    # out: it is the benchmark of record and keeps its own release.
+    hits = set()
+    for root in (
+        PACKAGE,
+        REPO / "bench.py",
+        REPO / "__spark_entry__.py",
+        REPO / "tools",
+        REPO / "tests",
+    ):
+        for path in _py_files(root):
+            for owner, node in _functions(ast.parse(path.read_text())):
+                if _calls(node, "clearCache"):
+                    rel = path.relative_to(REPO).as_posix()
+                    hits.add(f"{rel}:{owner}")
+    assert hits == {"movie_data_pipeline_spark/operators/util.py:query_scope"}
+

@@ -201,20 +201,19 @@ EAGER_TAGS = {"streaming", "lifecycle"}
 def audit_all(
     spark, sf_dir: str, emit=None, skip_eager: bool = False
 ) -> list[str]:
+    from movie_data_pipeline_spark.operators.util import query_scope
     from movie_data_pipeline_spark.plans import REGISTRY
 
     problems: list[str] = []
     for name, spec in sorted(REGISTRY.items()):
         if skip_eager and EAGER_TAGS & set(getattr(spec, "tags", ()) or ()):
             continue
-        df = spec.build(spark, sf_dir)
-        plan = explain_formatted(df)
-        if emit:
-            emit(f"{'=' * 30} {name}\n{plan}")
-        problems.extend(audit_plan(name, plan, df=df))
-        # builders that persist intermediates (dedup family) must not
-        # bleed cache into later plans
-        spark.catalog.clearCache()
+        with query_scope():
+            df = spec.build(spark, sf_dir)
+            plan = explain_formatted(df)
+            if emit:
+                emit(f"{'=' * 30} {name}\n{plan}")
+            problems.extend(audit_plan(name, plan, df=df))
     return problems
 
 

@@ -47,6 +47,7 @@ def main() -> int:
         doc_shingles,
         jaccard_pairs,
     )
+    from movie_data_pipeline_spark.operators.util import query_scope
     from movie_data_pipeline_spark.session import get_spark
     from movie_data_pipeline_spark.sources.registry import load_table
 
@@ -55,57 +56,59 @@ def main() -> int:
 
     # Bucket census: how hard does the cap bind on this corpus, and how
     # many pairs does dropping those buckets avoid (df*(df-1)/2 each)?
-    census = (
-        doc_shingles(docs)
-        .groupBy("shingle")
-        .agg(F.count("*").alias("df"))
-        .agg(
-            F.count("*").alias("n_buckets"),
-            F.sum((F.col("df") > args.cap).cast("long")).alias("n_dropped"),
-            F.sum(
-                F.when(
-                    F.col("df") > args.cap,
-                    F.col("df") * (F.col("df") - 1) / 2,
-                ).otherwise(0)
+    with query_scope():
+        census = (
+            doc_shingles(docs)
+            .groupBy("shingle")
+            .agg(F.count("*").alias("df"))
+            .agg(
+                F.count("*").alias("n_buckets"),
+                F.sum((F.col("df") > args.cap).cast("long")).alias(
+                    "n_dropped"
+                ),
+                F.sum(
+                    F.when(
+                        F.col("df") > args.cap,
+                        F.col("df") * (F.col("df") - 1) / 2,
+                    ).otherwise(0)
+                )
+                .cast("long")
+                .alias("pairs_avoided"),
+                F.sum(
+                    F.when(
+                        F.col("df") <= args.cap,
+                        F.col("df") * (F.col("df") - 1) / 2,
+                    ).otherwise(0)
+                )
+                .cast("long")
+                .alias("pairs_generated_capped"),
+                F.max("df").alias("max_df"),
             )
-            .cast("long")
-            .alias("pairs_avoided"),
-            F.sum(
-                F.when(
-                    F.col("df") <= args.cap,
-                    F.col("df") * (F.col("df") - 1) / 2,
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("pairs_generated_capped"),
-            F.max("df").alias("max_df"),
+            .collect()[0]
+            .asDict()
         )
-        .collect()[0]
-        .asDict()
-    )
-    spark.catalog.clearCache()
 
     # Untimed warmup (tiny slice) to pay codegen for the shared plan
     # shape before either timed run.
-    jaccard_pairs(
-        docs.limit(200), threshold=args.threshold, max_shingle_df=args.cap
-    ).count()
-    spark.catalog.clearCache()
+    with query_scope():
+        jaccard_pairs(
+            docs.limit(200), threshold=args.threshold, max_shingle_df=args.cap
+        ).count()
 
     results = {}
     for run, cap in (("capped", args.cap), ("uncapped", None)):
-        t0 = time.perf_counter()
-        pairs = jaccard_pairs(
-            docs, threshold=args.threshold, max_shingle_df=cap
-        )
-        n = pairs.count()
-        secs = round(time.perf_counter() - t0, 2)
+        with query_scope():
+            t0 = time.perf_counter()
+            pairs = jaccard_pairs(
+                docs, threshold=args.threshold, max_shingle_df=cap
+            )
+            n = pairs.count()
+            secs = round(time.perf_counter() - t0, 2)
         results[run] = secs
         print(
             json.dumps({"run": run, "cap": cap, "secs": secs, "pairs": n}),
             flush=True,
         )
-        spark.catalog.clearCache()
 
     print(json.dumps({"census": census}), flush=True)
     print(

@@ -15,6 +15,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from movie_data_pipeline_spark.operators.util import query_scope  # noqa: E402
 from movie_data_pipeline_spark.plans import REGISTRY  # noqa: E402
 from movie_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -37,15 +38,15 @@ def main() -> int:
         if any(n == p or n.startswith(p + "_") for p in prefixes)
     ]
     for name in names:
-        df = REGISTRY[name].build(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        with query_scope():
+            df = REGISTRY[name].build(spark, sf_dir)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
         print(f"{name}: {plan.count('Exchange')} Exchange -> {path}")
-        spark.catalog.clearCache()
     spark.stop()
     return 0
 

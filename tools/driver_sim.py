@@ -12,12 +12,15 @@ sweep stays the pre-commit/pre-round gate.
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from movie_data_pipeline_spark.operators.util import query_scope  # noqa: E402
 
 TABLES = (
     "region nation customer supplier part orders lineitem "
@@ -66,15 +69,12 @@ def main() -> int:
     failures = []
     for i, (name, fn) in enumerate(sorted(queries.items())):
         try:
-            spdf = fn(spark, sf_dir).toPandas()
+            with query_scope():
+                spdf = fn(spark, sf_dir).toPandas()
         except Exception as ex:  # noqa: BLE001
             failures.append((name, f"spark error: {ex}"))
             print(f"[{i+1}/{len(queries)}] {name}: SPARK ERROR", flush=True)
             continue
-        finally:
-            # builders that persist intermediates (dedup, prefix-sum)
-            # must not accumulate cache across the full-catalog sweep
-            spark.catalog.clearCache()
         if name not in oracles:
             print(f"[{i+1}/{len(queries)}] {name}: rows-only "
                   f"({len(spdf)} rows)", flush=True)

@@ -4,9 +4,10 @@ of the same-context A/B harness (tools/ab_bench.py).
 Usage: python tools/quick_bench.py [--repeats N] [--tag LABEL] q273 q276 ...
 
 Methodology matches bench.py exactly (one session, warmup on the first
-query, build inside the timed region, noop sink, clearCache between
-queries, per-query min-of-N over INTERLEAVED passes), so numbers are
-comparable to a headline pass — but only WITHIN one machine context.
+query, build inside the timed region, noop sink, each query inside its
+own ``query_scope()``, per-query min-of-N over INTERLEAVED passes), so
+numbers are comparable to a headline pass — but only WITHIN one machine
+context.
 Prints one JSON line: {"tag": ..., "queries": {name: min_sec},
 "runs": {name: [sec, ...]}}.
 """

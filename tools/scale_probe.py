@@ -27,6 +27,7 @@ def main() -> int:
         minhash_signatures_wide,
         ppjoin_pairs,
     )
+    from movie_data_pipeline_spark.operators.util import query_scope
     from movie_data_pipeline_spark.session import get_spark
     from movie_data_pipeline_spark.sources.synthetic import register
 
@@ -42,23 +43,23 @@ def main() -> int:
             .select("doc_id", "text")
         )
         out: dict[str, float | int] = {"n_docs": n}
-        t0 = time.perf_counter()
-        out["n_jaccard_pairs"] = jaccard_pairs(
-            docs, threshold=0.5, max_shingle_df=None
-        ).count()
-        out["jaccard_s"] = round(time.perf_counter() - t0, 2)
-        spark.catalog.clearCache()
+        with query_scope():
+            t0 = time.perf_counter()
+            out["n_jaccard_pairs"] = jaccard_pairs(
+                docs, threshold=0.5, max_shingle_df=None
+            ).count()
+            out["jaccard_s"] = round(time.perf_counter() - t0, 2)
 
-        t0 = time.perf_counter()
-        out["n_ppjoin_pairs"] = ppjoin_pairs(docs, threshold=0.5).count()
-        out["ppjoin_s"] = round(time.perf_counter() - t0, 2)
-        spark.catalog.clearCache()
+        with query_scope():
+            t0 = time.perf_counter()
+            out["n_ppjoin_pairs"] = ppjoin_pairs(docs, threshold=0.5).count()
+            out["ppjoin_s"] = round(time.perf_counter() - t0, 2)
 
-        t0 = time.perf_counter()
-        sigs = minhash_signatures_wide(docs)
-        out["n_lsh_candidates"] = lsh_candidate_pairs_wide(sigs).count()
-        out["lsh_s"] = round(time.perf_counter() - t0, 2)
-        spark.catalog.clearCache()
+        with query_scope():
+            t0 = time.perf_counter()
+            sigs = minhash_signatures_wide(docs)
+            out["n_lsh_candidates"] = lsh_candidate_pairs_wide(sigs).count()
+            out["lsh_s"] = round(time.perf_counter() - t0, 2)
         assert out["n_jaccard_pairs"] == out["n_ppjoin_pairs"], (
             "PPJoin diverged from brute force at scale!"
         )

@@ -70,6 +70,7 @@ def main() -> int:
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    from movie_data_pipeline_spark.operators.util import query_scope
     from movie_data_pipeline_spark.plans import REGISTRY
     from movie_data_pipeline_spark.session import get_spark
 
@@ -84,10 +85,10 @@ def main() -> int:
     # Untimed warmup: pay JVM boot + first-query codegen before any
     # timed run so the first recorded number measures the plan.
     if names:
-        REGISTRY[names[0]].build(spark, args.base).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        spark.catalog.clearCache()
+        with query_scope():
+            REGISTRY[names[0]].build(spark, args.base).write.format(
+                "noop"
+            ).mode("overwrite").save()
     ratios: dict[str, float] = {}
     for name in names:
         secs: dict[str, float] = {}
@@ -98,32 +99,32 @@ def main() -> int:
         # artifact, where a warm scaled run looked 6x faster than
         # base and needed a footnote).
         for sf_dir in (args.scaled, args.base):
-            t0 = time.perf_counter()
-            df = REGISTRY[name].build(spark, sf_dir)
-            # noop write, same as bench.py:154 — a bare count() lets
-            # Catalyst prune every computed projection, so a
-            # projection-heavy query probes at the cost of its spine
-            # row count, not the query (VERDICT r5 #2: q261 probed
-            # 0.54 s while benching 29.1 s). The noop sink forces full
-            # evaluation of every output column with zero write cost.
-            # The row count piggybacks on the SAME action via observe()
-            # (ADVICE r6: a post-timing count() re-executed the whole
-            # plan, roughly doubling probe wall-clock for lazy plans).
-            obs = Observation()
-            df.observe(obs, F.count(F.lit(1)).alias("rows")).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            secs[sf_dir] = round(time.perf_counter() - t0, 2)
-            n = obs.get["rows"]
-            rec = {
-                "query": name,
-                "sf_dir": sf_dir,
-                "secs": secs[sf_dir],
-                "rows": n,
-                **plan_stats(df),
-            }
-            print(json.dumps(rec), flush=True)
-            spark.catalog.clearCache()
+            with query_scope():
+                t0 = time.perf_counter()
+                df = REGISTRY[name].build(spark, sf_dir)
+                # noop write, same as bench.py:154 — a bare count() lets
+                # Catalyst prune every computed projection, so a
+                # projection-heavy query probes at the cost of its spine
+                # row count, not the query (VERDICT r5 #2: q261 probed
+                # 0.54 s while benching 29.1 s). The noop sink forces full
+                # evaluation of every output column with zero write cost.
+                # The row count piggybacks on the SAME action via observe()
+                # (ADVICE r6: a post-timing count() re-executed the whole
+                # plan, roughly doubling probe wall-clock for lazy plans).
+                obs = Observation()
+                df.observe(obs, F.count(F.lit(1)).alias("rows")).write.format(
+                    "noop"
+                ).mode("overwrite").save()
+                secs[sf_dir] = round(time.perf_counter() - t0, 2)
+                n = obs.get["rows"]
+                rec = {
+                    "query": name,
+                    "sf_dir": sf_dir,
+                    "secs": secs[sf_dir],
+                    "rows": n,
+                    **plan_stats(df),
+                }
+                print(json.dumps(rec), flush=True)
         ratios[name] = round(secs[args.scaled] / max(secs[args.base], 1e-9), 1)
     print(json.dumps({"time_ratio_10x": ratios}), flush=True)
     spark.stop()
