@@ -124,7 +124,7 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # now a fixed-size md5-bucket sample; modulus 1 at every test SF so
     # outputs are unchanged there, but the registered plans + oracles
     # changed).
-    "q264_ivf_recall_sweep": 17,  # round 17: see the queue's end
+    "q264_ivf_recall_sweep": 20,  # round 20: see the queue's end
     "q272_pq_codebook_audit": 15,  # round 15: see the queue's end
     # round 8: SimHash family migrated to the 60-bit fingerprint
     # (VERDICT r7 #2; q21's r8+ green row still covers it — the
@@ -239,7 +239,7 @@ _REVERIFY_QUEUE: dict[str, int] = {
     "q312_gate_compaction_replay": 15,  # round 15: see the queue's end
     "q313_recommended_gate_replay": 14,
     "q315_center_threshold_drift": 15,  # round 15: see the queue's end
-    "q316_ivf_cell_split_recovery": 17,  # round 17: see the queue's end
+    "q316_ivf_cell_split_recovery": 20,  # round 20: see the queue's end
     "q317_bucketed_gate_compaction": 15,  # round 15: see the queue's end
     # round 14 (simplicity): both gate writers run one shared skeleton
     # (one manifest read per batch, caches released on every exit
@@ -268,8 +268,8 @@ _REVERIFY_QUEUE: dict[str, int] = {
     "q278_dedup_family_agreement": 15,
     "q280_simhash_hamming_histogram": 15,
     "q282_corpus_yield_waterfall": 15,
-    "q284_ivfpq_topk": 17,  # round 17: see the queue's end
-    "q309_ivf_centroid_migration": 17,  # round 17: see the queue's end
+    "q284_ivfpq_topk": 20,  # round 20: see the queue's end
+    "q309_ivf_centroid_migration": 20,  # round 20: see the queue's end
     "q318_maintenance_planner": 15,
     # round 16 (simplicity): operator parameters no caller sets became
     # constants, and the builders that restated them as arguments no
@@ -285,7 +285,7 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # partition scan; ivf_assign and assign_to_centroids share it.
     # Cells bit-identical, oracles untouched; the 4 round-17 names
     # above are updated in place, the 1 below is new.
-    "q303_ann_index_erasure": 17,
+    "q303_ann_index_erasure": 20,  # round 20: see the queue's end
     # round 18 (optimization): tokens are projected once per row and
     # every n-gram/shingle lambda reads that column (doc_shingles, so
     # every MinHash/Jaccard consumer, and the builders that closed over
@@ -294,6 +294,11 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # the 6 of them already queued (updated in place above), q18 and
     # the one below fit the 50-name window. CHANGES.md lists the rest.
     "q19_minhash_signatures": 18,
+    # round 20 (optimization): the IVF cell argmax is parsed from one
+    # SQL expression (the same tree; cells bit-identical), so the 5
+    # IVF names above are updated in place. q177/q187 no longer build
+    # their cast array twice (values identical) but are not queued:
+    # the 50 active names already fill the window.
 }
 
 

@@ -20,10 +20,10 @@ from __future__ import annotations
 
 import math
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from movie_data_pipeline_spark.functions.numeric import round4
 from movie_data_pipeline_spark.functions.text import base_hash32
 from movie_data_pipeline_spark.operators.util import spread
 
@@ -207,6 +207,13 @@ def cell_centroids(assigned: DataFrame) -> DataFrame:
     )
 
 
+def _sql_double(v: float) -> str:
+    """``v`` as a Spark SQL double that parses back to the same bits:
+    ``repr`` is the shortest round-tripping decimal form; NaN and the
+    infinities have no literal, so they are cast from a string."""
+    return f"{v!r}D" if math.isfinite(v) else f"CAST('{v}' AS DOUBLE)"
+
+
 def _assign_cells(
     corpus: DataFrame, codebook: list[list[float]], quantize: bool
 ) -> DataFrame:
@@ -215,9 +222,11 @@ def _assign_cells(
     (round4-quantized when ``quantize``), ties toward the lowest index.
 
     Map-only: the codebook is compiled into a per-row argmax
-    expression. Each vector's double cast and norm are projected once
-    below it (the ``cosine_topk`` idiom) and each codebook norm is a
-    literal, all in :func:`cosine`'s fold order, so scores are
+    expression, parsed from one SQL string (one driver call, where
+    Column calls cost one per literal). Each vector's double cast and
+    norm are projected once below it (the ``cosine_topk`` idiom) and
+    each codebook norm is a literal, all in :func:`cosine`'s fold
+    order with :func:`dot`'s and :func:`round4`'s trees, so scores are
     bit-identical to the inline per-seed form.
     """
     # a prefix longer than every column name cannot collide with one
@@ -232,19 +241,25 @@ def _assign_cells(
         sq = 0.0
         for v in cvec:
             sq += v * v
-        lit = F.array(*map(F.lit, cvec))
-        sim = dot(F.col(vec), lit) / (F.col(norm) * F.lit(math.sqrt(sq)))
-        sim = round4(sim) if quantize else sim
+        sim = (
+            f"aggregate(zip_with(`{vec}`, array({', '.join(map(_sql_double, cvec))}), "
+            "(x, y) -> x * y), 0.0D, (acc, v) -> acc + v)"
+            f" / (`{norm}` * {_sql_double(math.sqrt(sq))})"
+        )
+        if quantize:
+            sim = f"FLOOR(({sim}) * 10000.0D + 0.5D) / 10000.0D"
         # struct compares lexicographically: sim first, then -index, so
         # array_max picks the highest sim and breaks ties toward the
         # LOWEST index.
-        candidates.append(F.struct(sim.alias("s"), F.lit(-i).alias("ni")))
-    best_cell = (-F.array_max(F.array(*candidates)).getField("ni")).cast("int")
+        candidates.append(f"named_struct('s', {sim}, 'ni', {-i})")
+    best_cell = F.expr(
+        f"coalesce(CAST(-array_max(array({', '.join(candidates)})).ni AS INT), 0)"
+    )
     return (
         spread(corpus)
         .withColumn(vec, _to_double(F.col("embedding")))
         .withColumn(norm, l2_norm(F.col(vec)))
-        .withColumn("cell", F.coalesce(best_cell, F.lit(0)))
+        .withColumn("cell", best_cell)
         .drop(vec, norm)
     )
 
@@ -320,8 +335,15 @@ def cosine_topk_ivf(
     is a shuffle equi-join on cell — never a cross join against the full
     corpus. Recall depends on how clustered the data is; the planted-
     cluster test pins it ≥ 0.9 where real structure exists.
+
+    The assignment has two readers (the centroid aggregate and the
+    candidate join), so it is persisted, lazily: the first reader's
+    stage fills the cache and the other reads it, which makes one
+    corpus scan, one round-robin exchange and one argmax per vector per
+    call. The returned plan reads that cache, so it lives until the
+    caller's ``query_scope()`` (or ``clearCache()``) ends it.
     """
-    assigned = ivf_assign(corpus, n_cells)
+    assigned = ivf_assign(corpus, n_cells).persist(StorageLevel.MEMORY_AND_DISK)
     cents = cell_centroids(assigned)
     q = queries.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")

@@ -826,12 +826,16 @@ def q177_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.transform("embedding", lambda x: x.cast("double")).alias("arr"),
     )
+    # posexplode the raw column: exploding ``arr`` makes Catalyst infer
+    # size(arr) > 0 below the projection, i.e. build ``arr`` twice
     cents = (
-        vecs.select(F.col("label").alias("cid"), F.posexplode("arr").alias("dim_idx", "x"))
+        emb.select(
+            F.col("label").alias("cid"), F.posexplode("embedding").alias("dim_idx", "x")
+        )
         .groupBy("cid", "dim_idx")
         .agg(
             (
-                F.sum(F.col("x").cast("decimal(38,18)")).cast("double")
+                F.sum(F.col("x").cast("double").cast("decimal(38,18)")).cast("double")
                 / F.count("*").cast("double")
             ).alias("val")
         )

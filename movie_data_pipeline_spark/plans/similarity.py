@@ -773,16 +773,16 @@ def q187_source_centroid_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), "source"
     )
-    v = emb.join(docs, "vec_id").select(
-        "source",
-        F.transform("embedding", lambda x: x.cast("double")).alias("arr"),
-    )
+    # posexplode the raw column and cast per element: exploding a
+    # projected transform(embedding) makes Catalyst infer size(...) > 0
+    # below the projection, i.e. build the array twice
     cents = (
-        v.select("source", F.posexplode("arr").alias("dim_idx", "x"))
+        emb.join(docs, "vec_id")
+        .select("source", F.posexplode("embedding").alias("dim_idx", "x"))
         .groupBy("source", "dim_idx")
         .agg(
             (
-                F.sum(F.col("x").cast("decimal(38,18)")).cast("double")
+                F.sum(F.col("x").cast("double").cast("decimal(38,18)")).cast("double")
                 / F.count("*").cast("double")
             ).alias("val")
         )

@@ -4,6 +4,9 @@ estimator's guarantee versus the exact answer on the same data."""
 
 from __future__ import annotations
 
+import struct
+
+import pytest
 from pyspark.sql import functions as F
 
 from movie_data_pipeline_spark.operators.approx import (
@@ -13,6 +16,8 @@ from movie_data_pipeline_spark.operators.approx import (
 )
 from movie_data_pipeline_spark.functions.numeric import round4
 from movie_data_pipeline_spark.operators.similarity import (
+    _assign_cells,
+    _sql_double,
     assign_to_centroids,
     cell_centroids,
     cosine,
@@ -20,8 +25,17 @@ from movie_data_pipeline_spark.operators.similarity import (
     cosine_topk_ivf,
     ivf_assign,
 )
+from movie_data_pipeline_spark.operators.util import query_scope
 from movie_data_pipeline_spark.sources.registry import load_table
 from tests.conftest import TESTDATA_SF_DIR
+
+
+@pytest.fixture(autouse=True)
+def _scoped(spark):
+    """Each test is one query: the caches it makes (cosine_topk_ivf's
+    assignment) end with it instead of leaking into later modules."""
+    with query_scope():
+        yield
 
 
 def test_approx_distinct_within_bounds(spark):
@@ -154,13 +168,6 @@ def test_ivf_nprobe_all_cells_is_exact(spark):
     assert full == exact
 
 
-def _final_plan(df) -> str:
-    """Tree string of the AQE final plan of an executed ``df``."""
-    text = df._jdf.queryExecution().executedPlan().toString()
-    assert "isFinalPlan=true" in text, text[:200]
-    return text.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
-
-
 def _subtrees(plan: str, marker: str) -> list[str]:
     """The text of every subtree whose root line contains ``marker``."""
     lines = plan.splitlines()
@@ -180,24 +187,58 @@ def _subtrees(plan: str, marker: str) -> list[str]:
     return out
 
 
+def _final_plan(adaptive) -> str:
+    """Tree string of the final plan of an executed AdaptiveSparkPlanExec."""
+    assert adaptive.toString().startswith("AdaptiveSparkPlan isFinalPlan=true")
+    return adaptive.executedPlan().toString()
+
+
+def _cached_relations(df) -> list:
+    """The ``InMemoryRelation`` leaves of ``df``'s plan, one per reader
+    of a persisted frame."""
+    leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
+    leaves = [leaves.apply(i) for i in range(leaves.length())]
+    return [r for r in leaves if r.getClass().getSimpleName() == "InMemoryRelation"]
+
+
 def test_ivf_argmax_runs_above_the_spread_exchange(spark, tmp_path):
     # one parquet file arrives as one partition, so spread() repartitions
     # it round-robin; the per-vector argmax must run above that exchange
-    # (parallel), once per branch, never in the single-partition scan
+    # (parallel), never in the single-partition scan, and once per call:
+    # both readers of the assignment read one cached materialization
     path = str(tmp_path / "emb")
     _planted_clusters(spark).coalesce(1).write.parquet(path)
     emb = spark.read.parquet(path)
     assert emb.rdd.getNumPartitions() == 1
     out = cosine_topk_ivf(emb, emb.orderBy("vec_id").limit(8), k=5)
     out.collect()
-    plan = _final_plan(out)
-    below = _subtrees(plan, "RoundRobinPartitioning")
-    assert below, plan
-    assert not any("array_max" in sub for sub in below), plan
-    assert plan.count("array_max") == 2, plan
+    readers = _cached_relations(out)
+    assert len(readers) == 2, readers
+    builders = {r.cacheBuilder().cachedColumnBuffers().id() for r in readers}
+    assert len(builders) == 1, builders
+    cached = _final_plan(readers[0].cacheBuilder().cachedPlan())
+    assert cached.count("array_max") == 1, cached
+    below = _subtrees(cached, "RoundRobinPartitioning")
+    assert below, cached
+    assert not any("array_max" in sub for sub in below), cached
+    outer = _final_plan(out._jdf.queryExecution().executedPlan())
+    for sub in _subtrees(outer, "InMemoryRelation"):
+        outer = outer.replace(sub, "")
+    assert "InMemoryTableScan" in outer and "array_max" not in outer, outer
     assigned = ivf_assign(emb)
     assert assigned.schema["cell"].nullable is False
     assert assigned.columns == emb.columns + ["cell"]
+
+
+def test_ivf_topk_cache_ends_with_the_query_scope(spark):
+    emb = _planted_clusters(spark)
+    jsc = spark.sparkContext._jsc
+    entry = set(jsc.getPersistentRDDs().keySet().toArray())
+    with query_scope():
+        cosine_topk_ivf(emb, emb.orderBy("vec_id").limit(4), k=5).collect()
+        assert set(jsc.getPersistentRDDs().keySet().toArray()) - entry
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) == entry
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def _reference_cells(df, codebook, quantize):
@@ -234,3 +275,35 @@ def test_ivf_cells_match_the_inline_cosine_argmax(spark):
         ]
         got = {r.vec_id: r.cell for r in assign_to_centroids(emb, cents).collect()}
         assert got == _reference_cells(emb, cents, quantize=True)
+
+
+def test_sql_double_literals_round_trip(spark):
+    vals = [1e-05, -0.0, 0.1, 5e-324, 1.7976931348623157e308, -2.5e-300]
+    vals += [float("inf"), float("-inf"), float("nan")]
+    row = spark.sql(
+        "SELECT " + ", ".join(f"{_sql_double(v)} AS c{i}" for i, v in enumerate(vals))
+    ).first()
+    for v, got in zip(vals, row):
+        assert struct.pack(">d", got) == struct.pack(">d", v), (v, got)
+
+
+def test_compiled_argmax_matches_reference_on_extreme_codebooks(spark):
+    emb = _planted_clusters(spark)
+    seeds = [
+        [float(v) for v in r.embedding]
+        for r in emb.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
+        .limit(6)
+        .collect()
+    ]
+    seeds[0][0], seeds[0][1] = -0.0, 1e-05
+    seeds[1] = [v * 1e150 for v in seeds[1]]
+    seeds[2] = [v * 1e-160 for v in seeds[2]]  # subnormal squared norm
+    seeds[3] = [v * 1e200 for v in seeds[3]]  # squared norm overflows to inf
+    seeds[4] = [1e-05] * len(seeds[4])
+    for quantize in (False, True):
+        got = {
+            r.vec_id: r.cell
+            for r in _assign_cells(emb, seeds, quantize).select("vec_id", "cell").collect()
+        }
+        assert got == _reference_cells(emb, seeds, quantize)
+        assert len(set(got.values())) > 1

@@ -1,10 +1,11 @@
 """CI plan audit (VERDICT r1 item 8): every catalog query's physical
-plan is checked for the four scale smells — row-at-a-time Python UDFs
+plan is checked for the five scale smells — row-at-a-time Python UDFs
 (BatchEvalPython), cartesian products, unpartitioned windows outside
-the documented bounded-frame allowlist, and per-row work re-evaluated
-inside higher-order lambdas — so the r1 global-window fixes
-(q40/q93/q120/q123, faithful-id default) and the hoisted tokenizer
-can't regress silently.
+the documented bounded-frame allowlist, per-row work re-evaluated
+inside higher-order lambdas, and arrays built twice by an inferred
+``size(...) > 0`` filter — so the r1 global-window fixes
+(q40/q93/q120/q123, faithful-id default), the hoisted tokenizer and
+the single cast-array build of q177/q187 can't regress silently.
 
 Analysis-only: plans are built and explained at sf0.001, never executed
 (iterative builders do run their plan-time jobs)."""
@@ -114,3 +115,24 @@ def test_structural_lambda_invariant_detector(spark):
     assert lambda_invariant_subexpressions(scaled) == [
         "Abs(Subtract(Size(AttributeReference), Literal))"
     ]
+
+
+def test_structural_rebuilt_array_detector(spark):
+    """The rebuilt-array rule flags the size(...) > 0 filter Catalyst
+    infers under an inner posexplode of a projected transform (the
+    array is then built twice per row) and stays silent when the raw
+    column is exploded and each element cast instead."""
+    from audit_plans import rebuilt_array_filters
+    from pyspark.sql import functions as F
+
+    emb = spark.createDataFrame([(1, [0.5, 0.25])], "vec_id INT, embedding ARRAY<FLOAT>")
+    arr = emb.select(F.transform("embedding", lambda x: x.cast("double")).alias("arr"))
+    twice = arr.select(F.posexplode("arr"))
+    assert rebuilt_array_filters(twice) == [
+        "GreaterThan(Size(ArrayTransform(AttributeReference, "
+        "LambdaFunction(Cast(NamedLambdaVariable), NamedLambdaVariable))), Literal)"
+    ]
+    once = emb.select(F.posexplode("embedding").alias("i", "x")).select(
+        "i", F.col("x").cast("double")
+    )
+    assert rebuilt_array_filters(once) == []

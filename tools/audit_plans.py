@@ -2,7 +2,8 @@
 """Dump `explain(formatted)` for every catalog query and flag plan
 smells: Python row-UDFs (BatchEvalPython), cartesian products,
 single-partition windows outside the documented bounded-frame
-allowlist, and per-row work repeated inside higher-order lambdas.
+allowlist, per-row work repeated inside higher-order lambdas, and
+arrays built twice per row by an inferred ``size(...) > 0`` filter.
 
 Usage: python tools/audit_plans.py [sf_dir] > plans.txt
 
@@ -139,6 +140,33 @@ def lambda_invariant_subexpressions(df) -> list[str]:
     return found
 
 
+def rebuilt_array_filters(df) -> list[str]:
+    """Authoritative detector for an array built twice per row: under
+    an inner ``explode``/``posexplode`` of a projected array, Catalyst
+    infers ``size(arr) > 0`` and pushes it below the projection, where
+    it becomes ``size(<the projection's higher-order function>) > 0``,
+    so the filter builds the array once and the projection again.
+    Walks the Filter conditions of the optimized logical plan as JSON."""
+    import json
+
+    nodes = json.loads(df._jdf.queryExecution().optimizedPlan().toJSON())
+    found = []
+    stack = [
+        tree
+        for node in nodes
+        if node.get("class", "").endswith(".logical.Filter")
+        for tree in _expression_trees(node["condition"])
+    ]
+    while stack:
+        tree = stack.pop()
+        cls, kids = tree
+        rebuilt = cls == "GreaterThan" and kids[0][0] == "Size"
+        if rebuilt and "lambda" in _references(kids[0]):
+            found.append(_render(tree))
+        stack.extend(kids)
+    return found
+
+
 # Queries where a single-partition window is the intended design: the
 # windowed frame is provably bounded, independent of fact-table size.
 WINDOW_OK = {
@@ -161,7 +189,8 @@ def audit_plan(name: str, plan: str, df=None) -> list[str]:
     """Smell list for one query: string markers from the formatted
     physical plan, plus the structural unpartitioned-window check when
     the DataFrame is available (regex fallback otherwise) and the
-    lambda-invariant check, which needs the DataFrame."""
+    lambda-invariant and rebuilt-array checks, which need the
+    DataFrame."""
     problems = [
         f"{name}: {why}" for marker, why in SMELLS.items() if marker in plan
     ]
@@ -177,6 +206,10 @@ def audit_plan(name: str, plan: str, df=None) -> list[str]:
         problems.extend(
             f"{name}: per-row {expr} re-evaluated inside a lambda"
             for expr in sorted(set(lambda_invariant_subexpressions(df)))
+        )
+        problems.extend(
+            f"{name}: array built twice, once for filter {expr}"
+            for expr in sorted(set(rebuilt_array_filters(df)))
         )
     return problems
 

@@ -6,7 +6,7 @@ empirical point behind "this plan survives a 10x scale-up"
 (VERDICT r2 #8).
 
     python tools/make_scaled_data.py --out /tmp/mdp_sf1
-    python tools/scale_probe_queries.py [qname ...] \
+    python tools/scale_probe_queries.py [qname|qNN ...] \
         [--scaled /tmp/mdp_sf1] [--base /root/testdata/sf0.1]
 
 Per query x scale, prints one JSON line:
@@ -79,7 +79,13 @@ def main() -> int:
     ap.add_argument("--base", default="/root/testdata/sf0.1")
     ap.add_argument("--scaled", default="/tmp/mdp_sf1")
     args = ap.parse_args()
-    names = args.queries or [q for q in DEFAULT_QUERIES if q in REGISTRY]
+    prefixes = args.queries or DEFAULT_QUERIES
+    # a full name or its qNN prefix, as tools/capture_plans.py takes them
+    names = [
+        n for p in prefixes for n in REGISTRY if n == p or n.startswith(p + "_")
+    ]
+    if args.queries and not names:
+        raise SystemExit(f"no queries match {args.queries}")
 
     spark = get_spark(app_name="scale-probe-queries")
     # Untimed warmup: pay JVM boot + first-query codegen before any
