@@ -628,22 +628,19 @@ def simhash_band_rows(
     banding: band values come from the permuted fingerprint while the
     emitted ``simhash`` stays the ORIGINAL fingerprint (Hamming is
     permutation-invariant, so exact verification is unchanged). Like
-    the rung, the assignment is an index-build parameter — rows banded
-    under different assignments never join meaningfully, so a stored
-    index pins it in the manifest (``meta.simhash_bit_blocks``) and
-    the gate validates it per batch. ``None`` = identity layout
-    (bit_idx div 10), bit-for-bit the pre-round-11 band rows.
+    the rung, the assignment is part of a stored index's layout — rows
+    banded under different assignments never join meaningfully.
+    ``None`` = identity layout (bit_idx div 10), bit-for-bit the
+    pre-round-11 band rows.
 
     ``rung=None`` picks the rung from the in-plan fingerprint count
-    (self-join use). An INDEX must pin an explicit rung at build time —
-    band rows created under different rungs never join (band_idx is
-    globally unique per rung, see :func:`simhash_band_combos`), so a
-    gate that bands each arriving batch by the batch's own size would
-    silently stop matching its stored index; streaming/sinks.py's
-    SimHash gate pins the rung as an index-build parameter AND
-    validates it against the manifest's ``meta.simhash_rung`` table
-    property on every batch (one JSON read; the stored index's rung
-    column is only a legacy fallback for pre-meta indexes).
+    (self-join use). An INDEX is built at an explicit rung — band rows
+    created under different rungs never join (band_idx is globally
+    unique per rung, see :func:`simhash_band_combos`), so a gate that
+    bands each arriving batch by the batch's own size would silently
+    stop matching its stored index. The index manifest records the
+    rung and assignment, and every gate writer bands each batch under
+    the recorded layout (operators/index_lifecycle.simhash_index).
     """
     t1, t2 = simhash_rung_thresholds()
     if rung is None:

@@ -14,13 +14,17 @@ content the corpus no longer contains. (The reference has no deletion
 story at all beyond an in-place DELETE, etl1.py:380-383; this module
 is the erasure leg the lakehouse extension needs.)
 
-Likewise the SimHash index rung is pinned at build time
-(operators/dedup.py — band rows from different rungs never join), but
-when corpus growth crosses a ladder threshold the only documented path
-was the failure mode. :func:`migrate_simhash_index` is the missing
-operator: a map-only re-band of the stored *fingerprints* — no text
-re-hash, one overwrite commit, validated by the gate's existing rung
-check on the next batch.
+A stored band index records its own layout in its manifest's table
+properties: the SimHash rung, banding permutation and centered
+thresholds, and the bucketed partition layout of either family. This
+module owns that layout: :func:`simhash_layout` and
+:func:`bucket_layout` state a fresh index's layout,
+:func:`simhash_index` and :func:`bucketed` build rows under one, and
+:func:`stored_simhash_layout` reads it back. Every gate writer adopts
+the stored layout on each batch, so a migration needs no writer
+restart. When corpus growth crosses a ladder threshold,
+:func:`migrate_simhash_index` re-bands the stored *fingerprints*: no
+text re-hash, one overwrite commit that records the new layout.
 
 Scale notes: every function here is one or two linear passes over the
 index (a semi-join against the corpus key column — column-pruned at
@@ -30,12 +34,104 @@ quadratic, nothing collects more than a version number.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from movie_data_pipeline_spark.functions.numeric import round4
+from movie_data_pipeline_spark.operators.dedup import (
+    SIMHASH_BITS,
+    _simhash_votes,
+    measure_balanced_bit_blocks,
+    measure_center_thresholds,
+    simhash,
+    simhash_band_rows,
+    simhash_centered_pinned,
+    simhash_rung_thresholds,
+)
 from movie_data_pipeline_spark.operators.util import overlap
 from movie_data_pipeline_spark.sources.versioned import VersionedTable
+
+
+def bucket_layout(k: int | None) -> dict:
+    """The table properties of a band index bucketed by ``pbucket`` =
+    doc_id mod ``k`` (Hive-partitioned, so an erasure scrub rewrites
+    only the touched buckets); ``{}`` for an unbucketed index."""
+    if k is None:
+        return {}
+    return {"partition_by": "pbucket", "bucket_k": int(k)}
+
+
+def bucketed(rows: DataFrame, layout: dict) -> DataFrame:
+    """``rows`` with the ``pbucket`` column ``layout`` partitions by,
+    or unchanged when the layout is unbucketed."""
+    k = layout.get("bucket_k")
+    if k is None:
+        return rows
+    return rows.withColumn(
+        "pbucket", F.expr(f"CAST(pmod(doc_id, {int(k)}) AS INT)")
+    )
+
+
+def simhash_layout(
+    rung: int,
+    bit_blocks: list[int] | None,
+    bucket_k: int | None,
+    thresholds: dict | None,
+) -> dict:
+    """The layout of a SimHash band index, as its manifest records it:
+    the ladder ``rung`` (band_idx is unique per rung, so rows of two
+    rungs never join), the banding permutation ``bit_blocks`` (None =
+    identity, operators/dedup.balanced_bit_blocks), the bucketed
+    partition layout for ``bucket_k``, and the pinned per-bit
+    ``thresholds`` of a centered index (None = zero threshold;
+    operators/dedup.measure_center_thresholds)."""
+    layout = {
+        "simhash_rung": int(rung),
+        "simhash_bit_blocks": (
+            None if bit_blocks is None else [int(b) for b in bit_blocks]
+        ),
+        **bucket_layout(bucket_k),
+    }
+    if thresholds is not None:
+        layout["simhash_center_s"] = [int(x) for x in thresholds["s"]]
+        layout["simhash_center_n"] = int(thresholds["n"])
+    return layout
+
+
+def stored_simhash_layout(index: VersionedTable, version: int) -> dict:
+    """The layout recorded by ``version`` of a stored SimHash index.
+    An index committed before manifests carried table properties
+    records none and is refused: rebuild it."""
+    meta = index.manifest(version).get("meta") or {}
+    if "simhash_rung" not in meta:
+        raise ValueError(
+            f"simhash index at {index.path} is a pre-meta index: its "
+            "manifest records no layout (simhash_rung); rebuild it"
+        )
+    return meta
+
+
+def simhash_fingerprints(docs: DataFrame, layout: dict) -> DataFrame:
+    """(doc_id, simhash) of ``docs`` in ``layout``'s fingerprint space:
+    under its pinned thresholds when it is centered, else the zero
+    threshold."""
+    if "simhash_center_s" not in layout:
+        return simhash(docs)
+    return simhash_centered_pinned(
+        docs,
+        {"s": layout["simhash_center_s"], "n": layout["simhash_center_n"]},
+    )
+
+
+def simhash_index(fp: DataFrame, layout: dict) -> DataFrame:
+    """The stored rows of a SimHash band index over the fingerprints
+    ``fp``: band rows at ``layout``'s rung and permutation, the
+    ``rung`` column, and ``pbucket`` when the layout is bucketed."""
+    rung = int(layout["simhash_rung"])
+    rows = simhash_band_rows(
+        fp, rung=rung, bit_blocks=layout.get("simhash_bit_blocks")
+    ).withColumn("rung", F.lit(rung))
+    return bucketed(rows, layout)
 
 
 def scrub_index_to_corpus(
@@ -222,14 +318,11 @@ def count_phantom_index_rows(
     return head.join(live_ids, "doc_id", "left_anti").count()
 
 
-_KEEP = "keep"
-
-
 def migrate_simhash_index(
     spark: SparkSession,
     index_path: str,
     new_rung: int,
-    bit_blocks: list[int] | None | str = _KEEP,
+    bit_blocks: list[int] | None = None,
 ) -> int:
     """Rebuild a stored SimHash band index at ``new_rung`` from its own
     stored fingerprints — the operator a gate runs when corpus growth
@@ -239,92 +332,45 @@ def migrate_simhash_index(
     No re-fingerprinting: the index rows already carry one
     ``(doc_id, simhash)`` pair per band row, so the migration is
     ``distinct`` + the new rung's 6/15/20-row band explode
-    (``simhash_band_rows`` with the rung pinned) — a map-only rewrite
-    linear in document count, committed as ONE overwrite snapshot with
-    the manifest's ``simhash_rung`` property updated in the same
-    commit. Readers see the old rung or the new rung, never a mix
-    (snapshot isolation), and a gate writer restarted with the stale
-    rung fails the manifest validation loudly instead of silently
-    accepting duplicates (streaming/sinks.simhash_gate_batch_writer).
+    (:func:`simhash_index`) — a map-only rewrite linear in document
+    count, committed as ONE overwrite snapshot that records the new
+    layout in the same commit. Readers see the old rung or the new
+    rung, never a mix (snapshot isolation), and every gate writer,
+    including one built before the migration, bands its next batch
+    under the new layout it reads from the manifest.
 
-    ``bit_blocks`` (round 11, VERDICT r10 #1) migrates the BANDING
-    ASSIGNMENT in the same one-commit cadence: pass an entropy-balanced
-    permutation (``operators/dedup.measure_balanced_bit_blocks`` over
-    the index's own stored fingerprints — no text access needed) to
-    re-band under it, ``None`` to reset to the identity layout, or
-    leave the default to keep the stored assignment. The manifest's
-    ``simhash_bit_blocks`` property updates atomically with the rows,
-    so a gate writer pinned to the old assignment fails its manifest
-    validation loudly on the next batch.
+    ``bit_blocks`` migrates the BANDING ASSIGNMENT in the same commit:
+    pass an entropy-balanced permutation
+    (``operators/dedup.measure_balanced_bit_blocks`` over the index's
+    own stored fingerprints — no text access needed) to re-band under
+    it; None keeps the stored assignment. The rest of the stored
+    layout (bucketing, centered thresholds) is kept.
 
     Returns the new committed version. Raises ValueError when the
     migration would be a no-op rewrite (same rung AND same assignment
-    — a silent full rewrite hides configuration bugs) or when
-    ``new_rung`` is not a ladder rung.
+    — a silent full rewrite hides configuration bugs), when
+    ``new_rung`` is not a ladder rung, or on a pre-meta index.
     """
-    from movie_data_pipeline_spark.operators.dedup import simhash_band_rows
-
     if new_rung not in (1, 2, 3):
         raise ValueError(f"new_rung must be 1, 2 or 3, got {new_rung}")
     index = VersionedTable(index_path)
-    head = index.read(spark)
-    meta = index.manifest().get("meta") or {}
-    stored_blocks = meta.get("simhash_bit_blocks")
-    if isinstance(bit_blocks, str):
-        if bit_blocks != _KEEP:
-            raise ValueError(f"bit_blocks must be a list, None or 'keep'")
-        target_blocks = stored_blocks
-    else:
-        target_blocks = (
-            None if bit_blocks is None else [int(b) for b in bit_blocks]
-        )
-    stored = meta.get("simhash_rung")
-    if stored is None:
-        # Legacy fallback (pre-meta indexes): min/max aggregate — a
-        # mixed-rung index is corruption and must fail deterministically
-        # (ADVICE r10), never pass on whichever row came back first.
-        row = head.agg(
-            F.min("rung").alias("lo"), F.max("rung").alias("hi")
-        ).first()
-        if row["lo"] is not None and row["lo"] != row["hi"]:
-            raise ValueError(
-                f"simhash index at {index_path} holds mixed rungs "
-                f"{row['lo']}..{row['hi']} — corrupted index"
-            )
-        stored = row["lo"]
-    if stored == new_rung and target_blocks == stored_blocks:
+    v = index.current_version()
+    layout = stored_simhash_layout(index, v)
+    target = {**layout, "simhash_rung": int(new_rung)}
+    if bit_blocks is not None:
+        target["simhash_bit_blocks"] = [int(b) for b in bit_blocks]
+    if target == layout:
         raise ValueError(
             f"simhash index at {index_path} is already at rung "
             f"{new_rung} under this banding assignment; migration "
             "would be a no-op rewrite"
         )
-    fp = head.select("doc_id", "simhash").distinct()
-    rebanded = simhash_band_rows(
-        fp, rung=new_rung, bit_blocks=target_blocks
-    ).withColumn("rung", F.lit(int(new_rung)))
-    # MERGE the manifest properties, never replace (ADVICE r11): a
-    # replacement meta silently dropped everything else the index
-    # carries — the bucketed partition layout (partition_by/bucket_k,
-    # flattening the table and failing every later gate batch) and the
-    # pinned centered thresholds (simhash_center_s/n). Only the two
-    # banding properties this migration owns are updated.
-    merged = dict(meta)
-    merged.update(
-        {
-            "simhash_rung": int(new_rung),
-            "simhash_bit_blocks": target_blocks,
-        }
+    fp = (
+        index.read(spark, version=v).select("doc_id", "simhash").distinct()
     )
-    bucket_k = merged.get("bucket_k")
-    if bucket_k is not None:
-        # The rebanded rows are rebuilt from (doc_id, simhash) pairs
-        # and lack the partition column — re-derive it so the bucketed
-        # layout (and its pruned scrubs) survives the migration.
-        rebanded = rebanded.withColumn(
-            "pbucket",
-            F.expr(f"CAST(pmod(doc_id, {int(bucket_k)}) AS INT)"),
-        )
-    return index.commit(rebanded, mode="overwrite", meta=merged)
+    return index.commit(
+        simhash_index(fp, target), mode="overwrite", meta=target
+    )
 
 
 def migrate_ivf_index(
@@ -547,11 +593,6 @@ def audit_center_thresholds(
     pays to fingerprint, entirely in-plan (the per-bit rows come from
     an explode of the single aggregate row, no driver collect).
     """
-    from movie_data_pipeline_spark.operators.dedup import (
-        SIMHASH_BITS,
-        _simhash_votes,
-    )
-
     idx = VersionedTable(index_path)
     meta = idx.manifest().get("meta") or {}
     if "simhash_center_s" not in meta:
@@ -620,41 +661,24 @@ def recenter_simhash_index(
     is preserved exactly (semi-join — subset indexes stay subsets, the
     migrate_ivf_index discipline).
 
-    Layout discipline: the manifest properties MERGE (ADVICE r11) —
-    the rung is kept, the bucketed layout survives (``pbucket``
-    re-derived on the new rows), and if the index was banded under a
-    balanced assignment the assignment is RE-MEASURED over the new
-    fingerprint space (the old permutation equalized the OLD space's
-    skew); a naive-banded index stays naive. A gate writer restarted
-    against the migrated index adopts the new thresholds from the
-    manifest (``recommended_simhash_gate_batch_writer``) or fails its
-    validation loudly (explicit writer with stale config) — the same
-    boundary contract q307 proves for the banding axis. Also valid as
-    the RESCUE path for a zero-threshold index (centered=False build):
-    the commit pins first-ever thresholds and the index becomes
-    centered.
+    Layout discipline: the rung and the bucketed layout are kept
+    (``pbucket`` re-derived on the new rows), and if the index was
+    banded under a balanced assignment the assignment is RE-MEASURED
+    over the new fingerprint space (the old permutation equalized the
+    OLD space's skew); a naive-banded index stays naive. The new
+    thresholds and assignment are recorded in the same commit, and
+    every gate writer adopts them on its next batch. Also valid as the
+    RESCUE path for a zero-threshold index (centered=False build): the
+    commit pins first-ever thresholds and the index becomes centered.
 
     Returns the new committed version. Cost: one fingerprint pass +
     one band explode over the members — what the original build paid;
-    linear, no driver-side data.
+    linear, no driver-side data. Raises on a pre-meta index.
     """
-    from movie_data_pipeline_spark.operators.dedup import (
-        measure_balanced_bit_blocks,
-        measure_center_thresholds,
-        simhash_band_rows,
-        simhash_centered_pinned,
-    )
-
     index = VersionedTable(index_path)
-    meta = dict(index.manifest().get("meta") or {})
-    rung = meta.get("simhash_rung")
-    if rung is None:
-        raise ValueError(
-            f"simhash index at {index_path} has no pinned rung "
-            "(legacy pre-meta index) — migrate it first "
-            "(migrate_simhash_index)"
-        )
-    head = index.read(spark)
+    v = index.current_version()
+    layout = stored_simhash_layout(index, v)
+    head = index.read(spark, version=v)
     corpus = VersionedTable(corpus_path).read(spark)
     member_ids = head.select("doc_id").distinct()
     n_phantom = member_ids.join(
@@ -669,27 +693,19 @@ def recenter_simhash_index(
     members = corpus.join(member_ids, "doc_id", "left_semi")
     thresholds = measure_center_thresholds(members)
     fp = simhash_centered_pinned(members, thresholds)
-    blocks = meta.get("simhash_bit_blocks")
+    blocks = layout.get("simhash_bit_blocks")
     if blocks is not None:
         fp = fp.localCheckpoint(eager=False)
         blocks = measure_balanced_bit_blocks(fp)
-    rebanded = simhash_band_rows(
-        fp, rung=int(rung), bit_blocks=blocks
-    ).withColumn("rung", F.lit(int(rung)))
-    bucket_k = meta.get("bucket_k")
-    if bucket_k is not None:
-        rebanded = rebanded.withColumn(
-            "pbucket",
-            F.expr(f"CAST(pmod(doc_id, {int(bucket_k)}) AS INT)"),
-        )
-    meta.update(
-        {
-            "simhash_center_s": [int(x) for x in thresholds["s"]],
-            "simhash_center_n": int(thresholds["n"]),
-            "simhash_bit_blocks": blocks,
-        }
+    target = {
+        **layout,
+        **simhash_layout(
+            layout["simhash_rung"], blocks, layout.get("bucket_k"), thresholds
+        ),
+    }
+    return index.commit(
+        simhash_index(fp, target), mode="overwrite", meta=target
     )
-    return index.commit(rebanded, mode="overwrite", meta=meta)
 
 
 def build_order_manifest(
@@ -825,8 +841,6 @@ def audit_shard_manifest(
     column-pruned joins + one groupBy(shard) — linear, exactly the
     manifest build cost.
     """
-    from pyspark.sql import DataFrame  # noqa: F401
-
     from movie_data_pipeline_spark.functions.text import base_hash32
     from movie_data_pipeline_spark.operators.prefix import (
         attach_global_row_number,
@@ -940,12 +954,6 @@ def plan_maintenance(
     audit costs of the underlying operators, nothing more.
     """
     from functools import reduce
-
-    from pyspark.sql import DataFrame
-
-    from movie_data_pipeline_spark.operators.dedup import (
-        simhash_rung_thresholds,
-    )
 
     def row(target: str, action: str, metric: float, threshold: float,
             recommended: bool) -> DataFrame:

@@ -2602,12 +2602,13 @@ def q318_maintenance_planner(
         band_signatures,
         measure_center_thresholds,
         minhash_signatures_wide,
-        simhash_band_rows,
         simhash_centered_pinned,
     )
     from movie_data_pipeline_spark.operators.index_lifecycle import (
         build_order_manifest,
         plan_maintenance,
+        simhash_index,
+        simhash_layout,
     )
     from movie_data_pipeline_spark.sources.versioned import VersionedTable
 
@@ -2627,16 +2628,9 @@ def q318_maintenance_planner(
         # tables from the same committed snapshot — independent eager
         # jobs in separate directories.
         def _build_sh() -> None:
+            layout = simhash_layout(1, None, None, th0)
             VersionedTable(sh_p).commit(
-                simhash_band_rows(fp, rung=1).withColumn(
-                    "rung", F.lit(1)
-                ),
-                meta={
-                    "simhash_rung": 1,
-                    "simhash_bit_blocks": None,
-                    "simhash_center_s": [int(x) for x in th0["s"]],
-                    "simhash_center_n": int(th0["n"]),
-                },
+                simhash_index(fp, layout), meta=layout
             )
 
         def _build_mh() -> None:

@@ -4848,11 +4848,9 @@ def q315_center_threshold_drift(
        near-balance, not strict improvement on an undrifted sample),
        and equals by construction the in-plan centered balance q305
        measures;
-    5. the boundary contract: a default-constructed
-       ``recommended_simhash_gate_batch_writer`` adopts the NEW
-       thresholds from the manifest and rejects shifted-id duplicates
-       of indexed content (asserted — no corpus growth, no index
-       commit).
+    5. the boundary contract: a gate writer adopts the NEW layout
+       from the manifest and rejects shifted-id duplicates of indexed
+       content (asserted — no corpus growth, no index commit).
 
     The hashed result is both audit frames; the oracle derives them
     from the vote arithmetic alone (pinned = quarter-corpus totals,
@@ -4868,12 +4866,14 @@ def q315_center_threshold_drift(
     from movie_data_pipeline_spark.operators.dedup import (
         measure_balanced_bit_blocks,
         measure_center_thresholds,
-        simhash_band_rows,
         simhash_centered_pinned,
     )
     from movie_data_pipeline_spark.operators.index_lifecycle import (
         audit_center_thresholds,
         recenter_simhash_index,
+        simhash_fingerprints,
+        simhash_index,
+        simhash_layout,
     )
     from movie_data_pipeline_spark.sources.versioned import VersionedTable
     from movie_data_pipeline_spark.streaming.sinks import (
@@ -4894,21 +4894,9 @@ def q315_center_threshold_drift(
                 batch0.select("doc_id"), "doc_id", "left_semi"
             )
         )
-        rows0 = simhash_band_rows(
-            fp_all, rung=1, bit_blocks=blocks0
-        ).withColumn("rung", F.lit(1)).withColumn(
-            "pbucket", F.expr("CAST(pmod(doc_id, 8) AS INT)")
-        )
+        layout0 = simhash_layout(1, blocks0, 8, th0)
         VersionedTable(index_path).commit(
-            rows0,
-            meta={
-                "simhash_rung": 1,
-                "simhash_bit_blocks": blocks0,
-                "simhash_center_s": [int(x) for x in th0["s"]],
-                "simhash_center_n": int(th0["n"]),
-                "partition_by": "pbucket",
-                "bucket_k": 8,
-            },
+            simhash_index(fp_all, layout0), meta=layout0
         )
 
         before = audit_center_thresholds(
@@ -4945,16 +4933,8 @@ def q315_center_threshold_drift(
 
         def _equality() -> None:
             # byte-equal a from-scratch centered build over the members
-            th2 = {
-                "s": meta2["simhash_center_s"],
-                "n": meta2["simhash_center_n"],
-            }
-            fresh = simhash_band_rows(
-                simhash_centered_pinned(docs, th2),
-                rung=1,
-                bit_blocks=meta2["simhash_bit_blocks"],
-            ).withColumn("rung", F.lit(1)).withColumn(
-                "pbucket", F.expr("CAST(pmod(doc_id, 8) AS INT)")
+            fresh = simhash_index(
+                simhash_fingerprints(docs, meta2), meta2
             )
             # both exceptAll directions scan fresh — the fingerprint
             # subtree is the expensive kind that pays for an explicit

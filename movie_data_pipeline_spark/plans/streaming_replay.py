@@ -851,7 +851,7 @@ def q287_simhash_index_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     with scratch_dir("q287") as base:
         acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         docs = stream_table(spark, sf_dir, "documents")
-        q = start_simhash_gate_stream(docs, acc, idx, ckpt, rung=1)
+        q = start_simhash_gate_stream(docs, acc, idx, ckpt)
         _await(q, "q287")
         return _accepted_corpus(spark, acc)
 
@@ -941,7 +941,7 @@ def q292_simhash_multibatch_gate(
         (stream,) = _split_streams(
             spark, base, docs, "doc_id", 2, "q292", one_source=True
         )
-        q = start_simhash_gate_stream(stream, acc, idx, ckpt, rung=1)
+        q = start_simhash_gate_stream(stream, acc, idx, ckpt)
         _await(q, "q292")
         _assert_fed(q, 2, "q292")
         return _accepted_corpus(spark, acc)
@@ -1049,7 +1049,7 @@ def q295_index_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     with scratch_dir("q295") as base:
         acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         docs = stream_table(spark, sf_dir, "documents")
-        q = start_simhash_gate_stream(docs, acc, idx, ckpt, rung=1)
+        q = start_simhash_gate_stream(docs, acc, idx, ckpt)
         _await(q, "q295")
 
         acc_t, idx_t = VersionedTable(acc), VersionedTable(idx)
@@ -1068,7 +1068,7 @@ def q295_index_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         erase_documents(spark, acc, [idx], "doc_id % 7 = 3")
         # corpus/index versions: v0 initial, v1 post-erase/post-scrub
-        simhash_gate_batch_writer(acc, idx, rung=1)(resub, 99)
+        simhash_gate_batch_writer(acc, idx)(resub, 99)
         # v2: re-submission commit on both tables
 
         acc0 = acc_t.read(spark, version=0).select("doc_id")
@@ -1187,12 +1187,12 @@ def q296_simhash_rung_migration(
 
     The replay drives the whole boundary: even doc_ids stream through
     a rung-1 gate (batch 0 → corpus + rung-1 index), the index is
-    MIGRATED to rung 2, then odd doc_ids stream through a rung-2 gate
-    whose manifest validation now passes — its within-batch keep-first
-    and its (band_idx, band_val) corpus join both run on rung-2 bands
-    against the MIGRATED rows. The oracle spells out both batches at
-    their respective rungs from one all-rung band table: batch-1
-    novelty is decided by rung-2 banded candidates (guaranteed
+    MIGRATED to rung 2, then odd doc_ids stream through a gate that
+    adopts the migrated layout from the manifest — its within-batch
+    keep-first and its (band_idx, band_val) corpus join both run on
+    rung-2 bands against the MIGRATED rows. The oracle spells out both
+    batches at their respective rungs from one all-rung band table:
+    batch-1 novelty is decided by rung-2 banded candidates (guaranteed
     complete for Hamming<=4; band-sampled at 5 — exactly what the
     production layout computes) verified at the exact <=5 bar against
     batch-0's accepted fingerprints. Equality proves the migrated
@@ -1215,12 +1215,12 @@ def q296_simhash_rung_migration(
             spark, base, docs, "doc_id", 2, "q296", one_source=False
         )
         q0 = start_simhash_gate_stream(
-            streams[0], acc, idx, f"{base}/ckpt0", rung=1
+            streams[0], acc, idx, f"{base}/ckpt0"
         )
         _await(q0, "q296 batch 0")
         migrate_simhash_index(spark, idx, 2)
         q1 = start_simhash_gate_stream(
-            streams[1], acc, idx, f"{base}/ckpt1", rung=2
+            streams[1], acc, idx, f"{base}/ckpt1"
         )
         _await(q1, "q296 batch 1")
 
@@ -1314,7 +1314,7 @@ def q299_erasure_vacuum_compliance(
     with scratch_dir("q299") as base:
         acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         docs = stream_table(spark, sf_dir, "documents")
-        q = start_simhash_gate_stream(docs, acc, idx, ckpt, rung=1)
+        q = start_simhash_gate_stream(docs, acc, idx, ckpt)
         _await(q, "q299")
 
         acc_t, idx_t = VersionedTable(acc), VersionedTable(idx)
@@ -1611,12 +1611,12 @@ def q302_midstream_erasure_gate(
             spark, base, docs, "doc_id", 2, "q302", one_source=False
         )
         q0 = start_simhash_gate_stream(
-            streams[0], acc, idx, f"{base}/ckpt0", rung=1
+            streams[0], acc, idx, f"{base}/ckpt0"
         )
         _await(q0, "q302 batch 0")
         erase_documents(spark, acc, [idx], "doc_id % 10 = 0")
         q1 = start_simhash_gate_stream(
-            streams[1], acc, idx, f"{base}/ckpt1", rung=1
+            streams[1], acc, idx, f"{base}/ckpt1"
         )
         _await(q1, "q302 batch 1")
 
@@ -1733,10 +1733,10 @@ def q307_banding_migration_gate(
     ``migrate_simhash_index`` commit re-bands at rung 2 under that
     assignment and atomically pins both ``simhash_rung`` and
     ``simhash_bit_blocks`` in the manifest; odd doc_ids then stream
-    through a rung-2 gate pinned to the same assignment — its manifest
-    validation passes, and its within-batch keep-first and index join
-    both run on PERMUTED band values with the exact Hamming<=5 bar
-    (permutation-invariant) against the migrated rows.
+    through a gate that adopts that layout from the manifest — its
+    within-batch keep-first and index join both run on PERMUTED rung-2
+    band values with the exact Hamming<=5 bar (permutation-invariant)
+    against the migrated rows.
 
     The oracle derives everything from first principles: batch-0's
     greedy rung-1 corpus, the per-bit counts of exactly those accepted
@@ -1745,8 +1745,8 @@ def q307_banding_migration_gate(
     the permuted fingerprints, and batch-1 novelty via permuted rung-2
     bands verified at the exact bar. Equality proves the migrated
     index is byte-equivalent to one BUILT balanced at rung 2 — the
-    banding migration loses nothing, invents nothing, and the gate's
-    pinned-assignment validation holds across it.
+    banding migration loses nothing, invents nothing, and the gate
+    keeps deduplicating across it.
     """
 
     from movie_data_pipeline_spark.operators.dedup import (
@@ -1768,7 +1768,7 @@ def q307_banding_migration_gate(
             spark, base, docs, "doc_id", 2, "q307", one_source=False
         )
         q0 = start_simhash_gate_stream(
-            streams[0], acc, idx, f"{base}/ckpt0", rung=1
+            streams[0], acc, idx, f"{base}/ckpt0"
         )
         _await(q0, "q307 batch 0")
         blocks = measure_balanced_bit_blocks(
@@ -1779,8 +1779,7 @@ def q307_banding_migration_gate(
         )
         migrate_simhash_index(spark, idx, 2, bit_blocks=blocks)
         q1 = start_simhash_gate_stream(
-            streams[1], acc, idx, f"{base}/ckpt1", rung=2,
-            bit_blocks=blocks,
+            streams[1], acc, idx, f"{base}/ckpt1"
         )
         _await(q1, "q307 batch 1")
 
@@ -1844,9 +1843,9 @@ def q308_partitioned_index_erasure(
     q295 proved the erasure scrub's semantics; its cost model was a
     full-index rewrite per commit. This replay drives the same cadence
     through a BUCKETED index (``index_bucket_k=8``: band rows
-    Hive-partitioned by ``doc_id mod 8``, layout pinned in the
-    manifest's ``partition_by``/``bucket_k`` properties and validated
-    per batch) and proves the scrub now PRUNES:
+    Hive-partitioned by ``doc_id mod 8``, layout recorded in the
+    manifest's ``partition_by``/``bucket_k`` properties and adopted by
+    every batch) and proves the scrub now PRUNES:
 
     1. documents stream through the rung-1 SimHash gate with the
        bucketed index layout;
@@ -1890,7 +1889,7 @@ def q308_partitioned_index_erasure(
         acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         docs = stream_table(spark, sf_dir, "documents")
         q = start_simhash_gate_stream(
-            docs, acc, idx, ckpt, rung=1, index_bucket_k=8
+            docs, acc, idx, ckpt, index_bucket_k=8
         )
         _await(q, "q308")
 
@@ -1921,9 +1920,7 @@ def q308_partitioned_index_erasure(
             len(e["parts"]) for e in post["data_dirs"] if isinstance(e, dict)
         )
         n_touched = pre_buckets - n_inherited
-        simhash_gate_batch_writer(acc, idx, rung=1, index_bucket_k=8)(
-            resub, 99
-        )
+        simhash_gate_batch_writer(acc, idx)(resub, 99)
 
         acc0 = acc_t.read(spark, version=0).select("doc_id")
         acc1 = acc_t.read(spark, version=1).select("doc_id")
@@ -2025,12 +2022,11 @@ def q311_centered_gate_replay(
        (operators/dedup.measure_center_thresholds) and the index
        commit pins them in the manifest
        (``simhash_center_s``/``simhash_center_n``);
-    2. odd doc_ids stream through the SAME gate: it reads the PINNED
-       thresholds from the manifest and fingerprints batch 1 in the
-       same space (re-measuring from batch 1 would silently fork the
-       fingerprint space — the rung failure mode again; a
-       zero-threshold writer on this index fails the manifest
-       validation loudly, unit-tested);
+    2. odd doc_ids stream through a gate that adopts the index
+       layout: it reads the PINNED thresholds from the manifest and
+       fingerprints batch 1 in the same space (re-measuring from
+       batch 1 would silently fork the fingerprint space — the rung
+       failure mode again);
     3. the accepted corpus is returned.
 
     The oracle derives the thresholds from the even documents' votes
@@ -2053,13 +2049,13 @@ def q311_centered_gate_replay(
             spark, base, docs, "doc_id", 2, "q311", one_source=False
         )
         q0 = start_simhash_gate_stream(
-            streams[0], acc, idx, f"{base}/ckpt0", rung=1, centered=True
+            streams[0], acc, idx, f"{base}/ckpt0", centered=True
         )
         _await(q0, "q311 batch 0")
         meta = VersionedTable(idx).manifest()["meta"]
         assert "simhash_center_s" in meta, "thresholds not pinned"
         q1 = start_simhash_gate_stream(
-            streams[1], acc, idx, f"{base}/ckpt1", rung=1, centered=True
+            streams[1], acc, idx, f"{base}/ckpt1"
         )
         _await(q1, "q311 batch 1")
         # batch 1 must NOT have re-pinned: thresholds unchanged
@@ -2206,7 +2202,7 @@ def q312_gate_compaction_replay(
         (stream,) = _split_streams(
             spark, base, docs, "doc_id", 3, "q312", one_source=True
         )
-        q = start_simhash_gate_stream(stream, acc, idx, ckpt, rung=1)
+        q = start_simhash_gate_stream(stream, acc, idx, ckpt)
         _await(q, "q312")
         _assert_fed(q, 3, "q312")
         acc_t, idx_t = VersionedTable(acc), VersionedTable(idx)
@@ -2226,7 +2222,7 @@ def q312_gate_compaction_replay(
         resub = accepted_before.withColumn(
             "doc_id", F.col("doc_id") + F.lit(1_000_000_000)
         ).localCheckpoint(eager=True)
-        simhash_gate_batch_writer(acc, idx, rung=1)(resub, 99)
+        simhash_gate_batch_writer(acc, idx)(resub, 99)
 
         acc_after = acc_t.read(spark)
         n_final = accepted_before.count()
@@ -2569,7 +2565,7 @@ def q317_bucketed_gate_compaction(
             spark, base, docs, "doc_id", 3, "q317", one_source=True
         )
         q = start_simhash_gate_stream(
-            stream, acc, idx, ckpt, rung=1, index_bucket_k=8
+            stream, acc, idx, ckpt, index_bucket_k=8
         )
         _await(q, "q317")
         acc_t, idx_t = VersionedTable(acc), VersionedTable(idx)
@@ -2625,9 +2621,7 @@ def q317_bucketed_gate_compaction(
         resub = accepted_before.withColumn(
             "doc_id", F.col("doc_id") + F.lit(2_999_999_997)
         ).localCheckpoint(eager=True)
-        simhash_gate_batch_writer(acc, idx, rung=1, index_bucket_k=8)(
-            resub, 99
-        )
+        simhash_gate_batch_writer(acc, idx)(resub, 99)
         acc_after = acc_t.read(spark)
         reaccepted = acc_after.join(
             accepted_before.select("doc_id"), "doc_id", "left_anti"

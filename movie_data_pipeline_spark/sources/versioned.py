@@ -124,13 +124,13 @@ class VersionedTable:
 
         ``meta`` is an optional JSON-serializable dict of table-level
         properties recorded in the manifest (Delta's table properties /
-        Iceberg's snapshot summary) — e.g. the SimHash gate pins its
-        index ``simhash_rung`` here so a restarted writer validates its
-        configuration against ONE manifest read instead of scanning the
-        index rows. Properties are TABLE-level, not snapshot-level:
+        Iceberg's snapshot summary) — e.g. a band index records its
+        layout here (operators/index_lifecycle), so every gate writer
+        adopts it from ONE manifest read instead of scanning the index
+        rows. Properties are TABLE-level, not snapshot-level:
         when ``meta`` is None every commit (append AND overwrite)
         inherits the parent's properties unchanged — a delete_where /
-        compact / scrub rewrite must not silently drop the pinned rung.
+        compact / scrub rewrite must not silently drop the layout.
         Pass an explicit dict (``{}`` to clear) to replace them.
 
         ``partition_by`` (round 11) writes the data dir Hive-partitioned

@@ -34,8 +34,26 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
 
+from movie_data_pipeline_spark.operators.dedup import (
+    band_signatures,
+    lsh_candidate_pairs_wide,
+    measure_balanced_bit_blocks,
+    measure_center_thresholds,
+    minhash_signatures_wide,
+    simhash_centered_pinned,
+    simhash_hamming_pairs,
+)
+from movie_data_pipeline_spark.operators.index_lifecycle import (
+    bucket_layout,
+    bucketed,
+    simhash_fingerprints,
+    simhash_index,
+    simhash_layout,
+    stored_simhash_layout,
+)
 from movie_data_pipeline_spark.operators.merge import upsert
 from movie_data_pipeline_spark.operators.util import cached
+from movie_data_pipeline_spark.sources.versioned import VersionedTable
 
 
 def _start_available_now(
@@ -111,8 +129,6 @@ def versioned_append_writer(
     query fails fast rather than silently dropping a batch; restart
     resumes from the checkpoint and retries on the new head.
     """
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
-
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -135,34 +151,36 @@ def start_versioned_append_stream(
 def _gate_writer(
     accepted_path: str,
     index_path: str,
-    index_bucket_k: int | None,
-    sign: Callable[[DataFrame, dict | None], tuple[DataFrame, dict | None]],
-    batch_pairs: Callable[[DataFrame], DataFrame],
-    band_rows: Callable[[DataFrame], DataFrame],
-    check: Callable[[dict, DataFrame], None],
+    stored_layout: Callable[[VersionedTable, int], dict],
+    fresh_layout: Callable[[DataFrame], dict],
+    sign: Callable[[DataFrame, dict], DataFrame],
+    batch_pairs: Callable[[DataFrame, dict], DataFrame],
+    band_rows: Callable[[DataFrame, dict], DataFrame],
     corpus_hits: Callable[[DataFrame, DataFrame], DataFrame],
 ) -> Callable[[DataFrame, int], None]:
     """The near-duplicate ingest gate both fingerprint families share;
     a family supplies only its own functions:
 
-    - ``sign(batch_df, meta)`` → (fingerprint frame, index meta to
-      commit, or None to inherit the index's table properties);
-      ``meta`` is the index manifest's table properties, None while
-      the index has no committed version;
-    - ``batch_pairs(fp)`` → within-batch colliding pairs (doc_a <
-      doc_b); the higher id of each pair is dropped (keep-first);
-    - ``band_rows(fp)`` → the index rows of the batch;
-    - ``check(meta, index_df)`` raises when the writer's pinned
-      configuration does not match the committed index;
+    - ``stored_layout(index, version)`` → the layout the index
+      manifest records at ``version``;
+    - ``fresh_layout(batch_df)`` → the layout of an index that has no
+      committed version yet, recorded by its first commit;
+    - ``sign(batch_df, layout)`` → the fingerprint frame;
+    - ``batch_pairs(fp, layout)`` → within-batch colliding pairs
+      (doc_a < doc_b); the higher id of each pair is dropped
+      (keep-first);
+    - ``band_rows(fp, layout)`` → the index rows of the batch, with
+      ``pbucket`` on a bucketed layout;
     - ``corpus_hits(bands, index_df)`` → doc_ids matching the index.
 
-    Per batch: empty-batch guard; one manifest read; signing into a
-    cache; within-batch keep-first; the config check and the corpus-hit
-    anti-join against the validated snapshot; the survivor count (zero
-    survivors commit nothing); the replay-idempotency anti-join against
-    the accepted ``doc_id``s; the documents commit; then the index
-    commit of the survivors' band rows, REBALANCEd by ``pbucket`` on a
-    bucketed index.
+    Per batch: empty-batch guard; one manifest read, whose layout every
+    later step uses, so a batch is banded only under the layout of the
+    head snapshot it is checked against; signing into a cache;
+    within-batch keep-first; the corpus-hit anti-join against that
+    snapshot; the survivor count (zero survivors commit nothing); the
+    replay-idempotency anti-join against the accepted ``doc_id``s; the
+    documents commit; then the index commit of the survivors' band
+    rows, REBALANCEd by ``pbucket`` on a bucketed index.
 
     Commit ordering is documents-first: a crash between the two
     commits can leave accepted docs unindexed (a later duplicate may
@@ -174,7 +192,6 @@ def _gate_writer(
     replay's index commit back-fills their missing band rows. Every
     cache is released on the way out, also when a commit raises.
     """
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -182,26 +199,27 @@ def _gate_writer(
         spark = batch_df.sparkSession
         index = VersionedTable(index_path)
         head = index.current_version()
-        meta = None
-        if head is not None:
-            meta = index.manifest(head).get("meta") or {}
-        fp, idx_meta = sign(batch_df, meta)
+        layout = (
+            fresh_layout(batch_df)
+            if head is None
+            else stored_layout(index, head)
+        )
         # Counted on entry: the within-batch pair self-join and the
         # corpus check scan the fingerprints at several plan leaves of
         # one job, which on a cold cache would each recompute them.
-        with cached(fp) as fp:
-            bands = band_rows(fp)
+        with cached(sign(batch_df, layout)) as fp:
+            bands = band_rows(fp, layout)
             batch_dupes = (
-                batch_pairs(fp)
+                batch_pairs(fp, layout)
                 .select(F.col("doc_b").alias("doc_id"))
                 .distinct()
             )
             survivors = batch_df.join(batch_dupes, "doc_id", "left_anti")
             if head is not None:
-                index_df = index.read(spark, version=head)
-                check(meta, index_df)
                 survivors = survivors.join(
-                    corpus_hits(bands, index_df), "doc_id", "left_anti"
+                    corpus_hits(bands, index.read(spark, version=head)),
+                    "doc_id",
+                    "left_anti",
                 )
             # count() rather than isEmpty(): the emptiness guard is
             # needed either way, and a full count fills the whole
@@ -225,24 +243,20 @@ def _gate_writer(
                 idx_rows = bands.join(
                     survivors.select("doc_id"), "doc_id", "left_semi"
                 )
-                if index_bucket_k is not None:
-                    # Bucketed layout: rows Hive-partitioned by id mod
-                    # k, so an erasure scrub rewrites only touched
-                    # buckets. The bucket-keyed REBALANCE keeps each
-                    # append at one file per bucket while AQE sizes the
-                    # exchange — a tiny batch coalesces to few tasks
-                    # instead of k near-empty ones, and at scale an
-                    # oversized bucket splits into advisory-sized files.
-                    k = int(index_bucket_k)
-                    idx_rows = idx_rows.withColumn(
-                        "pbucket", F.expr(f"CAST(pmod(doc_id, {k}) AS INT)")
-                    ).hint("rebalance", "pbucket")
-                    idx_meta = {
-                        **(idx_meta or {}),
-                        "partition_by": "pbucket",
-                        "bucket_k": k,
-                    }
-                index.commit(idx_rows, mode="append", meta=idx_meta)
+                if "pbucket" in idx_rows.columns:
+                    # The bucket-keyed REBALANCE keeps each append at
+                    # one file per bucket while AQE sizes the exchange
+                    # — a tiny batch coalesces to few tasks instead of
+                    # k near-empty ones, and at scale an oversized
+                    # bucket splits into advisory-sized files.
+                    idx_rows = idx_rows.hint("rebalance", "pbucket")
+                # a fresh index records its layout with its first
+                # commit; later commits inherit it
+                index.commit(
+                    idx_rows,
+                    mode="append",
+                    meta=layout if head is None else None,
+                )
 
     return _apply
 
@@ -281,26 +295,10 @@ def dedup_gate_batch_writer(
     document twice and back-fills the index. (The accepted-side check
     reads only the ``doc_id`` column — column-pruned at the parquet
     scan; at corpus scale the same check is a bloom-filter or
-    key-manifest lookup.) ``index_bucket_k`` is checked against every
-    committed index's ``bucket_k``.
+    key-manifest lookup.) ``index_bucket_k`` chooses the bucket layout
+    of a fresh index (operators/index_lifecycle.bucket_layout); an
+    existing index keeps the layout its manifest records.
     """
-    from movie_data_pipeline_spark.operators.dedup import (
-        band_signatures,
-        lsh_candidate_pairs_wide,
-        minhash_signatures_wide,
-    )
-
-    def check(meta: dict, index_df: DataFrame) -> None:
-        stored_k = meta.get("bucket_k")
-        if stored_k != index_bucket_k:
-            raise ValueError(
-                f"dedup gate: index at {index_path} uses bucket "
-                f"layout k={stored_k} but this writer is pinned "
-                f"to k={index_bucket_k}; appending under a "
-                "different layout would tear the partitioned "
-                "table"
-            )
-
     def corpus_hits(bands: DataFrame, index_df: DataFrame) -> DataFrame:
         return (
             bands.join(
@@ -313,11 +311,11 @@ def dedup_gate_batch_writer(
     return _gate_writer(
         accepted_path,
         index_path,
-        index_bucket_k,
-        sign=lambda batch_df, meta: (minhash_signatures_wide(batch_df), None),
-        batch_pairs=lsh_candidate_pairs_wide,
-        band_rows=band_signatures,
-        check=check,
+        stored_layout=lambda index, v: index.manifest(v).get("meta") or {},
+        fresh_layout=lambda batch_df: bucket_layout(index_bucket_k),
+        sign=lambda batch_df, layout: minhash_signatures_wide(batch_df),
+        batch_pairs=lambda fp, layout: lsh_candidate_pairs_wide(fp),
+        band_rows=lambda fp, layout: bucketed(band_signatures(fp), layout),
         corpus_hits=corpus_hits,
     )
 
@@ -395,203 +393,14 @@ def start_mix_drift_stream(
     )
 
 
-def simhash_gate_batch_writer(
+def _simhash_gate(
     accepted_path: str,
     index_path: str,
-    rung: int = 1,
-    bit_blocks: list[int] | None = None,
-    index_bucket_k: int | None = None,
-    centered: bool = False,
+    fresh_layout: Callable[[DataFrame], dict],
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch writer: streaming near-dup ingest gate over the
-    60-bit SimHash family (round 9, VERDICT r8 #4) — the q205 MinHash
-    gate's contract re-run on the OTHER fingerprint index: 1 BIGINT
-    per doc instead of a 16-hash signature, with exact Hamming
-    verification at the index join.
-
-    Per batch (one fingerprint pass over the batch, one
-    (band_idx, band_val) equi-join against the stored index; the
-    corpus is never re-fingerprinted):
-
-    1. ``simhash`` over the batch (one 60-bit fingerprint per doc);
-    2. within-batch keep-first: ``simhash_hamming_pairs`` at the
-       pinned ``rung`` — drop the higher doc_id of each Hamming <=
-       5 pair (greedy min-representative, same
-       transitive-safety argument as the MinHash gate);
-    3. corpus check: the batch's band rows ⋈ stored index rows on
-       (band_idx, band_val), then exact XOR-popcount <= 5
-       against the indexed fingerprint — banding only generates
-       candidates, the verify bar is exact;
-    4. survivors commit docs-first, then their (doc_id, simhash,
-       band_idx, band_val, rung) rows into the index.
-
-    ``rung`` is an INDEX-BUILD parameter, pinned for the life of the
-    index: band rows created under different rungs never join (band_idx
-    is globally unique per rung — operators/dedup.simhash_band_combos),
-    so re-banding each batch by its own size would silently stop
-    matching the stored index. The rung is therefore PERSISTED — in the
-    manifest's table properties (``meta.simhash_rung``) and in every
-    index row — and validated on every batch from the manifest (one
-    JSON read, no index scan): a writer restarted with the wrong rung
-    raises instead of silently accepting duplicates. Size the rung for
-    the TARGET corpus (rung 3 carries ~10^9 docs at ~8
-    collisions/band), and migrate an index by re-banding its stored
-    fingerprints (:func:`operators.index_lifecycle.
-    migrate_simhash_index`) — a map-only rewrite, no text re-hash.
-
-    Crash/replay discipline is the shared gate skeleton's
-    (:func:`_gate_writer`), the same as the MinHash gate's: commits
-    are docs-first (a crash between commits may let a later duplicate
-    through — benign under at-least-once — never permanently rejects
-    unstored content); replays anti-join survivors against the
-    accepted table's doc_ids so nothing lands twice, and the replay's
-    index commit back-fills missing band rows.
-
-    ``centered`` (round 11, VERDICT r10 #1): fingerprint with the
-    CENTERED operator family instead of the zero threshold — on the
-    FIRST batch the per-bit thresholds are measured from that batch
-    (operators/dedup.measure_center_thresholds) and pinned in the
-    manifest (``simhash_center_s``/``simhash_center_n``); every later
-    batch fingerprints against the PINNED thresholds
-    (simhash_centered_pinned), so all fingerprints live in one
-    consistent space (re-measuring per batch would fork it — the rung
-    failure mode again). A centered writer on an uncentered index, or
-    vice versa, fails the manifest validation loudly. The centered
-    space keeps the band floor near uniform on template corpora
-    (q305/q306: skew_inflation ~1x vs 404x), at the cost that the
-    thresholds are corpus statistics frozen at build — re-center by
-    re-fingerprinting (a text re-hash), or rescue an existing
-    zero-threshold index map-only with ``bit_blocks``.
-
-    ``bit_blocks`` (round 11, VERDICT r10 #1): the entropy-balanced
-    banding permutation (operators/dedup.balanced_bit_blocks) under
-    which the index's band rows were built. Like the rung it is an
-    INDEX-BUILD parameter — band values from different assignments
-    never join meaningfully — so it is persisted in the manifest
-    (``meta.simhash_bit_blocks``) and validated per batch with the
-    same one-JSON-read discipline; a writer restarted with a different
-    assignment fails loudly. Exact Hamming verification uses the
-    ORIGINAL fingerprints (permutation-invariant), so the accept/
-    reject bar is unchanged — only the band-collision floor drops.
-    """
-    from movie_data_pipeline_spark.operators.dedup import (
-        measure_center_thresholds,
-        simhash,
-        simhash_band_rows,
-        simhash_centered_pinned,
-        simhash_hamming_pairs,
-    )
-
-    blocks_meta = None if bit_blocks is None else [int(b) for b in bit_blocks]
-
-    def sign(batch_df: DataFrame, meta: dict | None):
-        idx_meta = {
-            "simhash_rung": int(rung),
-            "simhash_bit_blocks": blocks_meta,
-        }
-        if not centered:
-            return simhash(batch_df), idx_meta
-        if meta is not None and "simhash_center_s" in meta:
-            thresholds = {
-                "s": meta["simhash_center_s"],
-                "n": meta["simhash_center_n"],
-            }
-        elif meta is not None:
-            # A committed index with no pinned thresholds was NOT
-            # built centered (legacy/pre-meta, or zero-threshold).
-            # Re-measuring from this batch would fingerprint each
-            # batch in its own space — duplicates of indexed docs
-            # silently pass, the exact fork the thresholds exist to
-            # prevent. Fail loudly: rebuild required.
-            raise ValueError(
-                f"simhash gate: index at {index_path} has committed "
-                "versions but no pinned centered thresholds "
-                "(simhash_center_s) — it was not built centered and "
-                "the two fingerprint spaces never match; rebuild "
-                "the index centered or run this writer with "
-                "centered=False"
-            )
-        else:
-            # index build: measure once, pinned by the first commit
-            thresholds = measure_center_thresholds(batch_df)
-        idx_meta["simhash_center_s"] = [int(x) for x in thresholds["s"]]
-        idx_meta["simhash_center_n"] = int(thresholds["n"])
-        return simhash_centered_pinned(batch_df, thresholds), idx_meta
-
-    def check(meta: dict, index_df: DataFrame) -> None:
-        # Rung is pinned per-index and validated on every batch: band
-        # rows written under a different rung would silently never join
-        # (global band_idx disambiguates rungs), letting duplicates of
-        # indexed docs through — a misconfigured writer must fail
-        # loudly instead. The stored rung comes from the manifest's
-        # table properties (one JSON read, not an index scan per
-        # batch), with a fallback for indexes committed before
-        # manifests carried ``meta``. An EMPTY committed index has no
-        # rung to validate — it is treated as unvalidated, same as no
-        # version at all.
-        stored = meta.get("simhash_rung")
-        if stored is None:
-            # Legacy fallback (pre-meta indexes only): aggregate
-            # min/max over the rung column — deterministic, and a
-            # corrupted mixed-rung index fails loudly instead of
-            # nondeterministically passing on an arbitrary row. Paid
-            # once per legacy index: the next commit backfills the
-            # manifest property.
-            row = index_df.agg(
-                F.min("rung").alias("lo"), F.max("rung").alias("hi")
-            ).first()
-            if row["lo"] is not None and row["lo"] != row["hi"]:
-                raise ValueError(
-                    f"simhash gate: index at {index_path} holds "
-                    f"mixed rungs {row['lo']}..{row['hi']} — "
-                    "corrupted index; rebuild or migrate it"
-                )
-            stored = row["lo"]
-        if stored is not None and stored != rung:
-            raise ValueError(
-                f"simhash gate: index at {index_path} was built "
-                f"at rung {stored} but this writer is pinned to "
-                f"rung {rung}; migrate the index (re-band its "
-                "stored fingerprints — operators/"
-                "index_lifecycle.migrate_simhash_index) or pin "
-                "the matching rung"
-            )
-        # The banding permutation, bucket layout and fingerprint space
-        # are pinned the same way, and only validated when the manifest
-        # carries meta (a pre-meta index predates all three).
-        if "simhash_rung" not in meta:
-            return
-        stored_blocks = meta.get("simhash_bit_blocks")
-        if stored_blocks != blocks_meta:
-            raise ValueError(
-                f"simhash gate: index at {index_path} was "
-                f"banded under bit assignment "
-                f"{stored_blocks} but this writer is pinned "
-                f"to {blocks_meta}; migrate the index "
-                "(operators/index_lifecycle."
-                "migrate_simhash_index with bit_blocks) or "
-                "pin the matching assignment"
-            )
-        stored_k = meta.get("bucket_k")
-        if stored_k != index_bucket_k:
-            raise ValueError(
-                f"simhash gate: index at {index_path} uses "
-                f"bucket layout k={stored_k} but this "
-                f"writer is pinned to k={index_bucket_k}; "
-                "appending under a different layout would "
-                "tear the partitioned table"
-            )
-        stored_centered = "simhash_center_s" in meta
-        if stored_centered != centered:
-            raise ValueError(
-                f"simhash gate: index at {index_path} holds "
-                f"{'centered' if stored_centered else 'zero-threshold'} "
-                f"fingerprints but this writer is "
-                f"{'centered' if centered else 'zero-threshold'}; "
-                "the two fingerprint spaces never match — "
-                "rebuild the index or match the writer"
-            )
-
+    """The SimHash family of the gate skeleton: every step runs under
+    the layout of the index (operators/index_lifecycle.simhash_layout),
+    and ``fresh_layout`` chooses it for an index with no commits."""
     def corpus_hits(bands: DataFrame, index_df: DataFrame) -> DataFrame:
         corpus_bands = index_df.select(
             "band_idx", "band_val", F.col("simhash").alias("idx_simhash")
@@ -608,20 +417,102 @@ def simhash_gate_batch_writer(
             .distinct()
         )
 
+    def batch_pairs(fp: DataFrame, layout: dict) -> DataFrame:
+        return simhash_hamming_pairs(
+            fp,
+            rung=layout["simhash_rung"],
+            bit_blocks=layout.get("simhash_bit_blocks"),
+        )
+
     return _gate_writer(
         accepted_path,
         index_path,
-        index_bucket_k,
-        sign=sign,
-        batch_pairs=lambda fp: simhash_hamming_pairs(
-            fp, rung=rung, bit_blocks=bit_blocks
-        ),
-        band_rows=lambda fp: simhash_band_rows(
-            fp, rung=rung, bit_blocks=bit_blocks
-        ).withColumn("rung", F.lit(int(rung))),
-        check=check,
+        stored_layout=stored_simhash_layout,
+        fresh_layout=fresh_layout,
+        sign=simhash_fingerprints,
+        batch_pairs=batch_pairs,
+        band_rows=simhash_index,
         corpus_hits=corpus_hits,
     )
+
+
+def simhash_gate_batch_writer(
+    accepted_path: str,
+    index_path: str,
+    rung: int = 1,
+    bit_blocks: list[int] | None = None,
+    index_bucket_k: int | None = None,
+    centered: bool = False,
+) -> Callable[[DataFrame, int], None]:
+    """foreachBatch writer: streaming near-dup ingest gate over the
+    60-bit SimHash family — the MinHash gate's contract re-run on the
+    OTHER fingerprint index: 1 BIGINT per doc instead of a 16-hash
+    signature, with exact Hamming verification at the index join.
+
+    Per batch (one fingerprint pass over the batch, one
+    (band_idx, band_val) equi-join against the stored index; the
+    corpus is never re-fingerprinted):
+
+    1. ``simhash`` over the batch (one 60-bit fingerprint per doc);
+    2. within-batch keep-first: ``simhash_hamming_pairs`` at the
+       index's rung — drop the higher doc_id of each Hamming <= 5 pair
+       (greedy min-representative, same transitive-safety argument as
+       the MinHash gate);
+    3. corpus check: the batch's band rows ⋈ stored index rows on
+       (band_idx, band_val), then exact XOR-popcount <= 5
+       against the indexed fingerprint — banding only generates
+       candidates, the verify bar is exact;
+    4. survivors commit docs-first, then their (doc_id, simhash,
+       band_idx, band_val, rung) rows into the index.
+
+    The index LAYOUT — rung, banding permutation, bucket layout and
+    fingerprint space — is recorded in the index manifest by its first
+    commit (operators/index_lifecycle.simhash_layout), and every batch
+    runs under the layout of the snapshot it is checked against: band
+    rows built under another rung or permutation would never join the
+    stored ones (band_idx is globally unique per rung —
+    operators/dedup.simhash_band_combos), so a batch is never banded
+    any other way. The arguments therefore choose the layout of a
+    FRESH index only; on an existing index they are ignored, and a
+    writer built before a migration
+    (:func:`operators.index_lifecycle.migrate_simhash_index`,
+    :func:`operators.index_lifecycle.recenter_simhash_index`) gates
+    under the migrated layout from its next batch on.
+
+    - ``rung``: the ladder rung. Size it for the TARGET corpus (rung 3
+      carries ~10^9 docs at ~8 collisions/band), or migrate the index
+      later by re-banding its stored fingerprints — a map-only
+      rewrite, no text re-hash.
+    - ``bit_blocks``: the entropy-balanced banding permutation
+      (operators/dedup.balanced_bit_blocks). Exact Hamming
+      verification uses the ORIGINAL fingerprints
+      (permutation-invariant), so the accept/reject bar is unchanged —
+      only the band-collision floor drops.
+    - ``index_bucket_k``: bucket the index by doc_id mod k, so erasure
+      scrubs rewrite only touched buckets.
+    - ``centered``: fingerprint with the CENTERED operator family
+      instead of the zero threshold. The first batch measures the
+      per-bit thresholds (operators/dedup.measure_center_thresholds)
+      and the index pins them; every later batch fingerprints against
+      the pinned thresholds, so all fingerprints live in one space.
+      The centered space keeps the band floor near uniform on template
+      corpora (q305/q306: skew_inflation ~1x vs 404x), at the cost
+      that the thresholds are corpus statistics frozen at build —
+      re-center with a text re-hash (``recenter_simhash_index``).
+
+    Crash/replay discipline is the shared gate skeleton's
+    (:func:`_gate_writer`), the same as the MinHash gate's: commits
+    are docs-first (a crash between commits may let a later duplicate
+    through — benign under at-least-once — never permanently rejects
+    unstored content); replays anti-join survivors against the
+    accepted table's doc_ids so nothing lands twice, and the replay's
+    index commit back-fills missing band rows.
+    """
+    def fresh_layout(batch_df: DataFrame) -> dict:
+        thresholds = measure_center_thresholds(batch_df) if centered else None
+        return simhash_layout(rung, bit_blocks, index_bucket_k, thresholds)
+
+    return _simhash_gate(accepted_path, index_path, fresh_layout)
 
 
 RECOMMENDED_INDEX_BUCKET_K = 64
@@ -630,14 +521,13 @@ RECOMMENDED_INDEX_BUCKET_K = 64
 def recommended_simhash_gate_batch_writer(
     accepted_path: str, index_path: str
 ) -> Callable[[DataFrame, int], None]:
-    """The DEFAULT build path for a NEW SimHash gate index (round 12,
-    VERDICT r11 #1): every scale mitigation round 11 proved is applied
-    with zero tuning arguments, so a fresh 2026 deployment gets the
-    mitigated collision floor and pruned maintenance instead of
-    rebuilding round 10's problems.
+    """The DEFAULT build path for a NEW SimHash gate index: every scale
+    mitigation is applied with zero tuning arguments, so a fresh
+    deployment gets the mitigated collision floor and pruned
+    maintenance.
 
     On a FRESH index (no committed version) the first batch measures
-    and pins the full recommended layout in one cadence:
+    and records the full recommended layout:
 
     - **centered fingerprints** (``simhash_center_s/n`` pinned in the
       manifest; q306: band-collision skew inflation ~1x vs 404x raw);
@@ -649,67 +539,23 @@ def recommended_simhash_gate_batch_writer(
       to touched buckets, q308: 115x less write volume).
 
     A fresh index is banded at rung 1 and verified at Hamming <= 5.
-
-    On an EXISTING index the ENTIRE configuration is adopted from the
-    manifest's table properties — rung, banding assignment, bucket
-    layout, centered thresholds — so a restarted writer needs no
-    arguments and can never fail its own index's validation. (The
-    explicit :func:`simhash_gate_batch_writer` kwargs remain the
-    legacy/tuning path; a pre-meta legacy index has no stored
-    configuration to adopt and must use it.)
+    An existing index is gated under the layout its manifest records,
+    as by every gate writer (:func:`simhash_gate_batch_writer`).
 
     Measurement cost: one extra 61-sum aggregate + one fingerprint
     pass on the first batch only; every later batch pays exactly what
     the explicit writer pays (one manifest JSON read).
     """
-    from movie_data_pipeline_spark.operators.dedup import (
-        measure_balanced_bit_blocks,
-        measure_center_thresholds,
-        simhash_centered_pinned,
-    )
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
+    def fresh_layout(batch_df: DataFrame) -> dict:
+        thresholds = measure_center_thresholds(batch_df)
+        blocks = measure_balanced_bit_blocks(
+            simhash_centered_pinned(batch_df, thresholds)
+        )
+        return simhash_layout(
+            1, blocks, RECOMMENDED_INDEX_BUCKET_K, thresholds
+        )
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        idx = VersionedTable(index_path)
-        if idx.current_version() is not None:
-            meta = idx.manifest().get("meta") or {}
-            if "simhash_rung" not in meta:
-                raise ValueError(
-                    f"recommended simhash gate: index at {index_path} "
-                    "is a legacy pre-meta index with no stored "
-                    "configuration to adopt — use "
-                    "simhash_gate_batch_writer with explicit arguments "
-                    "or migrate the index first"
-                )
-            inner = simhash_gate_batch_writer(
-                accepted_path,
-                index_path,
-                rung=int(meta["simhash_rung"]),
-                bit_blocks=meta.get("simhash_bit_blocks"),
-                index_bucket_k=meta.get("bucket_k"),
-                centered="simhash_center_s" in meta,
-            )
-        else:
-            # Fresh build: measure the recommended layout from this
-            # batch. The inner writer re-measures the thresholds
-            # (deterministic — same batch, same aggregate) and pins
-            # them with the first commit.
-            thresholds = measure_center_thresholds(batch_df)
-            blocks = measure_balanced_bit_blocks(
-                simhash_centered_pinned(batch_df, thresholds)
-            )
-            inner = simhash_gate_batch_writer(
-                accepted_path,
-                index_path,
-                bit_blocks=blocks,
-                index_bucket_k=RECOMMENDED_INDEX_BUCKET_K,
-                centered=True,
-            )
-        inner(batch_df, batch_id)
-
-    return _apply
+    return _simhash_gate(accepted_path, index_path, fresh_layout)
 
 
 def start_recommended_simhash_gate_stream(
@@ -727,47 +573,20 @@ def start_recommended_simhash_gate_stream(
     )
 
 
-def recommended_dedup_gate_batch_writer(
-    accepted_path: str, index_path: str
-) -> Callable[[DataFrame, int], None]:
-    """Recommended MinHash gate (round 12, VERDICT r11 #1): a fresh
-    index gets the ``RECOMMENDED_INDEX_BUCKET_K`` bucketed partition
-    layout (pruned erasure scrubs);
-    an existing index's layout is adopted from its manifest so a
-    restarted writer needs no arguments. The MinHash family has no
-    centered/banding axis — bucket layout is its one scale knob."""
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        idx = VersionedTable(index_path)
-        if idx.current_version() is not None:
-            k = (idx.manifest().get("meta") or {}).get("bucket_k")
-        else:
-            k = RECOMMENDED_INDEX_BUCKET_K
-        dedup_gate_batch_writer(
-            accepted_path, index_path, index_bucket_k=k
-        )(batch_df, batch_id)
-
-    return _apply
-
-
 def start_simhash_gate_stream(
     docs: DataFrame,
     accepted_path: str,
     index_path: str,
     checkpoint: str,
-    rung: int = 1,
-    bit_blocks: list[int] | None = None,
     index_bucket_k: int | None = None,
     centered: bool = False,
 ) -> StreamingQuery:
-    """Document stream → SimHash-gated versioned corpus + band index."""
+    """Document stream → SimHash-gated versioned corpus + rung-1 band
+    index; the layout arguments choose a fresh index's layout."""
     return _start_available_now(
         docs,
         simhash_gate_batch_writer(
-            accepted_path, index_path, rung=rung, bit_blocks=bit_blocks,
+            accepted_path, index_path,
             index_bucket_k=index_bucket_k, centered=centered,
         ),
         checkpoint,

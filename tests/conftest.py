@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import pytest
 
+from movie_data_pipeline_spark.operators.util import query_scope
 from movie_data_pipeline_spark.session import get_spark
 
 TESTDATA_SF_DIR = "/root/testdata/sf0.001"
@@ -21,3 +22,14 @@ def spark(tmp_path_factory):
         extra_conf={"spark.sql.warehouse.dir": wh},
     )
     yield spark
+
+
+@pytest.fixture
+def _scoped(spark):
+    """Each test is one query: the caches and checkpoints it makes end
+    with it instead of leaking into later modules. A module applies it
+    with ``pytestmark = pytest.mark.usefixtures("_scoped")``; module-
+    scoped fixtures are set up before the scope opens, so their
+    checkpoints survive it."""
+    with query_scope():
+        yield

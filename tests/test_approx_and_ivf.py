@@ -29,13 +29,7 @@ from movie_data_pipeline_spark.operators.util import query_scope
 from movie_data_pipeline_spark.sources.registry import load_table
 from tests.conftest import TESTDATA_SF_DIR
 
-
-@pytest.fixture(autouse=True)
-def _scoped(spark):
-    """Each test is one query: the caches it makes (cosine_topk_ivf's
-    assignment) end with it instead of leaking into later modules."""
-    with query_scope():
-        yield
+pytestmark = pytest.mark.usefixtures("_scoped")
 
 
 def test_approx_distinct_within_bounds(spark):

@@ -15,6 +15,8 @@ from movie_data_pipeline_spark.streaming import (
     start_dedup_gate_stream,
 )
 
+pytestmark = pytest.mark.usefixtures("_scoped")
+
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
     "from the warm windowsill near the garden gate"

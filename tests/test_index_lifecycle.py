@@ -13,12 +13,16 @@ from movie_data_pipeline_spark.operators.index_lifecycle import (
     erase_documents,
     migrate_simhash_index,
     scrub_index_to_corpus,
+    simhash_index,
+    simhash_layout,
 )
 from movie_data_pipeline_spark.sources.versioned import VersionedTable
 from movie_data_pipeline_spark.streaming import (
     dedup_gate_batch_writer,
     simhash_gate_batch_writer,
 )
+
+pytestmark = pytest.mark.usefixtures("_scoped")
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -183,13 +187,12 @@ def test_migrate_simhash_index_rebands_and_updates_meta(spark, tmp_path):
         (r.doc_id, r.simhash) for r in before
     }
 
-    # a writer pinned to the OLD rung now fails loudly...
-    with pytest.raises(ValueError, match="rung"):
-        writer1(_docs(spark, [(5, THIRD)]), 1)
-    # ...and a rung-2 writer keeps gating correctly across the boundary:
-    writer2 = simhash_gate_batch_writer(acc, idx, rung=2)
-    writer2(_docs(spark, [(6, BASE), (7, THIRD)]), 2)
+    # the writer built before the migration keeps gating correctly
+    # across the boundary, under the migrated rung
+    writer1(_docs(spark, [(6, BASE), (7, THIRD)]), 1)
     assert _ids(spark, acc) == {0, 1, 7}  # 6 is a dup of migrated 0
+    new = VersionedTable(idx).read(spark).filter("doc_id = 7").collect()
+    assert {r.band_idx for r in new} == set(range(6, 21))
 
 
 def test_migrate_rejects_noop_and_bad_rung(spark, tmp_path):
@@ -539,15 +542,10 @@ def test_audit_center_thresholds_and_recenter(spark, tmp_path):
     VersionedTable(corpus_p).commit(docs)
     # thresholds pinned from doc 0 alone — a maximally stale sample
     th0 = measure_center_thresholds(docs.filter("doc_id = 0"))
-    fp = simhash_centered_pinned(docs, th0)
+    layout = simhash_layout(1, None, None, th0)
     VersionedTable(idx_p).commit(
-        simhash_band_rows(fp, rung=1).withColumn("rung", F.lit(1)),
-        meta={
-            "simhash_rung": 1,
-            "simhash_bit_blocks": None,
-            "simhash_center_s": [int(x) for x in th0["s"]],
-            "simhash_center_n": int(th0["n"]),
-        },
+        simhash_index(simhash_centered_pinned(docs, th0), layout),
+        meta=layout,
     )
     before = audit_center_thresholds(spark, idx_p, corpus_p)
     assert before.count() == 60
@@ -668,7 +666,6 @@ def test_plan_maintenance_signals(spark, tmp_path):
     """The planner recommends exactly the actions whose signals fire."""
     from movie_data_pipeline_spark.operators.dedup import (
         measure_center_thresholds,
-        simhash_band_rows,
         simhash_centered_pinned,
     )
     from movie_data_pipeline_spark.operators.index_lifecycle import (
@@ -680,15 +677,10 @@ def test_plan_maintenance_signals(spark, tmp_path):
     docs = _docs(spark, [(i, f"{BASE} tail{i}") for i in range(8)])
     VersionedTable(corpus_p).commit(docs)
     th = measure_center_thresholds(docs)
+    layout = simhash_layout(1, None, None, th)
     VersionedTable(sh_p).commit(
-        simhash_band_rows(
-            simhash_centered_pinned(docs, th), rung=1
-        ).withColumn("rung", F.lit(1)),
-        meta={
-            "simhash_rung": 1,
-            "simhash_center_s": [int(x) for x in th["s"]],
-            "simhash_center_n": int(th["n"]),
-        },
+        simhash_index(simhash_centered_pinned(docs, th), layout),
+        meta=layout,
     )
     VersionedTable(corpus_p).delete_where(spark, "doc_id >= 6")
     plan = plan_maintenance(

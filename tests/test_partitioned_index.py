@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 from movie_data_pipeline_spark.sources.versioned import VersionedTable
 from tests.conftest import TESTDATA_SF_DIR
 
+pytestmark = pytest.mark.usefixtures("_scoped")
+
 
 def _bucketed(spark, lo, hi, k=4):
     return spark.range(lo, hi).select(
@@ -159,9 +161,6 @@ def test_simhash_gate_bucketed_index_lifecycle(spark, tmp_path):
     simhash_gate_batch_writer(acc, idx, rung=1, index_bucket_k=8)(
         docs.limit(80), 1
     )
-    # a writer with a different layout fails loudly
-    with pytest.raises(ValueError, match="bucket layout"):
-        simhash_gate_batch_writer(acc, idx, rung=1)(docs.limit(90), 2)
     # erasure scrubs prune and leave zero phantoms
     erase_documents(spark, acc, [idx], "doc_id % 16 = 3")
     assert count_phantom_index_rows(spark, idx, acc) == 0
@@ -195,8 +194,6 @@ def test_minhash_gate_bucketed_index(spark, tmp_path):
     dedup_gate_batch_writer(acc, idx, index_bucket_k=4)(docs.limit(60), 0)
     meta = VersionedTable(idx).manifest()["meta"]
     assert meta == {"partition_by": "pbucket", "bucket_k": 4}
-    with pytest.raises(ValueError, match="bucket layout"):
-        dedup_gate_batch_writer(acc, idx)(docs.limit(70), 1)
     erase_documents(spark, acc, [idx], "doc_id % 8 = 1")
     assert count_phantom_index_rows(spark, idx, acc) == 0
 

@@ -1,7 +1,8 @@
-"""Streaming SimHash ingest gate (round 9, VERDICT r8 #4): novelty,
-within-batch keep-first, cross-batch index growth, replay convergence
-incl. a crash planted between the two commits, pinned-rung index
-discipline, and the end-to-end availableNow stream."""
+"""Streaming SimHash ingest gate: novelty, within-batch keep-first,
+cross-batch index growth, replay convergence incl. a crash planted
+between the two commits, the stored-layout discipline (every writer
+adopts the layout its index records), and the end-to-end availableNow
+stream."""
 
 from __future__ import annotations
 
@@ -9,11 +10,21 @@ import os
 
 import pytest
 
+from movie_data_pipeline_spark.operators.dedup import simhash
+from movie_data_pipeline_spark.operators.index_lifecycle import (
+    migrate_simhash_index,
+    recenter_simhash_index,
+    simhash_index,
+    simhash_layout,
+)
 from movie_data_pipeline_spark.sources.versioned import VersionedTable
 from movie_data_pipeline_spark.streaming import (
+    dedup_gate_batch_writer,
     simhash_gate_batch_writer,
     start_simhash_gate_stream,
 )
+
+pytestmark = pytest.mark.usefixtures("_scoped")
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -113,23 +124,6 @@ def test_gate_rung_is_pinned_not_batch_sized(spark, tmp_path):
     assert _accepted_ids(spark, acc) == {0, 1}
 
 
-@pytest.mark.slow
-def test_gate_rejects_rung_mismatch_against_stored_index(spark, tmp_path):
-    """A writer restarted with a different rung must FAIL LOUDLY: its
-    band rows would never join the stored index (global band_idx), so
-    silent acceptance would let exact duplicates through."""
-    import pytest
-
-    acc, idx = str(tmp_path / "acc"), str(tmp_path / "idx")
-    simhash_gate_batch_writer(acc, idx, rung=1)(
-        _docs(spark, [(0, BASE)]), 0
-    )
-    with pytest.raises(ValueError, match="rung"):
-        simhash_gate_batch_writer(acc, idx, rung=3)(
-            _docs(spark, [(1, OTHER)]), 1
-        )
-
-
 def test_gate_stream_end_to_end(spark, tmp_path):
     src = str(tmp_path / "src")
     _docs(
@@ -153,29 +147,85 @@ def test_gate_stream_end_to_end(spark, tmp_path):
     assert len(got & {0, 1, 3}) == 1
 
 
-def test_centered_writer_refuses_uncentered_index(spark, tmp_path):
-    """ADVICE r11: centered=True against an index that has committed
-    versions but no pinned thresholds used to RE-MEASURE thresholds
-    from every batch — each batch fingerprinting in its own space, so
-    duplicates of indexed docs silently passed. It must raise."""
-    import pytest
+# band_idx range of each ladder rung (operators/dedup.simhash_band_combos)
+RUNG_BANDS = {1: set(range(0, 6)), 2: set(range(6, 21)), 3: set(range(21, 41))}
 
+
+@pytest.mark.parametrize(
+    "family, stored, later, migrate_to",
+    [
+        ("simhash", {"rung": 1}, {"rung": 3}, None),
+        ("simhash", {"bit_blocks": list(range(59, -1, -1))}, {}, None),
+        ("simhash", {"index_bucket_k": 4}, {}, None),
+        ("simhash", {"centered": True}, {}, None),
+        ("simhash", {}, {"centered": True}, None),
+        ("minhash", {}, {"index_bucket_k": 4}, None),
+        ("simhash", {"rung": 1}, {"rung": 1}, 2),
+    ],
+    ids=[
+        "rung",
+        "bit_blocks",
+        "bucket_k",
+        "centered",
+        "uncentered",
+        "minhash_bucket_k",
+        "built_before_migration",
+    ],
+)
+def test_writer_adopts_the_stored_layout(
+    spark, tmp_path, family, stored, later, migrate_to
+):
+    """A writer whose layout arguments differ from its index's still
+    gates under the stored layout: an exact duplicate of an indexed
+    doc is rejected, the appended rows carry the stored bands and
+    buckets, and the recorded layout is unchanged."""
     acc, idx = str(tmp_path / "acc"), str(tmp_path / "idx")
-    # build zero-threshold (meta carries simhash_rung but no center_s)
-    simhash_gate_batch_writer(acc, idx, rung=1)(
-        _docs(spark, [(0, BASE), (1, OTHER)]), 0
+    make = (
+        dedup_gate_batch_writer
+        if family == "minhash"
+        else simhash_gate_batch_writer
     )
-    writer_c = simhash_gate_batch_writer(acc, idx, rung=1, centered=True)
-    with pytest.raises(ValueError, match="not built centered"):
-        writer_c(_docs(spark, [(2, THIRD)]), 1)
-    # and a legacy pre-meta index (no meta at all) raises the same way
-    idx2, acc2 = str(tmp_path / "idx2"), str(tmp_path / "acc2")
-    VersionedTable(idx2).commit(
-        VersionedTable(idx).read(spark), meta={}
-    )
-    writer_c2 = simhash_gate_batch_writer(acc2, idx2, rung=1, centered=True)
-    with pytest.raises(ValueError, match="not built centered"):
-        writer_c2(_docs(spark, [(3, THIRD)]), 0)
+    writer = make(acc, idx, **later)  # built before the index exists
+    make(acc, idx, **stored)(_docs(spark, [(0, BASE), (1, OTHER)]), 0)
+    if migrate_to is not None:
+        migrate_simhash_index(spark, idx, migrate_to)
+    index = VersionedTable(idx)
+    meta = index.manifest()["meta"]
+
+    writer(_docs(spark, [(10, BASE), (11, THIRD)]), 1)
+
+    assert _accepted_ids(spark, acc) == {0, 1, 11}
+    assert index.manifest()["meta"] == meta
+    new = index.read(spark).filter("doc_id = 11")
+    rows = new.collect()
+    if family == "minhash":
+        assert {r.band for r in rows} == set(range(4))
+    else:
+        assert {r.band_idx for r in rows} == RUNG_BANDS[meta["simhash_rung"]]
+    k = meta.get("bucket_k")
+    assert ("pbucket" in new.columns) == (k is not None)
+    if k is not None:
+        assert {r.pbucket for r in rows} == {11 % k}
+
+
+@pytest.mark.parametrize("op", ["writer", "migrate", "recenter"])
+def test_pre_meta_simhash_index_is_refused(spark, tmp_path, op):
+    """An index whose manifest records no layout (committed before
+    manifests carried table properties) has nothing to adopt."""
+    acc, idx = str(tmp_path / "acc"), str(tmp_path / "idx")
+    docs = _docs(spark, [(0, BASE)])
+    VersionedTable(acc).commit(docs)
+    layout = simhash_layout(1, None, None, None)
+    VersionedTable(idx).commit(simhash_index(simhash(docs), layout), meta={})
+    run = {
+        "writer": lambda: simhash_gate_batch_writer(acc, idx)(
+            _docs(spark, [(1, OTHER)]), 1
+        ),
+        "migrate": lambda: migrate_simhash_index(spark, idx, 2),
+        "recenter": lambda: recenter_simhash_index(spark, idx, acc),
+    }[op]
+    with pytest.raises(ValueError, match="pre-meta index"):
+        run()
 
 
 # --- round 12: recommended (default scale-safe) gate -----------------------
@@ -234,50 +284,3 @@ def test_recommended_gate_erasure_scrub_prunes(spark, tmp_path):
     assert count_phantom_index_rows(spark, idx, acc) == 0
     assert VersionedTable(idx).manifest()["mode"] == "overwrite_partitions"
     assert _accepted_ids(spark, acc) == {0, 2}
-
-
-def test_recommended_gate_refuses_legacy_index(spark, tmp_path):
-    import pytest
-
-    from movie_data_pipeline_spark.streaming.sinks import (
-        recommended_simhash_gate_batch_writer,
-    )
-
-    acc, idx = str(tmp_path / "acc"), str(tmp_path / "idx")
-    simhash_gate_batch_writer(acc, idx, rung=1)(_docs(spark, [(0, BASE)]), 0)
-    # strip the meta -> legacy pre-meta index
-    legacy = str(tmp_path / "legacy")
-    VersionedTable(legacy).commit(VersionedTable(idx).read(spark), meta={})
-    w = recommended_simhash_gate_batch_writer(str(tmp_path / "acc2"), legacy)
-    with pytest.raises(ValueError, match="legacy pre-meta"):
-        w(_docs(spark, [(1, OTHER)]), 0)
-
-
-@pytest.mark.slow
-def test_recommended_minhash_gate_buckets_fresh_index(spark, tmp_path):
-    from movie_data_pipeline_spark.streaming.sinks import (
-        RECOMMENDED_INDEX_BUCKET_K,
-        recommended_dedup_gate_batch_writer,
-    )
-
-    acc, idx = str(tmp_path / "acc"), str(tmp_path / "idx")
-    writer = recommended_dedup_gate_batch_writer(acc, idx)
-    writer(_docs(spark, [(0, BASE), (1, OTHER)]), 0)
-    meta = VersionedTable(idx).manifest()["meta"]
-    assert meta["bucket_k"] == RECOMMENDED_INDEX_BUCKET_K
-    assert meta["partition_by"] == "pbucket"
-    # restart adopts the stored layout; an UNBUCKETED legacy index is
-    # adopted as unbucketed (k=None) rather than torn
-    writer2 = recommended_dedup_gate_batch_writer(acc, idx)
-    writer2(_docs(spark, [(2, THIRD)]), 1)
-    assert _accepted_ids(spark, acc) == {0, 1, 2}
-    acc3, idx3 = str(tmp_path / "acc3"), str(tmp_path / "idx3")
-    from movie_data_pipeline_spark.streaming.sinks import (
-        dedup_gate_batch_writer,
-    )
-
-    dedup_gate_batch_writer(acc3, idx3)(_docs(spark, [(0, BASE)]), 0)
-    recommended_dedup_gate_batch_writer(acc3, idx3)(
-        _docs(spark, [(1, OTHER)]), 1
-    )
-    assert _accepted_ids(spark, acc3) == {0, 1}

@@ -239,6 +239,8 @@ def test_idioms_live_only_in_their_helpers():
         "mkdtemp": set(),
         "pairs": set(),
         "ngrams": set(),
+        "bucket column": set(),
+        "rung column": set(),
     }
     for path in sorted(PACKAGE.rglob("*.py")):
         rel = path.relative_to(PACKAGE).as_posix()
@@ -259,6 +261,19 @@ def test_idioms_live_only_in_their_helpers():
                 hits["pairs"].add(where)
             if _is_ngram_join(node):
                 hits["ngrams"].add(where)
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and "pmod(doc_id" in node.value
+            ):
+                hits["bucket column"].add(where)
+            if (
+                _calls(node, "withColumn")
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and node.args[0].value == "rung"
+            ):
+                hits["rung column"].add(where)
     assert hits == {
         "concurrent.futures": {"operators/util.py"},
         "unpersist": {
@@ -268,6 +283,8 @@ def test_idioms_live_only_in_their_helpers():
         "mkdtemp": {"operators/util.py:scratch_dir"},
         "pairs": {"operators/util.py:array_pairs"},
         "ngrams": {"functions/text.py:ngrams"},
+        "bucket column": {"operators/index_lifecycle.py:bucketed"},
+        "rung column": {"operators/index_lifecycle.py:simhash_index"},
     }
 
 

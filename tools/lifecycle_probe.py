@@ -16,52 +16,55 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def _fingerprints(spark, n: int):
+    """(doc_id, simhash) over ids 0..n-1: xxhash64-deterministic
+    uniform bits."""
+    from pyspark.sql import functions as F
+
+    terms = None
+    for j in range(60):
+        bit = (
+            F.abs(F.xxhash64(F.col("id"), F.lit(j))) % 2 == 0
+        ).cast("long") * F.lit(1 << j)
+        terms = bit if terms is None else terms + bit
+    return (
+        spark.range(n)
+        .repartition(64)
+        .select(F.col("id").alias("doc_id"), terms.alias("simhash"))
+    )
+
+
 def main() -> int:
     from pyspark.sql import functions as F
 
-    from movie_data_pipeline_spark.operators.dedup import simhash_band_rows
     from movie_data_pipeline_spark.operators.index_lifecycle import (
         migrate_simhash_index,
         scrub_index_to_corpus,
+        simhash_index,
+        simhash_layout,
     )
+    from movie_data_pipeline_spark.operators.util import scratch_dir
     from movie_data_pipeline_spark.session import get_spark
     from movie_data_pipeline_spark.sources.versioned import VersionedTable
 
     sizes = [int(a) for a in sys.argv[1:]] or [500_000, 5_000_000]
     spark = get_spark(app_name="lifecycle-probe")
     spark.sparkContext.setLogLevel("ERROR")
+    rung2 = simhash_layout(2, None, None, None)
+    rung2_k64 = simhash_layout(2, None, 64, None)
 
     for n in sizes:
-        base = tempfile.mkdtemp(prefix="mdp-lifecycle-probe-")
-        acc, idx = f"{base}/acc", f"{base}/idx"
-        try:
-            terms = None
-            for j in range(60):
-                bit = (
-                    F.abs(F.xxhash64(F.col("id"), F.lit(j))) % 2 == 0
-                ).cast("long") * F.lit(1 << j)
-                terms = bit if terms is None else terms + bit
-            fp = (
-                spark.range(n)
-                .repartition(64)
-                .select(F.col("id").alias("doc_id"), terms.alias("simhash"))
-            )
-            corpus = fp.select("doc_id")
-            VersionedTable(acc).commit(corpus)
-            bands = simhash_band_rows(fp, rung=2).withColumn(
-                "rung", F.lit(2)
-            )
-            VersionedTable(idx).commit(
-                bands, meta={"simhash_rung": 2}
-            )
+        with scratch_dir("lifecycle-probe") as base:
+            acc, idx = f"{base}/acc", f"{base}/idx"
+            fp = _fingerprints(spark, n)
+            VersionedTable(acc).commit(fp.select("doc_id"))
+            VersionedTable(idx).commit(simhash_index(fp, rung2), meta=rung2)
 
             t0 = time.perf_counter()
             migrate_simhash_index(spark, idx, 3)
@@ -80,8 +83,6 @@ def main() -> int:
                 "op": "scrub_10pct", "n_docs": n,
                 "rows_scrubbed": scrubbed, "sec": scrub_s,
             }), flush=True)
-        finally:
-            shutil.rmtree(base, ignore_errors=True)
 
         # Round 11 (VERDICT r10 #2): the PARTITIONED layout — scrub
         # cost must scale with the ERASED FRACTION (touched buckets),
@@ -96,38 +97,12 @@ def main() -> int:
             ("6of64_buckets", "doc_id % 128 IN (2, 12, 22, 32, 42, 52)"),
             ("10pct_spread", "doc_id % 10 = 3"),
         ):
-            base = tempfile.mkdtemp(prefix="mdp-lifecycle-probe-")
-            acc, idx = f"{base}/acc", f"{base}/idx"
-            try:
-                terms = None
-                for j in range(60):
-                    bit = (
-                        F.abs(F.xxhash64(F.col("id"), F.lit(j))) % 2 == 0
-                    ).cast("long") * F.lit(1 << j)
-                    terms = bit if terms is None else terms + bit
-                fp = (
-                    spark.range(n)
-                    .repartition(64)
-                    .select(
-                        F.col("id").alias("doc_id"), terms.alias("simhash")
-                    )
-                )
+            with scratch_dir("lifecycle-probe") as base:
+                acc, idx = f"{base}/acc", f"{base}/idx"
+                fp = _fingerprints(spark, n)
                 VersionedTable(acc).commit(fp.select("doc_id"))
-                bands = (
-                    simhash_band_rows(fp, rung=2)
-                    .withColumn("rung", F.lit(2))
-                    .withColumn(
-                        "pbucket",
-                        F.expr("CAST(pmod(doc_id, 64) AS INT)"),
-                    )
-                )
                 VersionedTable(idx).commit(
-                    bands,
-                    meta={
-                        "simhash_rung": 2,
-                        "partition_by": "pbucket",
-                        "bucket_k": 64,
-                    },
+                    simhash_index(fp, rung2_k64), meta=rung2_k64
                 )
                 VersionedTable(acc).delete_where(spark, pred)
                 t0 = time.perf_counter()
@@ -158,8 +133,6 @@ def main() -> int:
                     "rows_scrubbed": scrubbed,
                     "rows_rewritten": rewritten, "sec": scrub_s,
                 }), flush=True)
-            finally:
-                shutil.rmtree(base, ignore_errors=True)
 
         # Round 12 (VERDICT r11 #5): PRUNED compaction — cost must
         # scale with the FRAGMENTED partition count, not the table.
@@ -172,41 +145,16 @@ def main() -> int:
             ("16of64_buckets", 16),
             ("64of64_buckets", 64),
         ):
-            base = tempfile.mkdtemp(prefix="mdp-lifecycle-probe-")
-            idx = f"{base}/idx"
-            try:
-                terms = None
-                for j in range(60):
-                    bit = (
-                        F.abs(F.xxhash64(F.col("id"), F.lit(j))) % 2 == 0
-                    ).cast("long") * F.lit(1 << j)
-                    terms = bit if terms is None else terms + bit
-                fp = (
-                    spark.range(n)
-                    .repartition(64)
-                    .select(
-                        F.col("id").alias("doc_id"), terms.alias("simhash")
-                    )
-                )
-                bands = (
-                    simhash_band_rows(fp, rung=2)
-                    .withColumn("rung", F.lit(2))
-                    .withColumn(
-                        "pbucket",
-                        F.expr("CAST(pmod(doc_id, 64) AS INT)"),
-                    )
-                )
+            with scratch_dir("lifecycle-probe") as base:
+                idx = f"{base}/idx"
+                bands = simhash_index(_fingerprints(spark, n), rung2_k64)
                 t = VersionedTable(idx)
                 # one task per bucket -> exactly one base file per
                 # bucket (otherwise every task writes a file into
                 # every bucket and the whole table starts fragmented)
                 t.commit(
                     bands.repartition(64, F.col("pbucket")),
-                    meta={
-                        "simhash_rung": 2,
-                        "partition_by": "pbucket",
-                        "bucket_k": 64,
-                    },
+                    meta=rung2_k64,
                 )
                 # fragment the first `frag_buckets` buckets with 3
                 # extra single-file appends each
@@ -236,8 +184,6 @@ def main() -> int:
                     "op": f"compact_partitioned_{frag_name}", "n_docs": n,
                     "rows_rewritten": rewritten, "sec": sec,
                 }), flush=True)
-            finally:
-                shutil.rmtree(base, ignore_errors=True)
 
         # Round 11 (VERDICT r10 #3): IVF centroid-refresh migration at
         # probe scale — synthetic 16-dim vectors, 8 cells, erase 1/7,
@@ -251,9 +197,8 @@ def main() -> int:
             ivf_assign,
         )
 
-        base = tempfile.mkdtemp(prefix="mdp-lifecycle-probe-")
-        acc, idx = f"{base}/vec", f"{base}/ivf"
-        try:
+        with scratch_dir("lifecycle-probe") as base:
+            acc, idx = f"{base}/vec", f"{base}/ivf"
             dims = [
                 (
                     (F.abs(F.xxhash64(F.col("id"), F.lit(j))) % 1000)
@@ -286,8 +231,6 @@ def main() -> int:
                 "rows_after": VersionedTable(idx).read(spark).count(),
                 "sec": mig_s,
             }), flush=True)
-        finally:
-            shutil.rmtree(base, ignore_errors=True)
     return 0
 
 
