@@ -22,21 +22,21 @@ FLAGSHIP = "q02_region_revenue"
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 # The verification driver records CORRECTNESS rows for the first 50
-# entries of the ``queries()`` dict in INSERTION order (proven by
-# CORRECTNESS_r02: the verified set was exactly the first 50 entries of
-# the sorted-by-canonical-name dict, not the ``a_``-aliased sort order).
-# To rotate driver coverage across the full catalog, the dict is built
-# with never-driver-verified queries inserted FIRST (oldest block
-# first), then the re-verification queue, then the verified.
-# Canonical names stay in
+# entries of the ``queries()`` dict in insertion order, so the dict
+# decides what the driver verifies. It leads with never-verified
+# names, then the re-verification queue, then the verified names,
+# stalest green row first. Canonical names stay in
 # ``movie_data_pipeline_spark.plans.REGISTRY`` and in all tests/bench.
 #
-# The verified set is DERIVED from the CORRECTNESS_r{N}.json files the
-# driver itself writes into the repo root — a name counts as verified
-# only when its row was fully green (rows+schema+hash, no err) in some
-# round. No per-round manual update, nothing to forget: the next
-# round's files extend the set automatically, and a RED row keeps its
-# query in the re-verification window.
+# Nothing here is kept by hand. A name counts as verified when its row
+# in some CORRECTNESS_r{N}.json, written by the driver into the repo
+# root, is fully green (rows+schema+hash, no err). The queue comes from
+# FINGERPRINTS.json, written by ``tools/fingerprints.py``: each name
+# maps to a hash of its builder's code and oracle and to ``since``,
+# the first round after that hash last changed. A name is re-queued
+# while its latest green round is older than its ``since``; ``since``
+# 0 never queues. Queued names are ordered by (since, query number),
+# so the oldest changes lead when more than the window is queued.
 
 
 def _load_green_rounds() -> dict[str, int]:
@@ -74,232 +74,13 @@ _GREEN_ROUND: dict[str, int] = _load_green_rounds()
 _DRIVER_VERIFIED: frozenset[str] = frozenset(_GREEN_ROUND)
 
 
-# Queries whose registered plan AND oracle changed semantics in some
-# round AFTER their last green driver row (round 4: the
-# q239-calibrated ``max_shingle_df`` cap wired into the Jaccard
-# family — VERDICT r3 #3).  Their old green rows verified the OLD
-# semantics, so each re-enters the verification window until the
-# driver records a green row from a round >= the change round (the r4
-# rows themselves were recorded post-change, so any r4+ green counts).
-# Placement math (VERDICT r4 #1/#3): forced names are inserted AFTER
-# the never-verified names — never displacing them from the 50-row
-# window — so with 68 never-verified names in r5 they
-# sit at positions 69-75 (outside the window, r5 stays 50 fresh
-# first-time names), and in r6, with only 18 never-verified left, they
-# land at positions 19-25 and all get re-verified.  Once re-greened
-# they auto-deactivate via ``_GREEN_ROUND``; nothing to hand-edit.
-_REVERIFY_QUEUE: dict[str, int] = {
-    # name -> first round whose green row counts as post-change; one
-    # literal per name, at the round of its LATEST change (q82, q149
-    # and q209, cap-reworked in round 4, are queued at round 12 below)
-    "q18_ngram_jaccard_dupes": 18,  # round 18: see the queue's end
-    "q63_duplicate_clusters": 4,
-    "q121_lsh_quality_audit": 4,
-    "q134_duplicate_clusters_star": 4,
-    # round 6: q64 rewritten to the segment (lead + gap-explode) LOCF
-    # formulation — outputs hash-identical at sf0.01/sf0.001 (builder
-    # driver_sim green both), but the registered plan changed, so the
-    # green row should postdate the rewrite.
-    "q64_hourly_locf": 6,
-    # round 6 sf0.1 sweep: latent cross-engine divergence fixed with a
-    # SEMANTIC change (computed per-part effects round4-quantized
-    # before the decimal rollup) — the old green row verified the old
-    # semantics. (q238's twin fix needs no queue entry: it has never
-    # had a green driver row, so it is in the window as never-verified
-    # already.)
-    "q196_pvm_bridge": 6,
-    # round 7: both registered plans sample-bounded (VERDICT r6 #1/#3);
-    # round 8: rewired onto the shared fixed_sample/fixed_sample_ctes
-    # helper (VERDICT r7 #6 — outputs hash-identical, builder-verified
-    # at all 3 SFs, but the registered plan + oracle text changed).
-    "q256_margin_candidate_mining": 15,  # round 15: see the queue's end
-    "q248_lsh_scurve_sweep": 18,  # round 18: see the queue's end
-    # round 7: rows-per-band ladder cap raised 8 -> 12 after the 100x
-    # probe (r=8 saturated the sig space above ~8k vectors/side).
-    # Outputs at every driver SF are unchanged (the new rungs engage
-    # only at probe scale), but plan + oracle text changed.
-    "q256b_margin_mining_lsh": 15,  # round 15: see the queue's end
-    # round 8: q264/q272's exact ground-truth legs sample-bounded with
-    # the shared fixed_sample helper (VERDICT r7 #1 — the query set is
-    # now a fixed-size md5-bucket sample; modulus 1 at every test SF so
-    # outputs are unchanged there, but the registered plans + oracles
-    # changed).
-    "q264_ivf_recall_sweep": 20,  # round 20: see the queue's end
-    "q272_pq_codebook_audit": 15,  # round 15: see the queue's end
-    # round 8: SimHash family migrated to the 60-bit fingerprint
-    # (VERDICT r7 #2; q21's r8+ green row still covers it — the
-    # fingerprint is untouched since).
-    "q21_simhash": 8,
-    # round 8: q268/q277's groupBy key digested to a fixed-width md5
-    # prefix on both engines (VERDICT r7 #3 — ~5x less shuffle bytes;
-    # spans identical, plan + oracle text changed).
-    # round 12 (optimization): _dup_spans' shared-window test rewritten
-    # from groupBy + semi-join to min/max over a digest-partitioned
-    # window — the corpus-wide explode+md5 subtree is evaluated ONCE
-    # instead of four times (oracle untouched; outputs hash-identical
-    # at sf0.001/sf0.01 in the builder's driver_sim, but the
-    # registered plans changed shape). q281 consumes the same helper.
-    "q268_repeated_passages": 12,
-    "q277_passage_scrub_savings": 12,
-    "q281_granularity_agreement": 12,
-    # round 12 (optimization): containment_pairs emits both directions
-    # map-side from ONE evaluation of the pair+size join instead of a
-    # unionAll that inlined the whole subtree twice (measured -31% at
-    # sf0.1; output-identical, driver_sim green at sf0.01, oracle
-    # untouched). Candidate persists for the jaccard family were
-    # measured (q18/q63/q273/q276) and REJECTED as regressions — those
-    # plans are byte-identical to round 11, so they are not queued.
-    "q149_containment_pairs": 18,  # round 18: see the queue's end
-    # round 12 (optimization): ppjoin_pairs caches its verification
-    # array frame — consumed by both verify dims on different join
-    # keys, the collect_list+sort aggregate ran twice (q144 measured
-    # 9.7->5.1 s same-context at sf0.1; output-identical, driver_sim
-    # green at sf0.01/sf0.001).
-    # round 12 (optimization): the symmetrize/flag/credit unions that
-    # inlined their (often expensive) source subtree once per
-    # orientation are now map-side two/three-way explodes of ONE
-    # evaluation — connected_components/_star (every CC consumer), the
-    # q103 edge symmetrization, q116's triangle corner credit + degree,
-    # q155's basket-pair symmetrization, q179's edge symmetrization,
-    # q198's degree count, q281's pair-member flag. Outputs identical
-    # (driver_sim green at sf0.01 for all 14 touched names; oracles
-    # untouched); measured -9% to -25% at sf0.1.
-    "q82_dedup_kept_corpus": 12,
-    "q103_pagerank_trade_graph": 12,
-    "q116_copurchase_triangles": 15,  # round 15: see the queue's end
-    "q139_corpus_pipeline_report": 12,
-    "q155_kcore_peeling": 15,  # round 15: see the queue's end
-    "q173_leakage_free_split": 12,
-    "q175_entity_resolution": 12,
-    "q179_lpa_communities": 15,  # round 15: see the queue's end
-    "q182_dedup_savings": 12,
-    "q198_degree_powerlaw": 15,  # round 15: see the queue's end
-    "q209_cluster_best_rep": 12,
-    "q228_chaining_audit": 12,
-    "q288_cluster_churn_audit": 15,  # round 15: see the queue's end
-    # round 9: SimHash banding migrated to the size-adaptive block-
-    # combination ladder (VERDICT r8 #1 — rung from the in-plan
-    # fingerprint count; published pair sets CHANGE at every SF: rung 1
-    # is exact for Hamming<=5, so q79/q274 gained the pairs the fixed
-    # 4x15 layout missed — these entries supersede their round-8 ones).
-    # q21's fingerprints are untouched by the ladder. (q79/q274 are
-    # queued below at their latest change round.)
-    # round 9: q279's Spark-side host regex '^www\.' re-escaped for
-    # Spark's SQL literal parser (ADVICE r8 — the shipped pattern
-    # reached the regex engine as '^www.'; inert on this corpus, so
-    # outputs are unchanged, but the registered plan text changed).
-    "q279_url_host_dedup_rollup": 9,
-    # round 10 (ADVICE r9): the rung=None ladder path lazily local-
-    # checkpoints the fingerprint frame so the in-plan count no longer
-    # re-evaluates the aggregation subtree — outputs unchanged, but
-    # the registered q79/q274 plans changed shape; q286's shard-width
-    # count now aggregates the pre-rank frame instead of replaying the
-    # range-partition sort (values identical).
-    "q79_simhash_hamming_pairs": 14,  # round 14: see the queue's end
-    "q274_simhash_quality_audit": 10,
-    "q286_training_order_manifest": 10,
-    # round 11: q297's pricing body factored into the _skew_pricing_frame
-    # helper shared with q306 (oracle byte-identical — asserted against
-    # the r10 tree — and the plan is the same DAG, but the registered
-    # builder changed), and the band-row builders gained the
-    # bit_blocks=None parameter (default path identical).
-    "q297_simhash_skew_pricing": 11,
-    # round 13 (optimization): _wj_scored consumes its candidate frame
-    # ONCE (jaccard_capped rides through the shared-weight aggregate —
-    # the second inline of the whole jaccard_pairs subtree is gone);
-    # q254's exact-intersection leg emits source pairs map-side from
-    # one bucket pass instead of a self-join; ppjoin_pairs bounds its
-    # persists with an eager local checkpoint (q144's registered plan
-    # becomes a checkpoint scan). Oracles untouched; driver_sim green
-    # at sf0.01 for all four.
-    "q273_idf_weighted_jaccard": 13,
-    "q276_weighted_dedup_agreement": 13,
-    "q254_kmv_overlap_estimates": 18,  # round 18: see the queue's end
-    "q144_ppjoin_pairs": 14,  # round 14: see the queue's end
-    # round 13 (optimization): the gate writers' bucket append is a
-    # REBALANCE instead of a fixed k-way repartition, and the replay-
-    # idempotency anti-join is persisted across its emptiness probe +
-    # commit — every gate-driven replay re-verifies; q312/q317 overlap
-    # their two independent compactions and q316 its three snapshot
-    # probes from driver threads (outputs deterministic). driver_sim
-    # green at sf0.01 for all 18 touched replay names. (Those still
-    # gate-driven are re-queued at round 14 — see the queue's end.)
-    "q205_streaming_dedup_gate": 14,
-    "q244_streaming_multibatch_gate": 14,
-    "q287_simhash_index_gate": 14,
-    "q292_simhash_multibatch_gate": 14,
-    "q295_index_erasure_audit": 14,
-    "q296_simhash_rung_migration": 14,
-    "q299_erasure_vacuum_compliance": 14,
-    "q301_minhash_index_erasure": 14,
-    "q302_midstream_erasure_gate": 14,
-    "q307_banding_migration_gate": 14,
-    "q308_partitioned_index_erasure": 14,
-    "q311_centered_gate_replay": 14,
-    "q312_gate_compaction_replay": 15,  # round 15: see the queue's end
-    "q313_recommended_gate_replay": 14,
-    "q315_center_threshold_drift": 15,  # round 15: see the queue's end
-    "q316_ivf_cell_split_recovery": 20,  # round 20: see the queue's end
-    "q317_bucketed_gate_compaction": 15,  # round 15: see the queue's end
-    # round 14 (simplicity): both gate writers run one shared skeleton
-    # (one manifest read per batch, caches released on every exit
-    # path), every start_*_stream shares one availableNow launcher, and
-    # the replay builders share their split-source, batch-count,
-    # accepted-corpus and metric-table helpers; ppjoin_pairs (q144)
-    # releases its caches through the same context manager, and the
-    # rung-ladder checkpoint q79 runs lost its never-set materialize
-    # switch. The 18 round-14 names above are updated in place; the
-    # three below are new. Same Spark actions per gate batch, oracles
-    # untouched; driver_sim green at sf0.01 for all 21.
-    "q204_streaming_hourly_upsert": 14,
-    "q210_streaming_drift_replay": 14,
-    "q267_streaming_closed_window_ledger": 14,
-    # round 15 (simplicity): the all-pairs array idiom, the driver-
-    # thread overlap and the hand-placed persist/unpersist pairs each
-    # go through one helper in operators/util.py (array_pairs, overlap,
-    # cached); q315's boundary writer now runs after its two readers.
-    # Lazy plans are unchanged; the 15 round-15 names above are
-    # updated in place, the 11 below are new. Oracles untouched.
-    "q94_part_cooccurrence": 15,
-    "q245_df_cap_sensitivity": 16,  # round 16: see the queue's end
-    "q246_substring_runs": 18,  # round 18: see the queue's end
-    "q270_cross_source_dup_matrix": 15,
-    "q271_cdc_chunking_audit": 15,
-    "q278_dedup_family_agreement": 15,
-    "q280_simhash_hamming_histogram": 15,
-    "q282_corpus_yield_waterfall": 15,
-    "q284_ivfpq_topk": 20,  # round 20: see the queue's end
-    "q309_ivf_centroid_migration": 20,  # round 20: see the queue's end
-    "q318_maintenance_planner": 15,
-    # round 16 (simplicity): operator parameters no caller sets became
-    # constants, and the builders that restated them as arguments no
-    # longer pass them (q149's containment_pairs call, the
-    # doc_shingles calls of q239/q245/q249). Lazy plans are unchanged;
-    # the 2 round-16 names above are updated in place, the 2 below are
-    # new. Oracles untouched.
-    "q239_stop_shingle_lexicon": 18,  # round 18: see the queue's end
-    "q249_crawl_novelty_curve": 18,  # round 18: see the queue's end
-    # round 17 (optimization): the IVF cell argmax projects each
-    # vector's double cast and norm once and emits a non-nullable cell,
-    # so Catalyst no longer pushes it below spread() into the single-
-    # partition scan; ivf_assign and assign_to_centroids share it.
-    # Cells bit-identical, oracles untouched; the 4 round-17 names
-    # above are updated in place, the 1 below is new.
-    "q303_ann_index_erasure": 20,  # round 20: see the queue's end
-    # round 18 (optimization): tokens are projected once per row and
-    # every n-gram/shingle lambda reads that column (doc_shingles, so
-    # every MinHash/Jaccard consumer, and the builders that closed over
-    # tokens(text) in a lambda). Values identical, oracles untouched.
-    # 33 registered plans changed; with 48 names already active, only
-    # the 6 of them already queued (updated in place above), q18 and
-    # the one below fit the 50-name window. CHANGES.md lists the rest.
-    "q19_minhash_signatures": 18,
-    # round 20 (optimization): the IVF cell argmax is parsed from one
-    # SQL expression (the same tree; cells bit-identical), so the 5
-    # IVF names above are updated in place. q177/q187 no longer build
-    # their cast array twice (values identical) but are not queued:
-    # the 50 active names already fill the window.
-}
+def _qnum(name: str) -> tuple[int, str]:
+    digits = ""
+    for ch in name[1:]:
+        if not ch.isdigit():
+            break
+        digits += ch
+    return (int(digits) if digits else 10**9, name)
 
 
 def _active_reverify(
@@ -310,28 +91,24 @@ def _active_reverify(
     )
 
 
+def _load_queue() -> dict[str, int]:
+    """name -> since from FINGERPRINTS.json, in (since, query number)
+    order."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    with open(os.path.join(here, "FINGERPRINTS.json")) as fh:
+        table = json.load(fh)
+    return {
+        name: since
+        for name, (_sha, since) in sorted(
+            table.items(), key=lambda kv: (kv[1][1], _qnum(kv[0]))
+        )
+    }
+
+
+_REVERIFY_QUEUE: dict[str, int] = _load_queue()
 _FORCE_REVERIFY: tuple[str, ...] = _active_reverify(
     _REVERIFY_QUEUE, _GREEN_ROUND
 )
-
-# Freshness rotation of the VERIFIED tail (VERDICT r7 #4, made
-# automatic in round 9 per VERDICT r8 #2): the verified tier is
-# ordered STALEST GREEN ROW FIRST (latest green round ascending, then
-# query number), so whatever block is oldest in the ledger leads the
-# tail each round with nothing to hand-edit — re-greened names sink to
-# the back automatically as the driver writes fresher rows. Round 9
-# this puts the r1-era q12–q24 block first, then the 47-name r3
-# cohort, exactly the VERDICT's rotation plan — and every later round
-# inherits the policy.
-
-
-def _qnum(name: str) -> tuple[int, str]:
-    digits = ""
-    for ch in name[1:]:
-        if not ch.isdigit():
-            break
-        digits += ch
-    return (int(digits) if digits else 10**9, name)
 
 
 def _rotation_order() -> list[str]:

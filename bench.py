@@ -31,6 +31,7 @@ import time
 
 from movie_data_pipeline_spark.operators.util import query_scope
 from movie_data_pipeline_spark.plans import REGISTRY
+from movie_data_pipeline_spark.plans.core import EAGER_TAGS
 from movie_data_pipeline_spark.session import get_spark
 
 # Headline set: heavy scan-agg, star joins, window, dedup/text/similarity
@@ -226,47 +227,13 @@ CORE20 = [
 ]
 
 
-# Replay tier (round 10): streaming / lifecycle REPLAY entries run
-# end-to-end micro-batch orchestration + VersionedTable commits —
-# their wall time is dominated by fixed orchestration latency, not
-# plan cost, so min-of-n repeats bought almost nothing (q292: 29%
-# min-convergence spread at min-of-3 in BENCH_r09) while costing
-# ~140 s per extra pass at catalog 288, which starved the adaptive
-# sub-second tier out of the 900 s budget. Round 11 (VERDICT r10 #5):
-# measured in the FIRST TWO passes (min-of-2) — the r10 single-shot
-# numbers showed ±30-47% scatter that read as regressions in the
-# cross-round table — and reported as their own band in the stderr
-# diff so replay scatter can never masquerade as a plan regression.
-# Plan-cost entries keep the full interleaved min-of-n discipline.
-REPLAY_TIER = {
-    "q204_streaming_hourly_upsert",
-    "q205_streaming_dedup_gate",
-    "q210_streaming_drift_replay",
-    "q220_streaming_join_replay",
-    "q221_streaming_session_replay",
-    "q244_streaming_multibatch_gate",
-    "q267_streaming_closed_window_ledger",
-    "q287_simhash_index_gate",
-    "q292_simhash_multibatch_gate",
-    "q295_index_erasure_audit",
-    "q296_simhash_rung_migration",
-    "q299_erasure_vacuum_compliance",
-    "q301_minhash_index_erasure",
-    "q302_midstream_erasure_gate",
-    "q303_ann_index_erasure",
-    "q307_banding_migration_gate",
-    "q308_partitioned_index_erasure",
-    "q309_ivf_centroid_migration",
-    "q310_manifest_staleness_audit",
-    "q311_centered_gate_replay",
-    "q312_gate_compaction_replay",
-    "q313_recommended_gate_replay",
-    "q314_manifest_republish",
-    "q315_center_threshold_drift",
-    "q316_ivf_cell_split_recovery",
-    "q317_bucketed_gate_compaction",
-    "q318_maintenance_planner",
-}
+# Replay tier: the eager streaming/lifecycle builders. Their wall time
+# is fixed micro-batch and commit latency, not plan cost, so they are
+# measured in the first two passes only (min-of-2) and reported as
+# their own band in the stderr diff, where their scatter cannot read
+# as a plan regression. Plan-cost entries keep the full interleaved
+# min-of-n discipline.
+REPLAY_TIER = {n for n, s in REGISTRY.items() if EAGER_TAGS & set(s.tags)}
 
 
 def _short(name: str) -> str:

@@ -55,6 +55,12 @@ class QuerySpec:
 
 REGISTRY: dict[str, QuerySpec] = {}
 
+# Tags of builders that run a whole streaming or lifecycle cadence
+# (micro-batches, commits, maintenance) eagerly at build time and
+# return a checkpoint scan of its result: there is no lazy plan to
+# audit, and their wall time is orchestration, not plan cost.
+EAGER_TAGS = frozenset({"streaming", "lifecycle"})
+
 
 def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     """Decorator registering a builder under ``name``; its docstring

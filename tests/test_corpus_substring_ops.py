@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 from movie_data_pipeline_spark.plans import REGISTRY
 from movie_data_pipeline_spark.schemas import TESTDATA_SCHEMAS
 
+pytestmark = pytest.mark.usefixtures("_scoped")
+
 
 def _write_docs(spark, rows):
     """rows: (doc_id, text, lang, source). Writes a documents.parquet

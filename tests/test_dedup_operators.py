@@ -27,6 +27,8 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
 from audit_plans import plan_expressions  # noqa: E402
 
+pytestmark = pytest.mark.usefixtures("_scoped")
+
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
     "from the warm windowsill near the garden gate"

@@ -2,10 +2,14 @@
 
 from __future__ import annotations
 
+import pytest
+
 from movie_data_pipeline_spark.operators.graph import (
     connected_components,
     duplicate_clusters,
 )
+
+pytestmark = pytest.mark.usefixtures("_scoped")
 
 
 def test_chain_collapses_to_one_component(spark):

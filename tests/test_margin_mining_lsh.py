@@ -19,6 +19,8 @@ from movie_data_pipeline_spark.plans.similarity import (
 )
 from tests.conftest import ORACLE_SF_DIR, TESTDATA_SF_DIR
 
+pytestmark = pytest.mark.usefixtures("_scoped")
+
 
 def test_rows_per_band_ladder():
     """Integer ladder: smallest r with 2**r >= ceil(n/target), clamped

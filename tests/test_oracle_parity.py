@@ -9,6 +9,7 @@ import pytest
 
 from movie_data_pipeline_spark.operators.util import query_scope
 from movie_data_pipeline_spark.plans import REGISTRY
+from movie_data_pipeline_spark.plans.core import EAGER_TAGS
 from tests.conftest import ORACLE_SF_DIR, TESTDATA_SF_DIR
 from tests.oracle_harness import compare, duckdb_connection
 
@@ -25,7 +26,7 @@ ROWS_ONLY_QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle is None)
 _HEAVY_PARITY = {
     n
     for n, s in REGISTRY.items()
-    if {"streaming", "lifecycle"} & set(s.tags or ())
+    if EAGER_TAGS & set(s.tags)
 } | {"q256b_margin_mining_lsh", "q74_winnowing_fingerprints"}
 
 
@@ -145,57 +146,13 @@ def test_force_reverify_autodeactivates():
     assert e._active_reverify({"qW": 4}, {}) == ("qW",)
 
 
-def test_reverify_queue_live_state():
-    """The 7 cap-reworked names (VERDICT r4 #1), q64 (round-6 segment
-    rewrite), q196 (round-6 quantization fix), the sample-bounded
-    plans (q256/q248 round 7, re-queued round 8 for the fixed_sample
-    rewiring; q264/q272 round 8, VERDICT r7 #1), the round-8
-    60-bit SimHash migration (q21/q79/q274, VERDICT r7 #2) plus the
-    q268/q277 window-key digest (VERDICT r7 #3), and the round-10
-    ADVICE fixes (q79/q274 lazy-checkpointed fingerprints — their
-    round-9 ladder entries superseded by dict-key overwrite — and
-    q286's pre-rank count), round 11's q297 pricing-body
-    factoring (shared with q306), and the round-12 optimization's
-    plan-shape changes (the _dup_spans window rewrite: q268/q277/q281;
-    the containment_pairs direction explode: q149) are queued; the
-    ones whose latest green
-    row predates their change round are active (q82 was IN the r4
-    window, so its r4 row already verifies the capped semantics and
-    it auto-deactivates), and their placement never displaces a
-    never-verified name from the window. The queue literal names each
-    query once (a repeated key would silently overwrite the earlier
-    round), and every key is a registered query."""
-    import ast
-    import inspect
-
+def test_queue_covers_the_catalog_oldest_change_first():
+    """The queue holds every registered name, read from
+    FINGERPRINTS.json in (since, query number) order, so when more
+    names are active than the window holds, the oldest changes are
+    verified first."""
     import __spark_entry__ as e
 
-    (literal,) = [
-        node.value
-        for node in ast.walk(ast.parse(inspect.getsource(e)))
-        if isinstance(node, ast.AnnAssign)
-        and getattr(node.target, "id", None) == "_REVERIFY_QUEUE"
-    ]
-    keys = [k.value for k in literal.keys]
-    repeated = sorted({k for k in keys if keys.count(k) > 1})
-    assert not repeated, f"_REVERIFY_QUEUE repeats {repeated}"
-    assert set(keys) == set(e._REVERIFY_QUEUE)
-    for n in e._REVERIFY_QUEUE:
-        assert n in REGISTRY
-    active = set(e._FORCE_REVERIFY)
-    # active = exactly those without a post-change (round>=4) green row
-    expected = {
-        n for n, since in e._REVERIFY_QUEUE.items()
-        if e._GREEN_ROUND.get(n, 0) < since
-    }
-    assert active == expected
-    window = list(e.queries())[:50]
-    n_unverified = sum(
-        1 for n in REGISTRY if n not in e._DRIVER_VERIFIED
-    )
-    if n_unverified >= 50:
-        # backlog still fills the window: forced names must wait
-        assert not (set(window) & active)
-    else:
-        # backlog drained: forced names enter right after it
-        assert active <= set(window[:n_unverified + len(active)])
+    assert set(e._REVERIFY_QUEUE) == set(REGISTRY)
+    keys = [(since, e._qnum(n)) for n, since in e._REVERIFY_QUEUE.items()]
+    assert keys == sorted(keys)

@@ -23,6 +23,8 @@ from audit_plans import audit_all  # noqa: E402
 
 from tests.conftest import TESTDATA_SF_DIR
 
+pytestmark = pytest.mark.usefixtures("_scoped")
+
 
 def test_no_plan_smells(spark):
     """Fast tier: every plan-cost query. Streaming/lifecycle builders
@@ -37,8 +39,26 @@ def test_no_plan_smells(spark):
 
 @pytest.mark.slow
 def test_no_plan_smells_full(spark):
+    """Every query, the eager ones included; each builder tagged with
+    ``EAGER_TAGS`` must return a checkpoint scan, so a mistagged lazy
+    plan cannot hide behind the fast tier's skip."""
     problems = audit_all(spark, TESTDATA_SF_DIR)
     assert problems == []
+
+
+def test_structural_checkpoint_scan_detector(spark):
+    """A materialized result reads only checkpoint scans, filtered or
+    joined; a table read is lazy."""
+    from audit_plans import lazy_leaves
+
+    done = spark.range(5).localCheckpoint(eager=True)
+    assert lazy_leaves(done) == []
+    assert lazy_leaves(done.where("id > 1").join(done, "id")) == []
+    table = spark.read.parquet(f"{TESTDATA_SF_DIR}/region.parquet")
+    assert lazy_leaves(table) == ["LogicalRelation"]
+    assert lazy_leaves(done.join(table, done.id == table.r_regionkey)) == [
+        "LogicalRelation"
+    ]
 
 
 def test_movielens_etl_default_has_no_global_window(spark):

@@ -14,6 +14,9 @@ from movie_data_pipeline_spark.operators.prefix import (
     attach_running_sums,
     ntile_from_row_number,
 )
+from movie_data_pipeline_spark.operators.util import query_scope
+
+pytestmark = pytest.mark.usefixtures("_scoped")
 
 
 @pytest.fixture(scope="module")
@@ -23,11 +26,12 @@ def frame(spark):
         (i, rng.randint(0, 50), rng.random() * 10)
         for i in rng.sample(range(100_000), 2_000)
     ]
-    return (
-        spark.createDataFrame(rows, "id long, grp long, val double")
-        .repartition(13)
-        .persist()
-    )
+    with query_scope():
+        yield (
+            spark.createDataFrame(rows, "id long, grp long, val double")
+            .repartition(13)
+            .localCheckpoint(eager=True)
+        )
 
 
 def test_running_sums_match_global_window(frame):

@@ -8,7 +8,11 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
+
 from movie_data_pipeline_spark.plans import REGISTRY
+
+pytestmark = pytest.mark.usefixtures("_scoped")
 
 
 # ---------------------------------------------------------------------------

@@ -20,6 +20,8 @@ from pyspark.sql.types import (
 
 from movie_data_pipeline_spark.plans import REGISTRY
 
+pytestmark = pytest.mark.usefixtures("_scoped")
+
 DOC_SCHEMA = (
     "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
 )

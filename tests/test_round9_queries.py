@@ -9,8 +9,12 @@ import hashlib
 import shutil
 import tempfile
 
+import pytest
+
 from movie_data_pipeline_spark.plans import REGISTRY
 from movie_data_pipeline_spark.schemas import TESTDATA_SCHEMAS
+
+pytestmark = pytest.mark.usefixtures("_scoped")
 
 
 # ---------------------------------------------------------------------------

@@ -17,6 +17,8 @@ from movie_data_pipeline_spark.operators.dedup import (
     simhash_rung_thresholds,
 )
 
+pytestmark = pytest.mark.usefixtures("_scoped")
+
 
 def test_rung_thresholds_are_occupancy_times_band_space():
     assert simhash_rung_thresholds() == (8 * 2**10, 8 * 2**20)

@@ -21,6 +21,8 @@ from movie_data_pipeline_spark.sources.registry import TESTDATA_TABLES, load_tab
 from tests.conftest import TESTDATA_SF_DIR as TESTDATA_SF001_DIR
 from tests.oracle_harness import canonicalize
 
+pytestmark = pytest.mark.usefixtures("_scoped")
+
 # Empirically verified portable set (70 queries, Spark 4 / DuckDB): the
 # oracle text parses under spark.sql AND hash-matches the builder.
 PORTABLE = """

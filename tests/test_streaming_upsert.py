@@ -3,6 +3,7 @@ the end-to-end streaming run against the batch twin."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from movie_data_pipeline_spark.streaming import (
@@ -12,6 +13,8 @@ from movie_data_pipeline_spark.streaming import (
     upsert_batch_writer,
 )
 from tests.conftest import TESTDATA_SF_DIR
+
+pytestmark = pytest.mark.usefixtures("_scoped")
 
 
 def _read_table(spark, path):

@@ -4,10 +4,13 @@ near-duplicate signal for the dedup operators."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from movie_data_pipeline_spark.operators.dedup import jaccard_pairs
 from movie_data_pipeline_spark.sources.synthetic import register
+
+pytestmark = pytest.mark.usefixtures("_scoped")
 
 
 def _read(spark, n_docs, n_partitions, seed=42):

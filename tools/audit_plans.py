@@ -2,8 +2,9 @@
 """Dump `explain(formatted)` for every catalog query and flag plan
 smells: Python row-UDFs (BatchEvalPython), cartesian products,
 single-partition windows outside the documented bounded-frame
-allowlist, per-row work repeated inside higher-order lambdas, and
-arrays built twice per row by an inferred ``size(...) > 0`` filter.
+allowlist, per-row work repeated inside higher-order lambdas, arrays
+built twice per row by an inferred ``size(...) > 0`` filter, and
+builders tagged eager whose plan is not a checkpoint scan.
 
 Usage: python tools/audit_plans.py [sf_dir] > plans.txt
 
@@ -221,25 +222,30 @@ def explain_formatted(df) -> str:
     return df._jdf.queryExecution().explainString(em)
 
 
-# Tags whose builders run an entire streaming/lifecycle cadence
-# EAGERLY at build time (micro-batches, commits, maintenance) and
-# return a localCheckpoint scan: their returned "plan" is one
-# checkpoint read, so auditing it is vacuous while building it costs
-# minutes across the catalog. The fast CI tier skips them (round 13,
-# VERDICT r12 #1 — the driver's pytest window); the slow tier audits
-# everything.
-EAGER_TAGS = {"streaming", "lifecycle"}
+def lazy_leaves(df) -> list[str]:
+    """Node names of the optimized plan's leaves that are not
+    checkpoint (``LogicalRDD``) scans: empty for a builder that ran
+    eagerly and returned its materialized result."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    names = [leaves.apply(i).nodeName() for i in range(leaves.size())]
+    return [n for n in names if n != "LogicalRDD"]
 
 
 def audit_all(
     spark, sf_dir: str, emit=None, skip_eager: bool = False
 ) -> list[str]:
+    """Audit every registered plan. Builders tagged with ``EAGER_TAGS``
+    return a checkpoint scan, so ``skip_eager`` (the fast CI tier) skips
+    them; when they are built, each must really return one, or the skip
+    would hide a lazy plan from the audit."""
     from movie_data_pipeline_spark.operators.util import query_scope
     from movie_data_pipeline_spark.plans import REGISTRY
+    from movie_data_pipeline_spark.plans.core import EAGER_TAGS
 
     problems: list[str] = []
     for name, spec in sorted(REGISTRY.items()):
-        if skip_eager and EAGER_TAGS & set(getattr(spec, "tags", ()) or ()):
+        eager = EAGER_TAGS & set(spec.tags)
+        if skip_eager and eager:
             continue
         with query_scope():
             df = spec.build(spark, sf_dir)
@@ -247,6 +253,11 @@ def audit_all(
             if emit:
                 emit(f"{'=' * 30} {name}\n{plan}")
             problems.extend(audit_plan(name, plan, df=df))
+            if eager and (lazy := lazy_leaves(df)):
+                problems.append(
+                    f"{name}: tagged {sorted(eager)} but its plan reads "
+                    f"{lazy}, not a checkpoint scan"
+                )
     return problems
 
 
