@@ -24,7 +24,9 @@ module owns that layout: :func:`simhash_layout` and
 the stored layout on each batch, so a migration needs no writer
 restart. When corpus growth crosses a ladder threshold,
 :func:`migrate_simhash_index` re-bands the stored *fingerprints*: no
-text re-hash, one overwrite commit that records the new layout.
+text re-hash, one overwrite commit that records the new layout. An IVF
+index's codebook meta has the same single owner: :func:`ivf_layout`
+states it and :func:`stored_ivf_codebook` reads it back.
 
 Scale notes: every function here is one or two linear passes over the
 index (a semi-join against the corpus key column — column-pruned at
@@ -109,6 +111,32 @@ def stored_simhash_layout(index: VersionedTable, version: int) -> dict:
             "manifest records no layout (simhash_rung); rebuild it"
         )
     return meta
+
+
+def ivf_layout(codebook: dict[int, list[float]]) -> dict:
+    """The manifest meta of an IVF index whose cells are ``codebook``'s
+    keys: ``n_cells`` and the ``ivf_centroids`` codebook, ``{str(cell):
+    [floats]}`` in cell order, so a prober reads it in one manifest
+    fetch instead of re-deriving it."""
+    return {
+        "n_cells": len(codebook),
+        "ivf_centroids": {
+            str(c): [float(v) for v in codebook[c]] for c in sorted(codebook)
+        },
+    }
+
+
+def stored_ivf_codebook(
+    spark: SparkSession, index: VersionedTable, version: int
+) -> DataFrame:
+    """(cell INT, centroid ARRAY<DOUBLE>): the codebook recorded by
+    ``version`` of a stored IVF index (:func:`ivf_layout`), cells in
+    order."""
+    book = index.manifest(version)["meta"]["ivf_centroids"]
+    return spark.createDataFrame(
+        sorted((int(c), [float(v) for v in vec]) for c, vec in book.items()),
+        "cell INT, centroid ARRAY<DOUBLE>",
+    )
 
 
 def simhash_fingerprints(docs: DataFrame, layout: dict) -> DataFrame:
@@ -379,51 +407,45 @@ def migrate_ivf_index(
     corpus_path: str,
     target_cells: int | None = None,
 ) -> int:
-    """Centroid REFRESH for a stored IVF index (round 11, VERDICT r10
-    #3 — the similarity family's q296): after heavy erasure or corpus
-    growth the cells an index was seeded with go stale — inverted
-    lists skew, probe recall drifts (exactly what q264/q284 measure) —
-    and until this round the only path was a from-scratch rebuild.
+    """Centroid refresh for a stored IVF index: after heavy erasure or
+    corpus growth the cells an index was seeded with go stale (inverted
+    lists skew, probe recall drifts); this retrains them in place of a
+    from-scratch rebuild.
 
     One Lloyd step over the SURVIVING corpus, one commit:
 
     1. join the index's (vec_id, cell) rows to the corpus head's
        ``embedding`` vectors
        (erased vectors are gone from the corpus, so they can't vote);
-    2. re-train: per-cell exact DECIMAL(30,6) mean centroids (the
-       q264/q284 codebook discipline — order-free on both engines);
-    3. re-assign every surviving vector to its nearest new centroid
+    2. re-train: per-cell exact DECIMAL(30,6) mean centroids
+       (``operators/similarity.mean_vectors`` — order-free on both
+       engines);
+    3. re-assign every member vector to its nearest new centroid
        (``operators/similarity.assign_to_centroids``: round4-quantized
        cosine argmax, ties toward the lowest cell — map-only against
        the broadcast codebook);
     4. ONE overwrite commit of the new (vec_id, cell) rows with the
-       retrained codebook pinned in the manifest meta
-       (``ivf_centroids`` + ``n_cells``) — readers see the old or the
-       new index, never a mix, and a prober reads the codebook from
-       ONE manifest fetch instead of re-deriving it.
+       retrained codebook in the manifest meta (:func:`ivf_layout`) —
+       readers see the old or the new index, never a mix.
 
     Cells that lost all members simply vanish (their centroid is not
     retrained); the codebook keeps the surviving cells' original ids
     so time-travel comparisons stay keyed.
 
-    ``target_cells`` (round 12, VERDICT r11 #4) stops the codebook
-    shrinking monotonically: when fewer cells survive than the
-    target, the largest surviving cells are SPLIT — each contributes
-    its member FARTHEST from its retrained centroid (round4-quantized
-    cosine, ties toward the lowest id — the bisecting-k-means seed
-    choice, fully deterministic) as a new centroid with a fresh cell
-    id (``max_surviving_id + 1, + 2, ...`` in split order: largest
-    cell first, ties toward the lowest cell id), and the map-only
-    re-assignment in step 3 runs against the EXPANDED codebook — one
-    commit, same cadence. At most one split per surviving cell per
-    migration (raises if the target needs more: run another
-    migration — each halves the largest lists, the bisecting
-    schedule); raises if ``target_cells`` is below the surviving
-    count (erasure, not a target, shrinks a codebook). q316 proves
-    recall recovery: erase until cells empty, migrate plain (recall
-    sags with the skewed big cells), migrate again with
-    ``target_cells`` restoring the width — recall@10 through the
-    stored index recovers. Returns the new version.
+    ``target_cells`` stops the codebook shrinking monotonically: when
+    fewer cells survive than the target, the largest surviving cells
+    are SPLIT — each contributes its member FARTHEST from its retrained
+    centroid (round4-quantized cosine, ties toward the lowest id — the
+    bisecting-k-means seed choice, fully deterministic) as a new
+    centroid with a fresh cell id (``max_surviving_id + 1, + 2, ...``
+    in split order: largest cell first, ties toward the lowest cell
+    id), and the re-assignment in step 3 runs against the EXPANDED
+    codebook — one commit, same cadence. At most one split per
+    surviving cell per migration (raises if the target needs more: run
+    another migration — each halves the largest lists, the bisecting
+    schedule); raises if ``target_cells`` is below the surviving count
+    (erasure, not a target, shrinks a codebook). Returns the new
+    version.
     Raises when index or corpus has no commits, or when the index head
     references vectors absent from the corpus (scrub first —
     :func:`scrub_index_to_corpus` — so the migration never trains on
@@ -435,17 +457,18 @@ def migrate_ivf_index(
     constant-size metadata, the same licence as every IVF codebook.
     Probed at 10x in tools/lifecycle_probe.py.
     """
+    from pyspark.sql.window import Window
+
     from movie_data_pipeline_spark.operators.similarity import (
-        _to_double,
         assign_to_centroids,
+        cosine,
+        mean_vectors,
     )
 
     index = VersionedTable(index_path)
     corpus = VersionedTable(corpus_path)
     head = index.read(spark)
-    vectors = corpus.read(spark).select(
-        "vec_id", _to_double(F.col("embedding")).alias("__vec")
-    )
+    vectors = corpus.read(spark).select("vec_id", "embedding")
     n_phantom = head.join(vectors, "vec_id", "left_anti").count()
     if n_phantom:
         raise ValueError(
@@ -454,33 +477,13 @@ def migrate_ivf_index(
             "(operators/index_lifecycle.scrub_index_to_corpus)"
         )
     members = head.select("vec_id", "cell").join(vectors, "vec_id")
-    per_dim = (
-        members.select("cell", F.posexplode("__vec").alias("dim_idx", "v"))
-        .groupBy("cell", "dim_idx")
-        .agg(
-            (
-                F.sum(F.col("v").cast("decimal(30,6)")).cast("double")
-                / F.count("*")
-            ).alias("c")
-        )
-    )
-    cent_rows = (
-        per_dim.groupBy("cell")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("dim_idx", "c"))).alias(
-                "ps"
-            )
-        )
-        .select(
-            "cell",
-            F.transform(F.col("ps"), lambda p: p.getField("c")).alias(
-                "centroid"
-            ),
-        )
-        .collect()
-    )
-    cells = sorted(r["cell"] for r in cent_rows)
-    codebook = {r["cell"]: [float(v) for v in r["centroid"]] for r in cent_rows}
+    codebook = {
+        r["cell"]: [float(v) for v in r["centroid"]]
+        for r in mean_vectors(
+            members, ["cell"], "embedding", "decimal(30,6)"
+        ).collect()
+    }
+    cells = sorted(codebook)
     n_split = 0
     if target_cells is not None:
         target = int(target_cells)
@@ -499,30 +502,21 @@ def migrate_ivf_index(
                 "bisecting schedule)"
             )
     if n_split:
-        from pyspark.sql.window import Window
-
-        from movie_data_pipeline_spark.operators.similarity import cosine
-
         cent_df = spark.createDataFrame(
             [(int(c), codebook[c]) for c in cells],
             "cell INT, centroid ARRAY<DOUBLE>",
-        )
-        sim_r4 = (
-            F.floor(
-                cosine(F.col("__vec"), F.col("centroid")) * F.lit(10000.0)
-                + F.lit(0.5)
-            )
-            / F.lit(10000.0)
         )
         w_far = Window.partitionBy("cell").orderBy(
             F.asc("__sim"), F.asc("vec_id")
         )
         far = (
             members.join(F.broadcast(cent_df), "cell")
-            .withColumn("__sim", sim_r4)
+            .withColumn(
+                "__sim", round4(cosine(F.col("embedding"), F.col("centroid")))
+            )
             .withColumn("__rn", F.row_number().over(w_far))
             .filter(F.col("__rn") == 1)
-            .select("cell", F.col("__vec").alias("__seed"))
+            .select("cell", F.col("embedding").alias("__seed"))
         )
         sizes = members.groupBy("cell").agg(F.count("*").alias("__sz"))
         # ≤ n_cells rows — codebook-sized metadata, the same collect
@@ -538,11 +532,11 @@ def migrate_ivf_index(
             codebook[next_id] = [float(v) for v in r["__seed"]]
             cells.append(next_id)
             next_id += 1
-    # Re-assign the index's MEMBERS, not the whole corpus head (ADVICE
-    # r11): only index⊆corpus is validated above, so an index that
-    # intentionally covers a subset must not silently expand to every
-    # corpus vector. Membership is preserved exactly — a semi-join of
-    # the corpus vectors against the index's id set.
+    # Re-assign the index's MEMBERS, not the whole corpus head: only
+    # index⊆corpus is validated above, so an index that intentionally
+    # covers a subset must not silently expand to every corpus vector.
+    # Membership is preserved exactly — a semi-join of the corpus
+    # vectors against the index's id set.
     member_vecs = corpus.read(spark).join(
         head.select("vec_id"), "vec_id", "left_semi"
     )
@@ -550,7 +544,7 @@ def migrate_ivf_index(
         member_vecs, [codebook[c] for c in cells]
     )
     # assign_to_centroids cells are positional (0..len-1) over the
-    # ordered surviving-cell list; map back to the original cell ids so
+    # ordered cell list; map back to the original cell ids so
     # time-travel census comparisons stay keyed.
     mapping = F.array(*[F.lit(int(c)) for c in cells])
     rows = reassigned.select(
@@ -558,8 +552,7 @@ def migrate_ivf_index(
         F.element_at(mapping, F.col("cell") + 1).alias("cell"),
     )
     meta = dict(index.manifest().get("meta") or {})
-    meta["n_cells"] = len(cells)
-    meta["ivf_centroids"] = {str(c): codebook[c] for c in cells}
+    meta.update(ivf_layout(codebook))
     return index.commit(rows, mode="overwrite", meta=meta)
 
 

@@ -24,7 +24,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from movie_data_pipeline_spark.functions.text import base_hash32
+from movie_data_pipeline_spark.functions.numeric import round4
 from movie_data_pipeline_spark.operators.util import spread
 
 
@@ -207,6 +207,44 @@ def cell_centroids(assigned: DataFrame) -> DataFrame:
     )
 
 
+def mean_vectors(
+    frame: DataFrame, keys: list[str], vec: str, decimal: str
+) -> DataFrame:
+    """(*keys, centroid): the exact per-key mean of the ``vec`` arrays.
+
+    Each element is cast to double, then to ``decimal`` (``decimal(30,6)``
+    for IVF/PQ codebooks, ``decimal(38,18)`` for k-means and label
+    centroids), summed, and divided by the row count; the per-dimension
+    means are reassembled in dimension order. A decimal sum is
+    order-free, so every engine and partitioning gets the same bits
+    (a double ``avg`` would drift), and the oracles mirror it as
+    ``CAST(SUM(CAST(x AS DECIMAL)) AS DOUBLE) / COUNT(*)``.
+
+    ``vec`` is posexploded as given: exploding a projected
+    ``transform(...)`` makes Catalyst infer ``size(...) > 0`` below the
+    projection and build the array twice, so pass a stored column.
+
+    Scale: one (keys, dim) hash aggregate, then one per key; the output
+    is keys x dim values.
+    """
+    per_dim = (
+        frame.select(*keys, F.posexplode(vec).alias("dim_idx", "__x"))
+        .groupBy(*keys, "dim_idx")
+        .agg(
+            (
+                F.sum(F.col("__x").cast("double").cast(decimal)).cast("double")
+                / F.count("*").cast("double")
+            ).alias("__mean")
+        )
+    )
+    return per_dim.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("dim_idx", "__mean"))),
+            lambda s: s.getField("__mean"),
+        ).alias("centroid")
+    )
+
+
 def _sql_double(v: float) -> str:
     """``v`` as a Spark SQL double that parses back to the same bits:
     ``repr`` is the shortest round-tripping decimal form; NaN and the
@@ -264,16 +302,31 @@ def _assign_cells(
     )
 
 
+def ivf_seeds(frame: DataFrame, n: int, col: str) -> list:
+    """``col`` of the ``n`` rows of ``frame`` with the lowest
+    md5(vec_id), ties toward the lower vec_id: a deterministic
+    pseudo-random draw without RNG state (id order would be biased:
+    data is often written clustered, so adjacent ids seed one region).
+
+    Scale: a top-n over the frame; the collect is n rows, codebook-sized
+    metadata.
+    """
+    return [
+        r[0]
+        for r in frame.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
+        .limit(n)
+        .select(col)
+        .collect()
+    ]
+
+
 def ivf_assign(corpus: DataFrame, n_cells: int = 8) -> DataFrame:
     """(vec_id, embedding) corpus with a ``cell`` column: Voronoi
-    assignment to seed vectors.
+    assignment to the :func:`ivf_seeds` vectors.
 
-    Seeds are the ``n_cells`` corpus vectors with the lowest md5(id) —
-    a deterministic pseudo-random draw (id order would be biased: data
-    is often written clustered, and adjacent ids would seed one region).
-    No RNG state, no iterative trainer (a k-means codebook can be
-    swapped in; the assignment shape is identical). Each vector goes to
-    the seed with the highest cosine (ties → lowest seed index).
+    No iterative trainer (a k-means codebook can be swapped in; the
+    assignment shape is identical). Each vector goes to the seed with
+    the highest cosine (ties → lowest seed index).
 
     ``cell`` is coalesced to 0, a fallback never taken (``array_max``
     over a non-empty array of non-null structs is never null), so that
@@ -285,18 +338,11 @@ def ivf_assign(corpus: DataFrame, n_cells: int = 8) -> DataFrame:
     floats, constant-size metadata exactly like any IVF codebook, NOT a
     data collect — and compiled into a per-row argmax expression, so
     assignment is a map-only plan: the corpus is scanned once, nothing
-    shuffles. (The earlier cross-join + window formulation shuffled
-    corpus x n_cells rows just to pick an argmax.) At deployment, write
-    the result bucketed by cell so probe joins are exchange-free.
+    shuffles. At deployment, write the result bucketed by cell so probe
+    joins are exchange-free.
     """
-    seed_rows = (
-        corpus.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(n_cells)
-        .select(F.col("embedding").alias("seed_vec"))
-        .collect()
-    )
     return _assign_cells(
-        corpus, [r.seed_vec for r in seed_rows], quantize=False
+        corpus, ivf_seeds(corpus, n_cells, "embedding"), quantize=False
     )
 
 
@@ -315,6 +361,37 @@ def assign_to_centroids(
     toward the lowest cell index.
     """
     return _assign_cells(corpus, centroids, quantize=True)
+
+
+def nearest_cells(
+    queries: DataFrame, codebook: DataFrame, nprobe: int
+) -> DataFrame:
+    """``queries`` (query_id, qv double array, qn its norm, ...) joined
+    to the ``nprobe`` nearest cells of ``codebook`` (cell, centroid),
+    with each cell's ``cell_rank``.
+
+    Cells rank by the round4-quantized cosine ``dot(qv, centroid) /
+    (qn * |centroid|)``, ties toward the lowest cell: the probe of an
+    index whose centroids are derived (exact decimal means), where the
+    cosine fold deserves a quantization margin before cross-engine
+    comparison.
+
+    Scale: the codebook is broadcast; the window is per query.
+    """
+    w = Window.partitionBy("query_id").orderBy(F.desc("__cs"), F.asc("cell"))
+    return (
+        queries.crossJoin(F.broadcast(codebook))
+        .withColumn(
+            "__cs",
+            round4(
+                dot(F.col("qv"), F.col("centroid"))
+                / (F.col("qn") * l2_norm(F.col("centroid")))
+            ),
+        )
+        .withColumn("cell_rank", F.row_number().over(w))
+        .filter(F.col("cell_rank") <= nprobe)
+        .drop("centroid", "__cs")
+    )
 
 
 def cosine_topk_ivf(

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from movie_data_pipeline_spark.operators.similarity import sq_dist
+from movie_data_pipeline_spark.operators.similarity import mean_vectors, sq_dist
 from movie_data_pipeline_spark.operators.util import array_pairs
 from movie_data_pipeline_spark.plans.core import query, r4, round4
 from movie_data_pipeline_spark.sources.registry import load_table
@@ -257,8 +257,9 @@ def q104_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid rows with the squared-L2 fold evaluated in codegen
     (zip_with + sequential aggregate — bit-identical to the oracle's
     list_reduce, per q62); re-centering is one (cid, dim) hash aggregate
-    over posexplode with DECIMAL(38,18) sums. Ties in the argmin break
-    on centroid id on both engines.
+    with DECIMAL(38,18) sums (``mean_vectors``), and the last
+    iteration's centroids are the long-form output. Ties in the argmin
+    break on centroid id on both engines.
 
     Scale: each iteration shuffles only (cid, dim, partial-sum) — the
     corpus itself never reshuffles; centroids stay broadcast-sized
@@ -287,35 +288,19 @@ def q104_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "arr", "cid")
         )
 
-    def recenter(assigned: DataFrame) -> DataFrame:
-        return (
-            assigned.select("cid", F.posexplode("arr").alias("dim_idx", "x"))
-            .groupBy("cid", "dim_idx")
-            .agg(
-                (
-                    F.sum(F.col("x").cast("decimal(38,18)")).cast("double")
-                    / F.count("*").cast("double")
-                ).alias("val")
-            )
-        )
-
     assigned = None
     for _ in range(_KMEANS_ITERS):
-        # persist: the last assignment feeds three consumers (recenter,
-        # sizes, output); k-row centroid frames cost nothing to cache
-        # and cut each iteration's recursive lineage.
+        # persist: the last assignment feeds the re-centering and the
+        # sizes; k-row centroid frames cost nothing to cache and cut
+        # each iteration's recursive lineage.
         assigned = assign(cents).persist()
-        means = recenter(assigned)
-        cents = means.groupBy("cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim_idx", "val"))),
-                lambda s: s.getField("val"),
-            ).alias("cvec")
-        ).persist()
+        cents = mean_vectors(
+            assigned, ["cid"], "arr", "decimal(38,18)"
+        ).select("cid", F.col("centroid").alias("cvec")).persist()
     sizes = assigned.groupBy("cid").agg(F.count("*").alias("n_vecs"))
-    final_means = recenter(assigned)
     return (
-        final_means.join(sizes, "cid")
+        cents.join(sizes, "cid")
+        .select("cid", F.posexplode("cvec").alias("dim_idx", "val"), "n_vecs")
         .select(
             "cid",
             F.col("dim_idx").cast("long").alias("dim_idx"),
@@ -673,21 +658,8 @@ def q171_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("arr"),
     ).persist()
-    mu = (
-        vecs.select(F.posexplode("arr").alias("i0", "x"))
-        .groupBy("i0")
-        .agg(
-            (
-                F.sum(F.col("x").cast("decimal(38,18)")).cast("double")
-                / F.count("*")
-            ).alias("val")
-        )
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i0", "val"))),
-                lambda s: s.getField("val"),
-            ).alias("m")
-        )
+    mu = mean_vectors(vecs, [], "arr", "decimal(38,18)").select(
+        F.col("centroid").alias("m")
     )
     dim = _EMB_DIM
     v = spark.range(1).select(
@@ -817,8 +789,9 @@ def q177_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, distances evaluate in codegen via the same sequential
     zip_with fold as q104/q62 (bit-identical to the oracle's
     list_reduce), and both reductions (per-vec argmin, per-label mean)
-    are hash aggregates. Means use exact DECIMAL(38,18) sums so
-    partition order can't move a round4 boundary.
+    are hash aggregates. Means use exact DECIMAL(38,18) sums
+    (``mean_vectors``) so partition order can't move a round4
+    boundary.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     vecs = emb.select(
@@ -826,26 +799,8 @@ def q177_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.transform("embedding", lambda x: x.cast("double")).alias("arr"),
     )
-    # posexplode the raw column: exploding ``arr`` makes Catalyst infer
-    # size(arr) > 0 below the projection, i.e. build ``arr`` twice
-    cents = (
-        emb.select(
-            F.col("label").alias("cid"), F.posexplode("embedding").alias("dim_idx", "x")
-        )
-        .groupBy("cid", "dim_idx")
-        .agg(
-            (
-                F.sum(F.col("x").cast("double").cast("decimal(38,18)")).cast("double")
-                / F.count("*").cast("double")
-            ).alias("val")
-        )
-        .groupBy("cid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim_idx", "val"))),
-                lambda s: s.getField("val"),
-            ).alias("cvec")
-        )
+    cents = mean_vectors(emb, ["label"], "embedding", "decimal(38,18)").select(
+        F.col("label").alias("cid"), F.col("centroid").alias("cvec")
     )
     d = vecs.crossJoin(F.broadcast(cents)).withColumn(
         "dist", F.sqrt(sq_dist(F.col("arr"), F.col("cvec")))

@@ -9,14 +9,31 @@ half-boundaries, so quantization is stable).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import math
+from functools import reduce
 
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+from movie_data_pipeline_spark.operators.index_lifecycle import (
+    erase_documents,
+    ivf_layout,
+    migrate_ivf_index,
+    stored_ivf_codebook,
+)
 from movie_data_pipeline_spark.operators.similarity import (
     _hyperplane,
+    _to_double,
     cosine,
     cosine_topk,
     cosine_topk_lsh,
+    dot,
+    ivf_assign,
+    ivf_seeds,
+    l2_norm,
+    mean_vectors,
+    nearest_cells,
     sq_dist,
 )
 from movie_data_pipeline_spark.operators.util import (
@@ -28,6 +45,7 @@ from movie_data_pipeline_spark.operators.util import (
 )
 from movie_data_pipeline_spark.plans.core import query, r4, round4
 from movie_data_pipeline_spark.sources.registry import load_table
+from movie_data_pipeline_spark.sources.versioned import VersionedTable
 
 # Query set: every 100th vector — scales with the corpus (5 queries at
 # sf0.01, 50 at sf0.1) without hardcoding ids that may not exist.
@@ -762,40 +780,21 @@ def q187_source_centroid_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     granularity.
 
     Scale: the corpus-sized work is one (source, dim) hash aggregate
-    with exact DECIMAL sums (q177's centroid machinery); the pair
-    stage is |sources|² over a broadcast-sized centroid frame — the
-    same collapse-then-compare trick that makes q142 tractable. The
-    ranking orders on the round4-quantized value on both engines so
-    the LIMIT boundary can't be decided by sub-quantum float noise
-    (q23's discipline).
+    with exact DECIMAL(38,18) sums (``mean_vectors``); the pair stage
+    is |sources|² over a broadcast-sized centroid frame — the same
+    collapse-then-compare trick that makes q142 tractable. The ranking
+    orders on the round4-quantized value on both engines so the LIMIT
+    boundary can't be decided by sub-quantum float noise.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), "source"
     )
-    # posexplode the raw column and cast per element: exploding a
-    # projected transform(embedding) makes Catalyst infer size(...) > 0
-    # below the projection, i.e. build the array twice
-    cents = (
-        emb.join(docs, "vec_id")
-        .select("source", F.posexplode("embedding").alias("dim_idx", "x"))
-        .groupBy("source", "dim_idx")
-        .agg(
-            (
-                F.sum(F.col("x").cast("double").cast("decimal(38,18)")).cast("double")
-                / F.count("*").cast("double")
-            ).alias("val")
-        )
-        .groupBy("source")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim_idx", "val"))),
-                lambda s: s.getField("val"),
-            ).alias("cvec")
-        )
+    cents = mean_vectors(
+        emb.join(docs, "vec_id"), ["source"], "embedding", "decimal(38,18)"
     )
-    a = cents.select(F.col("source").alias("source_a"), F.col("cvec").alias("ca"))
-    b = cents.select(F.col("source").alias("source_b"), F.col("cvec").alias("cb"))
+    a = cents.select(F.col("source").alias("source_a"), F.col("centroid").alias("ca"))
+    b = cents.select(F.col("source").alias("source_b"), F.col("centroid").alias("cb"))
     pairs = (
         a.crossJoin(F.broadcast(b))
         .filter(F.col("source_a") < F.col("source_b"))
@@ -1833,6 +1832,15 @@ _IVF_PROBES = (1, 2, 4)
 _IVF_PROBE_VALUES = ", ".join(f"({p})" for p in _IVF_PROBES)
 
 
+def _query_norms(queries: DataFrame) -> DataFrame:
+    """(query_id, qv, qn): each (vec_id, embedding) query's double
+    vector and its norm — the probe side of ``nearest_cells``."""
+    return queries.select(
+        F.col("vec_id").alias("query_id"),
+        _to_double(F.col("embedding")).alias("qv"),
+    ).select("query_id", "qv", l2_norm(F.col("qv")).alias("qn"))
+
+
 @query(
     "q264_ivf_recall_sweep",
     oracle=f"""
@@ -1915,29 +1923,19 @@ def q264_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists, and the recall column prices what it buys.
 
     Determinism: seeds are the 8 lowest-md5(vec_id) vectors
-    (ivf_assign's rule, mirrored with the same ROW_NUMBER in SQL);
-    cell assignment argmaxes the raw sequential-fold cosine with ties
-    toward the lowest seed index (q132's proven cross-engine
-    discipline); centroids are exact DECIMAL(30,6) means per dimension
-    (order-free on both engines — a plain double AVG would drift);
-    centroid ranking uses round4-quantized cosines with the cell id as
-    tiebreak. Scale: the codebook is 8 x 64 floats
+    (``ivf_seeds``, mirrored with the same ROW_NUMBER in SQL); cell
+    assignment argmaxes the raw sequential-fold cosine with ties
+    toward the lowest seed index; centroids are exact DECIMAL(30,6)
+    means per dimension (``mean_vectors`` — order-free on both
+    engines, where a plain double AVG would drift); centroid ranking
+    uses round4-quantized cosines with the cell id as tiebreak
+    (``nearest_cells``). Scale: the codebook is 8 x 64 floats
     (broadcast), assignment is the map-only argmax, and the candidate
     join is an equi-join on cell. The exact ground-truth leg runs on a
     FIXED-SIZE fixed_sample of the query set (~_ANN_AUDIT_QTARGET
-    queries at any corpus size, modulus 1 at every test SF so driver
-    hashes are unchanged there) — the audit cost is O(target x n),
-    never O(n^2/100), closing VERDICT r7 #1 (the pre-r8 plan hit
-    ratio 230 at the 100x probe).
+    queries at any corpus size, modulus 1 at every test SF) — the
+    audit cost is O(target x n), never O(n^2/100).
     """
-    from movie_data_pipeline_spark.operators.similarity import (
-        _to_double,
-        dot,
-        ivf_assign,
-        l2_norm,
-    )
-    from pyspark.sql.window import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries = fixed_sample(
         emb.filter(F.expr(_QUERY_PRED)), "vec_id", _ANN_AUDIT_QTARGET
@@ -1958,52 +1956,8 @@ def q264_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         cached(exact, count=False) as exact,
         cached(assigned, count=False) as assigned,
     ):
-        per_dim = (
-            assigned.select("cell", F.posexplode("cv").alias("dim_idx", "val"))
-            .groupBy("cell", "dim_idx")
-            .agg(
-                (
-                    F.sum(F.col("val").cast("decimal(30,6)")).cast("double")
-                    / F.count("*")
-                ).alias("c")
-            )
-        )
-        cents = (
-            per_dim.groupBy("cell")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("dim_idx", "c"))).alias(
-                    "ps"
-                )
-            )
-            .select(
-                "cell",
-                F.transform(F.col("ps"), lambda p: p.getField("c")).alias(
-                    "centroid"
-                ),
-            )
-        )
-        qd = queries.select(
-            F.col("vec_id").alias("query_id"),
-            _to_double(F.col("embedding")).alias("qv"),
-        ).select("query_id", "qv", l2_norm(F.col("qv")).alias("qn"))
-        wq = Window.partitionBy("query_id").orderBy(
-            F.desc("cs_c"), F.asc("cell")
-        )
-        qc = (
-            qd.crossJoin(F.broadcast(cents))
-            .select(
-                "query_id",
-                "qv",
-                "qn",
-                "cell",
-                round4(
-                    dot(F.col("qv"), F.col("centroid"))
-                    / (F.col("qn") * l2_norm(F.col("centroid")))
-                ).alias("cs_c"),
-            )
-            .withColumn("cell_rank", F.row_number().over(wq))
-            .filter(F.col("cell_rank") <= max(_IVF_PROBES))
-        )
+        cents = mean_vectors(assigned, ["cell"], "cv", "decimal(30,6)")
+        qc = nearest_cells(_query_norms(queries), cents, max(_IVF_PROBES))
         probes = spark.createDataFrame(
             [(int(p),) for p in _IVF_PROBES], "nprobe LONG"
         )
@@ -2079,6 +2033,77 @@ def _pq_d2_sql(a: str, b: str, n: int) -> str:
         f"list_reduce(list_transform(generate_series(1, {n}), "
         f"i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])), "
         "(acc, x) -> acc + x)"
+    )
+
+
+def _pq_subvectors(arr: str) -> list[Column]:
+    """The _PQ_M consecutive _PQ_SUBD-dim subvectors of array ``arr``."""
+    return [
+        F.slice(F.col(arr), m * _PQ_SUBD + 1, _PQ_SUBD) for m in range(_PQ_M)
+    ]
+
+
+def _pq_codes(v: DataFrame) -> DataFrame:
+    """One row per (vector, subspace) of ``v`` (vec_id, arr double
+    array, ...): ``v``'s other columns, the subspace ``m``, its
+    subvector ``sub`` and its PQ ``code`` — the nearest codebook seed
+    subvector by raw sequential-fold squared-L2, ties toward the
+    lowest code.
+
+    Seeds are the _PQ_K ``ivf_seeds`` vectors, collected driver-side
+    (constant-size metadata) and compiled into literal per-subspace
+    argmin expressions, so encoding is map-only: no corpus x seeds
+    shuffle.
+    """
+    seeds = ivf_seeds(v, _PQ_K, "arr")
+    subs = _pq_subvectors("arr")
+    codes = []
+    for m in range(_PQ_M):
+        cands = [
+            F.struct(
+                sq_dist(
+                    subs[m],
+                    F.array(*[
+                        F.lit(float(x))
+                        for x in seed[m * _PQ_SUBD : (m + 1) * _PQ_SUBD]
+                    ]),
+                ).alias("d"),
+                F.lit(k).alias("k"),
+            )
+            for k, seed in enumerate(seeds)
+        ]
+        codes.append(F.array_min(F.array(*cands)).getField("k").cast("long"))
+    rest = [c for c in v.columns if c != "arr"]
+    return v.select(
+        *rest,
+        F.posexplode(
+            F.array(*[
+                F.struct(subs[m].alias("sub"), codes[m].alias("code"))
+                for m in range(_PQ_M)
+            ])
+        ).alias("m", "s"),
+    ).select(
+        *rest,
+        F.col("m").cast("long").alias("m"),
+        F.col("s.sub").alias("sub"),
+        F.col("s.code").alias("code"),
+    )
+
+
+def _pq_lut(queries: DataFrame, book: DataFrame) -> DataFrame:
+    """(query_id, m, code, d2q): the ADC lookup table of ``queries``
+    (query_id, qv) against the PQ codebook ``book`` (m, code, centroid)
+    — the round4-quantized squared-L2 from each query subvector to each
+    code, so ADC sums of 8 terms tie identically on every engine."""
+    qsubs = queries.select(
+        "query_id",
+        F.posexplode(F.array(*_pq_subvectors("qv"))).alias("m", "qsub"),
+    ).select("query_id", F.col("m").cast("long").alias("m"), "qsub")
+    return qsubs.join(F.broadcast(book), "m").select(
+        "query_id",
+        "m",
+        "code",
+        round4(sq_dist(F.col("qsub"), F.col("centroid"))).alias("d2q"),
     )
 
 
@@ -2188,123 +2213,43 @@ def q272_pq_codebook_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-subspace distortion (MSE) plus end-to-end recall@10 of
     asymmetric-distance (ADC) ranking vs exact squared-L2 top-10.
 
-    Determinism: codebook seeds are the 8 lowest-md5(vec_id)
-    vectors' subvectors (ivf_assign's rule); assignment argmins the
-    raw sequential-fold squared-L2 with ties toward the lowest code
-    (left-fold doubles are bit-identical across engines — q132's dot
-    discipline applied to distances); codebook entries are exact
-    DECIMAL(30,6) per-dimension means; every COMPARED distance
-    (per-subspace MSE terms, ADC lookup-table entries) is
-    round4-quantized, and ADC distances are sums of 8 quantized terms
-    in DECIMAL(20,4), so ranking ties break identically everywhere.
+    Determinism: codebook seeds are the 8 ``ivf_seeds`` vectors'
+    subvectors; assignment argmins the raw sequential-fold squared-L2
+    with ties toward the lowest code (left-fold doubles are
+    bit-identical across engines); codebook entries are exact
+    DECIMAL(30,6) per-dimension means (``mean_vectors``); every
+    COMPARED distance (per-subspace MSE terms, ADC lookup-table
+    entries) is round4-quantized, and ADC distances are sums of 8
+    quantized terms in DECIMAL(20,4), so ranking ties break
+    identically everywhere.
 
-    Scale shape: assignment is MAP-ONLY — the 64 codebook seed
-    subvectors compile into literal argmin expressions exactly like
-    ivf_assign (no corpus x seeds shuffle); the ADC join is
-    (codes x per-query lookup table) on (m, code) — |q| x n x 8
-    narrow rows, the real ADC scan cost. The query set (and with it
-    both the ADC scan and the exact ground-truth leg) is a FIXED-SIZE
-    fixed_sample (~_ANN_AUDIT_QTARGET queries at any corpus size,
-    modulus 1 at every test SF so driver hashes are unchanged there):
-    the audit is O(target x n) end to end, closing VERDICT r7 #1.
+    Scale shape: assignment is MAP-ONLY (``_pq_codes``: no corpus x
+    seeds shuffle); the ADC join is (codes x per-query lookup table)
+    on (m, code) — |q| x n x 8 narrow rows, the real ADC scan cost.
+    The query set (and with it both the ADC scan and the exact
+    ground-truth leg) is a FIXED-SIZE fixed_sample (~_ANN_AUDIT_QTARGET
+    queries at any corpus size, modulus 1 at every test SF): the audit
+    is O(target x n) end to end.
 
     Refinement note: one-step codebooks (means of the seed-Voronoi
     cells) rather than iterated k-means — the audit measures the
     PQ mechanics; extra Lloyd iterations only move the centroids,
     and the same report re-runs on any trained codebook. Measured at
     sf0.01: recall@10 = 0.16 — a 170x compression on a near-isotropic
-    corpus keeps little neighborhood structure (the q256b lesson
-    again), which is exactly what this report exists to reveal BEFORE
-    a corpus-scale ADC pass; clustered production embeddings and
-    larger K move it sharply up, and the audit re-prices any (M, K).
+    corpus keeps little neighborhood structure, which is exactly what
+    this report exists to reveal BEFORE a corpus-scale ADC pass;
+    clustered production embeddings and larger K move it sharply up,
+    and the audit re-prices any (M, K).
     """
-    from movie_data_pipeline_spark.operators.similarity import _to_double
-    from pyspark.sql.window import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     v = emb.select("vec_id", _to_double(F.col("embedding")).alias("arr"))
-
-    # codebook seeds collected driver-side (constant-size metadata,
-    # the ivf_assign codebook-collect pattern), compiled into literal
-    # per-subspace argmin expressions -> assignment is map-only
-    seed_rows = (
-        v.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(_PQ_K)
-        .select("arr")
-        .collect()
-    )
-    sub_slices = [
-        F.slice(F.col("arr"), m * _PQ_SUBD + 1, _PQ_SUBD)
-        for m in range(_PQ_M)
-    ]
-    code_cols = []
-    for m in range(_PQ_M):
-        cands = []
-        for k, row in enumerate(seed_rows):
-            ssub = F.array(
-                *[
-                    F.lit(float(x))
-                    for x in row.arr[m * _PQ_SUBD : (m + 1) * _PQ_SUBD]
-                ]
-            )
-            cands.append(
-                F.struct(
-                    sq_dist(sub_slices[m], ssub).alias("d"),
-                    F.lit(k).alias("k"),
-                )
-            )
-        code_cols.append(
-            F.array_min(F.array(*cands)).getField("k").cast("long")
-        )
-    sc = v.select(
-        "vec_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.struct(
-                        sub_slices[m].alias("sub"),
-                        code_cols[m].alias("code"),
-                    )
-                    for m in range(_PQ_M)
-                ]
-            )
-        ).alias("m", "s"),
-    ).select(
-        "vec_id",
-        F.col("m").cast("long").alias("m"),
-        F.col("s.sub").alias("sub"),
-        F.col("s.code").alias("code"),
-    )
+    sc = _pq_codes(v)
     with cached(sc, count=False) as sc:
-        per_dim = (
-            sc.select("m", "code", F.posexplode("sub").alias("dim_idx", "val"))
-            .groupBy("m", "code", "dim_idx")
-            .agg(
-                (
-                    F.sum(F.col("val").cast("decimal(30,6)")).cast("double")
-                    / F.count("*")
-                ).alias("cd")
-            )
-        )
-        cents = (
-            per_dim.groupBy("m", "code")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("dim_idx", "cd"))).alias(
-                    "ps"
-                )
-            )
-            .select(
-                "m",
-                "code",
-                F.transform(F.col("ps"), lambda p: p.getField("cd")).alias(
-                    "cent"
-                ),
-            )
-        )
+        cents = mean_vectors(sc, ["m", "code"], "sub", "decimal(30,6)")
         dist = sc.join(F.broadcast(cents), ["m", "code"]).select(
             "m",
             "code",
-            round4(sq_dist(F.col("sub"), F.col("cent"))).alias("d2r"),
+            round4(sq_dist(F.col("sub"), F.col("centroid"))).alias("d2r"),
         )
         per_sub = dist.groupBy("m").agg(
             F.count("*").cast("long").alias("n_vectors"),
@@ -2316,22 +2261,8 @@ def q272_pq_codebook_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         qs = fixed_sample(
             v.filter(F.expr(_QUERY_PRED)), "vec_id", _ANN_AUDIT_QTARGET
-        ).select(F.col("vec_id").alias("query_id"), "arr")
-        qsubs = qs.select(
-            "query_id",
-            F.posexplode(
-                F.array(*[
-                    F.slice(F.col("arr"), m * _PQ_SUBD + 1, _PQ_SUBD)
-                    for m in range(_PQ_M)
-                ])
-            ).alias("m", "qsub"),
-        ).select("query_id", F.col("m").cast("long").alias("m"), "qsub")
-        t = qsubs.join(F.broadcast(cents), "m").select(
-            "query_id",
-            "m",
-            "code",
-            round4(sq_dist(F.col("qsub"), F.col("cent"))).alias("d2q"),
-        )
+        ).select(F.col("vec_id").alias("query_id"), F.col("arr").alias("qv"))
+        t = _pq_lut(qs, cents)
         adist = (
             sc.select("vec_id", "m", "code")
             .join(t.hint("SHUFFLE_HASH"), ["m", "code"])
@@ -2351,12 +2282,12 @@ def q272_pq_codebook_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         wx = Window.partitionBy("query_id").orderBy(F.asc("xd"), F.asc("vec_id"))
         ex = (
-            v.crossJoin(F.broadcast(qs.select("query_id", F.col("arr").alias("qarr"))))
+            v.crossJoin(F.broadcast(qs))
             .filter(F.col("vec_id") != F.col("query_id"))
             .select(
                 "query_id",
                 "vec_id",
-                sq_dist(F.col("qarr"), F.col("arr")).alias("xd"),
+                sq_dist(F.col("qv"), F.col("arr")).alias("xd"),
             )
             .withColumn("rn", F.row_number().over(wx))
             .filter(F.col("rn") <= 10)
@@ -2507,12 +2438,12 @@ def q284_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance is 8 lookup-table adds — the shape that serves
     billion-vector retrieval from RAM.
 
-    Determinism (all disciplines inherited from q264/q272): IVF seeds
-    and PQ codebook seeds are the 8 lowest-md5(vec_id) vectors; cell
-    assignment argmaxes raw sequential-fold cosine (ties to lowest
-    seed); PQ assignment argmins raw squared-L2 (ties to lowest
-    code); centroids/codebook entries are exact DECIMAL(30,6) means;
-    probe ranking uses round4 cosines (ties to lowest cell); ADC
+    Determinism (q264's and q272's rules): IVF seeds and PQ codebook
+    seeds are the 8 ``ivf_seeds`` vectors; cell assignment argmaxes raw
+    sequential-fold cosine (ties to lowest seed); PQ assignment argmins
+    raw squared-L2 (ties to lowest code); centroids/codebook entries
+    are exact DECIMAL(30,6) means (``mean_vectors``); probe ranking
+    uses round4 cosines (ties to lowest cell, ``nearest_cells``); ADC
     distances are DECIMAL sums of round4 terms, ranked with vec_id
     tiebreak.
 
@@ -2524,18 +2455,7 @@ def q284_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan is O(|q| x n x nprobe / n_cells x M) narrow rows — the real
     ADC cost, linear in the corpus.
     """
-    from pyspark.sql.window import Window
-
-    from movie_data_pipeline_spark.operators.similarity import (
-        _to_double,
-        dot,
-        ivf_assign,
-        l2_norm,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select("vec_id", _to_double(F.col("embedding")).alias("arr"))
-
     assigned = (
         ivf_assign(emb, n_cells=_IVF_CELLS)
         .select(
@@ -2545,144 +2465,17 @@ def q284_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     with cached(assigned, count=False) as assigned:
-        per_dim = (
-            assigned.select("cell", F.posexplode("arr").alias("dim_idx", "val"))
-            .groupBy("cell", "dim_idx")
-            .agg(
-                (
-                    F.sum(F.col("val").cast("decimal(30,6)")).cast("double")
-                    / F.count("*")
-                ).alias("c")
-            )
-        )
-        icents = (
-            per_dim.groupBy("cell")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("dim_idx", "c"))).alias(
-                    "ps"
-                )
-            )
-            .select(
-                "cell",
-                F.transform(F.col("ps"), lambda p: p.getField("c")).alias(
-                    "centroid"
-                ),
-            )
-        )
-        # PQ codebook seeds: the same 8 lowest-md5 vectors (q272's rule),
-        # collected driver-side and compiled into literal argmin exprs
-        seed_rows = (
-            v.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-            .limit(_PQ_K)
-            .select("arr")
-            .collect()
-        )
-        sub_slices = [
-            F.slice(F.col("arr"), m * _PQ_SUBD + 1, _PQ_SUBD)
-            for m in range(_PQ_M)
-        ]
-        code_cols = []
-        for m in range(_PQ_M):
-            cands = []
-            for k, row in enumerate(seed_rows):
-                ssub = F.array(
-                    *[
-                        F.lit(float(x))
-                        for x in row.arr[m * _PQ_SUBD : (m + 1) * _PQ_SUBD]
-                    ]
-                )
-                cands.append(
-                    F.struct(
-                        sq_dist(sub_slices[m], ssub).alias("d"),
-                        F.lit(k).alias("k"),
-                    )
-                )
-            code_cols.append(
-                F.array_min(F.array(*cands)).getField("k").cast("long")
-            )
-        sc = assigned.select(
-            "vec_id",
-            "cell",
-            F.posexplode(
-                F.array(
-                    *[
-                        F.struct(
-                            sub_slices[m].alias("sub"),
-                            code_cols[m].alias("code"),
-                        )
-                        for m in range(_PQ_M)
-                    ]
-                )
-            ).alias("m", "s"),
-        ).select(
-            "vec_id",
-            "cell",
-            F.col("m").cast("long").alias("m"),
-            F.col("s.sub").alias("sub"),
-            F.col("s.code").alias("code"),
-        )
+        icents = mean_vectors(assigned, ["cell"], "arr", "decimal(30,6)")
+        sc = _pq_codes(assigned)
         with cached(sc, count=False) as sc:
-            ppd = (
-                sc.select("m", "code", F.posexplode("sub").alias("dim_idx", "val"))
-                .groupBy("m", "code", "dim_idx")
-                .agg(
-                    (
-                        F.sum(F.col("val").cast("decimal(30,6)")).cast("double")
-                        / F.count("*")
-                    ).alias("cd")
-                )
+            pcents = mean_vectors(sc, ["m", "code"], "sub", "decimal(30,6)")
+            qs = _query_norms(fixed_sample(
+                emb.filter(F.expr(_QUERY_PRED)), "vec_id", _ANN_AUDIT_QTARGET
+            ))
+            probe = nearest_cells(qs, icents, _IVFPQ_NPROBE).select(
+                "query_id", "cell"
             )
-            pcents = (
-                ppd.groupBy("m", "code")
-                .agg(
-                    F.array_sort(F.collect_list(F.struct("dim_idx", "cd"))).alias(
-                        "ps"
-                    )
-                )
-                .select(
-                    "m",
-                    "code",
-                    F.transform(F.col("ps"), lambda p: p.getField("cd")).alias(
-                        "cent"
-                    ),
-                )
-            )
-            qs = fixed_sample(
-                v.filter(F.expr(_QUERY_PRED)), "vec_id", _ANN_AUDIT_QTARGET
-            ).select(F.col("vec_id").alias("query_id"), F.col("arr").alias("qarr"))
-            qd = qs.select(
-                "query_id", "qarr", l2_norm(F.col("qarr")).alias("qn")
-            )
-            wq = Window.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("cell"))
-            probe = (
-                qd.crossJoin(F.broadcast(icents))
-                .select(
-                    "query_id",
-                    "cell",
-                    round4(
-                        dot(F.col("qarr"), F.col("centroid"))
-                        / (F.col("qn") * l2_norm(F.col("centroid")))
-                    ).alias("cs"),
-                )
-                .withColumn("cr", F.row_number().over(wq))
-                .filter(F.col("cr") <= _IVFPQ_NPROBE)
-                .select("query_id", "cell")
-            )
-            qsubs = qs.select(
-                "query_id",
-                F.posexplode(
-                    F.array(*[
-                        F.slice(F.col("qarr"), m * _PQ_SUBD + 1, _PQ_SUBD)
-                        for m in range(_PQ_M)
-                    ])
-                ).alias("m", "qsub"),
-            ).select("query_id", F.col("m").cast("long").alias("m"), "qsub")
-            lut = qsubs.join(F.broadcast(pcents), "m").select(
-                "query_id",
-                "m",
-                "code",
-                round4(sq_dist(F.col("qsub"), F.col("cent"))).alias("d2q"),
-            )
+            lut = _pq_lut(qs, pcents)
             cand = (
                 sc.select("vec_id", "cell", "m", "code")
                 .join(F.broadcast(probe), "cell")
@@ -2843,6 +2636,81 @@ def q303_ann_index_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         return result.localCheckpoint(eager=True)
 
 
+def _stored_recall(
+    spark: SparkSession,
+    index: VersionedTable,
+    version: int,
+    queries: DataFrame,
+    vectors: DataFrame,
+    exact: DataFrame,
+    nprobe: int,
+) -> tuple[float, int]:
+    """(round4 recall@10, candidate count) of an ``nprobe`` search of
+    ``queries`` THROUGH a stored IVF snapshot: cells ranked by
+    ``version``'s manifest codebook (``nearest_cells``), candidates
+    from its committed inverted lists joined to ``vectors``, scored
+    against the ``exact`` (query_id, neighbor_id) top-10."""
+    probed = nearest_cells(
+        _query_norms(queries),
+        stored_ivf_codebook(spark, index, version),
+        nprobe,
+    ).select("query_id", "cell", "qv", "qn")
+    inv = index.read(spark, version=version).join(
+        vectors.select("vec_id", _to_double(F.col("embedding")).alias("cv")),
+        "vec_id",
+    ).select(
+        "cell",
+        F.col("vec_id").alias("neighbor_id"),
+        "cv",
+        l2_norm(F.col("cv")).alias("cn"),
+    )
+    cand = (
+        inv.join(F.broadcast(probed), "cell")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            (
+                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
+            ).alias("cs"),
+        )
+    )
+    with cached(cand, count=False) as cand:
+        n_cand = cand.count()
+        wr = Window.partitionBy("query_id").orderBy(
+            F.desc("cs"), F.asc("neighbor_id")
+        )
+        approx = (
+            cand.withColumn("rn", F.row_number().over(wr))
+            .filter(F.col("rn") <= 10)
+            .select("query_id", "neighbor_id")
+        )
+        n_exact = exact.count()
+        n_hits = approx.join(exact, ["query_id", "neighbor_id"]).count()
+    return math.floor(n_hits / n_exact * 10000.0 + 0.5) / 10000.0, n_cand
+
+
+def _census(frame: DataFrame, name: str) -> DataFrame:
+    """(metric, k, value) rows: ``frame``'s row count per cell."""
+    return frame.groupBy("cell").agg(
+        F.count("*").cast("double").alias("value")
+    ).select(
+        F.lit(name).alias("metric"),
+        F.col("cell").cast("long").alias("k"),
+        "value",
+    )
+
+
+def _const_row(
+    spark: SparkSession, metric: str, k: int, value: float
+) -> DataFrame:
+    """One (metric, k, value) row."""
+    return spark.createDataFrame(
+        [(metric, int(k), float(value))],
+        "metric STRING, k LONG, value DOUBLE",
+    )
+
+
 # --------------------------------------------------------------------------
 # q309 — IVF centroid-refresh migration + recall across the boundary
 # (round 11, VERDICT r10 #3 — the similarity family's q296)
@@ -2943,18 +2811,17 @@ def _q309_oracle() -> str:
 def q309_ivf_centroid_migration(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """IVF CENTROID-REFRESH migration (round 11, VERDICT r10 #3): q303
-    gave the similarity index erasure; this completes its lifecycle the
-    way q296 completed SimHash's. After a heavy erasure the 8 stored
-    Voronoi seeds are stale — inverted lists skew and probe recall
-    drifts — and the round-10 answer was a from-scratch rebuild.
-    ``operators/index_lifecycle.migrate_ivf_index`` is the missing
-    operator: retrain the codebook from the SURVIVING vectors (exact
-    DECIMAL(30,6) per-cell means — one Lloyd step), re-assign map-only
-    against the broadcast codebook (round4-quantized cosine argmax),
-    and commit rows + codebook in ONE overwrite snapshot (the codebook
-    lands in the manifest's ``ivf_centroids`` property, so a prober
-    reads it in one JSON fetch).
+    """IVF CENTROID-REFRESH migration: q303 gives the similarity index
+    erasure; this completes its lifecycle the way q296 completes
+    SimHash's. After a heavy erasure the 8 stored Voronoi seeds are
+    stale — inverted lists skew and probe recall drifts.
+    ``operators/index_lifecycle.migrate_ivf_index`` retrains the
+    codebook from the SURVIVING vectors (exact DECIMAL(30,6) per-cell
+    means — one Lloyd step), re-assigns map-only against the broadcast
+    codebook (round4-quantized cosine argmax), and commits rows +
+    codebook in ONE overwrite snapshot (the codebook lands in the
+    manifest's ``ivf_centroids`` property, so a prober reads it in one
+    JSON fetch).
 
     The replay: commit vector corpus + IVF index, erase every vector
     with ``vec_id % 7 = 2`` (erase_documents — the scrub prunes the
@@ -2972,19 +2839,6 @@ def q309_ivf_centroid_migration(
     is map-only; the recall leg is O(queries x corpus) on a fixed
     64-query sample. Probed at 10x in tools/lifecycle_probe.py.
     """
-    from movie_data_pipeline_spark.operators.index_lifecycle import (
-        erase_documents,
-        migrate_ivf_index,
-    )
-    from movie_data_pipeline_spark.operators.similarity import (
-        _to_double,
-        dot,
-        ivf_assign,
-        l2_norm,
-    )
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
-    from pyspark.sql.window import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     with scratch_dir("q309") as base:
         corpus_path, index_path = f"{base}/vectors", f"{base}/ivf"
@@ -3001,32 +2855,14 @@ def q309_ivf_centroid_migration(
         )
         migrate_ivf_index(spark, index_path, corpus_path)
 
-        corpus_t = VersionedTable(corpus_path)
-        surv_vecs = corpus_t.read(spark)
-        idx0 = idx_t.read(spark, version=0)
-        idx1 = idx_t.read(spark, version=1)
-        idx2 = idx_t.read(spark, version=2)
-
-        def census(frame: DataFrame, name: str) -> DataFrame:
-            return frame.groupBy("cell").agg(
-                F.count("*").cast("double").alias("value")
-            ).select(
-                F.lit(name).alias("metric"),
-                F.col("cell").cast("long").alias("k"),
-                "value",
-            )
-
+        surv_vecs = VersionedTable(corpus_path).read(spark)
+        idx0, idx1, idx2 = (idx_t.read(spark, version=v) for v in range(3))
         moved = (
             idx1.select("vec_id", F.col("cell").alias("old_cell"))
             .join(idx2.select("vec_id", F.col("cell").alias("new_cell")),
                   "vec_id")
             .filter(F.col("old_cell") != F.col("new_cell"))
         )
-
-        # recall THROUGH the migrated stored index: codebook from the
-        # committed manifest, candidates from the committed rows
-        meta = idx_t.manifest()["meta"]
-        cells = sorted(int(c) for c in meta["ivf_centroids"])
         queries = fixed_sample(
             surv_vecs.filter(F.expr(_QUERY_PRED)), "vec_id",
             _ANN_AUDIT_QTARGET,
@@ -3036,87 +2872,16 @@ def q309_ivf_centroid_migration(
             .select("query_id", "neighbor_id")
         )
         with cached(exact, count=False) as exact:
-            qd = queries.select(
-                F.col("vec_id").alias("query_id"),
-                _to_double(F.col("embedding")).alias("qv"),
-            ).select("query_id", "qv", l2_norm(F.col("qv")).alias("qn"))
-            cents = spark.createDataFrame(
-                [(c, [float(x) for x in meta["ivf_centroids"][str(c)]])
-                 for c in cells],
-                "cell INT, centroid ARRAY<DOUBLE>",
+            recall, _ = _stored_recall(
+                spark, idx_t, 2, queries, surv_vecs, exact, 2
             )
-            wq = Window.partitionBy("query_id").orderBy(
-                F.desc("cs_c"), F.asc("cell")
-            )
-            qc = (
-                qd.crossJoin(F.broadcast(cents))
-                .select(
-                    "query_id",
-                    "qv",
-                    "cell",
-                    round4(
-                        dot(F.col("qv"), F.col("centroid"))
-                        / (F.col("qn") * l2_norm(F.col("centroid")))
-                    ).alias("cs_c"),
-                )
-                .withColumn("cell_rank", F.row_number().over(wq))
-                .filter(F.col("cell_rank") <= 2)
-                .select("query_id", "qv", "cell")
-            )
-            inv = idx2.join(
-                surv_vecs.select(
-                    "vec_id", _to_double(F.col("embedding")).alias("cv")
-                ),
-                "vec_id",
-            ).select(
-                "cell",
-                F.col("vec_id").alias("neighbor_id"),
-                "cv",
-                l2_norm(F.col("cv")).alias("cn"),
-            )
-            qn2 = qc.select(
-                "query_id", "cell", "qv", l2_norm(F.col("qv")).alias("qn")
-            )
-            wr = Window.partitionBy("query_id").orderBy(
-                F.desc("cs"), F.asc("neighbor_id")
-            )
-            approx = (
-                inv.join(F.broadcast(qn2), "cell")
-                .filter(F.col("neighbor_id") != F.col("query_id"))
-                .select(
-                    "query_id",
-                    "neighbor_id",
-                    (
-                        dot(F.col("qv"), F.col("cv"))
-                        / (F.col("qn") * F.col("cn"))
-                    ).alias("cs"),
-                )
-                .withColumn("rn", F.row_number().over(wr))
-                .filter(F.col("rn") <= 10)
-                .select("query_id", "neighbor_id")
-            )
-            n_exact = exact.count()
-            n_hits = approx.join(exact, ["query_id", "neighbor_id"]).count()
-
-            def const(metric: str, k: int, value: float) -> DataFrame:
-                return spark.createDataFrame(
-                    [(metric, int(k), float(value))],
-                    "metric STRING, k LONG, value DOUBLE",
-                )
-
-            recall = (
-                __import__("math").floor(n_hits / n_exact * 10000.0 + 0.5)
-                / 10000.0
-            )
-            from functools import reduce
-
             rows = [
-                census(idx0, "census_initial"),
-                census(idx1, "census_after_scrub"),
-                census(idx2, "census_after_migration"),
-                const("n_reassigned_total", -1, moved.count()),
-                const("n_exact_pairs", -1, n_exact),
-                const("recall_nprobe2", 2, recall),
+                _census(idx0, "census_initial"),
+                _census(idx1, "census_after_scrub"),
+                _census(idx2, "census_after_migration"),
+                _const_row(spark, "n_reassigned_total", -1, moved.count()),
+                _const_row(spark, "n_exact_pairs", -1, exact.count()),
+                _const_row(spark, "recall_nprobe2", 2, recall),
             ]
             result = reduce(DataFrame.unionByName, rows).orderBy("metric", "k")
             result = result.localCheckpoint(eager=True)
@@ -3309,15 +3074,15 @@ def _q316_oracle() -> str:
 def q316_ivf_cell_split_recovery(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """IVF codebook WIDTH recovery via cell splits (round 12, VERDICT
-    r11 #4): ``migrate_ivf_index`` dropped emptied cells and could
-    never split, so repeated erasure+migration monotonically shrank
-    n_cells — and a shrunken codebook's "recall" is a mirage: nprobe=2
-    of 4 cells scans HALF the corpus per query (the cost regression is
-    the real decay). ``target_cells`` adds the deterministic split
-    (largest cell contributes its member farthest from the retrained
-    centroid — bisecting-k-means seeding, round4 cosine, id
-    tie-breaks). The replay:
+    """IVF codebook WIDTH recovery via cell splits: a
+    ``migrate_ivf_index`` that only drops emptied cells monotonically
+    shrinks n_cells under repeated erasure+migration — and a shrunken
+    codebook's "recall" is a mirage: nprobe=2 of 4 cells scans HALF the
+    corpus per query (the cost regression is the real decay).
+    ``target_cells`` adds the deterministic split (largest cell
+    contributes its member farthest from the retrained centroid —
+    bisecting-k-means seeding, round4 cosine, id tie-breaks). The
+    replay:
 
     1. corpus committed WITH its cell assignment (the bucketed-by-cell
        deployment layout); initial 8-cell index committed with the
@@ -3347,43 +3112,16 @@ def q316_ivf_cell_split_recovery(
     <=n_cells-row driver collect (codebook-sized metadata). The probe
     legs are O(queries x corpus) on the fixed 64-query sample.
     """
-    import math as _math
-    from functools import reduce
-
-    from movie_data_pipeline_spark.operators.index_lifecycle import (
-        erase_documents,
-        migrate_ivf_index,
-    )
-    from movie_data_pipeline_spark.operators.similarity import (
-        _to_double,
-        cosine_topk,
-        dot,
-        ivf_assign,
-        l2_norm,
-    )
-    from movie_data_pipeline_spark.operators.util import fixed_sample
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
-    from pyspark.sql.window import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     with scratch_dir("q316") as base:
         corpus_path, index_path = f"{base}/vectors", f"{base}/ivf"
         assigned = ivf_assign(emb, n_cells=_IVF_CELLS)
-        seed_rows = (
-            emb.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-            .limit(_IVF_CELLS)
-            .select("embedding")
-            .collect()
-        )
-        seed_book = {
-            str(i): [float(x) for x in r["embedding"]]
-            for i, r in enumerate(seed_rows)
-        }
+        seeds = ivf_seeds(emb, _IVF_CELLS, "embedding")
         VersionedTable(corpus_path).commit(assigned)
         idx_t = VersionedTable(index_path)
         idx_t.commit(
             assigned.select("vec_id", "cell"),
-            meta={"n_cells": _IVF_CELLS, "ivf_centroids": seed_book},
+            meta=ivf_layout(dict(enumerate(seeds))),
         )
         erase_documents(
             spark, corpus_path, [index_path],
@@ -3413,103 +3151,6 @@ def q316_ivf_cell_split_recovery(
         exact_post = cosine_topk(surv, queries, k=10).select(
             "query_id", "neighbor_id"
         )
-
-        def probe(version: int, vectors: DataFrame, exact: DataFrame,
-                  nprobe: int) -> tuple[float, int]:
-            """recall@10 + candidate count through the STORED snapshot:
-            codebook from that version's manifest, inverted lists from
-            its committed rows (q309's probe discipline)."""
-            book = idx_t.manifest(version)["meta"]["ivf_centroids"]
-            cells = sorted(int(c) for c in book)
-            cents = spark.createDataFrame(
-                [(c, [float(x) for x in book[str(c)]]) for c in cells],
-                "cell INT, centroid ARRAY<DOUBLE>",
-            )
-            qd = queries.select(
-                F.col("vec_id").alias("query_id"),
-                _to_double(F.col("embedding")).alias("qv"),
-            ).select("query_id", "qv", l2_norm(F.col("qv")).alias("qn"))
-            wq = Window.partitionBy("query_id").orderBy(
-                F.desc("cs_c"), F.asc("cell")
-            )
-            qc = (
-                qd.crossJoin(F.broadcast(cents))
-                .select(
-                    "query_id",
-                    "qv",
-                    "cell",
-                    round4(
-                        dot(F.col("qv"), F.col("centroid"))
-                        / (F.col("qn") * l2_norm(F.col("centroid")))
-                    ).alias("cs_c"),
-                )
-                .withColumn("cell_rank", F.row_number().over(wq))
-                .filter(F.col("cell_rank") <= nprobe)
-                .select("query_id", "qv", "cell")
-            )
-            inv = idx_t.read(spark, version=version).join(
-                vectors.select(
-                    "vec_id", _to_double(F.col("embedding")).alias("cv")
-                ),
-                "vec_id",
-            ).select(
-                "cell",
-                F.col("vec_id").alias("neighbor_id"),
-                "cv",
-                l2_norm(F.col("cv")).alias("cn"),
-            )
-            qn2 = qc.select(
-                "query_id", "cell", "qv", l2_norm(F.col("qv")).alias("qn")
-            )
-            cand = (
-                inv.join(F.broadcast(qn2), "cell")
-                .filter(F.col("neighbor_id") != F.col("query_id"))
-                .select(
-                    "query_id",
-                    "neighbor_id",
-                    (
-                        dot(F.col("qv"), F.col("cv"))
-                        / (F.col("qn") * F.col("cn"))
-                    ).alias("cs"),
-                )
-            )
-            with cached(cand, count=False) as cand:
-                n_cand = cand.count()
-                wr = Window.partitionBy("query_id").orderBy(
-                    F.desc("cs"), F.asc("neighbor_id")
-                )
-                approx = (
-                    cand.withColumn("rn", F.row_number().over(wr))
-                    .filter(F.col("rn") <= 10)
-                    .select("query_id", "neighbor_id")
-                )
-                n_exact = exact.count()
-                n_hits = approx.join(
-                    exact, ["query_id", "neighbor_id"]
-                ).count()
-            return (
-                _math.floor(n_hits / n_exact * 10000.0 + 0.5) / 10000.0,
-                n_cand,
-            )
-
-        def census(version: int, name: str) -> DataFrame:
-            return (
-                idx_t.read(spark, version=version)
-                .groupBy("cell")
-                .agg(F.count("*").cast("double").alias("value"))
-                .select(
-                    F.lit(name).alias("metric"),
-                    F.col("cell").cast("long").alias("k"),
-                    "value",
-                )
-            )
-
-        def const(metric: str, k: int, value: float) -> DataFrame:
-            return spark.createDataFrame(
-                [(metric, int(k), float(value))],
-                "metric STRING, k LONG, value DOUBLE",
-            )
-
         with (
             cached(exact_pre, count=False) as exact_pre,
             cached(exact_post, count=False) as exact_post,
@@ -3521,29 +3162,40 @@ def q316_ivf_cell_split_recovery(
                 (recall_shrunk, cand_s),
                 (recall_restored, cand_r),
             ) = overlap(
-                lambda: probe(0, full, exact_pre, 2),
-                lambda: probe(2, surv, exact_post, 1),
-                lambda: probe(3, surv, exact_post, 2),
+                lambda: _stored_recall(
+                    spark, idx_t, 0, queries, full, exact_pre, 2
+                ),
+                lambda: _stored_recall(
+                    spark, idx_t, 2, queries, surv, exact_post, 1
+                ),
+                lambda: _stored_recall(
+                    spark, idx_t, 3, queries, surv, exact_post, 2
+                ),
             )
             # the codebook-width claim: at EQUAL scan budget (1/4 vs 2/8
             # of the cells) the restored index must beat the shrunken one
             assert recall_restored >= recall_shrunk, (
                 recall_restored, recall_shrunk,
             )
+            censuses = (
+                "census_initial",
+                "census_after_scrub",
+                "census_shrunk",
+                "census_restored",
+            )
             rows = [
-                census(0, "census_initial"),
-                census(1, "census_after_scrub"),
-                census(2, "census_shrunk"),
-                census(3, "census_restored"),
-                const("n_cells_shrunk", -1, n_shrunk),
-                const("n_cells_restored", -1, int(meta3["n_cells"])),
-                const("n_split_seeds", -1, _IVF_CELLS - n_shrunk),
-                const("n_exact_pairs", -1, exact_post.count()),
-                const("n_candidates_shrunk_budget", 1, cand_s),
-                const("n_candidates_restored", 2, cand_r),
-                const("recall_nprobe2_pre", 2, recall_pre),
-                const("recall_nprobe1_shrunk", 1, recall_shrunk),
-                const("recall_nprobe2_restored", 2, recall_restored),
+                _census(idx_t.read(spark, version=v), name)
+                for v, name in enumerate(censuses)
+            ] + [
+                _const_row(spark, "n_cells_shrunk", -1, n_shrunk),
+                _const_row(spark, "n_cells_restored", -1, int(meta3["n_cells"])),
+                _const_row(spark, "n_split_seeds", -1, _IVF_CELLS - n_shrunk),
+                _const_row(spark, "n_exact_pairs", -1, exact_post.count()),
+                _const_row(spark, "n_candidates_shrunk_budget", 1, cand_s),
+                _const_row(spark, "n_candidates_restored", 2, cand_r),
+                _const_row(spark, "recall_nprobe2_pre", 2, recall_pre),
+                _const_row(spark, "recall_nprobe1_shrunk", 1, recall_shrunk),
+                _const_row(spark, "recall_nprobe2_restored", 2, recall_restored),
             ]
         result = reduce(DataFrame.unionByName, rows).orderBy("metric", "k")
         return result.localCheckpoint(eager=True)

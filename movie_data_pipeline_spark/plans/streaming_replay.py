@@ -21,6 +21,8 @@ independent under any driver session).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -166,6 +168,85 @@ def _metric_table(spark: SparkSession, values: dict[str, int]) -> DataFrame:
         sorted((k, int(v)) for k, v in values.items()),
         "metric STRING, value LONG",
     ).localCheckpoint(eager=True)
+
+
+def _count_metric(name: str, frame: DataFrame) -> DataFrame:
+    """One (metric, value) row: ``frame``'s row count."""
+    return frame.agg(F.count("*").cast("long").alias("value")).select(
+        F.lit(name).alias("metric"), "value"
+    )
+
+
+def _erasure_audit(
+    spark: SparkSession,
+    sf_dir: str,
+    label: str,
+    erase_pred: str,
+    start_gate,
+    gate_writer,
+) -> DataFrame:
+    """The nine-metric erasure/re-submission audit of a gated corpus and
+    its stored band index: stream the documents table through
+    ``start_gate`` (v0), erase every accepted doc matching
+    ``erase_pred`` from the corpus and scrub the index (v1), re-submit
+    the erased rows through ``gate_writer`` (v2), and count every
+    version by time travel. ``label`` names the replay in errors and
+    temp dirs."""
+    from movie_data_pipeline_spark.operators.index_lifecycle import (
+        erase_documents,
+    )
+    from movie_data_pipeline_spark.sources.registry import table_path
+    from movie_data_pipeline_spark.sources.versioned import VersionedTable
+    from movie_data_pipeline_spark.streaming.events import stream_table
+
+    _assert_single_file(table_path(sf_dir, "documents"), label)
+    with scratch_dir(label) as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
+        q = start_gate(stream_table(spark, sf_dir, "documents"), acc, idx, ckpt)
+        _await(q, label)
+
+        acc_t, idx_t = VersionedTable(acc), VersionedTable(idx)
+        # Snapshot the to-be-erased rows BEFORE the delete (they are
+        # re-submitted below); materialized because the temp dir is
+        # removed on exit.
+        resub = (
+            acc_t.read(spark)
+            .filter(F.expr(erase_pred))
+            .localCheckpoint(eager=True)
+        )
+        if resub.isEmpty():
+            raise AssertionError(
+                f"{label}: erase condition matched no accepted documents — "
+                "the lifecycle audit would be vacuous"
+            )
+        erase_documents(spark, acc, [idx], erase_pred)
+        gate_writer(acc, idx)(resub, 99)
+
+        acc0, acc1, acc2 = (
+            acc_t.read(spark, version=v).select("doc_id") for v in range(3)
+        )
+        idx0, idx1, idx2 = (idx_t.read(spark, version=v) for v in range(3))
+        rows = [
+            _count_metric("n_accepted_final", acc2),
+            _count_metric("n_accepted_initial", acc0),
+            _count_metric("n_erased", acc0.join(acc1, "doc_id", "left_anti")),
+            _count_metric("n_index_rows_after_scrub", idx1),
+            _count_metric("n_index_rows_before_scrub", idx0),
+            _count_metric("n_index_rows_final", idx2),
+            _count_metric(
+                "n_phantom_rows_after_scrub",
+                idx1.join(acc1, "doc_id", "left_anti"),
+            ),
+            _count_metric(
+                "n_phantom_rows_before_scrub",
+                idx0.join(acc1, "doc_id", "left_anti"),
+            ),
+            _count_metric(
+                "n_reaccepted", acc2.join(acc1, "doc_id", "left_anti")
+            ),
+        ]
+        result = reduce(DataFrame.unionByName, rows).orderBy("metric")
+        return result.localCheckpoint(eager=True)
 
 
 @query(
@@ -1001,17 +1082,16 @@ def _q295_oracle() -> str:
 )
 def q295_index_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-erasure LIFECYCLE audit over a gated corpus and its
-    stored SimHash band index (round 10, VERDICT r9 #1a) — the full
-    cadence, driver-verified end to end:
+    stored SimHash band index — the full cadence, oracle-verified end
+    to end (``_erasure_audit``):
 
     1. stream the documents table through the rung-1 SimHash ingest
        gate (q287's replay) → accepted corpus v0 + band index v0;
     2. ``operators/index_lifecycle.erase_documents``: delete every
        accepted doc with ``doc_id % 7 = 3`` from the corpus AND scrub
-       its band rows from the index in the same commit cadence —
-       before round 10 those signatures lived in the index forever,
-       leaving 64-bit fingerprint residue after an erasure and
-       suppressing future near-duplicates as phantom hits;
+       its band rows from the index in the same commit cadence — an
+       unscrubbed index would keep 64-bit fingerprint residue after an
+       erasure and suppress future near-duplicates as phantom hits;
     3. re-submit exactly the erased documents (time-travel read of
        corpus v0) through the same gate: with the index scrubbed they
        are accepted AGAIN — the suppression is provably gone.
@@ -1032,76 +1112,15 @@ def q295_index_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     version VersionedTable reads; the scrub itself is one semi-join
     rewrite, linear in index size (operators/index_lifecycle).
     """
-    from functools import reduce
-
-    from movie_data_pipeline_spark.operators.index_lifecycle import (
-        erase_documents,
-    )
-    from movie_data_pipeline_spark.sources.registry import table_path
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
-    from movie_data_pipeline_spark.streaming.events import stream_table
     from movie_data_pipeline_spark.streaming.sinks import (
         simhash_gate_batch_writer,
         start_simhash_gate_stream,
     )
 
-    _assert_single_file(table_path(sf_dir, "documents"), "q295")
-    with scratch_dir("q295") as base:
-        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-        docs = stream_table(spark, sf_dir, "documents")
-        q = start_simhash_gate_stream(docs, acc, idx, ckpt)
-        _await(q, "q295")
-
-        acc_t, idx_t = VersionedTable(acc), VersionedTable(idx)
-        # Snapshot the to-be-erased rows BEFORE the delete (they are
-        # re-submitted in step 3); materialized because the temp dir
-        # is removed in finally.
-        resub = (
-            acc_t.read(spark)
-            .filter(F.expr("doc_id % 7 = 3"))
-            .localCheckpoint(eager=True)
-        )
-        if resub.isEmpty():
-            raise AssertionError(
-                "q295: erase condition matched no accepted documents — "
-                "the lifecycle audit would be vacuous"
-            )
-        erase_documents(spark, acc, [idx], "doc_id % 7 = 3")
-        # corpus/index versions: v0 initial, v1 post-erase/post-scrub
-        simhash_gate_batch_writer(acc, idx)(resub, 99)
-        # v2: re-submission commit on both tables
-
-        acc0 = acc_t.read(spark, version=0).select("doc_id")
-        acc1 = acc_t.read(spark, version=1).select("doc_id")
-        acc2 = acc_t.read(spark, version=2).select("doc_id")
-        idx0 = idx_t.read(spark, version=0)
-        idx1 = idx_t.read(spark, version=1)
-        idx2 = idx_t.read(spark, version=2)
-
-        def metric(name: str, frame: DataFrame) -> DataFrame:
-            return frame.agg(
-                F.count("*").cast("long").alias("value")
-            ).select(F.lit(name).alias("metric"), "value")
-
-        rows = [
-            metric("n_accepted_final", acc2),
-            metric("n_accepted_initial", acc0),
-            metric("n_erased", acc0.join(acc1, "doc_id", "left_anti")),
-            metric("n_index_rows_after_scrub", idx1),
-            metric("n_index_rows_before_scrub", idx0),
-            metric("n_index_rows_final", idx2),
-            metric(
-                "n_phantom_rows_after_scrub",
-                idx1.join(acc1, "doc_id", "left_anti"),
-            ),
-            metric(
-                "n_phantom_rows_before_scrub",
-                idx0.join(acc1, "doc_id", "left_anti"),
-            ),
-            metric("n_reaccepted", acc2.join(acc1, "doc_id", "left_anti")),
-        ]
-        result = reduce(DataFrame.unionByName, rows).orderBy("metric")
-        return result.localCheckpoint(eager=True)
+    return _erasure_audit(
+        spark, sf_dir, "q295", "doc_id % 7 = 3",
+        start_simhash_gate_stream, simhash_gate_batch_writer,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1334,11 +1353,6 @@ def q299_erasure_vacuum_compliance(
             spark, acc, [idx], "doc_id % 5 = 1", vacuum_keep_last=1
         )
 
-        def count_metric(name: str, frame: DataFrame) -> DataFrame:
-            return frame.agg(
-                F.count("*").cast("long").alias("value")
-            ).select(F.lit(name).alias("metric"), "value")
-
         def lit_metric(name: str, value: int) -> DataFrame:
             return spark.range(1).select(
                 F.lit(name).alias("metric"),
@@ -1359,19 +1373,17 @@ def q299_erasure_vacuum_compliance(
             .join(erased_ids, "doc_id", "left_semi")
             for v in idx_t.versions()
         ]
-        from functools import reduce
-
         rows = [
-            count_metric("n_accepted_final", acc_t.read(spark)),
-            count_metric("n_accepted_initial", initial_ids),
+            _count_metric("n_accepted_final", acc_t.read(spark)),
+            _count_metric("n_accepted_initial", initial_ids),
             lit_metric("n_data_dirs_corpus", data_dirs(acc_t)),
             lit_metric("n_data_dirs_index", data_dirs(idx_t)),
-            count_metric("n_erased", erased_ids),
-            count_metric(
+            _count_metric("n_erased", erased_ids),
+            _count_metric(
                 "n_erased_leaks_corpus",
                 reduce(DataFrame.unionByName, leaks_corpus),
             ),
-            count_metric(
+            _count_metric(
                 "n_erased_leaks_index",
                 reduce(DataFrame.unionByName, leaks_index),
             ),
@@ -1434,10 +1446,10 @@ def q299_erasure_vacuum_compliance(
 def q301_minhash_index_erasure(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """MinHash-index erasure lifecycle audit (round 10) — q295's exact
-    cadence driven through the OTHER stored band index (the q205/q126
-    MinHash LSH gate), so BOTH index layouts VERDICT r9 #1 names carry
-    a driver-green erasure proof: gate the documents stream (16-hash
+    """MinHash-index erasure lifecycle audit — q295's exact cadence
+    (``_erasure_audit``) driven through the OTHER stored band index
+    (the q205/q126 MinHash LSH gate), so both index layouts carry a
+    oracle-verified erasure proof: gate the documents stream (16-hash
     MinHash signatures, 4 bands of 4 rows), erase every accepted doc
     with ``doc_id % 6 = 2`` via ``erase_documents`` (corpus
     delete_where + same-cadence index scrub — the scrub operator is
@@ -1450,70 +1462,15 @@ def q301_minhash_index_erasure(
     re-submitted erased doc and each accepted doc contributes exactly
     4 band rows.
     """
-    from functools import reduce
-
-    from movie_data_pipeline_spark.operators.index_lifecycle import (
-        erase_documents,
-    )
-    from movie_data_pipeline_spark.sources.registry import table_path
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
-    from movie_data_pipeline_spark.streaming.events import stream_table
     from movie_data_pipeline_spark.streaming.sinks import (
         dedup_gate_batch_writer,
         start_dedup_gate_stream,
     )
 
-    _assert_single_file(table_path(sf_dir, "documents"), "q301")
-    with scratch_dir("q301") as base:
-        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-        docs = stream_table(spark, sf_dir, "documents")
-        q = start_dedup_gate_stream(docs, acc, idx, ckpt)
-        _await(q, "q301")
-
-        acc_t, idx_t = VersionedTable(acc), VersionedTable(idx)
-        resub = (
-            acc_t.read(spark)
-            .filter(F.expr("doc_id % 6 = 2"))
-            .localCheckpoint(eager=True)
-        )
-        if resub.isEmpty():
-            raise AssertionError(
-                "q301: erase condition matched no accepted documents"
-            )
-        erase_documents(spark, acc, [idx], "doc_id % 6 = 2")
-        dedup_gate_batch_writer(acc, idx)(resub, 99)
-
-        acc0 = acc_t.read(spark, version=0).select("doc_id")
-        acc1 = acc_t.read(spark, version=1).select("doc_id")
-        acc2 = acc_t.read(spark, version=2).select("doc_id")
-        idx0 = idx_t.read(spark, version=0)
-        idx1 = idx_t.read(spark, version=1)
-        idx2 = idx_t.read(spark, version=2)
-
-        def metric(name: str, frame: DataFrame) -> DataFrame:
-            return frame.agg(
-                F.count("*").cast("long").alias("value")
-            ).select(F.lit(name).alias("metric"), "value")
-
-        rows = [
-            metric("n_accepted_final", acc2),
-            metric("n_accepted_initial", acc0),
-            metric("n_erased", acc0.join(acc1, "doc_id", "left_anti")),
-            metric("n_index_rows_after_scrub", idx1),
-            metric("n_index_rows_before_scrub", idx0),
-            metric("n_index_rows_final", idx2),
-            metric(
-                "n_phantom_rows_after_scrub",
-                idx1.join(acc1, "doc_id", "left_anti"),
-            ),
-            metric(
-                "n_phantom_rows_before_scrub",
-                idx0.join(acc1, "doc_id", "left_anti"),
-            ),
-            metric("n_reaccepted", acc2.join(acc1, "doc_id", "left_anti")),
-        ]
-        result = reduce(DataFrame.unionByName, rows).orderBy("metric")
-        return result.localCheckpoint(eager=True)
+    return _erasure_audit(
+        spark, sf_dir, "q301", "doc_id % 6 = 2",
+        start_dedup_gate_stream, dedup_gate_batch_writer,
+    )
 
 
 # --------------------------------------------------------------------------

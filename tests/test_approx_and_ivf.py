@@ -4,6 +4,7 @@ estimator's guarantee versus the exact answer on the same data."""
 
 from __future__ import annotations
 
+import decimal
 import struct
 
 import pytest
@@ -15,6 +16,10 @@ from movie_data_pipeline_spark.operators.approx import (
     frequent_items,
 )
 from movie_data_pipeline_spark.functions.numeric import round4
+from movie_data_pipeline_spark.operators.index_lifecycle import (
+    ivf_layout,
+    stored_ivf_codebook,
+)
 from movie_data_pipeline_spark.operators.similarity import (
     _assign_cells,
     _sql_double,
@@ -24,9 +29,12 @@ from movie_data_pipeline_spark.operators.similarity import (
     cosine_topk,
     cosine_topk_ivf,
     ivf_assign,
+    mean_vectors,
+    nearest_cells,
 )
 from movie_data_pipeline_spark.operators.util import query_scope
 from movie_data_pipeline_spark.sources.registry import load_table
+from movie_data_pipeline_spark.sources.versioned import VersionedTable
 from tests.conftest import TESTDATA_SF_DIR
 
 pytestmark = pytest.mark.usefixtures("_scoped")
@@ -301,3 +309,84 @@ def test_compiled_argmax_matches_reference_on_extreme_codebooks(spark):
         }
         assert got == _reference_cells(emb, seeds, quantize)
         assert len(set(got.values())) > 1
+
+
+@pytest.mark.parametrize("keys", [["g"], ["g", "h"]])
+@pytest.mark.parametrize("dec", ["decimal(30,6)", "decimal(38,18)"])
+def test_mean_vectors_are_exact_decimal_means(spark, keys, dec):
+    # 1.5e-7 and 2.5e-7 sit on the decimal(30,6) rounding boundary;
+    # thirds carry more digits than either scale keeps
+    rows = [
+        (0, 0, [0.1234567, -1.5e-07, 1.0 / 3.0]),
+        (0, 1, [2.5e-07, 7.0, -2.0 / 3.0]),
+        (0, 1, [1e-18, 0.3, 5.5]),
+        (1, 0, [-4.25, 1.0 / 7.0, 1e6 + 0.1]),
+    ]
+    df = spark.createDataFrame(rows, "g INT, h INT, vec ARRAY<DOUBLE>")
+    scale = int(dec.rstrip(")").split(",")[1])
+    quantum = decimal.Decimal(1).scaleb(-scale)
+    groups: dict[tuple, list] = {}
+    for g, h, vec in rows:
+        groups.setdefault((g, h)[: len(keys)], []).append(vec)
+    with decimal.localcontext() as ctx:
+        ctx.prec = 60
+        want = {
+            key: [
+                float(
+                    sum(
+                        decimal.Decimal(repr(v[d])).quantize(
+                            quantum, rounding=decimal.ROUND_HALF_UP
+                        )
+                        for v in vecs
+                    )
+                )
+                / len(vecs)
+                for d in range(3)
+            ]
+            for key, vecs in groups.items()
+        }
+    got = {
+        tuple(r[k] for k in keys): list(r.centroid)
+        for r in mean_vectors(df, keys, "vec", dec).collect()
+    }
+    assert got == want
+
+
+def test_nearest_cells_ties_go_to_the_lower_cell(spark):
+    # cell 7's raw cosine (1.0) beats cell 3's (0.9999995), but both
+    # quantize to 1.0, so the lower cell ranks first
+    queries = spark.createDataFrame(
+        [(1, [1.0, 0.0], 1.0)], "query_id INT, qv ARRAY<DOUBLE>, qn DOUBLE"
+    )
+    book = spark.createDataFrame(
+        [(7, [1.0, 0.0]), (3, [1.0, 0.001]), (1, [0.0, 1.0])],
+        "cell INT, centroid ARRAY<DOUBLE>",
+    )
+
+    def ranks(nprobe):
+        return {
+            r.cell: r.cell_rank
+            for r in nearest_cells(queries, book, nprobe).collect()
+        }
+
+    assert ranks(1) == {3: 1}
+    assert ranks(2) == {3: 1, 7: 2}
+    assert nearest_cells(queries, book, 1).columns == [
+        "query_id", "qv", "qn", "cell", "cell_rank"
+    ]
+
+
+def test_ivf_codebook_meta_round_trips(spark, tmp_path):
+    # 12 sorts after 5 as a cell, before it as a string key
+    codebook = {5: [0.5, -1.25], 0: [1.0, 2.0], 12: [3.0, 0.1]}
+    index = VersionedTable(str(tmp_path / "ivf"))
+    index.commit(
+        spark.createDataFrame([(1, 0)], "vec_id LONG, cell INT"),
+        meta=ivf_layout(codebook),
+    )
+    assert index.manifest(0)["meta"]["n_cells"] == 3
+    frame = stored_ivf_codebook(spark, index, 0)
+    assert frame.schema.simpleString() == "struct<cell:int,centroid:array<double>>"
+    assert [(r.cell, list(r.centroid)) for r in frame.collect()] == sorted(
+        codebook.items()
+    )

@@ -232,6 +232,32 @@ def _calls(node: ast.AST, name: str) -> bool:
     )
 
 
+def _is_dim_collect(node: ast.AST) -> bool:
+    """``F.collect_list(F.struct("dim_idx", ...))``: reassembling a
+    per-dimension aggregate into a vector."""
+    return (
+        _calls(node, "collect_list")
+        and bool(node.args)
+        and _calls(node.args[0], "struct")
+        and bool(node.args[0].args)
+        and isinstance(node.args[0].args[0], ast.Constant)
+        and node.args[0].args[0].value == "dim_idx"
+    )
+
+
+def _is_md5_seed_order(node: ast.AST) -> bool:
+    """``.orderBy(F.md5(<vec_id>), ...)``: the IVF seed draw."""
+    return (
+        _calls(node, "orderBy")
+        and bool(node.args)
+        and _calls(node.args[0], "md5")
+        and any(
+            isinstance(n, ast.Constant) and n.value == "vec_id"
+            for n in ast.walk(node.args[0])
+        )
+    )
+
+
 def test_idioms_live_only_in_their_helpers():
     hits = {
         "concurrent.futures": set(),
@@ -241,6 +267,9 @@ def test_idioms_live_only_in_their_helpers():
         "ngrams": set(),
         "bucket column": set(),
         "rung column": set(),
+        "mean vector": set(),
+        "ivf codebook meta": set(),
+        "ivf seed order": set(),
     }
     for path in sorted(PACKAGE.rglob("*.py")):
         rel = path.relative_to(PACKAGE).as_posix()
@@ -274,6 +303,12 @@ def test_idioms_live_only_in_their_helpers():
                 and node.args[0].value == "rung"
             ):
                 hits["rung column"].add(where)
+            if _is_dim_collect(node):
+                hits["mean vector"].add(where)
+            if isinstance(node, ast.Constant) and node.value == "ivf_centroids":
+                hits["ivf codebook meta"].add(where)
+            if _is_md5_seed_order(node):
+                hits["ivf seed order"].add(where)
     assert hits == {
         "concurrent.futures": {"operators/util.py"},
         "unpersist": {
@@ -285,6 +320,15 @@ def test_idioms_live_only_in_their_helpers():
         "ngrams": {"functions/text.py:ngrams"},
         "bucket column": {"operators/index_lifecycle.py:bucketed"},
         "rung column": {"operators/index_lifecycle.py:simhash_index"},
+        "mean vector": {
+            "operators/similarity.py:cell_centroids",
+            "operators/similarity.py:mean_vectors",
+        },
+        "ivf codebook meta": {
+            "operators/index_lifecycle.py:ivf_layout",
+            "operators/index_lifecycle.py:stored_ivf_codebook",
+        },
+        "ivf seed order": {"operators/similarity.py:ivf_seeds"},
     }
 
 
