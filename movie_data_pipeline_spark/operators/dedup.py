@@ -324,35 +324,25 @@ def simhash(df: DataFrame) -> DataFrame:
     ``(h div 2^j) % 2`` uses only integer ops both engines evaluate
     identically.
 
-    60 bits (migrated from 32 in round 8, VERDICT r7 #2): wide enough
-    for 4 x 15-bit LSH bands — the 32-bit scheme's 4 x 8-bit bands had
-    only 256 values per band, so candidate buckets saturated once a
-    shard exceeded ~thousands of docs (measured 10x candidate ratio
-    34.5). 60 is the widest multiple of the band layout that keeps the
-    fingerprint a positive BIGINT on both engines (2^60 < 2^63).
+    60 bits: wide enough for the 6 x 10-bit block ladder, and the
+    widest multiple of the band layout that keeps the fingerprint a
+    positive BIGINT on both engines (2^60 < 2^63).
     """
-    votes = _simhash_votes(df)
-    fingerprint = None
-    for j in range(SIMHASH_BITS):
-        term = F.when(F.col(f"b{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        fingerprint = term if fingerprint is None else fingerprint + term
-    return votes.select(
-        F.col("doc_id"), fingerprint.cast("long").alias("simhash")
-    )
+    return _threshold_fold(_simhash_votes(df), None, None)
 
 
 def simhash_centered(df: DataFrame) -> DataFrame:
-    """CENTERED SimHash fingerprint (round 11, VERDICT r10 #1): fixes
-    the measured bit skew AT THE SOURCE. q294 shows per-bit set shares
-    of 0.01-0.99 on this corpus — a template-collapse signature with a
-    twist: the vocabulary is tiny and near-ubiquitous (every token in
-    ~78% of documents), so the classic IDF reweighting is inert (every
-    weight rounds to zero) and the skew lives in the MEAN of each
-    bit's vote distribution, not in which tokens vote. The standard
-    fix from learning-to-hash (threshold each projection at its
-    corpus-central value, as ITQ/spectral-hashing do) applies
-    directly: set bit j iff the document's vote sum exceeds the
-    CORPUS MEAN vote for bit j, instead of zero.
+    """CENTERED SimHash fingerprint: fixes the measured bit skew AT THE
+    SOURCE. q294 shows per-bit set shares of 0.01-0.99 on this corpus —
+    a template-collapse signature with a twist: the vocabulary is tiny
+    and near-ubiquitous (every token in ~78% of documents), so the
+    classic IDF reweighting is inert (every weight rounds to zero) and
+    the skew lives in the MEAN of each bit's vote distribution, not in
+    which tokens vote. The standard fix from learning-to-hash
+    (threshold each projection at its corpus-central value, as
+    ITQ/spectral-hashing do) applies directly: set bit j iff the
+    document's vote sum exceeds the CORPUS MEAN vote for bit j,
+    instead of zero.
 
     The comparison is exact integer — ``vote_j * n > S_j`` with S_j
     the per-bit vote total — so both engines evaluate it identically
@@ -367,12 +357,10 @@ def simhash_centered(df: DataFrame) -> DataFrame:
     Operational contract: the thresholds are CORPUS STATISTICS, so
     like the band rung they are an index-build parameter — a stored
     index pins (S_j, n) in its manifest meta and every later batch
-    fingerprints against the PINNED thresholds (re-deriving them per
-    batch would silently fork the fingerprint space). The streaming
-    gates keep the zero-threshold operator + the
-    :func:`balanced_bit_blocks` banding permutation (map-only index
-    migration, no re-hash); centered fingerprints are the from-scratch
-    build path.
+    fingerprints against the PINNED thresholds
+    (:func:`simhash_centered_pinned`; re-deriving them per batch would
+    silently fork the fingerprint space). This operator derives them
+    in-plan from the frame it fingerprints, the one-shot form.
 
     Scale shape: the same single wide vote aggregate as
     :func:`simhash`, plus one 1-row (61-column) aggregate over the
@@ -380,29 +368,16 @@ def simhash_centered(df: DataFrame) -> DataFrame:
     (a lazy local checkpoint) and consumed by both. Never a
     driver-side count.
     """
-    votes = _simhash_votes(df)
-    votes = votes.localCheckpoint(eager=False)
-    totals = votes.agg(
-        F.count("*").alias("__n"),
-        *[F.sum(f"b{j}").alias(f"s{j}") for j in range(SIMHASH_BITS)],
-    )
-    base = votes.crossJoin(F.broadcast(totals))
-    fingerprint = None
-    for j in range(SIMHASH_BITS):
-        term = F.when(
-            F.col(f"b{j}") * F.col("__n") > F.col(f"s{j}"), F.lit(1 << j)
-        ).otherwise(F.lit(0))
-        fingerprint = term if fingerprint is None else fingerprint + term
-    return base.select(
-        F.col("doc_id"), fingerprint.cast("long").alias("simhash")
+    votes = _simhash_votes(df).localCheckpoint(eager=False)
+    base = votes.crossJoin(F.broadcast(_vote_totals(votes)))
+    return _threshold_fold(
+        base, F.col("__n"), [F.col(f"s{j}") for j in range(SIMHASH_BITS)]
     )
 
 
 def _simhash_votes(df: DataFrame) -> DataFrame:
     """Per-document bit-vote sums (doc, b0..b59) — the shared first
-    stage of :func:`simhash` (zero threshold), :func:`simhash_centered`
-    (in-plan mean threshold) and :func:`simhash_centered_pinned`
-    (index-pinned thresholds)."""
+    stage of every SimHash fingerprint."""
     toks = spread(df).select(
         F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("token")
     ).withColumn("bh", base_hash60(F.col("token")))
@@ -416,6 +391,33 @@ def _simhash_votes(df: DataFrame) -> DataFrame:
     )
 
 
+def _vote_totals(votes: DataFrame) -> DataFrame:
+    """(__n, s0..s59): the document count and per-bit vote totals of a
+    vote frame, one 61-column aggregate row — the centered thresholds."""
+    return votes.agg(
+        F.count("*").alias("__n"),
+        *[F.sum(f"b{j}").alias(f"s{j}") for j in range(SIMHASH_BITS)],
+    )
+
+
+def _threshold_fold(
+    votes: DataFrame, n: Column | None, s: list[Column] | None
+) -> DataFrame:
+    """(doc_id, simhash) from a vote frame: bit j is set iff
+    ``vote_j * n > s[j]``, or iff ``vote_j > 0`` when ``n`` is None
+    (the zero threshold). 60 integer terms folded map-side."""
+    fingerprint = None
+    for j in range(SIMHASH_BITS):
+        above = (
+            F.col(f"b{j}") > 0 if n is None else F.col(f"b{j}") * n > s[j]
+        )
+        term = F.when(above, F.lit(1 << j)).otherwise(F.lit(0))
+        fingerprint = term if fingerprint is None else fingerprint + term
+    return votes.select(
+        F.col("doc_id"), fingerprint.cast("long").alias("simhash")
+    )
+
+
 def measure_center_thresholds(df: DataFrame) -> dict:
     """Measure the centered-SimHash thresholds over a corpus: the
     per-bit vote totals and the document count — the CORPUS STATISTICS
@@ -425,10 +427,7 @@ def measure_center_thresholds(df: DataFrame) -> dict:
     would silently fork the fingerprint space — the same failure mode
     as re-picking the band rung per batch). One aggregate; the
     collected row is 61 integers — metadata-sized."""
-    row = _simhash_votes(df).agg(
-        F.count("*").alias("__n"),
-        *[F.sum(f"b{j}").alias(f"s{j}") for j in range(SIMHASH_BITS)],
-    ).first()
+    row = _vote_totals(_simhash_votes(df)).first()
     if not row["__n"]:
         raise ValueError("cannot measure thresholds on an empty corpus")
     return {
@@ -449,15 +448,53 @@ def simhash_centered_pinned(df: DataFrame, thresholds: dict) -> DataFrame:
     s, n = thresholds["s"], int(thresholds["n"])
     if len(s) != SIMHASH_BITS:
         raise ValueError(f"need {SIMHASH_BITS} thresholds, got {len(s)}")
-    votes = _simhash_votes(df)
-    fingerprint = None
-    for j in range(SIMHASH_BITS):
-        term = F.when(
-            F.col(f"b{j}") * F.lit(n) > F.lit(int(s[j])), F.lit(1 << j)
-        ).otherwise(F.lit(0))
-        fingerprint = term if fingerprint is None else fingerprint + term
-    return votes.select(
-        F.col("doc_id"), fingerprint.cast("long").alias("simhash")
+    return _threshold_fold(
+        _simhash_votes(df), F.lit(n), [F.lit(int(x)) for x in s]
+    )
+
+
+def bit_census(fp: DataFrame) -> DataFrame:
+    """(bit_idx, n_set, n), all BIGINT: per fingerprint bit, how many
+    rows of ``fp`` set it, and the row count. ONE wide aggregate (61
+    parallel integer sums over the ``simhash`` column) exploded to 60
+    rows in-plan — never an n x 60 explode. Bit extraction is the
+    integer ``(simhash div 2^j) % 2`` both engines evaluate alike."""
+    row = fp.agg(
+        F.count("*").alias("n"),
+        *[
+            F.sum(F.expr(f"(simhash div {1 << j}) % 2")).alias(f"c{j}")
+            for j in range(SIMHASH_BITS)
+        ],
+    )
+    bits = F.array(
+        *[
+            F.struct(
+                F.lit(j).cast("long").alias("bit_idx"),
+                F.col(f"c{j}").alias("n_set"),
+            )
+            for j in range(SIMHASH_BITS)
+        ]
+    )
+    return row.select(F.explode(bits).alias("b"), "n").select(
+        "b.bit_idx", "b.n_set", "n"
+    )
+
+
+def band_bucket_pairs(bands: DataFrame, out: str, *stats: Column) -> DataFrame:
+    """(rung, *stats, out): per rung, the banded candidate-pair count
+    ``sum C(sz, 2)`` over the rung's (band_idx, band_val) buckets,
+    named ``out``. ``stats`` are further aggregates over the bucket
+    sizes ``sz``. ``bands`` carries ``rung``, ``band_idx`` and
+    ``band_val`` (:func:`simhash_band_rows_all_rungs`, or stored index
+    rows)."""
+    return (
+        bands.groupBy("rung", "band_idx", "band_val")
+        .agg(F.count("*").alias("sz"))
+        .groupBy("rung")
+        .agg(
+            *stats,
+            F.sum(F.expr("(sz * (sz - 1)) div 2")).cast("long").alias(out),
+        )
     )
 
 
@@ -491,16 +528,15 @@ _SIMHASH_RUNG_TARGET = 8  # band-bucket occupancy target between rungs
 def snake_block_of_rank(rank: int) -> int:
     """Serpentine (snake) block for the 0-based balance rank: rounds of
     6 bits alternate direction (0..5, 5..0, ...), the standard greedy
-    that balances per-block sums of a sorted sequence. ONE definition
-    shared by the Python operator and (as rendered integer arithmetic)
-    the in-plan/oracle twins."""
+    that balances per-block sums of a sorted sequence. ONE definition;
+    q304's DuckDB oracle renders the same integer arithmetic."""
     rnd, pos = divmod(rank, _SIMHASH_BLOCKS)
     return pos if rnd % 2 == 0 else _SIMHASH_BLOCKS - 1 - pos
 
 
 def balanced_bit_blocks(set_counts: list[int], n_docs: int) -> list[int]:
-    """Entropy-balanced bit→position assignment (round 11, VERDICT r10
-    #1): given the measured per-bit set counts (q294's table), permute
+    """Entropy-balanced bit→position assignment: given the measured
+    per-bit set counts (:func:`bit_census`, q294's table), permute
     the fingerprint bits so each 10-bit block carries an even share of
     the corpus's bit skew, instead of whatever ``bit_idx div 10``
     happens to concentrate.
@@ -521,9 +557,9 @@ def balanced_bit_blocks(set_counts: list[int], n_docs: int) -> list[int]:
 
     Determinism is pure-integer: bits rank by (|2*n_set - n| DESC,
     bit_idx ASC); rank r goes to block ``snake(r)`` at slot ``r div
-    6``; the new position is ``block*10 + slot``. The same arithmetic
-    is rendered in the in-plan Spark/DuckDB twins (plans/dedup.py), so
-    all three derivations are bit-identical on the same counts.
+    6``; the new position is ``block*10 + slot``. q304's DuckDB oracle
+    renders the same arithmetic as a window rank and a CASE, so both
+    derivations are bit-identical on the same counts.
 
     Returns ``positions``: ``positions[bit_idx]`` = the permuted bit
     position (block * 10 + slot). Always a permutation of 0..59.
@@ -547,22 +583,14 @@ def balanced_bit_blocks(set_counts: list[int], n_docs: int) -> list[int]:
 def measure_balanced_bit_blocks(fp: DataFrame) -> list[int]:
     """Measure per-bit set counts over a ``simhash`` column and return
     the :func:`balanced_bit_blocks` assignment — the index-build /
-    migration entry point. ONE aggregate pass (61 parallel integer
-    sums); the collected row is constant-size metadata, the same
-    licence as an IVF codebook."""
-    row = fp.agg(
-        F.count("*").alias("__n"),
-        *[
-            F.sum(F.expr(f"(simhash div {1 << j}) % 2")).alias(f"c{j}")
-            for j in range(SIMHASH_BITS)
-        ],
-    ).first()
-    n = row["__n"]
+    migration entry point. One :func:`bit_census` pass; the collected
+    60 rows are constant-size metadata, the same licence as an IVF
+    codebook."""
+    rows = sorted(bit_census(fp).collect(), key=lambda r: r["bit_idx"])
+    n = rows[0]["n"]
     if not n:
         raise ValueError("cannot measure bit balance of an empty frame")
-    return balanced_bit_blocks(
-        [int(row[f"c{j}"]) for j in range(SIMHASH_BITS)], int(n)
-    )
+    return balanced_bit_blocks([int(r["n_set"]) for r in rows], int(n))
 
 
 def permute_fingerprint(hash_col: str, positions: list[int]) -> Column:

@@ -39,6 +39,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Round budget of connected_components: label propagation needs
+# diameter + 1 rounds, so a graph wider than this must use the star
+# contraction.
+_PROPAGATION_ROUNDS = 25
 # Round budget of connected_components_star: O(log^2 n) alternating
 # rounds converge far inside it at any realistic graph size.
 _STAR_ROUNDS = 40
@@ -60,8 +64,9 @@ def connected_components(
         Optional single-column node universe. Nodes absent from
         ``edges`` become singleton components (their own id). Defaults
         to the nodes appearing in ``edges``.
-    Returns ``DataFrame[node, component]``. Label propagation stops
-    after 25 rounds even if labels still change.
+    Returns ``DataFrame[node, component]``. Raises ``RuntimeError``
+    when labels still change after the round budget (a graph of
+    diameter 25 or more): use ``algorithm="star"``.
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # both orientations emitted map-side from ONE evaluation of the
@@ -91,7 +96,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
 
-    for _ in range(25):
+    for _ in range(_PROPAGATION_ROUNDS):
         # Every node forwards its current label to each neighbour.
         msgs = sym.join(labels, sym.a == labels.node).select(
             F.col("b").alias("node"), "component"
@@ -112,6 +117,12 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            "label propagation did not converge within "
+            f"{_PROPAGATION_ROUNDS} rounds (graph diameter too large); "
+            'use connected_components_star / algorithm="star"'
+        )
     return labels
 
 

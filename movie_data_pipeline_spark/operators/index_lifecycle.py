@@ -41,8 +41,7 @@ from pyspark.sql import functions as F
 
 from movie_data_pipeline_spark.functions.numeric import round4
 from movie_data_pipeline_spark.operators.dedup import (
-    SIMHASH_BITS,
-    _simhash_votes,
+    bit_census,
     measure_balanced_bit_blocks,
     measure_center_thresholds,
     simhash,
@@ -560,31 +559,28 @@ def audit_center_thresholds(
     spark: SparkSession, index_path: str, corpus_path: str
 ) -> "DataFrame":
     """Staleness monitor for a centered SimHash index's PINNED
-    thresholds (round 12, VERDICT r11 #3): q311 pins
-    ``simhash_center_s/n`` at first-batch build and they are frozen
-    forever — as the corpus distribution drifts, the pinned space's
-    bit balance decays back toward the raw zero-threshold numbers
-    (q305: mean |share-0.5| 0.27) and the band-collision floor
-    re-inflates (q306: up to 7,798x at rung 3). This is the
-    q294-style audit for the centered axis: re-measure the CURRENT
-    corpus's per-document votes (the one wide aggregate
-    ``operators/dedup._simhash_votes`` feeds every fingerprint
-    variant) and report, per bit, how many documents set the bit
-    UNDER THE PINNED THRESHOLDS — i.e. the balance of the space new
-    batches are actually fingerprinted into.
+    thresholds: q311 pins ``simhash_center_s/n`` at first-batch build
+    and they are frozen forever — as the corpus distribution drifts,
+    the pinned space's bit balance decays back toward the raw
+    zero-threshold numbers (q305: mean |share-0.5| 0.27) and the
+    band-collision floor re-inflates (q306: up to 7,798x at rung 3).
+    This is the q294 audit for the centered axis: the
+    :func:`~movie_data_pipeline_spark.operators.dedup.bit_census` of
+    the CURRENT corpus fingerprinted UNDER THE PINNED THRESHOLDS — the
+    balance of the space new batches are actually fingerprinted into.
 
-    Returns (bit_idx, n_above, n_docs, imbalance) — ``imbalance`` is
-    ``|2*n_above/n_docs - 1|`` (0 = perfectly balanced, 1 = dead
-    bit), round4-quantized for cross-engine determinism. SCALING.md
-    rule: mean imbalance creeping above ~0.2, or any single bit above
-    ~0.9, is the re-center signal (:func:`recenter_simhash_index`);
-    between audits the pinned space stays valid — the thresholds are
-    a consistency contract, not an accuracy one.
+    Returns (bit_idx, n_above, n_docs, imbalance) — ``n_above`` is the
+    census's ``n_set``, ``imbalance`` is ``|2*n_above/n_docs - 1|`` (0
+    = perfectly balanced, 1 = dead bit), round4-quantized for
+    cross-engine determinism. SCALING.md rule: mean imbalance creeping
+    above ~0.2, or any single bit above ~0.9, is the re-center signal
+    (:func:`recenter_simhash_index`); between audits the pinned space
+    stays valid — the thresholds are a consistency contract, not an
+    accuracy one.
 
     Cost: ONE pass over the corpus text (token explode + per-doc vote
-    aggregate) and one 61-sum reduction — exactly what one gate batch
-    pays to fingerprint, entirely in-plan (the per-bit rows come from
-    an explode of the single aggregate row, no driver collect).
+    aggregate) and one 61-sum census — exactly what one gate batch
+    pays to fingerprint, entirely in-plan.
     """
     idx = VersionedTable(index_path)
     meta = idx.manifest().get("meta") or {}
@@ -594,47 +590,16 @@ def audit_center_thresholds(
             "thresholds (simhash_center_s) — only centered indexes "
             "have a threshold space to audit"
         )
-    s, n = meta["simhash_center_s"], int(meta["simhash_center_n"])
-    if len(s) != SIMHASH_BITS:
-        raise ValueError(
-            f"pinned thresholds hold {len(s)} bits, not {SIMHASH_BITS}"
-        )
     corpus = VersionedTable(corpus_path).read(spark)
-    votes = _simhash_votes(corpus)
-    agg = votes.agg(
-        F.count("*").alias("__n_docs"),
-        *[
-            F.sum(
-                F.when(
-                    F.col(f"b{j}") * F.lit(n) > F.lit(int(s[j])), 1
-                ).otherwise(0)
-            ).alias(f"a{j}")
-            for j in range(SIMHASH_BITS)
-        ],
-    )
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("bit_idx"), F.col(f"a{j}").alias("n_above")
-            )
-            for j in range(SIMHASH_BITS)
-        ]
-    )
-    return (
-        agg.select(F.col("__n_docs"), F.explode(pairs).alias("p"))
-        .select(
-            F.col("p.bit_idx").cast("long").alias("bit_idx"),
-            F.col("p.n_above").cast("long").alias("n_above"),
-            F.col("__n_docs").cast("long").alias("n_docs"),
-            round4(
-                F.abs(
-                    F.lit(2.0) * F.col("p.n_above") / F.col("__n_docs")
-                    - F.lit(1.0)
-                )
-            ).alias("imbalance"),
-        )
-        .orderBy("bit_idx")
-    )
+    census = bit_census(simhash_fingerprints(corpus, meta))
+    return census.select(
+        "bit_idx",
+        F.col("n_set").alias("n_above"),
+        F.col("n").alias("n_docs"),
+        round4(
+            F.abs(F.lit(2.0) * F.col("n_set") / F.col("n") - F.lit(1.0))
+        ).alias("imbalance"),
+    ).orderBy("bit_idx")
 
 
 def recenter_simhash_index(

@@ -28,8 +28,15 @@ from movie_data_pipeline_spark.operators.dedup import (
     minhash_coeffs,
     minhash_signatures_long,
     minhash_signatures_wide,
+    SIMHASH_BITS,
+    band_bucket_pairs,
+    bit_census,
+    measure_balanced_bit_blocks,
+    permute_fingerprint,
     ppjoin_pairs,
     simhash,
+    simhash_band_combos,
+    simhash_band_rows_all_rungs,
     simhash_centered,
     simhash_hamming_pairs,
 )
@@ -223,7 +230,6 @@ def _simhash_combo_sql() -> tuple[str, str, str]:
     from movie_data_pipeline_spark.operators.dedup import (
         _SIMHASH_BLOCK_BITS,
         _SIMHASH_BLOCKS,
-        simhash_band_combos,
     )
 
     vals = ",\n      ".join(
@@ -4000,7 +4006,7 @@ def _render_simhash_allrung_ctes(
     tags=("extension", "dedup", "simhash", "calibration", "planner"),
 )
 def q290_simhash_rung_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash RUNG PLANNER (round 9): price every band-ladder layout
+    """SimHash RUNG PLANNER: price every band-ladder layout
     over the REAL corpus in one pass — per rung m: band count, band
     rows the index would hold, occupied buckets, the largest bucket
     (the skew an AQE skew-join would split), and the exact banded
@@ -4021,28 +4027,15 @@ def q290_simhash_rung_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     planner costs about two q79 candidate generations, and never
     generates a pair.
     """
-    from movie_data_pipeline_spark.operators.dedup import (
-        simhash_band_rows_all_rungs,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
-    bands = simhash_band_rows_all_rungs(simhash(docs))
-    bkt = bands.groupBy("rung", "band_idx", "band_val").agg(
-        F.count("*").alias("sz")
-    )
-    return (
-        bkt.groupBy("rung")
-        .agg(
-            F.countDistinct("band_idx").cast("long").alias("n_bands"),
-            F.sum("sz").cast("long").alias("n_band_rows"),
-            F.count("*").cast("long").alias("n_buckets"),
-            F.max("sz").cast("long").alias("max_bucket"),
-            F.sum(F.expr("(sz * (sz - 1)) div 2"))
-            .cast("long")
-            .alias("candidate_pairs"),
-        )
-        .orderBy("rung")
-    )
+    return band_bucket_pairs(
+        simhash_band_rows_all_rungs(simhash(docs)),
+        "candidate_pairs",
+        F.countDistinct("band_idx").cast("long").alias("n_bands"),
+        F.sum("sz").cast("long").alias("n_band_rows"),
+        F.count("*").cast("long").alias("n_buckets"),
+        F.max("sz").cast("long").alias("max_bucket"),
+    ).orderBy("rung")
 
 
 # --------------------------------------------------------------------------
@@ -4068,7 +4061,7 @@ def q290_simhash_rung_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("extension", "dedup", "simhash", "audit", "monitor"),
 )
 def q294_simhash_bit_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash BIT-BALANCE audit (round 9): per fingerprint bit, how
+    """SimHash BIT-BALANCE audit: per fingerprint bit, how
     many documents set it and the deviation from the 50% a healthy
     occurrence-weighted SimHash produces over a diverse corpus. Every
     downstream guarantee — the Hamming metric meaning anything, band
@@ -4084,31 +4077,16 @@ def q294_simhash_bit_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus measures ~0.5 per bit, asserted in
     tests/test_round9_queries.py.)
 
-    Shape: one explode of a 60-element bit grid per fingerprint
-    (n x 60 narrow rows), one groupBy(bit_idx) with map-side combine —
-    linear, and 60-row output regardless of corpus size. Bit
-    extraction is the same integer (fp div 2^j) % 2 both engines
+    Shape: one ``bit_census`` (a single 61-sum aggregate exploded to
+    60 rows) — linear, and 60-row output regardless of corpus size.
+    Bit extraction is the same integer (fp div 2^j) % 2 both engines
     evaluate identically.
     """
     docs = load_table(spark, sf_dir, "documents")
-    fp = simhash(docs)
-    per_bit = (
-        fp.select(
-            "simhash",
-            F.explode(F.sequence(F.lit(0), F.lit(59))).alias("bit_idx"),
-        )
-        .groupBy("bit_idx")
-        .agg(
-            F.sum(
-                F.expr("(simhash div CAST(pow(2, bit_idx) AS BIGINT)) % 2")
-            ).alias("n_set"),
-            F.count("*").alias("n"),
-        )
-    )
     share = F.col("n_set") * F.lit(1.0) / F.col("n")
-    return per_bit.select(
-        F.col("bit_idx").cast("long").alias("bit_idx"),
-        F.col("n_set").cast("long").alias("n_set"),
+    return bit_census(simhash(docs)).select(
+        "bit_idx",
+        "n_set",
         round4(share).alias("set_share"),
         round4(F.abs(share - F.lit(0.5))).alias("abs_dev"),
     ).orderBy("bit_idx")
@@ -4118,10 +4096,9 @@ def q294_simhash_bit_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q297 — skew-corrected rung pricing (round 10, VERDICT r9 #3)
 # --------------------------------------------------------------------------
 def _q297_oracle(fp_ctes: str = None) -> str:
-    """Skew-pricing oracle, parameterized on the fingerprint CTE block
-    (round 11): rendered with ``_SIMHASH_CTES`` it is byte-identical to
-    the round-10 q297 oracle; q306 renders the same body over the
-    CENTERED fingerprint CTEs."""
+    """Skew-pricing oracle, parameterized on the fingerprint CTE block:
+    q297 renders it over ``_SIMHASH_CTES``, q306 over the CENTERED
+    fingerprint CTEs."""
     if fp_ctes is None:
         fp_ctes = _SIMHASH_CTES
     vals, _blk, _bv = _simhash_combo_sql()
@@ -4188,8 +4165,7 @@ def _q297_oracle(fp_ctes: str = None) -> str:
           "skew"),
 )
 def q297_simhash_skew_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-corrected SimHash rung pricing (round 10, VERDICT r9 #3):
-    the ladder's collision-floor guarantees (SCALING.md; measured in
+    """Skew-corrected SimHash rung pricing: the ladder's collision-floor guarantees (SCALING.md; measured in
     SCALE_PROBE_r9.md) assume UNIFORM fingerprint bits, and q294
     measures per-bit set shares of 0.01-0.99 on this templated corpus
     — so this query folds the bit-entropy correction into the rung
@@ -4218,9 +4194,9 @@ def q297_simhash_skew_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     priced layout is BY CONSTRUCTION the layout the gates join on.
 
     Shape: one fingerprint pass shared (lazy local checkpoint) by the
-    60-bit explode (n x 60 narrow rows) and the 41-combo band explode
-    (q290's audited plan); everything downstream of the two groupBys
-    is constant-size (60 bits, 6 blocks, 41 bands, 3 rungs). Linear in
+    61-sum ``bit_census`` and the 41-combo band explode (q290's
+    audited plan); everything downstream of the two aggregates is
+    constant-size (60 bits, 6 blocks, 41 bands, 3 rungs). Linear in
     corpus size, never generates a pair.
     """
     docs = load_table(spark, sf_dir, "documents")
@@ -4233,30 +4209,44 @@ def _skew_pricing_frame(spark: SparkSession, fp: DataFrame) -> DataFrame:
     shared verbatim by q297 (zero-threshold fingerprints) and q306
     (centered fingerprints), so the two prices can only differ through
     the fingerprints themselves."""
-    from movie_data_pipeline_spark.operators.dedup import (
-        simhash_band_combos,
-        simhash_band_rows_all_rungs,
+    census = bit_census(fp)
+    expd = _band_collisions(spark, census, list(range(SIMHASH_BITS)), "s")
+    actual = band_bucket_pairs(simhash_band_rows_all_rungs(fp), "actual_pairs")
+    pairs, unif_per_band = _pair_scales()
+    return (
+        expd.join(actual, "rung")
+        .crossJoin(F.broadcast(census.agg(F.max("n").alias("n"))))
+        .select(
+            F.col("rung").cast("long").alias("rung"),
+            "n_bands",
+            "actual_pairs",
+            round4(pairs * unif_per_band).alias("exp_pairs_uniform"),
+            round4(pairs * F.col("s")).alias("exp_pairs_skewed"),
+            round4(F.col("s") / unif_per_band).alias("skew_inflation"),
+        )
+        .orderBy("rung")
     )
 
-    per_bit = (
-        fp.select(
-            "simhash",
-            F.explode(F.sequence(F.lit(0), F.lit(59))).alias("bit_idx"),
-        )
-        .groupBy("bit_idx")
-        .agg(
-            F.sum(
-                F.expr("(simhash div CAST(pow(2, bit_idx) AS BIGINT)) % 2")
-            ).alias("n_set"),
-            F.count("*").alias("n"),
-        )
-    )
+
+def _band_collisions(
+    spark: SparkSession, census: DataFrame, positions: list[int], out: str
+) -> DataFrame:
+    """(rung, n_bands, out): the independent-bits collision expectation
+    of one random fingerprint pair, per rung — ``out`` is the sum over
+    the rung's bands of prod over the band's bits of p^2 + (1-p)^2,
+    with p a bit's set share in ``census`` (``bit_census``) and bit j
+    in block ``positions[j] div 10`` (identity = the naive layout, a
+    ``balanced_bit_blocks`` result = the balanced one). Products fold
+    in bit_idx order and the sum in band_idx order, the same IEEE
+    sequence as the oracle's PRODUCT/SUM(... ORDER BY)."""
     p = F.col("n_set") * F.lit(1.0) / F.col("n")
-    cb = per_bit.select(
+    block_of = F.array(*[F.lit(q // 10) for q in positions])
+    cb = census.select(
         "bit_idx",
-        (F.col("bit_idx") / 10).cast("int").alias("block_idx"),
+        F.element_at(block_of, F.col("bit_idx").cast("int") + 1).alias(
+            "block_idx"
+        ),
         (p * p + (F.lit(1) - p) * (F.lit(1) - p)).alias("c"),
-        "n",
     )
     bp = cb.groupBy("block_idx").agg(
         F.aggregate(
@@ -4284,45 +4274,25 @@ def _skew_pricing_frame(spark: SparkSession, fp: DataFrame) -> DataFrame:
             ).alias("p"),
         )
     )
-    expd = bandp.groupBy("rung").agg(
+    return bandp.groupBy("rung").agg(
         F.count("*").cast("long").alias("n_bands"),
         F.aggregate(
             F.array_sort(F.collect_list(F.struct("band_idx", "p"))),
             F.lit(0.0),
             lambda acc, x: acc + x["p"],
-        ).alias("s"),
-    )
-    nn = per_bit.agg(F.max("n").alias("n"))
-
-    bkt = (
-        simhash_band_rows_all_rungs(fp)
-        .groupBy("rung", "band_idx", "band_val")
-        .agg(F.count("*").alias("sz"))
-    )
-    actual = bkt.groupBy("rung").agg(
-        F.sum(F.expr("(sz * (sz - 1)) div 2"))
-        .cast("long")
-        .alias("actual_pairs")
+        ).alias(out),
     )
 
-    n_d = F.col("n").cast("double")
-    pairs = n_d * (F.col("n") - 1) / 2
+
+def _pair_scales() -> tuple:
+    """(C(n, 2), n_bands * 2^(-10 rung)) as double Columns over ``n``,
+    ``n_bands`` and ``rung``: the pair count an expectation scales by,
+    and the uniform-bits expectation per pair."""
+    pairs = F.col("n").cast("double") * (F.col("n") - 1) / 2
     unif_per_band = F.col("n_bands").cast("double") * F.pow(
         F.lit(2.0), F.lit(-10) * F.col("rung")
     )
-    return (
-        expd.join(actual, "rung")
-        .crossJoin(F.broadcast(nn))
-        .select(
-            F.col("rung").cast("long").alias("rung"),
-            "n_bands",
-            "actual_pairs",
-            round4(pairs * unif_per_band).alias("exp_pairs_uniform"),
-            round4(pairs * F.col("s")).alias("exp_pairs_skewed"),
-            round4(F.col("s") / unif_per_band).alias("skew_inflation"),
-        )
-        .orderBy("rung")
-    )
+    return pairs, unif_per_band
 
 
 # --------------------------------------------------------------------------
@@ -4336,9 +4306,8 @@ _PER_BIT_SQL = """per_bit AS (
       FROM fingerprints CROSS JOIN bitgrid
       GROUP BY bit_idx)"""
 
-# Snake assignment arithmetic — ONE rendered form shared by the oracle
-# and mirrored expression-for-expression by the Spark plan below, and
-# by construction the same integers operators/dedup.balanced_bit_blocks
+# Snake assignment arithmetic as the oracle renders it: an independent
+# SQL derivation of the integers operators/dedup.balanced_bit_blocks
 # produces (tested in tests/test_simhash_balance.py).
 _SNAKE_BLK_SQL = (
     "CASE WHEN (r // 6) % 2 = 0 THEN r % 6 ELSE 5 - (r % 6) END"
@@ -4457,8 +4426,7 @@ def q304_simhash_balanced_banding(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Entropy-BALANCED band assignment, measured against the naive
-    layout (round 11, VERDICT r10 #1 — mitigate the skew, don't just
-    price it): q297 shows the template-collapsed corpus inflates the
+    layout (mitigate the skew, don't just price it): q297 shows the template-collapsed corpus inflates the
     band-collision floor 404x at rung 2 / 7,798x at rung 3 because the
     naive ``bit_idx div 10`` blocks CONCENTRATE degenerate bits (the
     per-band floor is the product of its bits' collision factors, so
@@ -4490,147 +4458,37 @@ def q304_simhash_balanced_banding(
     the fingerprint, which is q305/q306's centered variant —
     skew_inflation ~1x there.
 
-    Determinism: the assignment is pure integer (imbalance rank +
-    snake arithmetic, rendered identically in both engines and equal
-    by construction to the Python operator the gates use); expectation
-    folds are ordered, as in q297. Shape: fingerprints once (lazy
-    local checkpoint), one 60-row assignment (constant-size window),
-    one broadcast re-permute pass, two 41-combo band explodes + bucket
-    groupBys — linear, never generates a pair.
+    Determinism: the assignment is the operator the gates use
+    (``measure_balanced_bit_blocks``: imbalance rank + snake, pure
+    integer); the oracle renders the same arithmetic as a window rank
+    and a CASE. Expectation folds are ordered, as in q297. Shape:
+    fingerprints once (lazy local checkpoint), one 60-row census
+    collected for the assignment, one map-side ``permute_fingerprint``
+    pass, two 41-combo band explodes + bucket groupBys — linear, never
+    generates a pair.
     """
-    from pyspark.sql.window import Window
-
-    from movie_data_pipeline_spark.operators.dedup import (
-        simhash_band_combos,
-        simhash_band_rows_all_rungs,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     fp = simhash(docs).localCheckpoint(eager=False)
-
-    per_bit = (
-        fp.select(
-            "simhash",
-            F.explode(F.sequence(F.lit(0), F.lit(59))).alias("bit_idx"),
-        )
-        .groupBy("bit_idx")
-        .agg(
-            F.sum(
-                F.expr("(simhash div CAST(pow(2, bit_idx) AS BIGINT)) % 2")
-            ).alias("n_set"),
-            F.count("*").alias("n"),
-        )
-        .localCheckpoint(eager=False)
+    census = bit_census(fp)
+    positions = measure_balanced_bit_blocks(fp)
+    permuted = fp.select(
+        "doc_id", permute_fingerprint("simhash", positions).alias("simhash")
     )
-    w = Window.orderBy(
-        F.desc(F.abs(F.lit(2) * F.col("n_set") - F.col("n"))),
-        F.asc("bit_idx"),
-    )
-    asg = (
-        per_bit.withColumn("r", F.row_number().over(w) - 1)
-        .withColumn(
-            "blk",
-            F.expr(
-                "CASE WHEN (r div 6) % 2 = 0 THEN r % 6"
-                " ELSE 5 - (r % 6) END"
-            ),
-        )
-        .withColumn("newpos", F.col("blk") * 10 + F.expr("r div 6"))
-    )
-    permuted = (
-        fp.select(
-            "doc_id",
-            "simhash",
-            F.explode(F.sequence(F.lit(0), F.lit(59))).alias("bit_idx"),
-        )
-        .join(F.broadcast(asg.select("bit_idx", "newpos")), "bit_idx")
-        .groupBy("doc_id")
-        .agg(
-            F.sum(
-                F.expr("(simhash div CAST(pow(2, bit_idx) AS BIGINT)) % 2")
-                * F.expr("CAST(pow(2, newpos) AS BIGINT)")
-            )
-            .cast("long")
-            .alias("simhash")
-        )
-    )
-
-    def _actual(bands: DataFrame, out: str) -> DataFrame:
-        return (
-            bands.groupBy("rung", "band_idx", "band_val")
-            .agg(F.count("*").alias("sz"))
-            .groupBy("rung")
-            .agg(
-                F.sum(F.expr("(sz * (sz - 1)) div 2")).cast("long").alias(out)
-            )
-        )
-
-    act_n = _actual(simhash_band_rows_all_rungs(fp), "actual_naive")
-    act_b = _actual(
+    act_n = band_bucket_pairs(simhash_band_rows_all_rungs(fp), "actual_naive")
+    act_b = band_bucket_pairs(
         simhash_band_rows_all_rungs(permuted), "actual_balanced"
     )
-
-    p = F.col("n_set") * F.lit(1.0) / F.col("n")
-    c_expr = (p * p + (F.lit(1) - p) * (F.lit(1) - p)).alias("c")
-    cbn = per_bit.select(
-        "bit_idx", (F.col("bit_idx") / 10).cast("int").alias("block_idx"),
-        c_expr,
-    )
-    cbb = asg.select("bit_idx", F.col("blk").alias("block_idx"), c_expr)
-    combos = spark.createDataFrame(
-        [(m, i, c[0], c[1] if len(c) > 1 else -1, c[2] if len(c) > 2 else -1)
-         for (m, i, c) in simhash_band_combos()],
-        "m INT, band_idx INT, j1 INT, j2 INT, j3 INT",
-    )
-
-    def _expd(cb: DataFrame, s_out: str) -> DataFrame:
-        bp = cb.groupBy("block_idx").agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("bit_idx", "c"))),
-                F.lit(1.0),
-                lambda acc, x: acc * x["c"],
-            ).alias("bp")
-        )
-        b1, b2, b3 = bp.alias("b1"), bp.alias("b2"), bp.alias("b3")
-        bandp = (
-            combos.join(b1, F.col("b1.block_idx") == F.col("j1"))
-            .join(b2, F.col("b2.block_idx") == F.col("j2"), "left")
-            .join(b3, F.col("b3.block_idx") == F.col("j3"), "left")
-            .select(
-                F.col("m").alias("rung"),
-                "band_idx",
-                (
-                    (F.col("b1.bp") * F.coalesce(F.col("b2.bp"), F.lit(1.0)))
-                    * F.coalesce(F.col("b3.bp"), F.lit(1.0))
-                ).alias("p"),
-            )
-        )
-        return bandp.groupBy("rung").agg(
-            F.count("*").cast("long").alias(f"__nb_{s_out}"),
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("band_idx", "p"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["p"],
-            ).alias(s_out),
-        )
-
-    expd_n = _expd(cbn, "s_n")
-    expd_b = _expd(cbb, "s_b").drop("__nb_s_b")
-    nn = per_bit.agg(F.max("n").alias("n"))
-
-    n_d = F.col("n").cast("double")
-    pairs = n_d * (F.col("n") - 1) / 2
-    unif_per_band = F.col("__nb_s_n").cast("double") * F.pow(
-        F.lit(2.0), F.lit(-10) * F.col("rung")
-    )
+    expd_n = _band_collisions(spark, census, list(range(SIMHASH_BITS)), "s_n")
+    expd_b = _band_collisions(spark, census, positions, "s_b").drop("n_bands")
+    pairs, unif_per_band = _pair_scales()
     return (
         expd_n.join(expd_b, "rung")
         .join(act_n, "rung")
         .join(act_b, "rung")
-        .crossJoin(F.broadcast(nn))
+        .crossJoin(F.broadcast(census.agg(F.max("n").alias("n"))))
         .select(
             F.col("rung").cast("long").alias("rung"),
-            F.col("__nb_s_n").alias("n_bands"),
+            "n_bands",
             "actual_naive",
             "actual_balanced",
             round4(pairs * unif_per_band).alias("exp_pairs_uniform"),
@@ -4684,7 +4542,7 @@ def q305_simhash_centered_balance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """CENTERED-fingerprint bit balance, side by side with the raw
-    fingerprint (round 11, VERDICT r10 #1): q294 measures per-bit set
+    fingerprint: q294 measures per-bit set
     shares of 0.01-0.99 on this corpus, and the root cause is not
     token identity (the vocabulary is tiny and near-ubiquitous — IDF
     weights all round to zero) but the MEAN of each bit's vote
@@ -4697,47 +4555,29 @@ def q305_simhash_centered_balance(
     which is what pulls q306's collision-floor inflation down to ~1x.
 
     Shape: ONE token-vote pass shared by both fingerprints (the
-    centered one adds a 60-row vote-total aggregate and a broadcast
-    threshold join), then two 60-row balance rollups. Linear; output
+    centered one adds a 61-column vote-total aggregate and a broadcast
+    threshold join), then two 60-row ``bit_census`` reductions. Linear; output
     is 60 rows at any corpus size.
     """
-    raw = simhash(docs := load_table(spark, sf_dir, "documents"))
-    centered = simhash_centered(docs)
+    docs = load_table(spark, sf_dir, "documents")
 
-    def _pb(fp: DataFrame, n_set_out: str) -> DataFrame:
-        return (
-            fp.select(
-                "simhash",
-                F.explode(F.sequence(F.lit(0), F.lit(59))).alias("bit_idx"),
-            )
-            .groupBy("bit_idx")
-            .agg(
-                F.sum(
-                    F.expr(
-                        "(simhash div CAST(pow(2, bit_idx) AS BIGINT)) % 2"
-                    )
-                ).alias(n_set_out),
-                F.count("*").alias(f"__n_{n_set_out}"),
-            )
+    def _census(fp: DataFrame, tag: str) -> DataFrame:
+        dev = F.abs(F.col("n_set") * F.lit(1.0) / F.col("n") - F.lit(0.5))
+        return bit_census(fp).select(
+            "bit_idx",
+            F.col("n_set").alias(f"n_set_{tag}"),
+            round4(dev).alias(f"abs_dev_{tag}"),
         )
 
-    pb_raw = _pb(raw, "n_set_raw")
-    pb_c = _pb(centered, "n_set_centered")
-    dev_raw = F.abs(
-        F.col("n_set_raw") * F.lit(1.0) / F.col("__n_n_set_raw") - F.lit(0.5)
-    )
-    dev_c = F.abs(
-        F.col("n_set_centered") * F.lit(1.0) / F.col("__n_n_set_centered")
-        - F.lit(0.5)
-    )
     return (
-        pb_raw.join(pb_c, "bit_idx")
+        _census(simhash(docs), "raw")
+        .join(_census(simhash_centered(docs), "centered"), "bit_idx")
         .select(
-            F.col("bit_idx").cast("long").alias("bit_idx"),
-            F.col("n_set_raw").cast("long").alias("n_set_raw"),
-            F.col("n_set_centered").cast("long").alias("n_set_centered"),
-            round4(dev_raw).alias("abs_dev_raw"),
-            round4(dev_c).alias("abs_dev_centered"),
+            "bit_idx",
+            "n_set_raw",
+            "n_set_centered",
+            "abs_dev_raw",
+            "abs_dev_centered",
         )
         .orderBy("bit_idx")
     )
@@ -4756,7 +4596,7 @@ def q306_simhash_centered_pricing(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """q297's skew-corrected rung pricing re-run on the CENTERED
-    fingerprints (round 11, VERDICT r10 #1 — the 'done' criterion):
+    fingerprints (the 'done' criterion):
     with per-bit thresholds at the corpus mean the vote distributions
     split near 50/50 (q305), so the independent-bits expectation falls
     back toward the uniform floor — ``skew_inflation`` collapses from
@@ -4821,12 +4661,11 @@ def q306_simhash_centered_pricing(
 def q315_center_threshold_drift(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Centered-threshold STALENESS audit + re-center migration
-    (round 12, VERDICT r11 #3): q311 pins ``simhash_center_s/n`` at
-    first-batch build, forever — as the corpus drifts away from that
-    first batch the pinned space's balance decays toward q305's raw
-    numbers, and round 11 shipped no monitor and no fix. This replay
-    drives both new operators end to end:
+    """Centered-threshold STALENESS audit + re-center migration: q311
+    pins ``simhash_center_s/n`` at first-batch build, forever — as the
+    corpus drifts away from that first batch the pinned space's
+    balance decays toward q305's raw numbers. This replay drives the
+    monitor and the fix end to end:
 
     1. a corpus is committed and a centered index is built the way a
        gate would: thresholds measured from the FIRST BATCH only
@@ -4864,7 +4703,6 @@ def q315_center_threshold_drift(
     row in-plan).
     """
     from movie_data_pipeline_spark.operators.dedup import (
-        measure_balanced_bit_blocks,
         measure_center_thresholds,
         simhash_centered_pinned,
     )

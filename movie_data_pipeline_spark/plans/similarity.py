@@ -2576,12 +2576,6 @@ def q303_ann_index_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment the index table is additionally bucketed by cell, so
     the scrub rewrite prunes to touched buckets.
     """
-    from movie_data_pipeline_spark.operators.index_lifecycle import (
-        erase_documents,
-    )
-    from movie_data_pipeline_spark.operators.similarity import ivf_assign
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
-
     emb = load_table(spark, sf_dir, "embeddings")
     with scratch_dir("q303") as base:
         corpus_path, index_path = f"{base}/vectors", f"{base}/ivf"

@@ -397,13 +397,14 @@ class VersionedTable:
         evaluates NULL (e.g. a NULL key column) are RETAINED — a bare
         ``NOT (condition)`` would silently drop them too.
 
-        Round 11: on a PARTITIONED table (``partition_by`` property)
-        the delete PRUNES exactly like the index scrub — one bounded
-        aggregate finds the partitions holding matching rows, only
-        those are rewritten via :meth:`overwrite_partitions`, and a
-        zero-match delete skips the commit. Falls back to the full
-        rewrite when more than 4096 partitions match (the collected
-        value list is driver metadata and must stay bounded).
+        A delete that matches no row commits nothing and returns
+        ``(current_version, 0)``. On a PARTITIONED table
+        (``partition_by`` property) the delete PRUNES exactly like the
+        index scrub — one bounded aggregate finds the partitions
+        holding matching rows and only those are rewritten via
+        :meth:`overwrite_partitions`. Falls back to the full rewrite
+        when more than 4096 partitions match (the collected value list
+        is driver metadata and must stay bounded).
         """
         head = self.read(spark)
         matched = F.coalesce(F.expr(condition).cast("boolean"), F.lit(False))
@@ -416,8 +417,7 @@ class VersionedTable:
                 .limit(4097)
                 .collect()
             )
-            n_deleted = sum(r["c"] for r in rows)
-            if n_deleted == 0:
+            if not rows:
                 return self.current_version(), 0
             if len(rows) <= 4096:
                 touched = sorted(r[part_col] for r in rows)
@@ -425,13 +425,13 @@ class VersionedTable:
                     F.col(part_col).isin(touched)
                 ).filter(~matched)
                 new_v = self.overwrite_partitions(survivors, touched)
-                return new_v, n_deleted
+                return new_v, sum(r["c"] for r in rows)
             # too many touched partitions: the full rewrite is cheaper
             # than a 4096+-entry manifest diff — fall through
-        survivors = head.filter(~matched)
-        n_deleted = head.count() - survivors.count()
-        new_v = self.commit(survivors, mode="overwrite")
-        return new_v, n_deleted
+        n_deleted = head.filter(matched).count()
+        if n_deleted == 0:
+            return self.current_version(), 0
+        return self.commit(head.filter(~matched), mode="overwrite"), n_deleted
 
     def compact(self, spark: SparkSession, target_files: int = 1) -> int:
         """Small-file compaction: rewrite the current head into

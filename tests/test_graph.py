@@ -25,6 +25,26 @@ def test_chain_collapses_to_one_component(spark):
     assert got == {(i, 1) for i in range(1, 7)}
 
 
+def test_propagation_raises_past_its_round_budget(spark):
+    # A 30-node path has diameter 29: label propagation cannot converge
+    # in 25 rounds, and must say so instead of returning the partial
+    # labels; the star contraction handles the same graph.
+    from movie_data_pipeline_spark.operators.graph import (
+        connected_components_star,
+    )
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(29)], ["src", "dst"]
+    )
+    with pytest.raises(RuntimeError, match='algorithm="star"'):
+        connected_components(edges)
+    got = {
+        (r["node"], r["component"])
+        for r in connected_components_star(edges).collect()
+    }
+    assert got == {(i, 0) for i in range(30)}
+
+
 def test_components_are_separated_and_singletons_kept(spark):
     edges = spark.createDataFrame(
         [(10, 11), (11, 12), (20, 21)], ["src", "dst"]

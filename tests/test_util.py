@@ -223,6 +223,32 @@ def _is_ngram_join(node: ast.AST) -> bool:
     )
 
 
+def _strings(node: ast.AST) -> list[str]:
+    """The literal text of a string constant, or of an f-string's
+    constant parts."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return [node.value]
+    if isinstance(node, ast.JoinedStr):
+        return [v.value for v in node.values if isinstance(v, ast.Constant)]
+    return []
+
+
+def _is_vote_threshold(node: ast.AST) -> bool:
+    """``<vote column f"b{j}"> ... > <threshold>``: the SimHash rule
+    that sets bit j from its vote sum."""
+    return (
+        isinstance(node, ast.Compare)
+        and isinstance(node.ops[0], ast.Gt)
+        and any(
+            isinstance(n, ast.JoinedStr)
+            and len(n.values) == 2
+            and isinstance(n.values[0], ast.Constant)
+            and n.values[0].value == "b"
+            for n in ast.walk(node.left)
+        )
+    )
+
+
 def _calls(node: ast.AST, name: str) -> bool:
     """``<anything>.name(...)``."""
     return (
@@ -270,6 +296,9 @@ def test_idioms_live_only_in_their_helpers():
         "mean vector": set(),
         "ivf codebook meta": set(),
         "ivf seed order": set(),
+        "bit census": set(),
+        "bucket pair count": set(),
+        "vote threshold": set(),
     }
     for path in sorted(PACKAGE.rglob("*.py")):
         rel = path.relative_to(PACKAGE).as_posix()
@@ -309,6 +338,13 @@ def test_idioms_live_only_in_their_helpers():
                 hits["ivf codebook meta"].add(where)
             if _is_md5_seed_order(node):
                 hits["ivf seed order"].add(where)
+            text = _strings(node)
+            if any("simhash div" in t for t in text):
+                hits["bit census"].add(where)
+            if any("(sz - 1)) div 2" in t for t in text):
+                hits["bucket pair count"].add(where)
+            if _is_vote_threshold(node):
+                hits["vote threshold"].add(where)
     assert hits == {
         "concurrent.futures": {"operators/util.py"},
         "unpersist": {
@@ -329,6 +365,9 @@ def test_idioms_live_only_in_their_helpers():
             "operators/index_lifecycle.py:stored_ivf_codebook",
         },
         "ivf seed order": {"operators/similarity.py:ivf_seeds"},
+        "bit census": {"operators/dedup.py:bit_census"},
+        "bucket pair count": {"operators/dedup.py:band_bucket_pairs"},
+        "vote threshold": {"operators/dedup.py:_threshold_fold"},
     }
 
 

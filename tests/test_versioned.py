@@ -210,6 +210,17 @@ def test_delete_where_retains_null_condition_rows(spark, tmp_path):
     assert {r.k for r in t.read(spark).collect()} == {1, 3}
 
 
+def test_delete_where_without_match_commits_nothing(spark, tmp_path):
+    from movie_data_pipeline_spark.sources.versioned import VersionedTable
+
+    t = VersionedTable(str(tmp_path / "t"))
+    t.commit(spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]))
+    assert t.delete_where(spark, "k = 999") == (0, 0)
+    assert t.versions() == [0]
+    assert t.delete_where(spark, "k = 2") == (1, 1)
+    assert t.versions() == [0, 1]
+
+
 def test_compact_rewrites_small_files(spark, tmp_path):
     import glob
 
@@ -234,7 +245,7 @@ def test_compact_rewrites_small_files(spark, tmp_path):
 
 
 def test_manifest_meta_table_properties(spark, tmp_path):
-    """Round 10: table-level properties in the manifest — set on
+    """Table-level properties in the manifest — set on
     commit, inherited by append AND overwrite when meta is None
     (a delete_where/compact/scrub must never drop the pinned rung),
     replaced only by an explicit dict, cleared by an explicit {}."""
@@ -251,7 +262,8 @@ def test_manifest_meta_table_properties(spark, tmp_path):
     t.commit(df, mode="overwrite")  # still inherit on overwrite
     assert t.manifest()["meta"] == {"simhash_rung": 2, "owner": "gate"}
 
-    t.delete_where(spark, "k = 999")  # rewrite path inherits too
+    v_del, _ = t.delete_where(spark, "k = 1")  # rewrite path inherits too
+    assert v_del == t.current_version()
     assert t.manifest()["meta"] == {"simhash_rung": 2, "owner": "gate"}
 
     t.commit(df, meta={"simhash_rung": 3})  # explicit replace

@@ -82,8 +82,13 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from movie_data_pipeline_spark.operators.dedup import (
+        band_bucket_pairs,
+        bit_census,
         simhash,
-        simhash_band_rows,
+    )
+    from movie_data_pipeline_spark.operators.index_lifecycle import (
+        simhash_index,
+        simhash_layout,
     )
     from movie_data_pipeline_spark.session import get_spark
     from movie_data_pipeline_spark.sources.registry import load_table
@@ -93,20 +98,8 @@ def main() -> int:
 
     # 1. measured per-bit shares from the real corpus (q294 live)
     fp = simhash(load_table(spark, SF_DIR, "documents"))
-    per_bit = (
-        fp.select(
-            "simhash",
-            F.explode(F.sequence(F.lit(0), F.lit(59))).alias("j"),
-        )
-        .groupBy("j")
-        .agg(
-            (F.sum(F.expr("(simhash div CAST(pow(2, j) AS BIGINT)) % 2"))
-             / F.count("*")).alias("share")
-        )
-        .orderBy("j")
-        .collect()
-    )
-    measured = [float(r["share"]) for r in per_bit]
+    per_bit = bit_census(fp).orderBy("bit_idx").collect()
+    measured = [r["n_set"] / r["n"] for r in per_bit]
     uniform = [0.5] * 60
     print(json.dumps({
         "probe": "shares", "sf_dir": SF_DIR,
@@ -158,13 +151,10 @@ def main() -> int:
                 )
             )
             t0 = time.perf_counter()
-            measured_pairs = (
-                simhash_band_rows(synth, rung=rung, bit_blocks=positions)
-                .groupBy("band_idx", "band_val")
-                .agg(F.count("*").alias("sz"))
-                .agg(F.sum(F.expr("(sz * (sz - 1)) div 2")).alias("cp"))
-                .collect()[0]["cp"]
+            index_rows = simhash_index(
+                synth, simhash_layout(rung, positions, None, None)
             )
+            measured_pairs = band_bucket_pairs(index_rows, "cp").first()["cp"]
             secs = round(time.perf_counter() - t0, 1)
             pred = expected_pairs(n, shares, rung, positions)
             row = {
