@@ -32,7 +32,7 @@ import time
 from movie_data_pipeline_spark.operators.util import query_scope
 from movie_data_pipeline_spark.plans import REGISTRY
 from movie_data_pipeline_spark.plans.core import EAGER_TAGS
-from movie_data_pipeline_spark.session import get_spark
+from movie_data_pipeline_spark.session import codegen_compiles, get_spark
 
 # Headline set: heavy scan-agg, star joins, window, dedup/text/similarity
 # extensions when present.
@@ -413,6 +413,19 @@ def main() -> None:
     if names:
         run_query(spark, names[0], sf_dir)
 
+    # Classes compiled by each timed run, in run order (the first run of
+    # a query is its cold one).
+    compiles: dict[str, list[int]] = {}
+
+    def timed(name: str, run) -> float | None:
+        before = codegen_compiles(spark)
+        secs = run()
+        compiles.setdefault(name, []).append(codegen_compiles(spark) - before)
+        return secs
+
+    def timed_query(name: str) -> float:
+        return timed(name, lambda: run_query(spark, name, sf_dir))
+
     # Soft wall-clock budget (a pass always completes atomically so
     # min-of-n stays comparable across queries; passes 2+ are dropped
     # only as a whole). 1100 since round 10 (was 900); 1500 since round
@@ -432,7 +445,7 @@ def main() -> None:
         for name in names:
             if done_passes >= 2 and name in REPLAY_TIER:
                 continue  # replay tier: min-of-2 (passes 1-2 only)
-            runs[name].append(run_query(spark, name, sf_dir))
+            runs[name].append(timed_query(name))
         done_passes += 1
 
     def _spread(v: list[float]) -> float:
@@ -472,7 +485,7 @@ def main() -> None:
         for name in names:
             if name in REPLAY_TIER:
                 continue
-            runs[name].append(run_query(spark, name, sf_dir))
+            runs[name].append(timed_query(name))
         done_passes += 1
         extra_passes += 1
     repeats = done_passes
@@ -502,7 +515,7 @@ def main() -> None:
             and added < sub_max
             and time.perf_counter() - t_start <= budget_s
         ):
-            runs[name].append(run_query(spark, name, sf_dir))
+            runs[name].append(timed_query(name))
             added += 1
 
     # reference-workload replica (BASELINE.md: ~32 s compute-bound).
@@ -511,9 +524,10 @@ def main() -> None:
     # of one-time JIT that is not the pipeline's steady-state cost.
     if run_movielens_pipeline(spark) is not None:
         runs["movielens_etl_full"] = [
-            run_movielens_pipeline(spark) for _ in range(repeats)
+            timed("movielens_etl_full", lambda: run_movielens_pipeline(spark))
+            for _ in range(repeats)
         ]
-    jdbc_secs = run_movielens_pipeline_jdbc(spark)
+    jdbc_secs = timed("movielens_etl_jdbc", lambda: run_movielens_pipeline_jdbc(spark))
     if jdbc_secs is not None:
         runs["movielens_etl_jdbc"] = [jdbc_secs]
 
@@ -572,6 +586,7 @@ def main() -> None:
         "noise_threshold_pct": noise_threshold,
         "sf": sf,
         "runs": {n: [round(x, 4) for x in v] for n, v in runs.items()},
+        "codegen_compiles": {n: c for n, c in compiles.items() if n in runs},
     }
     here = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as fh:

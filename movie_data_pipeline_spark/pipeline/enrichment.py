@@ -130,9 +130,9 @@ def enrich_movies(
     """
     spark = movies.sparkSession
     if enrichment is None:
-        enriched = movies
-        for f in _API_FIELDS:
-            enriched = enriched.withColumn(f, F.lit(None).cast("string"))
+        enriched = movies.select(
+            "*", *[F.lit(None).cast("string").alias(f) for f in _API_FIELDS]
+        )
         missing = spark.createDataFrame([], _missing_schema())
         return enriched, missing
 
@@ -142,15 +142,18 @@ def enrich_movies(
     # The API budget is the first N movies *by movieId order* — pandas
     # head() depended on file order; an explicit order is required for a
     # deterministic distributed limit (SURVEY §2.2 P10).
+    # in_budget is true or null; a null fails every join condition and
+    # the filter below exactly as false would.
     budget_ids = F.broadcast(
-        movies.orderBy("movieId").limit(api_request_limit).select("movieId")
+        movies.orderBy("movieId")
+        .limit(api_request_limit)
+        .select("movieId", F.lit(True).alias("in_budget"))
     )
 
     base = (
-        movies.join(budget_ids.withColumn("in_budget", F.lit(True)), "movieId", "left")
-        .withColumn("in_budget", F.coalesce(F.col("in_budget"), F.lit(False)))
+        movies.join(budget_ids, "movieId", "left")
         .join(links, "movieId", "left")
-        .withColumn("norm_title", normalize_title(F.col("clean_title")))
+        .select("*", normalize_title(F.col("clean_title")).alias("norm_title"))
     )
 
     e = F.broadcast(enrichment)
@@ -189,28 +192,30 @@ def enrich_movies(
         )
     )
 
-    strategy = (
-        F.when(F.col("s1_imdb_id").isNotNull(), F.lit("Title+Year"))
-        .when(F.col("s2_imdb_id").isNotNull(), F.lit("Title Only"))
-        .when(F.col("s3_imdb_id").isNotNull(), F.lit("IMDb ID"))
-    )
-    resolved = joined.withColumn("match_strategy", strategy)
-    for f in _API_FIELDS:
-        resolved = resolved.withColumn(
-            f,
-            F.when(F.col("match_strategy") == "Title+Year", F.col(f"s1_{f}"))
-            .when(F.col("match_strategy") == "Title Only", F.col(f"s2_{f}"))
-            .when(F.col("match_strategy") == "IMDb ID", F.col(f"s3_{f}")),
-        )
-
-    enriched = resolved.select(
-        "movieId", "title", "genres", "release_year", "clean_title", *_API_FIELDS
+    # The first strategy that matched (Title+Year, Title Only, IMDb ID)
+    # supplies every field.
+    enriched = joined.select(
+        "movieId",
+        "title",
+        "genres",
+        "release_year",
+        "clean_title",
+        *[
+            F.when(F.col("s1_imdb_id").isNotNull(), F.col(f"s1_{f}"))
+            .when(F.col("s2_imdb_id").isNotNull(), F.col(f"s2_{f}"))
+            .when(F.col("s3_imdb_id").isNotNull(), F.col(f"s3_{f}"))
+            .alias(f)
+            for f in _API_FIELDS
+        ],
     )
 
     # Anti-join side output (SURVEY §2.3 J4): budget movies with no match,
     # 10 columns per etl1.py:250-261 ('N/A' fills and Yes/No flags kept).
     missing = (
-        resolved.filter(F.col("in_budget") & F.col("match_strategy").isNull())
+        joined.filter(
+            F.col("in_budget")
+            & F.coalesce("s1_imdb_id", "s2_imdb_id", "s3_imdb_id").isNull()
+        )
         .select(
             F.col("movieId").alias("movie_id"),
             F.col("title").alias("original_title"),

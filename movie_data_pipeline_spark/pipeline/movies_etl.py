@@ -20,6 +20,7 @@ Parity map:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -137,7 +138,18 @@ def build_movie_genres(movies: DataFrame, genres: DataFrame) -> DataFrame:
 
 def finalize_movies(movies_enriched: DataFrame) -> DataFrame:
     """Warehouse movies table (schema.sql:8-19): title is the *clean*
-    title (etl1.py:397), imdb_rating coerced to double (etl1.py:340)."""
+    title (etl1.py:397), imdb_rating coerced to double (etl1.py:340).
+
+    ``created_at`` is the time this call ran, one value per load, joined
+    in from a broadcast one-row inline table (a local relation: no job,
+    no Python worker). ``current_timestamp()`` would be folded into a
+    timestamp literal compiled into the write stage, so every load
+    would generate and compile new classes (see session.py).
+    """
+    stamp = movies_enriched.sparkSession.sql(
+        "SELECT * FROM VALUES (:now) AS stamp(created_at)",
+        args={"now": datetime.now(timezone.utc)},
+    )
     return movies_enriched.select(
         F.col("movieId").alias("movie_id"),
         F.col("clean_title").alias("title"),
@@ -148,8 +160,7 @@ def finalize_movies(movies_enriched: DataFrame) -> DataFrame:
         "box_office",
         F.col("imdb_rating").try_cast("double").alias("imdb_rating"),
         "runtime",
-        F.current_timestamp().alias("created_at"),
-    )
+    ).crossJoin(F.broadcast(stamp))
 
 
 def build_warehouse(

@@ -32,6 +32,7 @@ from movie_data_pipeline_spark.operators.similarity import (
     ivf_assign,
     ivf_seeds,
     l2_norm,
+    lsh_bucket,
     mean_vectors,
     nearest_cells,
     sq_dist,
@@ -125,12 +126,6 @@ def q23_embedding_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector) keeps the all-pairs comparison O((n/10)²) — the full-corpus
     path is exactly the LSH operator tested separately.
     """
-    from movie_data_pipeline_spark.operators.similarity import (
-        _to_double,
-        dot,
-        l2_norm,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings").filter("vec_id % 10 = 0")
     # norms projected once per vector, not once per pair (see
     # operators.similarity.cosine_topk — values bit-identical)
@@ -407,13 +402,6 @@ def q153_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffled; swap the scan for the IVF/LSH probe join when
     |queries| stops fitting a broadcast.
     """
-    from movie_data_pipeline_spark.operators.similarity import (
-        _to_double,
-        dot,
-        l2_norm,
-    )
-    from pyspark.sql.window import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     # norms projected once per vector, not once per pair (see
     # operators.similarity.cosine_topk — values bit-identical)
@@ -543,11 +531,6 @@ def q172_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     on vec_id at every argmax on both engines.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    from movie_data_pipeline_spark.operators.similarity import (
-        _to_double,
-        dot,
-        l2_norm,
-    )
 
     # query norm projected once, not re-folded per corpus row (see
     # operators.similarity.cosine_topk — values bit-identical)
@@ -682,8 +665,6 @@ def q174_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency cap; threshold compares the round4-quantized value on
     both engines so a boundary pair cannot flip membership.
     """
-    from movie_data_pipeline_spark.operators.similarity import lsh_bucket
-
     emb = load_table(spark, sf_dir, "embeddings")
     planes = [_hyperplane(_ANN_DIM, i) for i in range(_SEM_PLANES)]
     cells = emb.select(
@@ -692,11 +673,6 @@ def q174_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         lsh_bucket(F.col("embedding"), planes).alias("cell"),
     ).persist()
-    from movie_data_pipeline_spark.operators.similarity import (
-        _to_double,
-        dot,
-        l2_norm,
-    )
 
     # norms projected once per vector, not once per cell-mate pair
     # (see operators.similarity.cosine_topk — values bit-identical)
@@ -995,13 +971,6 @@ def q223_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     at corpus scale the scan is replaced by the ANN index (q22's LSH /
     IVF variants) and this exact ranking runs on the candidate pool.
     """
-    from movie_data_pipeline_spark.operators.similarity import (
-        _to_double,
-        dot,
-        l2_norm,
-    )
-    from pyspark.sql.window import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     # norms projected once per vector, not once per (anchor, corpus)
     # pair (see operators.similarity.cosine_topk — bit-identical)
@@ -1189,14 +1158,6 @@ def q240_label_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id; queries with NO same-label neighbor contribute 0 (LEFT
     join + coalesce — dropping them would inflate the score).
     """
-    from pyspark.sql.window import Window
-
-    from movie_data_pipeline_spark.operators.similarity import (
-        _to_double,
-        dot,
-        l2_norm,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     # norms projected once per vector, not once per (anchor, corpus)
     # pair (see operators.similarity.cosine_topk — bit-identical)
@@ -1320,12 +1281,6 @@ def q247_embedding_decontamination(
     (operators.similarity.cosine_topk_lsh) pre-bins both sides — same
     flag, sub-linear candidates (recall audited by q132's harness).
     """
-    from movie_data_pipeline_spark.operators.similarity import (
-        _to_double,
-        dot,
-        l2_norm,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     # Norms are computed ONCE PER VECTOR before the cross join — the
     # naive cosine(a, b) recomputes each side's norm per PAIR, i.e.
@@ -1385,12 +1340,6 @@ def _margin_exact(x: DataFrame, y: DataFrame) -> DataFrame:
     """Exact Artetxe-Schwenk ratio margin over the given shards —
     cross join, neighborhood means over the FULL given frames. x must
     carry (x_id, xv), y (y_id, yv); vectors as array<double>."""
-    from movie_data_pipeline_spark.operators.similarity import (
-        dot,
-        l2_norm,
-    )
-    from pyspark.sql.window import Window
-
     x = x.select("x_id", "xv", l2_norm(F.col("xv")).alias("xn"))
     y = y.select("y_id", "yv", l2_norm(F.col("yv")).alias("yn"))
     p = (
@@ -1537,8 +1486,6 @@ def q256_margin_candidate_mining(
     mean is order-independent and bit-identical across engines;
     margins threshold on quantized values (the q22/q23 contract).
     """
-    from movie_data_pipeline_spark.operators.similarity import _to_double
-
     emb = load_table(spark, sf_dir, "embeddings")
     x = emb.filter(F.expr(_MARGIN_X_PRED)).select(
         F.col("vec_id").alias("x_id"),
@@ -1689,8 +1636,6 @@ def q256b_margin_mining_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring (two hash joins) so the wide arrays never ride through
     the window shuffles.
     """
-    from movie_data_pipeline_spark.operators.similarity import _to_double
-
     emb = load_table(spark, sf_dir, "embeddings")
     x = emb.filter(F.expr(_MARGIN_X_PRED)).select(
         F.col("vec_id").alias("x_id"),
@@ -1709,12 +1654,6 @@ def _margin_lsh(x: DataFrame, y: DataFrame) -> DataFrame:
     arbitrary corpora (the md5-bucket audit sample, planted clustered
     corpora) with the rows-per-band ladder reacting to THAT corpus's
     size, exactly as the registered plan does."""
-    from movie_data_pipeline_spark.operators.similarity import (
-        dot,
-        l2_norm,
-    )
-    from pyspark.sql.window import Window
-
     # one count per side: the rows-per-band ladder input (driver-side
     # scalar, the codebook-collect pattern)
     n_avg = (x.count() + y.count()) // 2

@@ -11,6 +11,28 @@ ANSI mode is disabled to match the reference's coercion semantics
 reference etl1.py:340-341); library code nevertheless always uses
 ``try_cast``/``try_*`` so every operator also runs correctly under an
 ANSI-enabled session (e.g. the verification driver's own session).
+
+Generated code is reused across calls. Whole-stage code generation
+compiles each plan's Java source with Janino and caches the class by
+its source text in a JVM-wide cache of
+``spark.sql.codegen.cache.maxEntries`` classes. Spark's default of 100
+is smaller than the engine's working set: one warm cycle of the
+warehouse load and its 7 queries, or of the MinHash-LSH build and an
+IVF query, compiles about 90-120 classes when cold, and the cache is
+split into segments that each evict least-recently-used first. So at
+100 every warm step missed and recompiled 27-61 classes on the driver.
+1000 holds them all and a warm call compiles nothing
+(``tests/test_session.py``). It is a static setting: only the first
+session of a JVM sets it, which is why this factory owns it.
+
+A cache keyed by source text misses whenever the source changes.
+Primitive literals (numbers, booleans, dates, timestamps) are written
+into the generated source, so a value that changes per call, such as
+``current_timestamp()``, ``now()`` or a driver-side ``F.lit(time)``,
+compiles new classes on every call. Such a value belongs in data (a
+broadcast one-row inline table joined in, as ``finalize_movies`` does
+for ``created_at``), not in a projection. String and other object literals
+are passed to the class as references and do not change its source.
 """
 
 from __future__ import annotations
@@ -19,7 +41,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark"]
+__all__ = ["codegen_compiles", "get_spark"]
 
 
 def get_spark(
@@ -54,7 +76,15 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes the code generator has compiled in this JVM so far; a
+    call served from the generated-code cache adds none."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
