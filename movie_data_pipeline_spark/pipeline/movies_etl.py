@@ -141,10 +141,11 @@ def finalize_movies(movies_enriched: DataFrame) -> DataFrame:
     title (etl1.py:397), imdb_rating coerced to double (etl1.py:340).
 
     ``created_at`` is the time this call ran, one value per load, joined
-    in from a broadcast one-row inline table (a local relation: no job,
-    no Python worker). ``current_timestamp()`` would be folded into a
-    timestamp literal compiled into the write stage, so every load
-    would generate and compile new classes (see session.py).
+    in from a broadcast one-row inline table (a local relation: no
+    Python worker; its broadcast is one small job). ``current_timestamp()``
+    would be folded into a timestamp literal compiled into the write
+    stage, so every load would generate and compile new classes (see
+    session.py).
     """
     stamp = movies_enriched.sparkSession.sql(
         "SELECT * FROM VALUES (:now) AS stamp(created_at)",
